@@ -6,6 +6,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
+import pytest
 
 from ukis_pysat_spark import codec, datagen
 from ukis_pysat_spark.operators import dedup, multimodal, similarity, text
@@ -754,6 +755,35 @@ def test_hamming_pairs_verify_paths_identical(spark):
     }
     assert got == exp
     assert ("h00005", "hdup1", 1) in got and ("h00009", "hdup2", 0) in got
+
+
+@pytest.mark.parametrize("n_bits,h", [(10, 8), (10, 9)])
+def test_hamming_pairs_radius_near_width_matches_bruteforce(spark, n_bits, h):
+    """max_hamming close to n_bits with one hot (>= 128-row) bucket: a
+    block's complement is then narrower than h+1 sub-blocks, so some
+    sub-block is empty.  Pairs planted to agree on block 0 alone (they
+    differ in every other bit) must still be found; the whole output
+    must equal a brute-force popcount over all pairs."""
+    rng = np.random.default_rng(n_bits * 100 + h)
+    w0 = dedup._simhash_block_bounds(h + 1, n_bits)[0][1]
+    low = (1 << w0) - 1
+    # every row has block 0's bits = 1, so block 0 is one 320-row bucket
+    vals = [(int(v) & ~low) | 1 for v in rng.integers(0, 1 << n_bits, 300)]
+    planted = [v ^ ((1 << n_bits) - 1 - low) for v in vals[:20]]
+    vals += planted
+    df = spark.createDataFrame(list(enumerate(vals)), "id long, h long")
+    got = {
+        (r.id_a, r.id_b, r.hamming)
+        for r in dedup.hamming_pairs(df, "id", "h", max_hamming=h, n_bits=n_bits).collect()
+    }
+    exp = set()
+    for i, a in enumerate(vals):
+        for j in range(i + 1, len(vals)):
+            d = bin(a ^ vals[j]).count("1")
+            if d <= h:
+                exp.add((i, j, d))
+    assert got == exp
+    assert all((i, 300 + i, n_bits - w0) in got for i in range(20))
 
 
 def test_phash_neardup_finds_duplicate_images(spark):

@@ -706,8 +706,10 @@ def hamming_pairs(
             rid = run_id[m]
             gm = hrows[m]
             w_comp = n_bits - w_b
-            if w_comp <= 0:
-                # single-block split: no complement bits, sweep directly
+            if w_comp < h + 1:
+                # fewer complement bits than h+1 sub-blocks: some sub-
+                # block is empty, and a true pair may agree on that one
+                # only, so no sub-key would ever probe it — sweep directly
                 o = np.argsort(rid, kind="stable")
                 st2, sz2 = run_bounds(rid[o], np.zeros(o.size, dtype=np.int64))
                 go = gm[o]
@@ -725,9 +727,7 @@ def hamming_pairs(
                     (x >> np.uint64(sh)) & np.uint64((1 << w) - 1)
                 ) << np.uint64(pos)
                 pos += w
-            sub_bounds = [
-                (s2, w2) for s2, w2 in _simhash_block_bounds(h + 1, pos) if w2 > 0
-            ]
+            sub_bounds = _simhash_block_bounds(h + 1, pos)
             # slot-0 compressibility probe: per run, do the slot-0
             # sub-runs still cover >= 1/4 of the direct pair count?
             sh0, w0 = sub_bounds[0]

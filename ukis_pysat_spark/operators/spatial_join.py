@@ -105,9 +105,14 @@ def with_cells(df: DataFrame, lon_col: str, lat_col: str, res: int = DEFAULT_RES
     wrapped ix range — the sequence runs past n-1 and is folded back
     with pmod, so Pacific footprints land in the seam cells on both
     sides instead of covering (or missing) the whole globe.
+
+    The lon interval is computed ONCE per row, as two temporary columns
+    before the explode, so the Generate's index math references two
+    attributes instead of repeating lon_interval's CASE WHEN +
+    filter-lambda tree in every place it uses an edge.
     """
     n = 1 << res
-    lon0, lon1 = lon_interval(F.col(lon_col))
+    lon0, lon1 = F.col("_cov_lon0"), F.col("_cov_lon1")
     ix0 = _cell_index(lon0, 180.0, 360.0, res)
     ix1_raw = F.floor((lon1 + F.lit(180.0)) / F.lit(360.0) * F.lit(n)).cast("long")
     # east edge unclamped (folded by pmod below), bounded to one full
@@ -117,8 +122,10 @@ def with_cells(df: DataFrame, lon_col: str, lat_col: str, res: int = DEFAULT_RES
     iy0 = _cell_index(F.array_min(F.col(lat_col)), 90.0, 180.0, res)
     iy1 = _cell_index(F.array_max(F.col(lat_col)), 90.0, 180.0, res)
     base = F.lit(int(res) << 58).cast("long")
+    cov_lon0, cov_lon1 = lon_interval(F.col(lon_col))
     return (
-        df.withColumn("_ix", F.explode(F.sequence(ix0, ix1)))
+        df.withColumns({"_cov_lon0": cov_lon0, "_cov_lon1": cov_lon1})
+        .withColumn("_ix", F.explode(F.sequence(ix0, ix1)))
         .withColumn("_iy", F.explode(F.sequence(iy0, iy1)))
         .withColumn(
             "cell",
@@ -126,7 +133,7 @@ def with_cells(df: DataFrame, lon_col: str, lat_col: str, res: int = DEFAULT_RES
             + F.pmod(F.col("_ix"), F.lit(n).cast("long")) * F.lit(1 << 29).cast("long")
             + F.col("_iy"),
         )
-        .drop("_ix", "_iy")
+        .drop("_cov_lon0", "_cov_lon1", "_ix", "_iy")
     )
 
 
