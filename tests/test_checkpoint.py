@@ -2,12 +2,22 @@
 with no duplicates and the same final result as a one-shot run
 (SURVEY.md §5.2 item 4; north-rule resumability requirement)."""
 
+import datetime
+import os
+import shutil
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 import pyspark.sql.functions as F
 
 from ukis_pysat_spark import datagen
 from ukis_pysat_spark.operators import tiling
-from ukis_pysat_spark.plans.checkpoint import CheckpointedRun, run_stage_in_batches
+from ukis_pysat_spark.plans.checkpoint import (
+    CheckpointedRun,
+    _footer_lineage,
+    run_stage_in_batches,
+)
 
 
 def _transform(batch):
@@ -106,3 +116,204 @@ def test_checkpoint_resume_iceberg_mode(spark, tmp_path):
     m = ckpt.metrics("tiles")
     total = sum(r.row_count for r in m.collect())
     assert total == oneshot.count()
+
+
+def test_commit_is_one_spark_job(spark, tmp_path, count_jobs):
+    """Parquet-mode commit = the data write only; lineage comes from the
+    footers it wrote (it used to re-read them in 3 more jobs)."""
+    out = _transform(datagen.gen_images(spark, 12, profile="bench"))
+    ckpt = CheckpointedRun(spark, str(tmp_path / "run"), run_id="j1")
+    _, jobs = count_jobs(lambda: ckpt.commit_batch(out, "tiles", "image_id", batch_id="b0000"))
+    assert jobs == 1
+    assert sum(r.row_count for r in ckpt.metrics("tiles").collect()) == 12 * 4
+
+
+def test_second_commit_compiles_nothing(spark, tmp_path):
+    """Nothing commit-specific (batch id, timestamp) reaches generated
+    code, so committing the same plan again reuses every class."""
+    out = _transform(datagen.gen_images(spark, 12, profile="bench"))
+    ckpt = CheckpointedRun(spark, str(tmp_path / "run"), run_id="j2")
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    ckpt.commit_batch(out, "tiles", "image_id", batch_id="b0000")
+    before = compiles.getCount()
+    ckpt.commit_batch(out, "tiles", "image_id", batch_id="b0001")
+    assert compiles.getCount() == before
+
+
+def _planning(transform, plans):
+    def run(batch):
+        plans.append(batch._jdf.queryExecution().optimizedPlan().toString())
+        return transform(batch)
+    return run
+
+
+def test_resume_unchanged_batching_skips_anti_join(spark, tmp_path, count_jobs):
+    imgs = datagen.gen_images(spark, 40, profile="bench")
+    base = str(tmp_path / "run")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_stage_in_batches(CheckpointedRun(spark, base), imgs, "tiles", "image_id",
+                             _transform, n_batches=4, fail_after=2)
+    plans = []
+    reopened = CheckpointedRun(spark, base)
+    _, jobs = count_jobs(lambda: run_stage_in_batches(
+        reopened, imgs, "tiles", "image_id", _planning(_transform, plans), n_batches=4))
+    assert len(plans) == 2 and jobs == 2  # one job per pending batch
+    assert not any("LeftAnti" in p for p in plans)
+    final = reopened.committed("tiles")
+    assert final.count() == final.select("image_id", "tile_id").distinct().count() == 40 * 4
+
+
+def test_changed_batching_keeps_anti_join_exactly_once(spark, tmp_path):
+    """Crash at n_batches=2, resume at n_batches=4: the batching record
+    no longer matches, so the anti-join runs and no tile is written
+    twice or lost."""
+    imgs = datagen.gen_images(spark, 40, profile="bench")
+    ckpt = CheckpointedRun(spark, str(tmp_path / "run"))
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_stage_in_batches(ckpt, imgs, "tiles", "image_id", _transform,
+                             n_batches=2, fail_after=1)
+    plans = []
+    run_stage_in_batches(ckpt, imgs, "tiles", "image_id", _planning(_transform, plans),
+                         n_batches=4)
+    assert plans and all("LeftAnti" in p for p in plans)
+    oneshot = _transform(imgs)
+
+    def assert_exactly_once():
+        final = ckpt.committed("tiles").drop("src_partition")
+        assert final.count() == final.select("image_id", "tile_id").distinct().count()
+        assert final.exceptAll(oneshot).count() == 0 == oneshot.exceptAll(final).count()
+
+    assert_exactly_once()
+    # the stage now mixes batchings: a further resume still anti-joins
+    plans.clear()
+    shutil.rmtree(tmp_path / "run" / "tiles" / "batch=b0003")
+    run_stage_in_batches(ckpt, imgs, "tiles", "image_id", _planning(_transform, plans),
+                         n_batches=4)
+    assert plans and all("LeftAnti" in p for p in plans)
+    assert_exactly_once()
+
+
+def test_resume_rebuilds_missing_lineage(spark, tmp_path):
+    """A process that dies between the data commit and the lineage write
+    leaves a committed batch without lineage; the resume rebuilds it."""
+    imgs = datagen.gen_images(spark, 20, profile="bench")
+    base = tmp_path / "run"
+    ckpt = CheckpointedRun(spark, str(base))
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_stage_in_batches(ckpt, imgs, "tiles", "image_id", _transform,
+                             n_batches=4, fail_after=1)
+    shutil.rmtree(base / "_metrics" / "tiles" / "batch=b0000")
+    run_stage_in_batches(ckpt, imgs, "tiles", "image_id", _transform, n_batches=4)
+    per_batch = {}
+    for r in ckpt.metrics("tiles").collect():
+        per_batch[r.batch_id] = per_batch.get(r.batch_id, 0) + r.row_count
+    assert sorted(per_batch) == ["b0000", "b0001", "b0002", "b0003"]
+    assert sum(per_batch.values()) == ckpt.committed("tiles").count() == 20 * 4
+
+
+def _assert_footer_lineage_exact(spark, ckpt, stage, key_col, batch_id):
+    committed = spark.read.parquet(f"{ckpt.base}/{stage}/batch={batch_id}")
+    want = sorted(
+        tuple(r) for r in committed.groupBy("src_partition").agg(
+            F.count("*"),
+            F.min(key_col).cast("string"),
+            F.max(key_col).cast("string"),
+        ).collect()
+    )
+    got = sorted(
+        (r.src_partition, r.row_count, r.key_min, r.key_max)
+        for r in ckpt.metrics(stage).where(F.col("batch_id") == batch_id).collect()
+    )
+    assert got == want
+    return want
+
+
+def _frame(spark, parts, key_type):
+    """Partition ``i`` holds exactly ``parts[i]`` (no shuffle, so each
+    list becomes one ``src_partition``), with a payload column."""
+    rdd = spark.sparkContext.parallelize(range(len(parts)), len(parts)).flatMap(
+        lambda i: [(k, "x" * 40) for k in parts[i]]
+    )
+    return spark.createDataFrame(rdd, f"key {key_type}, pad string")
+
+
+def test_footer_lineage_many_files_and_row_groups(spark, tmp_path):
+    keys = [f"k{(i * 7919) % 5003:05d}" for i in range(3000)]
+    df = _frame(spark, [keys[:1200], keys[1200:1500], keys[1500:]], "string")
+    ckpt = CheckpointedRun(spark, str(tmp_path / "run"))
+    conf = {"spark.sql.files.maxRecordsPerFile": "400", "parquet.block.size": "2048"}
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        ckpt.commit_batch(df, "s", "key", batch_id="b0000")
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    d = tmp_path / "run" / "s" / "batch=b0000"
+    metas = [pq.read_metadata(f) for f in sorted(d.glob("part-*.parquet"))]
+    assert len(metas) > 3 and max(m.num_row_groups for m in metas) > 1
+    assert len(_assert_footer_lineage_exact(spark, ckpt, "s", "key", "b0000")) == 3
+
+
+def test_footer_lineage_non_ascii_keys(spark, tmp_path):
+    """Footer min/max follow UTF-8 byte order, which is Spark's string
+    order; UTF-16 order would rank the astral emoji below U+FF01."""
+    parts = [
+        ["a", "Z", "\u00e4", "\u20ac", "\u65e5\u672c"],
+        ["\uff01", "\U0001f600"],
+        ["", "\u00e9t\u00e9", None],
+        [None, None],
+    ]
+    ckpt = CheckpointedRun(spark, str(tmp_path / "run"))
+    ckpt.commit_batch(_frame(spark, parts, "string"), "s", "key", batch_id="b0000")
+    want = _assert_footer_lineage_exact(spark, ckpt, "s", "key", "b0000")
+    assert ("\uff01", "\U0001f600") in {(lo, hi) for _, _, lo, hi in want}
+
+
+def test_footer_lineage_integer_key(spark, tmp_path):
+    ckpt = CheckpointedRun(spark, str(tmp_path / "run"))
+    ckpt.commit_batch(_frame(spark, [[5, -3, 10**12], [7], [-(2**40), 0, 2]], "long"),
+                      "s", "key", batch_id="b0000")
+    ckpt.commit_batch(_frame(spark, [[9, -11], [None, 3]], "int"), "s", "key", batch_id="b0001")
+    for b in ("b0000", "b0001"):
+        _assert_footer_lineage_exact(spark, ckpt, "s", "key", b)
+
+
+def test_footer_lineage_empty_batch(spark, tmp_path):
+    ckpt = CheckpointedRun(spark, str(tmp_path / "run"))
+    df = _frame(spark, [["a"], ["b"]], "string")
+    ckpt.commit_batch(df, "s", "key", batch_id="b0000")
+    ckpt.commit_batch(df.where(F.col("key") == "none"), "s", "key", batch_id="b0001")
+    assert _assert_footer_lineage_exact(spark, ckpt, "s", "key", "b0001") == []
+    assert {r.batch_id for r in ckpt.metrics("s").collect()} == {"b0000"}
+
+
+@pytest.mark.parametrize("key", ["cast(id AS double)", "timestamp_seconds(id)"])
+def test_commit_rejects_keys_without_exact_footer_bounds(spark, tmp_path, key):
+    df = spark.range(4).selectExpr(f"{key} AS key", "id")
+    ckpt = CheckpointedRun(spark, str(tmp_path / "run"))
+    with pytest.raises(TypeError, match="string or integral"):
+        ckpt.commit_batch(df, "s", "key", batch_id="b0000")
+    assert not (tmp_path / "run" / "s").exists()  # refused before writing
+
+
+def test_footer_lineage_fails_closed(tmp_path):
+    """Footers that cannot state a row group's partition or key bounds
+    raise, naming the file; lineage is never guessed."""
+    t = pa.table({"key": ["a", "b"], "src_partition": pa.array([0, 1], pa.int32())})
+    pq.write_table(t, tmp_path / "part-00000.parquet")
+    with pytest.raises(ValueError, match="part-00000.parquet.*src_partition 0..1"):
+        _footer_lineage(str(tmp_path), "key")
+    pq.write_table(t.slice(0, 1), tmp_path / "part-00000.parquet", write_statistics=False)
+    with pytest.raises(ValueError, match="part-00000.parquet.*no min/max"):
+        _footer_lineage(str(tmp_path), "key")
+    ts = pa.array([datetime.datetime(2024, 1, 1)] * 2)
+    pq.write_table(t.set_column(0, "key", ts).slice(0, 1), tmp_path / "part-00000.parquet")
+    with pytest.raises(TypeError, match="part-00000.parquet"):
+        _footer_lineage(str(tmp_path), "key")
+    os.remove(tmp_path / "part-00000.parquet")
+    assert _footer_lineage(str(tmp_path), "key") == {}

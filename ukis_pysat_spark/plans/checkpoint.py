@@ -10,15 +10,47 @@ environment, so the same semantics are built on Parquet:
   ``{base}/{stage}/batch={batch_id}/`` with Spark's committer — the
   directory is committed iff its ``_SUCCESS`` marker exists, so a
   killed run leaves at most an uncommitted (ignored) directory;
-- after the data commit, the batch's metrics are written with
-  mode('overwrite') to ``{base}/_metrics/{stage}/batch={batch_id}``
-  recording (run_id, stage, batch, src_partition, row_count, min/max
-  key) — the per-partition lineage; a REPLAYED batch replaces its own
-  lineage rows, so restarts can never double-count;
+- after the data commit, the batch's lineage rows (run_id, stage,
+  batch, src_partition, row_count, min/max key) are written to
+  ``{base}/_metrics/{stage}/batch={batch_id}`` as one Parquet file,
+  renamed over its predecessor, so a REPLAYED batch replaces its own
+  lineage rows and restarts can never double-count;
 - resume = anti-join the input's key column against the union of
   committed batches' keys (``processed_keys``), so work is never
   repeated and retries are idempotent (keys are data-derived, never
   partition-index-derived).
+
+Lineage comes from the Parquet footers, not from a re-read.  Iceberg
+keeps per-file record counts and column lower/upper bounds in its
+manifests, collected while the files are written; the Parquet writer
+keeps the same numbers in each file's footer (row-group row counts and
+exact min/max per column).  Each ``part-*`` file is written by one task,
+so it holds one ``src_partition``; the commit reads the footers on the
+driver and sums them per partition, and costs exactly one Spark job
+(the data write).  Two checks keep it exact and fail closed:
+
+- before writing, the key column must be a (binary-collated) string or
+  an integral type, the types whose footer min/max and ``str()`` equal
+  Spark's ``min``/``max`` + ``cast(string)``; anything else raises
+  ``TypeError`` and nothing is written;
+- a non-empty row group whose footer lacks ``src_partition`` or key
+  bounds, or holds more than one ``src_partition``, raises with the
+  file's name.  Lineage is never guessed.
+
+A batch committed by a process that died before its lineage write gets
+its lineage rebuilt from the same footers on the next
+``run_stage_in_batches``.
+
+``run_stage_in_batches`` buckets by ``pmod(xxhash64(key), n_batches)``
+and a committed batch id is final, so when every committed batch came
+from the current ``(key_col, n_batches)`` no pending bucket's key can be
+committed and the anti-join cannot remove anything.  The batching is
+recorded in ``{base}/{stage}/_batching.json`` while the stage has no
+committed batch; the anti-join is skipped only when that record matches
+and every committed id is a ``b%04d`` below ``n_batches``.  A changed
+batching drops the record, so a stage that mixes batchings, has no
+record, or holds foreign ids (e.g. streaming's ``s%08d``) always takes
+the anti-join.
 
 On a cluster with an Iceberg catalog, pass ``catalog=`` to switch the
 SAME semantics onto snapshot commits: each batch lands as one
@@ -27,21 +59,28 @@ SAME semantics onto snapshot commits: each batch lands as one
 Iceberg snapshot), metrics ride a second table partitioned by
 ``(stage, batch_id)``, and the committed set is simply the table
 contents (snapshot isolation: readers never see an in-flight batch).
-No Iceberg runtime jar ships in this environment, so the catalog path
-is exercised only where one is configured (the test skips cleanly);
-the Parquet ``_SUCCESS`` protocol stays the default.
+The catalog path is unchanged by the footer lineage and the batching
+record: it aggregates the committed rows and always resumes through the
+anti-join.  No Iceberg runtime jar ships in this environment, so the
+catalog path is exercised only where one is configured (the test skips
+cleanly); the Parquet ``_SUCCESS`` protocol stays the default.
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
+import json
 import os
 import re
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 
 
 def iceberg_catalog_available(spark: SparkSession, catalog: str) -> bool:
@@ -57,6 +96,53 @@ METRICS_SCHEMA = (
     "run_id string, stage string, batch_id string, src_partition int, "
     "row_count long, key_min string, key_max string, committed_at double"
 )
+METRICS_ARROW = pa.schema(
+    [
+        (name, {"string": pa.string(), "int": pa.int32(), "long": pa.int64(),
+                "double": pa.float64()}[kind])
+        for name, kind in (f.split() for f in METRICS_SCHEMA.split(", "))
+    ]
+)
+# key types whose footer min/max, as str(), equal Spark's min/max cast to
+# string: binary-collated strings (UTF-8 byte order == code-point order)
+# and integers
+FOOTER_KEY_TYPES = (T.StringType(), T.ByteType(), T.ShortType(), T.IntegerType(), T.LongType())
+LINEAGE_FILE = "part-00000.parquet"
+BATCHING_RECORD = "_batching.json"
+
+
+def _footer_lineage(path: str, key_col: str) -> dict[int, list]:
+    """``{src_partition: [row_count, key_min, key_max]}`` summed over the
+    row-group footers of the ``part-*`` files of one committed batch
+    directory; raises rather than guess when a footer cannot say."""
+    out: dict[int, list] = {}
+    for f in sorted(glob.glob(os.path.join(path, "part-*.parquet"))):
+        md = pq.read_metadata(f)
+        cols = {md.schema.column(j).path: j for j in range(md.num_columns)}
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            if rg.num_rows == 0:
+                continue
+            bounds = []
+            for c in ("src_partition", key_col):
+                st = rg.column(cols[c]).statistics if c in cols else None
+                if st is not None and st.has_min_max:
+                    bounds.append((st.min, st.max))
+                elif c == key_col and st is not None and st.null_count == rg.num_rows:
+                    bounds.append((None, None))  # all-null keys: no bound, as min() gives
+                else:
+                    raise ValueError(f"{f}: row group {i} footer has no min/max for {c!r}")
+            (part, part_hi), (lo, hi) = bounds
+            if part != part_hi:
+                raise ValueError(f"{f}: row group {i} spans src_partition {part}..{part_hi}")
+            if lo is not None and not all(type(v) in (str, int) for v in (lo, hi)):
+                raise TypeError(f"{f}: key {key_col!r} bounds are {type(lo).__name__}, not str or int")
+            acc = out.setdefault(part, [0, None, None])
+            acc[0] += rg.num_rows
+            if lo is not None:
+                acc[1] = lo if acc[1] is None else min(acc[1], lo)
+                acc[2] = hi if acc[2] is None else max(acc[2], hi)
+    return out
 
 
 class CheckpointedRun:
@@ -97,39 +183,48 @@ class CheckpointedRun:
         """Atomically commit one batch of a stage + its lineage metrics.
 
         The data write carries the executor partition id so lineage is
-        per *physical* partition of the producing stage.
+        per *physical* partition of the producing stage.  In Parquet mode
+        this is one Spark job: the lineage comes from the written footers.
         """
         out = df.withColumn("src_partition", F.spark_partition_id())
         if self.catalog is not None:
             self._commit_batch_iceberg(out, stage, key_col, batch_id)
             return
+        key_type = out.schema[key_col].dataType
+        if key_type not in FOOTER_KEY_TYPES:
+            raise TypeError(
+                f"checkpoint key {key_col!r} is {key_type.simpleString()}; footer "
+                "lineage needs a string or integral key"
+            )
         path = f"{self.base}/{stage}/batch={batch_id}"
         out.write.mode("overwrite").parquet(path)  # _SUCCESS marks the commit
-        metrics = (
-            self.spark.read.parquet(path)
-            .groupBy("src_partition")
-            .agg(
-                F.count("*").alias("row_count"),
-                F.min(key_col).cast("string").alias("key_min"),
-                F.max(key_col).cast("string").alias("key_max"),
-            )
-            .select(
-                F.lit(self.run_id).alias("run_id"),
-                F.lit(stage).alias("stage"),
-                F.lit(batch_id).alias("batch_id"),
-                "src_partition",
-                "row_count",
-                "key_min",
-                "key_max",
-                F.lit(time.time()).alias("committed_at"),
-            )
-        )
-        # per-batch overwrite, not append: a REPLAYED batch (the restart
-        # path this class exists for) replaces its own lineage rows
-        # instead of appending duplicates that double-count row_count
-        metrics.write.mode("overwrite").parquet(
-            f"{self.base}/_metrics/{stage}/batch={batch_id}"
-        )
+        self._write_lineage(stage, key_col, batch_id)
+
+    def _lineage_dir(self, stage: str, batch_id: str) -> str:
+        return f"{self.base}/_metrics/{stage}/batch={batch_id}"
+
+    def _write_lineage(self, stage: str, key_col: str, batch_id: str) -> None:
+        """Lineage rows of a committed Parquet batch from its footers,
+        written as one file renamed over the batch's previous lineage
+        (per-batch replace, not append: a REPLAYED batch must not
+        double-count row_count)."""
+        parts = _footer_lineage(f"{self.base}/{stage}/batch={batch_id}", key_col)
+        now = time.time()
+        rows = [
+            dict(run_id=self.run_id, stage=stage, batch_id=batch_id, src_partition=p,
+                 row_count=n, key_min=None if lo is None else str(lo),
+                 key_max=None if hi is None else str(hi), committed_at=now)
+            for p, (n, lo, hi) in sorted(parts.items())
+        ]
+        table = pa.Table.from_pylist(rows, schema=METRICS_ARROW)
+        d = self._lineage_dir(stage, batch_id)
+        os.makedirs(d, exist_ok=True)
+        tmp = os.path.join(d, f".{uuid.uuid4().hex}.tmp")  # hidden: readers skip it
+        pq.write_table(table, tmp, store_schema=False)  # Spark reads the Parquet types
+        os.replace(tmp, os.path.join(d, LINEAGE_FILE))
+        for f in os.listdir(d):  # Spark-written lineage, stale temps
+            if f != LINEAGE_FILE:
+                os.remove(os.path.join(d, f))
 
     def _commit_batch_iceberg(
         self, out: DataFrame, stage: str, key_col: str, batch_id: str
@@ -191,6 +286,41 @@ class CheckpointedRun:
                 out.append(full)
         return out
 
+    def _repair_lineage(self, stage: str, key_col: str, committed: set[str]) -> None:
+        """Rebuild from the footers the lineage of committed Parquet
+        batches whose process died between the data and lineage writes
+        (only hidden temp files, or no directory, under ``_metrics``)."""
+        for b in sorted(committed):
+            d = self._lineage_dir(stage, b)
+            if not (os.path.isdir(d) and any(not f.startswith(".") for f in os.listdir(d))):
+                self._write_lineage(stage, key_col, b)
+
+    def _batching_unchanged(
+        self, stage: str, key_col: str, n_batches: int, committed: set[str]
+    ) -> bool:
+        """True iff every committed Parquet batch of ``stage`` is a bucket
+        of ``pmod(xxhash64(key_col), n_batches)``, so no pending bucket's
+        key is committed.  A stage with no committed batch records this
+        batching; a different one drops the record for good."""
+        rec_path = os.path.join(self.base, stage, BATCHING_RECORD)
+        mine = {"key_col": key_col, "n_batches": n_batches}
+        if not committed:
+            os.makedirs(os.path.dirname(rec_path), exist_ok=True)
+            tmp = f"{rec_path}.{uuid.uuid4().hex}.tmp"
+            with open(tmp, "w") as fh:
+                json.dump(mine, fh)
+            os.replace(tmp, rec_path)
+            return True
+        try:
+            with open(rec_path) as fh:
+                rec = json.load(fh)
+        except FileNotFoundError:
+            return False
+        if rec != mine:
+            os.remove(rec_path)  # the stage now mixes batchings
+            return False
+        return all(re.fullmatch(r"b\d{4}", b) and int(b[1:]) < n_batches for b in committed)
+
     def committed(self, stage: str) -> DataFrame | None:
         """All committed rows of a stage (uncommitted dirs ignored; in
         catalog mode snapshot isolation makes every table row
@@ -250,9 +380,15 @@ def run_stage_in_batches(
 ) -> None:
     """Drive a stage as N resumable batches (deterministic bucketing by
     key hash, never by partition index). `fail_after` injects a crash
-    after that many batch commits — used by the resume tests."""
+    after that many batch commits — used by the resume tests.  In
+    Parquet mode a resume first rebuilds any committed batch's missing
+    lineage, and skips the anti-join when the batching is unchanged."""
     committed = {p.rsplit("batch=", 1)[-1] for p in ckpt._committed_batches(stage)}
-    todo = ckpt.resume_filter(inputs, stage, key_col)
+    anti_join = True
+    if ckpt.catalog is None:
+        ckpt._repair_lineage(stage, key_col, committed)
+        anti_join = not ckpt._batching_unchanged(stage, key_col, n_batches, committed)
+    todo = ckpt.resume_filter(inputs, stage, key_col) if anti_join else inputs
     bucket = F.pmod(F.xxhash64(key_col), F.lit(n_batches)).cast("int")
     work = todo.withColumn("_bucket", bucket)
     done = 0
