@@ -193,6 +193,29 @@ def test_changed_batching_keeps_anti_join_exactly_once(spark, tmp_path):
     assert_exactly_once()
 
 
+def test_shrunk_batching_commits_uncovered_buckets(spark, tmp_path):
+    """Crash at n_batches=4 after b0000 and b0001, resume at 2: those
+    ids hold only the mod-4 buckets 0 and 1, so they are not skipped.
+    The mod-2 buckets' remaining keys land under ids naming the new
+    batching, which a further resume at 2 treats as final."""
+    imgs = datagen.gen_images(spark, 40, profile="bench")
+    ckpt = CheckpointedRun(spark, str(tmp_path / "run"))
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_stage_in_batches(ckpt, imgs, "tiles", "image_id", _transform,
+                             n_batches=4, fail_after=2)
+    run_stage_in_batches(ckpt, imgs, "tiles", "image_id", _transform, n_batches=2)
+    oneshot = _transform(imgs)
+    final = ckpt.committed("tiles").drop("src_partition")
+    assert final.count() == final.select("image_id", "tile_id").distinct().count()
+    assert final.exceptAll(oneshot).count() == 0 == oneshot.exceptAll(final).count()
+    assert {os.path.basename(p) for p in ckpt._committed_batches("tiles")} == {
+        "batch=b0000", "batch=b0001", "batch=b0000n0002", "batch=b0001n0002"}
+    plans = []
+    run_stage_in_batches(ckpt, imgs, "tiles", "image_id", _planning(_transform, plans),
+                         n_batches=2)
+    assert plans == []
+
+
 def test_resume_rebuilds_missing_lineage(spark, tmp_path):
     """A process that dies between the data commit and the lineage write
     leaves a committed batch without lineage; the resume rebuilds it."""

@@ -707,9 +707,33 @@ def test_hamming_pairs_int64_including_negative(spark):
     assert len(exp) >= 4  # the planted near-dups must be found
 
 
+def _hamming_pairs_join(df, id_col, hash_col, max_hamming, n_bits=64):
+    """Oracle twin of dedup.hamming_pairs: the same pigeonhole blocks,
+    verified by a relational (blk, key) self-equi-join + bit_count."""
+    bucketed = dedup.hamming_blocks(df, id_col, hash_col, max_hamming, n_bits)
+    a = bucketed.alias("a")
+    b = bucketed.alias("b")
+    hamming = F.bit_count(F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}")))
+    return (
+        a.join(
+            b,
+            (F.col("a.blk") == F.col("b.blk"))
+            & (F.col("a.key") == F.col("b.key"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+            & (hamming <= max_hamming),
+        )
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            hamming.alias("hamming"),
+        )
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
 def test_hamming_pairs_verify_paths_identical(spark):
-    """The segmented (production) and relational-join verify plans
-    must emit identical rows, with string ids (lexicographic min/max
+    """hamming_pairs' segmented verify and the relational self-join
+    twin must emit identical rows, with string ids (lexicographic min/max
     canonicalization) and with a hot bucket that exercises the
     segmented stage's row-blocked hot-run sweep."""
     rng = np.random.default_rng(7)
@@ -723,16 +747,16 @@ def test_hamming_pairs_verify_paths_identical(spark):
     df = spark.createDataFrame(
         [(f"d{i}", int(v)) for i, v in enumerate(vals)], "id string, h long"
     )
-    paths = {}
-    for mode in ("join", "segmented"):
-        paths[mode] = {
-            (r.id_a, r.id_b, r.hamming)
-            for r in dedup.hamming_pairs(
-                df, "id", "h", max_hamming=6, verify=mode
-            ).collect()
-        }
-    assert paths["join"] == paths["segmented"]
-    assert len(paths["join"]) >= 10
+    segmented = {
+        (r.id_a, r.id_b, r.hamming)
+        for r in dedup.hamming_pairs(df, "id", "h", max_hamming=6).collect()
+    }
+    joined = {
+        (r.id_a, r.id_b, r.hamming)
+        for r in _hamming_pairs_join(df, "id", "h", max_hamming=6).collect()
+    }
+    assert segmented == joined
+    assert len(joined) >= 10
 
     # hot bucket: all rows share block-2's key (top bits constant) but
     # differ in far more than max_hamming of the remaining bits — the
@@ -751,7 +775,7 @@ def test_hamming_pairs_verify_paths_identical(spark):
     }
     exp = {
         (r.id_a, r.id_b, r.hamming)
-        for r in dedup.hamming_pairs(hot, "id", "h", max_hamming=2, verify="join").collect()
+        for r in _hamming_pairs_join(hot, "id", "h", max_hamming=2).collect()
     }
     assert got == exp
     assert ("h00005", "hdup1", 1) in got and ("h00009", "hdup2", 0) in got
@@ -1103,25 +1127,62 @@ def test_connected_components_auto_chooser(spark):
 
 
 def test_connected_components_labelprop_handoff(spark):
-    """A high-diameter graph FORCED through labelprop must hand off to
-    the star loop after the round budget and still produce exact
-    labels in far fewer than diameter rounds (r7)."""
+    """A dense graph with a long diameter: 30 ten-node cliques chained
+    by bridge edges (mean degree ~9.2) makes the measured choice pick
+    labelprop, which cannot converge within its round budget, hands off
+    to the star loop, and still labels every node exactly."""
     from ukis_pysat_spark.operators import graph
 
-    n = 256
-    chain = [(i, i + 1) for i in range(n - 1)] + [(500, 501), (501, 502)]
-    df = spark.createDataFrame(chain, ["id_a", "id_b"])
+    n_cliques, size = 30, 10
+    edges = [
+        (c * size + i, c * size + j)
+        for c in range(n_cliques)
+        for i in range(size)
+        for j in range(i + 1, size)
+    ] + [(c * size + size - 1, (c + 1) * size) for c in range(n_cliques - 1)]
+    df = spark.createDataFrame(edges, ["id_a", "id_b"])
     stats: dict = {}
-    got = {
-        r.node: r.comp
-        for r in graph.connected_components(
-            df, stats=stats, algorithm="labelprop"
-        ).collect()
-    }
-    exp = {i: 0 for i in range(n)}
-    exp.update({500: 500, 501: 500, 502: 500})
-    assert got == exp
-    assert stats["rounds"] <= 20, stats  # 8 labelprop + O(log) star
+    got = {r.node: r.comp for r in graph.connected_components(df, stats=stats).collect()}
+    assert got == {i: 0 for i in range(n_cliques * size)}
+    assert stats["algorithm"] == "labelprop", stats
+    # more rounds than the labelprop budget means the handoff happened
+    assert graph._LABELPROP_HANDOFF_ROUNDS < stats["rounds"] <= 20, stats
+
+
+def _connected_components_labelprop(edges, src="id_a", dst="id_b", max_iter=50):
+    """Oracle twin of graph.connected_components: plain min-label
+    propagation, every node repeatedly takes the minimum label of its
+    closed neighborhood until no label changes (O(diameter) rounds)."""
+    a = F.col(src).alias("node")
+    b = F.col(dst).alias("node")
+    nodes = edges.select(a).unionByName(edges.select(b)).distinct()
+    labels = nodes.select("node", F.col("node").alias("comp")).localCheckpoint()
+    bi = (
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        .distinct()
+        .localCheckpoint()
+    )
+    for _ in range(max_iter):
+        neighbor = bi.join(labels, bi.v == labels.node).select(
+            F.col("u").alias("node"), "comp"
+        )
+        new_labels = (
+            labels.unionByName(neighbor)
+            .groupBy("node")
+            .agg(F.min("comp").alias("comp"))
+            .localCheckpoint()
+        )
+        changed = (
+            new_labels.alias("n")
+            .join(labels.alias("o"), "node")
+            .filter(F.col("n.comp") != F.col("o.comp"))
+            .count()
+        )
+        labels = new_labels
+        if changed == 0:
+            return labels
+    raise RuntimeError(f"labelprop did not converge in {max_iter} rounds")
 
 
 def test_connected_components_star_equals_labelprop(spark):
@@ -1135,6 +1196,6 @@ def test_connected_components_star_equals_labelprop(spark):
     edges += [(999, 999)]  # isolated node, self-loop only
     df = spark.createDataFrame(edges, ["id_a", "id_b"])
     star = {r.node: r.comp for r in graph.connected_components(df).collect()}
-    lp = {r.node: r.comp for r in graph.connected_components_labelprop(df).collect()}
+    lp = {r.node: r.comp for r in _connected_components_labelprop(df).collect()}
     assert star == lp
     assert star[999] == 999

@@ -6,11 +6,12 @@ and zero Python evaluation in relational stages.  They read plans, not
 rows, so they are cheap and catch silent plan regressions.
 """
 
+import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
 from ukis_pysat_spark import datagen
-from ukis_pysat_spark.operators import dedup, spatial_join, tiling, transforms
+from ukis_pysat_spark.operators import dedup, knn, spatial_join, tiling, transforms
 from tests.conftest import SF_DIR
 
 
@@ -54,6 +55,22 @@ def test_spatial_join_filter_stage_is_jvm(spark, images_parquet):
     assert "Union" in plan
     assert plan.count("MapInArrow") == 1  # the hard-pair refine only
     assert "ArrowEvalPython" not in plan  # no pandas-UDF cell cover
+
+
+def test_knn_below_crossover_is_broadcast_window_topk(spark, images_parquet):
+    """Below choose_knn_path's crossover knn() plans the broadcast scan:
+    a BroadcastNestedLoopJoin feeding a WindowGroupLimit partial top-k
+    before the shuffle, all JVM (the AOIs come from a local table, so
+    no fixture Python node either)."""
+    images = spark.read.parquet(images_parquet)
+    aois = spark.createDataFrame(datagen.aois_pdf(np.arange(5)))
+    plan = _plan(knn.knn(images, aois, k=3))
+    assert "BroadcastNestedLoopJoin" in plan, plan
+    assert any(
+        "WindowGroupLimit" in ln and ln.endswith("Partial") for ln in plan.splitlines()
+    ), plan
+    for marker in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "MapInArrow"):
+        assert marker not in plan, marker
 
 
 def test_dn2toa_broadcasts_metadata(spark, images_parquet):

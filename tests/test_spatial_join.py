@@ -57,21 +57,45 @@ def test_spatial_join_matches_bruteforce(spark):
     assert len(exp) > 0  # fixture produces real overlaps
 
 
-def test_spatial_join_salted_same_result(spark):
-    imgs = datagen.gen_images(spark, 120, profile="bench", skew_frac=0.5)
-    aois = datagen.gen_aois(spark, 40, skew_frac=0.5)
-    plain = _pairs(spatial_join.spatial_join(imgs, aois, res=12))
-    salted = _pairs(spatial_join.spatial_join(imgs, aois, res=12, salt=8))
-    assert plain == salted
+_SKEW_SPLIT_CONF = {
+    # no broadcast, so the cell join is a sort-merge join AQE can split
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1k",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k",
+}
+
+
+def test_spatial_join_aqe_skew_split_matches_bruteforce(spark):
+    """The one skew path: on a hotspot corpus AQE splits the hot cells
+    of the sort-merge cell join, and the rows still equal brute force."""
+    imgs = datagen.gen_images(spark, 100, profile="bench", skew_frac=0.8)
+    aois = datagen.gen_aois(spark, 50, skew_frac=0.8)
+    saved = {k: spark.conf.get(k, None) for k in _SKEW_SPLIT_CONF}
+    try:
+        for k, v in _SKEW_SPLIT_CONF.items():
+            spark.conf.set(k, v)
+        joined = spatial_join.spatial_join(imgs, aois, res=12)
+        got = _pairs(joined)
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert "SortMergeJoin(skew=true) [cell#" in plan, plan
+    assert got == _pairs(spatial_join.spatial_join_bruteforce(imgs, aois))
 
 
 def test_spatial_join_pathological_skew(spark):
     """SURVEY §7.4 case: 80% of AOIs AND scenes collapse onto one
-    hotspot cell; salted join must still match brute force exactly."""
+    hotspot cell; the join must still match brute force exactly."""
     imgs = datagen.gen_images(spark, 100, profile="bench", skew_frac=0.8)
     aois = datagen.gen_aois(spark, 50, skew_frac=0.8)
     exp = _pairs(spatial_join.spatial_join_bruteforce(imgs, aois))
-    got = _pairs(spatial_join.spatial_join(imgs, aois, res=12, salt=16))
+    got = _pairs(spatial_join.spatial_join(imgs, aois, res=12))
     assert got == exp
     assert len(exp) > 100  # the hotspot really is dense
 

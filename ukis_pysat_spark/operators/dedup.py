@@ -543,8 +543,6 @@ def hamming_pairs(
     hash_col: str,
     max_hamming: int = 3,
     n_bits: int = 64,
-    verify: str = "segmented",
-    stats: dict | None = None,
 ) -> DataFrame:
     """All (id_a < id_b) pairs whose ``hash_col`` values differ in at
     most ``max_hamming`` of ``n_bits`` bits — the pigeonhole-blocked
@@ -552,8 +550,8 @@ def hamming_pairs(
 
     (max_hamming+1) near-equal bit blocks; h differing bits cannot
     touch all h+1 blocks, so candidates sharing a (block, key) have
-    recall 1.0 by construction.  Verification (``verify="segmented"``,
-    the default): rows are hash-partitioned and sorted by (blk, key);
+    recall 1.0 by construction.  Verification: rows are hash-partitioned
+    and sorted by (blk, key);
     ONE mapInArrow stage detects the equal-key runs vectorized and
     verifies every candidate pair with chunked numpy XOR+popcount —
     segmented-arange index generation, so there is no per-bucket
@@ -565,37 +563,13 @@ def hamming_pairs(
     set on one core at row-machinery rates — measured minutes at 17k
     rows/bucket where the numpy sweep takes ~1 s).  Measured at sf0.1
     (cold buckets) the segmented stage matches the relational join
-    within noise, so it is the only production path; ``verify="join"``
-    keeps the round-6 self-equi-join for differential tests.
-
-    Both plans produce identical rows; dropDuplicates folds the
-    per-block copies."""
+    within noise, so it is the only path.  Its oracle twin, the
+    round-6 (blk, key) self-equi-join with a bit_count filter, lives
+    in tests/test_pipeline_ops.py, where differential tests compare
+    the two row for row.  dropDuplicates folds the per-block copies."""
     bucketed = hamming_blocks(df, id_col, hash_col, max_hamming, n_bits)
     id_type = df.schema[id_col].dataType.simpleString()
     h = int(max_hamming)
-    if stats is not None:
-        stats.update({"verify": verify})
-
-    if verify == "join":
-        a = bucketed.alias("a")
-        b = bucketed.alias("b")
-        hamming = F.bit_count(F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}")))
-        return (
-            a.join(
-                b,
-                (F.col("a.blk") == F.col("b.blk"))
-                & (F.col("a.key") == F.col("b.key"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-                & (hamming <= max_hamming),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-                hamming.alias("hamming"),
-            )
-            .dropDuplicates(["id_a", "id_b"])
-        )
-
     bounds_blocks = _simhash_block_bounds(h + 1, n_bits)
 
     def segmented(batches):

@@ -2,7 +2,7 @@
 pipeline (LSH/near-dup PAIRS -> duplicate CLUSTERS -> one canonical doc
 per cluster), and the stitch stage of cross-tile polygonize/contour.
 
-Default algorithm: alternating large-star / small-star (Kiveris et al.,
+Star algorithm: alternating large-star / small-star (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SoCC'14) — O(log n)
 rounds on ANY graph, each round two ids-only shuffles (a groupBy-min
 and an equi-join), so a pathological high-diameter graph (a pixel-chain
@@ -19,10 +19,12 @@ label potential; the fixpoint is a forest of stars rooted at each
 component's minimum id — deterministic, partitioning- and retry-safe.
 Convergence is detected with one count+hash action per round.
 
-`connected_components_labelprop` keeps the previous min-label
-propagation (O(diameter) rounds, slightly cheaper per round) as the
-differential twin and as an explicit choice for graphs known to be
-unions of near-cliques (LSH duplicate groups).
+One entry point: a measured mean degree picks
+min-label propagation for dense graphs (unions of near-cliques, i.e.
+LSH duplicate groups) and the star loop otherwise, and labelprop hands
+off to the star loop when it has not converged.  The plain min-label
+propagation twin (no handoff) lives in tests/test_pipeline_ops.py as
+the differential oracle.
 """
 
 from __future__ import annotations
@@ -31,8 +33,8 @@ from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 
-_LABELPROP_MIN_DEGREE = 8.0  # auto: labelprop only on clearly dense graphs
-_LABELPROP_HANDOFF_ROUNDS = 8  # auto: contract + hand off to star past this
+_LABELPROP_MIN_DEGREE = 8.0  # labelprop only on clearly dense graphs
+_LABELPROP_HANDOFF_ROUNDS = 8  # contract + hand off to star past this
 
 
 def connected_components(
@@ -41,31 +43,27 @@ def connected_components(
     dst: str = "id_b",
     max_iter: int = 50,
     stats: dict | None = None,
-    algorithm: str = "auto",
 ) -> DataFrame:
     """(node, component) for every node of the undirected edge list;
     `component` is the smallest node id in the node's component.
 
-    ``algorithm``:
+    The algorithm is a MEASURED choice: one aggregate over the
+    checkpointed canonical edge list computes the mean degree 2|E|/|V|.
 
-    - ``"star"``: alternating large-star/small-star — O(log n) rounds
+    - mean degree >= 8 -> min-label propagation: O(diameter) rounds,
+      cheap rounds; the right plan for unions of near-cliques (dedup
+      clusters converge in 2-4 rounds; a k-clique has degree k-1).  If
+      it has not converged after ``_LABELPROP_HANDOFF_ROUNDS`` the graph
+      is contracted by the current labels (connectivity-preserving) and
+      the remainder runs through the star loop, so a dense graph with a
+      long diameter still costs O(log n) total, not O(diameter).
+    - otherwise -> alternating large-star/small-star: O(log n) rounds
       regardless of graph diameter; ~2x the per-round constant of
       labelprop (two shuffle pairs + checkpoint + action per round).
-    - ``"labelprop"``: min-label propagation — O(diameter) rounds,
-      cheap rounds; the right plan for unions of near-cliques (dedup
-      clusters converge in 2-4 rounds).  If it has not converged after
-      ``_LABELPROP_HANDOFF_ROUNDS`` the graph is contracted by the
-      current labels (connectivity-preserving) and the remainder runs
-      through the star loop, so a mis-routed high-diameter graph still
-      costs O(log n) total, not O(diameter).
-    - ``"auto"`` (default): MEASURED choice — one aggregate over the
-      checkpointed canonical edge list computes the mean degree
-      2|E|/|V|; >= 8 routes to labelprop (near-clique dedup graphs sit
-      far above: a k-clique has degree k-1), chains/trees/grid stitch
-      graphs (degree <= 4) keep the diameter-safe star default.
+      Chains, trees and grid stitch graphs (degree <= 4) land here.
 
-    Both algorithms produce identical labels.  Pass a dict as `stats`
-    to receive {'rounds': n, 'algorithm': ...} for tests."""
+    Both produce identical labels.  Pass a dict as `stats` to receive
+    {'rounds': n, 'algorithm': ...} for tests."""
     # one upstream evaluation: raw pairs are checkpointed FIRST, so the
     # (possibly expensive) edge-producing plan is computed once and the
     # node table / canonical edges / chooser all read the checkpoint
@@ -89,18 +87,16 @@ def connected_components(
             stats["algorithm"] = "none"
         return nodes.select("node", F.col("node").alias("comp"))
 
-    algo = algorithm
-    if algo == "auto":
-        row = (
-            e.select(F.explode(F.array("u", "v")).alias("n"))
-            .agg(
-                F.count(F.lit(1)).alias("deg2"),
-                F.approx_count_distinct("n").alias("nn"),
-            )
-            .collect()[0]
+    row = (
+        e.select(F.explode(F.array("u", "v")).alias("n"))
+        .agg(
+            F.count(F.lit(1)).alias("deg2"),
+            F.approx_count_distinct("n").alias("nn"),
         )
-        mean_degree = float(row["deg2"]) / max(float(row["nn"]), 1.0)
-        algo = "labelprop" if mean_degree >= _LABELPROP_MIN_DEGREE else "star"
+        .collect()[0]
+    )
+    mean_degree = float(row["deg2"]) / max(float(row["nn"]), 1.0)
+    algo = "labelprop" if mean_degree >= _LABELPROP_MIN_DEGREE else "star"
     if stats is not None:
         stats["algorithm"] = algo
 
@@ -233,49 +229,3 @@ def connected_components(
         f"connected_components did not converge in {max_iter} rounds"
     )
 
-
-def connected_components_labelprop(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Min-label propagation twin: every node repeatedly takes the
-    minimum label of its closed neighborhood; O(diameter) rounds (one
-    join + one min-aggregate each).  Cheaper per round than the
-    alternating-star default — use when the graph is known to be a
-    union of near-cliques (near-dup groups, 2-4 rounds)."""
-    a = F.col(src).alias("node")
-    b = F.col(dst).alias("node")
-    nodes = edges.select(a).unionByName(edges.select(b)).distinct()
-    labels = nodes.select("node", F.col("node").alias("comp")).localCheckpoint()
-    bi = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        neighbor = (
-            bi.join(labels, bi.v == labels.node)
-            .select(F.col("u").alias("node"), "comp")
-        )
-        new_labels = (
-            labels.unionByName(neighbor)
-            .groupBy("node")
-            .agg(F.min("comp").alias("comp"))
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"connected_components_labelprop did not converge in {max_iter} "
-        "rounds (diameter exceeds the cap; use connected_components)"
-    )

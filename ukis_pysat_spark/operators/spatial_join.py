@@ -24,10 +24,13 @@ Antimeridian: rings spanning +-180 (planar lon span > 180 deg, physical
 extent < 180 deg) get wrapped cell covers, circular-interval bbox
 pre-refines, and frame-normalized exact refinement.
 
-Skew: dense AOI clusters make some cells hot.  ``salt_cells`` spreads a
-hot cell across S shuffle keys by salting the big (scene) side with
-pmod(xxhash64(image_id), S) and replicating the small (AOI) side S
-ways; AQE's skew-join splitting handles residual imbalance.
+One physical path: dense AOI clusters make some cells hot, and the
+only skew handling is AQE's skew-join split of the cell equi-join
+(spark.sql.adaptive.skewJoin.*), which splits a hot cell's partition
+by its measured size when the join runs as a sort-merge join.  The
+oracle twin is ``spatial_join_bruteforce`` below (an O(n*m)
+cross join + the same exact refine); tests and the benchmark's
+reference pass compare against it.
 """
 
 from __future__ import annotations
@@ -285,16 +288,6 @@ def scene_bounds(images: DataFrame) -> DataFrame:
     )
 
 
-def salt_cells(big: DataFrame, small: DataFrame, salt: int) -> tuple[DataFrame, DataFrame]:
-    """Explicit skew salting: big side keyed (cell, salt(id)); small side
-    replicated across all `salt` buckets.  Layered under AQE skew-join."""
-    big_s = big.withColumn("_salt", F.pmod(F.xxhash64("image_id"), F.lit(salt)).cast("int"))
-    small_s = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-    )
-    return big_s, small_s
-
-
 def choose_res(images: DataFrame, aois: DataFrame, sample: int = 1024) -> int:
     """Pick a cell resolution from MEASURED geometry extents (the
     dedup/knn chooser discipline: no caller folklore).  Output rows are
@@ -398,7 +391,6 @@ def candidate_pairs(
     images: DataFrame,
     aois: DataFrame,
     res: int | None = DEFAULT_RES,
-    salt: int | None = None,
 ) -> DataFrame:
     """Deduped (image_id, aoi_id) bbox-overlap candidates — a SUPERSET
     of ``spatial_join`` with recall 1.0 (a false candidate exists only
@@ -414,13 +406,8 @@ def candidate_pairs(
     if res is None:
         res = choose_res(images, aois)
     img_cells, aoi_cells = _cell_tables(images, aois, res, flags=False)
-    if salt:
-        img_cells, aoi_cells = salt_cells(img_cells, aoi_cells, salt)
-        join_keys = ["cell", "_salt"]
-    else:
-        join_keys = ["cell"]
     return (
-        img_cells.join(aoi_cells, join_keys)
+        img_cells.join(aoi_cells, "cell")
         .filter(_bbox_overlap())
         .select("image_id", "aoi_id")
         .dropDuplicates(["image_id", "aoi_id"])
@@ -431,7 +418,6 @@ def spatial_join(
     images: DataFrame,
     aois: DataFrame,
     res: int | None = DEFAULT_RES,
-    salt: int | None = None,
 ) -> DataFrame:
     """Exact scene-footprint x AOI-polygon intersection join.
 
@@ -475,11 +461,6 @@ def spatial_join(
     images = images.filter(F.col("image_id").isNotNull())
     aois = aois.filter(F.col("aoi_id").isNotNull())
     img_cells, aoi_cells = _cell_tables(images, aois, res, flags=True)
-    if salt:
-        img_cells, aoi_cells = salt_cells(img_cells, aoi_cells, salt)
-        join_keys = ["cell", "_salt"]
-    else:
-        join_keys = ["cell"]
 
     easy = F.col("_ibox") & F.col("_abox")
     sat_pair = F.col("_ibox_nw") & F.col("_aconv")
@@ -493,7 +474,7 @@ def spatial_join(
     decided = easy | sat_pair
     keep_rel = easy | (sat_pair & ~separated)
     tagged = (
-        img_cells.join(aoi_cells, join_keys)
+        img_cells.join(aoi_cells, "cell")
         .filter(_bbox_overlap())
         .filter(~decided | keep_rel)  # decided non-intersections out
         .select("image_id", "aoi_id", (~decided).alias("_hard"))

@@ -42,15 +42,19 @@ its lineage rebuilt from the same footers on the next
 ``run_stage_in_batches``.
 
 ``run_stage_in_batches`` buckets by ``pmod(xxhash64(key), n_batches)``
-and a committed batch id is final, so when every committed batch came
-from the current ``(key_col, n_batches)`` no pending bucket's key can be
-committed and the anti-join cannot remove anything.  The batching is
-recorded in ``{base}/{stage}/_batching.json`` while the stage has no
-committed batch; the anti-join is skipped only when that record matches
-and every committed id is a ``b%04d`` below ``n_batches``.  A changed
-batching drops the record, so a stage that mixes batchings, has no
-record, or holds foreign ids (e.g. streaming's ``s%08d``) always takes
-the anti-join.
+and a committed ``b%04d`` batch of the current ``(key_col, n_batches)``
+is final, so when every committed batch came from that batching no
+pending bucket's key can be committed and the anti-join cannot remove
+anything.  The batching is recorded in ``{base}/{stage}/_batching.json``
+while the stage has no committed batch; the anti-join is skipped only
+when that record matches and every committed id is a ``b%04d`` below
+``n_batches``.  A changed batching drops the record, so a stage that
+mixes batchings, has no record, or holds foreign ids (e.g. streaming's
+``s%08d``) always takes the anti-join.  On that path a taken ``b%04d``
+id may hold another batching's bucket (a crash at 4 batches then a
+resume at 2 finds ``b0001`` holding only ``mod 4`` bucket 1), so the
+bucket's remaining keys are committed under ``b%04dn%04d`` (bucket,
+n_batches), an id final for that batching.
 
 On a cluster with an Iceberg catalog, pass ``catalog=`` to switch the
 SAME semantics onto snapshot commits: each batch lands as one
@@ -394,12 +398,18 @@ def run_stage_in_batches(
     done = 0
     for b in range(n_batches):
         batch_id = f"b{b:04d}"
-        # a committed batch id is FINAL (buckets are deterministic key
-        # hashes): skip without recomputing — also required for safety,
-        # since overwriting it would delete files the resume anti-join
-        # plan still reads lazily
+        # a committed batch id is never overwritten: that would delete
+        # files the resume anti-join plan still reads lazily.  Without
+        # the anti-join it is FINAL (buckets are deterministic key hashes
+        # of this batching).  With it, a plain id may hold another
+        # batching's bucket, so this bucket's remaining keys go under an
+        # id naming the batching, which is final for that batching.
         if batch_id in committed:
-            continue
+            if not anti_join:
+                continue
+            batch_id += f"n{n_batches:04d}"
+            if batch_id in committed:
+                continue
         batch = work.filter(F.col("_bucket") == b).drop("_bucket")
         # write directly — no emptiness pre-count: the transform runs
         # ONCE per batch (an empty committed batch is harmless: it adds
