@@ -182,7 +182,7 @@ def test_sessionize_single_user_exchange(spark):
 
 
 def test_zonal_rasterize_plan_shape(spark, images_parquet, tmp_path_factory):
-    """zonal_stats and rasterize run exactly ONE Arrow stage (the
+    """zonal_stats, zonal_mode and rasterize run exactly ONE Arrow stage (the
     stats/burn stage — since r7 their pair source is the relational
     bbox candidate superset, so the spatial-join exact-refine Arrow
     stage is gone: the window mask is the exact test), zero
@@ -196,6 +196,7 @@ def test_zonal_rasterize_plan_shape(spark, images_parquet, tmp_path_factory):
     aois = spark.read.parquet(pa_)
     for df in (
         zonal.zonal_stats(images, aois, res=8),
+        zonal.zonal_mode(images, aois, res=8),
         rasterize.rasterize(images, aois, res=8),
     ):
         plan = _plan(df)

@@ -289,6 +289,84 @@ def test_zonal_empty_and_nodata(spark):
     assert out.count() == 0
 
 
+def test_axis_box_needs_four_rectilinear_corners():
+    """Only a rectangle takes the box window test: a right triangle (or
+    a bowtie) also has every vertex on a bbox corner."""
+    box = zonal._is_axis_box
+    f = np.array
+    assert box(f([0.0, 2.0, 2.0, 0.0, 0.0]), f([0.0, 0.0, 1.0, 1.0, 0.0]))
+    assert box(f([0.0, 2.0, 2.0, 0.0]), f([0.0, 0.0, 1.0, 1.0]))
+    assert not box(f([0.0, 2.0, 0.0, 0.0]), f([0.0, 0.0, 1.0, 0.0]))
+    assert not box(f([0.0, 2.0, 0.0, 2.0, 0.0]), f([0.0, 1.0, 1.0, 0.0, 0.0]))
+    assert not box(f([0.0, 2.0, 2.0, 2.0, 0.0]), f([0.0, 0.0, 1.0, 0.0, 0.0]))
+
+
+def test_zonal_nan_nodata(spark):
+    """A NaN nodata (what from_geotiff parses from a GDAL_NODATA tag of
+    'nan') masks the NaN pixels in zonal_stats and zonal_mode, on whole-
+    grid, box, convex and generic-ring windows alike; a window whose pixels are
+    all NaN emits no row.  Oracle: nan-aware numpy over a full-grid
+    center PIP."""
+    rng = np.random.default_rng(3)
+    arr = rng.integers(0, 4, size=(2, 6, 6)).astype(np.float32)
+    arr[0, 1:3, 1:4] = np.nan
+    arr[1, :, 3:] = np.nan  # band 1: right half all NaN
+    transform = [1.0, 0.0, 0.0, 0.0, -1.0, 6.0]
+    img = spark.createDataFrame(
+        [
+            (
+                "n0",
+                bytearray(codec.encode(arr, "raw")),
+                transform,
+                float("nan"),
+                "EPSG:4326",
+                [0.0, 6.0, 6.0, 0.0, 0.0],
+                [6.0, 6.0, 0.0, 0.0, 6.0],
+            )
+        ],
+        "image_id string, bytes binary, transform array<double>, nodata double, "
+        "crs string, footprint_lon array<double>, footprint_lat array<double>",
+    )
+    rows = [
+        ("full", [0.0, 6.0, 6.0, 0.0, 0.0], [0.0, 0.0, 6.0, 6.0, 0.0]),
+        ("box", [0.0, 4.0, 4.0, 0.0, 0.0], [2.0, 2.0, 6.0, 6.0, 2.0]),
+        ("right", [3.0, 6.0, 6.0, 3.0, 3.0], [0.0, 0.0, 6.0, 6.0, 0.0]),
+        ("tri", [0.2, 5.7, 0.2, 0.2], [0.2, 0.2, 5.7, 0.2]),
+        ("ell", [0.1, 5.9, 5.9, 2.9, 2.9, 0.1, 0.1], [0.1, 0.1, 2.9, 2.9, 5.9, 5.9, 0.1]),
+    ]
+    aois = _aoi_df(spark, rows)
+    px = np.arange(6) + 0.5
+    gx, gy = np.meshgrid(px, 6.0 - px)
+    exp_stats, exp_mode = {}, {}
+    for aid, rx, ry in rows:
+        inside = points_in_polygon(
+            gx.ravel(), gy.ravel(), np.asarray(rx), np.asarray(ry)
+        ).reshape(6, 6)
+        for b in range(2):
+            vals = arr[b][inside].astype(np.float64)
+            vals = vals[~np.isnan(vals)]
+            if vals.size == 0:
+                continue
+            exp_stats[("n0", aid, b)] = (
+                vals.size, vals.sum(), vals.mean(), vals.min(), vals.max()
+            )
+            uq, cnts = np.unique(vals, return_counts=True)
+            k = int(np.argmax(cnts))
+            exp_mode[("n0", aid, b)] = (float(uq[k]), int(cnts[k]), vals.size)
+    assert ("n0", "right", 1) not in exp_stats
+
+    got = _collect_zonal(zonal.zonal_stats(img, aois, res=6))
+    assert set(got) == set(exp_stats)
+    for key, (n, s, m, mn, mx) in exp_stats.items():
+        assert got[key][0] == n, key
+        assert got[key][1:] == pytest.approx((s, m, mn, mx)), key
+    got_mode = {
+        (r["image_id"], r["aoi_id"], r["band"]): (r["mode"], r["n_mode"], r["n_valid"])
+        for r in zonal.zonal_mode(img, aois, res=6).collect()
+    }
+    assert got_mode == exp_mode
+
+
 def test_zonal_grid_equals_single_image(spark):
     """zonal_stats_grid over mosaic tiles matches zonal_stats over the
     assembled grid exactly (stats merge across tile boundaries)."""

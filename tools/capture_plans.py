@@ -15,7 +15,6 @@ import sys
 
 sys.path.insert(0, os.getcwd())
 
-from pyspark.sql import SparkSession  # noqa: E402
 import pyspark.sql.functions as F  # noqa: E402
 
 
@@ -30,16 +29,11 @@ def main() -> None:
         tiling, transforms, zonal,
     )
     from ukis_pysat_spark import sinks
+    from ukis_pysat_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "128")
-        .config("spark.sql.parquet.columnarReaderBatchSize", "128")
-        .appName("capture-plans")
-        .getOrCreate()
-    )
+    # the benchmarked session's conf (broadcast threshold, batch sizes),
+    # so the captured plans are the plans that ran
+    spark = get_spark("capture-plans", master="local[8]", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
     images = spark.read.parquet(f"{corpus}/images")
     aois = spark.read.parquet(f"{corpus}/aois")

@@ -61,10 +61,10 @@ _PA_TYPES = {
     "platform": pa.string(),
 }
 
-_PA_SCHEMA = pa.schema(
-    [("image_id", pa.string()), ("bytes", pa.binary())]
-    + [(n, _PA_TYPES[n]) for n in META_COLS[2:]]
-)
+# full images-schema field list, 'bytes' the payload
+_IMAGES_FIELDS = [("image_id", pa.string()), ("bytes", pa.binary())] + [
+    (n, _PA_TYPES[n]) for n in META_COLS[2:]
+]
 
 
 class PayloadBuf:
@@ -122,16 +122,6 @@ class PayloadBuf:
         return pa.RecordBatch.from_arrays(arrays, schema=self.schema)
 
 
-class ImagesBuf(PayloadBuf):
-    """PayloadBuf specialized to the engine's full images schema."""
-
-    def __init__(self) -> None:
-        super().__init__(
-            [("image_id", pa.string()), ("bytes", pa.binary())]
-            + [(n, _PA_TYPES[n]) for n in META_COLS[2:]]
-        )
-
-
 # row_fn contract: dict (python values; 'bytes' is a buffer-protocol
 # object) -> (meta dict WITHOUT payload, pixel array, fmt string)
 RowFn = Callable[[dict], tuple[dict, np.ndarray, str]]
@@ -145,30 +135,12 @@ def map_image_rows(
 ) -> DataFrame:
     """Run `row_fn` over every image row and emit images-schema rows
     through the Arrow-native buffer (one decode + one encode per row,
-    no pandas in the loop)."""
-
-    def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        buf = ImagesBuf()
-        for batch in batches:
-            # bulk C-side conversion of the small columns; the payload
-            # column stays Arrow so each row is a zero-copy buffer view
-            names = [n for n in batch.schema.names if n != "bytes"]
-            lists = [batch.column(n).to_pylist() for n in names]
-            payload = batch.column("bytes") if "bytes" in batch.schema.names else None
-            for ri in range(batch.num_rows):
-                row = {n: ls[ri] for n, ls in zip(names, lists)}
-                if payload is not None:
-                    row["bytes"] = payload[ri].as_buffer()
-                d, arr, fmt = row_fn(row)
-                header, body = codec.encode_chunks(arr, fmt)
-                buf.add(d, header, body)
-                if buf.nbytes >= flush_bytes:
-                    yield buf.flush()
-                    buf = ImagesBuf()
-        if buf.n:
-            yield buf.flush()
-
-    return images.select(*in_cols).mapInArrow(emit, schema=IMAGES_OUT_SCHEMA)
+    no pandas in the loop) — `flat_map_payload_rows` with one output
+    row per input row."""
+    return flat_map_payload_rows(
+        images, in_cols, lambda row: (row_fn(row),), _IMAGES_FIELDS,
+        flush_bytes=flush_bytes,
+    )
 
 
 _DDL_OF_PA = {

@@ -405,44 +405,3 @@ def haversine_km(lon1, lat1, lon2, lat2):
     dlat = lat2 - lat1
     a = np.sin(dlat / 2.0) ** 2 + np.cos(lat1) * np.cos(lat2) * np.sin(dlon / 2.0) ** 2
     return 2.0 * EARTH_RADIUS_KM * np.arcsin(np.sqrt(a))
-
-
-def ring_centroid(ring_lon: np.ndarray, ring_lat: np.ndarray) -> tuple[float, float]:
-    """Area-weighted centroid of a simple polygon (shapely .centroid
-    semantics, ukis_pysat/file.py:252 parity for get_proj_string)."""
-    x = np.asarray(ring_lon, dtype=np.float64)
-    y = np.asarray(ring_lat, dtype=np.float64)
-    if x[0] != x[-1] or y[0] != y[-1]:
-        x = np.append(x, x[0])
-        y = np.append(y, y[0])
-    cross = x[:-1] * y[1:] - x[1:] * y[:-1]
-    area = cross.sum() / 2.0
-    if area == 0.0:
-        return float(x[:-1].mean()), float(y[:-1].mean())
-    cx = ((x[:-1] + x[1:]) * cross).sum() / (6.0 * area)
-    cy = ((y[:-1] + y[1:]) * cross).sum() / (6.0 * area)
-    return float(cx), float(cy)
-
-
-_UTM_LETTERS = "CDEFGHJKLMNPQRSTUVWX"
-
-
-def utm_zone_letter(lon: float, lat: float) -> tuple[int, str]:
-    """UTM zone number + MGRS latitude band letter (utm-package parity
-    for the fixtures; reference usage ukis_pysat/file.py:252)."""
-    zone = int((lon + 180.0) // 6.0) + 1
-    # Norway / Svalbard exceptions (match the utm package)
-    if 56.0 <= lat < 64.0 and 3.0 <= lon < 12.0:
-        zone = 32
-    if 72.0 <= lat <= 84.0:
-        if 0.0 <= lon < 9.0:
-            zone = 31
-        elif 9.0 <= lon < 21.0:
-            zone = 33
-        elif 21.0 <= lon < 33.0:
-            zone = 35
-        elif 33.0 <= lon < 42.0:
-            zone = 37
-    idx = int((lat + 80.0) // 8.0)
-    idx = min(max(idx, 0), len(_UTM_LETTERS) - 1)
-    return zone, _UTM_LETTERS[idx]

@@ -42,6 +42,7 @@ import pyspark.sql.functions as F
 
 from ukis_pysat_spark import codec
 from ukis_pysat_spark.operators import spatial_join as sj
+from ukis_pysat_spark.operators.zonal import _is_lonlat
 
 SAMPLE_SCHEMA = (
     "point_id string, image_id string, band int, r int, c int, val double"
@@ -57,17 +58,6 @@ _SAMPLE_PA_SCHEMA = pa.schema(
         ("val", pa.float64()),
     ]
 )
-
-_LONLAT_CRS = {"EPSG:4326", "4326", "OGC:CRS84", "CRS84"}
-
-
-def _is_lonlat(crs: str | None) -> bool:
-    if crs is None or crs == "":
-        return True
-    if crs in _LONLAT_CRS:
-        return True
-    return crs.startswith("+proj=longlat")
-
 
 def _sample_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """Arrow-native gather: point coordinates are read as zero-copy

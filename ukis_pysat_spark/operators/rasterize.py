@@ -6,16 +6,19 @@ through rasterio: ``Image.mask`` (ukis_pysat/raster.py:113-138) has
 rasterio.mask geometry-rasterize the shapes against the scene grid
 before applying them.  Here the burn is a distributed plan:
 
-1. ``spatial_join`` (cell index + exact refine) pairs each target grid
-   with the AOIs that touch it.
+1. ``spatial_join.candidate_pairs`` pairs each target grid with the
+   AOIs whose bbox cells touch it (a superset: the window mask of step
+   3 is the exact test, so a false candidate burns nothing).
 2. Pairs fold to ONE row per target (``collect_list`` of its AOIs) —
    rings are id+vertices only, so the fold shuffle is tiny and AQE
    broadcasts it against the targets table.
 3. One Arrow stage per target: allocate the canvas at ``background``,
-   and for each AOI reuse zonal's analyzed-ring machinery
-   (``_ring_info`` cache, box / convex half-plane / generic PIP window
-   masks) to burn the AOI's value into the covered pixel centers.
-   The payload leaves through the zero-copy PayloadBuf emitter.
+   and burn each AOI's value into its covered pixel centers.
+
+Steps 1-2 and the window loop of step 3 are zonal's (``_fold_aois``,
+``_aoi_windows``: analyzed-ring cache, box / convex half-plane /
+generic PIP window masks).  The payload leaves through the zero-copy
+PayloadBuf emitter.
 
 Combine rule: overlapping AOIs take the MAXIMUM burn value — unlike
 rasterio's document-order last-wins, max is commutative, so the result
@@ -47,7 +50,8 @@ from ukis_pysat_spark.operators.arrowio import PayloadBuf
 from ukis_pysat_spark.operators.zonal import (
     _AoiListView,
     _WinCache,
-    _is_lonlat,
+    _aoi_windows,
+    _fold_aois,
 )
 
 RASTERIZE_FIELDS = [
@@ -75,7 +79,6 @@ def _burn_batches(dtype: str, background: float, fmt: str):
     np_dtype = np.dtype(dtype)
 
     def burn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ring_cache: dict = {}
         win_cache = _WinCache()
         buf = PayloadBuf(RASTERIZE_FIELDS)
         for batch in batches:
@@ -88,36 +91,21 @@ def _burn_batches(dtype: str, background: float, fmt: str):
             burns = aois.extra
             for ri in range(batch.num_rows):
                 w, h = ws[ri], hs[ri]
-                crs = crss[ri]
-                lonlat = _is_lonlat(crs)
-                tr = transforms_col[ri]
-                tkey = (w, h, tr[0], tr[1], tr[2], tr[3], tr[4], tr[5])
-                canvas = None
-                # AOIs covering the whole canvas fold to ONE max (max is
-                # commutative/associative, so one full-canvas np.maximum
-                # replaces per-AOI passes — same final pixels)
-                full_max = None
-                touched = False
-                partials = []  # (win, val) burns on sub-windows
-                for i in range(aois.offs[ri], aois.offs[ri + 1]):
-                    win = win_cache.get(
-                        ring_cache, aois, i, crs, tkey, tr, w, h, lonlat
-                    )
-                    if win is None:
-                        continue
-                    touched = True
-                    val = np_dtype.type(burns[i])
-                    c0, c1, r0, r1, inside = win
-                    if inside is None and c0 == 0 and r0 == 0 and c1 == w and r1 == h:
-                        full_max = val if full_max is None else max(full_max, val)
-                    else:
-                        partials.append((win, val))
-                if not touched:
+                full, parts = _aoi_windows(
+                    win_cache, aois, ri, crss[ri], transforms_col[ri], w, h
+                )
+                if not full and not parts:
                     continue
                 canvas = np.full((1, h, w), background, dtype=np_dtype)
-                if full_max is not None:
-                    np.maximum(canvas, full_max, out=canvas)
-                for (c0, c1, r0, r1, inside), val in partials:
+                if full:
+                    # AOIs covering the whole canvas fold to ONE max (max
+                    # is commutative/associative, so one full-canvas
+                    # np.maximum replaces per-AOI passes — same pixels)
+                    np.maximum(
+                        canvas, max(np_dtype.type(burns[i]) for i in full), out=canvas
+                    )
+                for i, (c0, c1, r0, r1, inside) in parts:
+                    val = np_dtype.type(burns[i])
                     target = canvas[0, r0:r1, c0:c1]
                     if inside is None:
                         np.maximum(target, val, out=target)
@@ -132,7 +120,7 @@ def _burn_batches(dtype: str, background: float, fmt: str):
                         "fmt": fmt,
                         "bands": 1,
                         "dtype": dtype,
-                        "crs": crs,
+                        "crs": crss[ri],
                         "transform": transforms_col[ri],
                         "nodata": float(background),
                         "burned": int(np.count_nonzero(canvas != background)),
@@ -176,29 +164,8 @@ def rasterize(
     burn_val = (
         F.col(value_col).cast("double") if value_col else F.lit(1.0)
     )
-    # bbox candidate superset, not the exact join (r7): a target emits
-    # a canvas iff >= 1 pixel CENTER is inside >= 1 ring (win_cache
-    # returns None otherwise), so false candidates burn nothing and
-    # never create a row — identical output, no refine machinery
-    pairs = sj.candidate_pairs(
-        targets.select("image_id", "footprint_lon", "footprint_lat"), aois, res=res
-    )
-    per_img = (
-        pairs.join(
-            aois.select(
-                "aoi_id", "ring_lon", "ring_lat", burn_val.alias("burn")
-            ),
-            "aoi_id",
-        )
-        .groupBy("image_id")
-        .agg(
-            F.collect_list(
-                F.struct("aoi_id", "ring_lon", "ring_lat", "burn")
-            ).alias("aois")
-        )
-    )
-    joined = targets.select("image_id", "w", "h", "transform", "crs").join(
-        per_img, "image_id"
+    joined = _fold_aois(
+        targets, ("w", "h", "transform", "crs"), aois, res, extra=(burn_val.alias("burn"),)
     )
     return joined.mapInArrow(
         _burn_batches(dtype, background, fmt), schema=RASTERIZE_SCHEMA

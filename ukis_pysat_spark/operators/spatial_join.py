@@ -272,22 +272,6 @@ def sat_box_separated(axes: Column, x0, x1, y0, y1) -> Column:
     )
 
 
-def scene_bounds(images: DataFrame) -> DataFrame:
-    """Relational scene bbox from (transform, w, h) — no pixel decode."""
-    a = F.get("transform", 0)
-    c = F.get("transform", 2)
-    e = F.get("transform", 4)
-    f_ = F.get("transform", 5)
-    return images.withColumns(
-        {
-            "img_lon_min": c,
-            "img_lon_max": c + F.col("w").cast("double") * a,
-            "img_lat_max": f_,
-            "img_lat_min": f_ + F.col("h").cast("double") * e,
-        }
-    )
-
-
 def choose_res(images: DataFrame, aois: DataFrame, sample: int = 1024) -> int:
     """Pick a cell resolution from MEASURED geometry extents (the
     dedup/knn chooser discipline: no caller folklore).  Output rows are

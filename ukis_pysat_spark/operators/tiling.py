@@ -22,7 +22,7 @@ Two physical strategies, chosen by what the query needs:
                    reaches the parquet scan).  Use for counting, geometry,
                    and joining tiles spatially.
 
-``tile_pixels``    Arrow-batched ``mapInPandas`` that decodes each image
+``tile_pixels``    Arrow-batched ``mapInArrow`` that decodes each image
                    once, slices every window from the in-memory array and
                    emits encoded tile payloads.  One decode per image per
                    stage (the reference instead re-materializes a GTiff

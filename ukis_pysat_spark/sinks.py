@@ -134,7 +134,7 @@ def from_geotiff(blobs: DataFrame, tiff_col: str = "tiff", fmt: str = "raw") -> 
     codec, rebuild the geo columns from the parsed tags.  The read twin
     of to_geotiff — to_geotiff |> from_geotiff is a lossless loop.
     Arrow-native: each blob enters as a zero-copy buffer view and the
-    re-encoded payloads leave through the chunked ImagesBuf."""
+    re-encoded payloads leave through the chunked PayloadBuf."""
     import pyspark.sql.functions as F
 
     from ukis_pysat_spark.datagen import phash64
