@@ -210,7 +210,7 @@ def test_lzw_fast_matches_reference_decoder():
     ]
     for p in payloads:
         enc = tiffgen.lzw_encode(p)
-        assert geotiff._lzw_decode(enc) == geotiff._lzw_decode_py(enc) == p
+        assert geotiff._lzw_decode(enc) == tiffgen.lzw_decode(enc) == p
 
 
 def test_lzw_corrupt_stream_raises():
@@ -227,7 +227,7 @@ def test_lzw_corrupt_stream_raises():
     with pytest.raises(ValueError, match="corrupt LZW"):
         geotiff._lzw_decode(raw)
     with pytest.raises(ValueError, match="corrupt LZW"):
-        geotiff._lzw_decode_py(raw)
+        tiffgen.lzw_decode(raw)
 
 
 def test_lzw_fast_correctness():
@@ -239,7 +239,7 @@ def test_lzw_fast_correctness():
     payload = img.astype("uint8").tobytes()
     enc = tiffgen.lzw_encode(payload)
     assert geotiff._lzw_decode(enc) == payload
-    assert geotiff._lzw_decode_py(enc) == payload
+    assert tiffgen.lzw_decode(enc) == payload
 
 
 @pytest.mark.perf
@@ -268,7 +268,7 @@ def test_lzw_fast_speedup():
 
     best_of(geotiff._lzw_decode, reps=1)  # warm numpy allocators
     fast = best_of(geotiff._lzw_decode)
-    slow = best_of(geotiff._lzw_decode_py)
+    slow = best_of(tiffgen.lzw_decode)
     ratio = slow / max(fast, 1e-9)
     assert ratio >= 2.0, f"vectorized LZW only {ratio:.1f}x faster"
 
@@ -313,7 +313,7 @@ def test_lzw_smooth_run_copy_correctness():
     smooth = np.repeat(np.arange(256, dtype="uint8"), 4096).tobytes()
     enc = tiffgen.lzw_encode(smooth)
     assert geotiff._lzw_decode(enc) == smooth
-    assert geotiff._lzw_decode_py(enc) == smooth
+    assert tiffgen.lzw_decode(enc) == smooth
     # pure KwKwK chain: aaaa... maximizes the overlap case
     runs = b"a" * 65536
     enc2 = tiffgen.lzw_encode(runs)
@@ -340,5 +340,5 @@ def test_lzw_smooth_run_copy_speedup():
 
     best_of(geotiff._lzw_decode, reps=1)
     fast = best_of(geotiff._lzw_decode)
-    slow = best_of(geotiff._lzw_decode_py)
+    slow = best_of(tiffgen.lzw_decode)
     assert slow / max(fast, 1e-9) >= 1.2

@@ -10,8 +10,11 @@ import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-from ukis_pysat_spark import datagen
-from ukis_pysat_spark.operators import dedup, knn, spatial_join, tiling, transforms
+from ukis_pysat_spark import datagen, sinks
+from ukis_pysat_spark.operators import (
+    arrowio, change, contour, dedup, histmatch, knn, multimodal, pansharpen,
+    polygonize, spatial_join, texture, tiling, transforms,
+)
 from tests.conftest import SF_DIR
 
 
@@ -369,3 +372,76 @@ def test_session3_ops_plan_shapes(spark, images_parquet):
         for marker in ("ArrowEvalPython", "BatchEvalPython",
                        "MapInPandas", "MapInArrow"):
             assert marker not in p, marker
+
+
+
+_STATS_DDL = (
+    "image_id string, band int, mean double, std double, "
+    "min double, max double, n_valid long"
+)
+_RASTER_DDL = (
+    "image_id string, bytes binary, w int, h int, fmt string, bands int, "
+    "dtype string, crs string, transform array<double>, nodata double"
+)
+
+
+def _grid_stage(images):
+    rows_fn = polygonize._grid_rows([1.0, 0.0, 0.0, 0.0, -1.0, 0.0], 256, 128, 0, None)
+    return arrowio.map_rows(
+        images, ["bytes", "transform", "nodata"], rows_fn, polygonize.GRID_STAGE_SCHEMA
+    )
+
+
+# (stage, builder over (images, metadata), the output schema DDL the
+# stage declared by hand before its Arrow schema became the only one)
+_ARROW_ROW_STAGES = [
+    ("decode_stats", lambda im, meta: multimodal.decode_stats(im), _STATS_DDL),
+    ("compute_phash", lambda im, meta: multimodal.compute_phash(im),
+     "image_id string, phash long"),
+    ("band_histogram", lambda im, meta: multimodal.band_histogram(im, 16, 0.0, 4096.0),
+     "image_id string, band int, bin int, count long"),
+    ("resize_images", lambda im, meta: multimodal.resize_images(im, 8, 8),
+     "image_id string, bytes binary, w int, h int, caption string"),
+    ("change_stats", lambda im, meta: change.change_stats(im, im),
+     "image_id string, band int, n_valid long, mean_diff double, "
+     "min_diff double, max_diff double, rmse double, n_changed long"),
+    ("change_mask", lambda im, meta: change.change_mask(im, im, 1.0),
+     "image_id string, bytes binary, w int, h int, fmt string, bands int, "
+     "dtype string, transform array<double>, n_changed long"),
+    ("contour", lambda im, meta: contour.contour(im, [100.0]),
+     "image_id string, band int, level double, r int, c int, "
+     "x0 double, y0 double, x1 double, y1 double"),
+    ("glcm_features", lambda im, meta: texture.glcm_features(im),
+     "image_id string, band int, n_pairs long, contrast double, "
+     "dissimilarity double, homogeneity double, energy double"),
+    ("valid_data_bbox", lambda im, meta: transforms.valid_data_bbox(im),
+     "image_id string, left double, bottom double, right double, top double"),
+    ("dn2toa_stats", transforms.dn2toa_stats, _STATS_DDL),
+    ("dn2toa", transforms.dn2toa, datagen.IMAGES_SCHEMA),
+    ("to_geotiff", lambda im, meta: sinks.to_geotiff(im),
+     "image_id string, caption string, n_bytes long, tiff binary"),
+    ("polygonize", lambda im, meta: polygonize.polygonize(im),
+     "image_id string, region_id long, value double, n_pixels long, "
+     "r0 int, c0 int, r1 int, c1 int, "
+     "left double, top double, right double, bottom double"),
+    ("polygonize_grid stage", lambda im, meta: _grid_stage(im),
+     "kind int, gid long, value double, n_pixels long, "
+     "g_r0 long, g_c0 long, g_r1 long, g_c1 long, ekey long, pos long"),
+    ("pansharpen", lambda im, meta: pansharpen.pansharpen(im, im), _RASTER_DDL),
+    ("match_histogram", lambda im, meta: histmatch.match_histogram(im, im), _RASTER_DDL),
+]
+
+
+@pytest.mark.parametrize(
+    "build, ddl", [s[1:] for s in _ARROW_ROW_STAGES], ids=[s[0] for s in _ARROW_ROW_STAGES]
+)
+def test_arrow_row_stage_schema_and_plan(spark, images_parquet, build, ddl):
+    """Every stage on the arrowio emitters derives its Spark schema from
+    its Arrow schema: that must equal the DDL it used to declare, and
+    the stage must stay ONE MapInArrow with no per-row Python eval."""
+    images = spark.read.parquet(images_parquet)
+    df = build(images, datagen.gen_metadata(spark, 24, profile="bench"))
+    assert df.schema.simpleString() == spark.createDataFrame([], ddl).schema.simpleString()
+    plan = _plan(df)
+    assert plan.count("MapInArrow") == 1, plan
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan

@@ -4,7 +4,9 @@ gets these free from GDAL; this environment has no TIFF library).
 
 Implements the encoder side of TIFF 6.0 §9 (PackBits), §13 (LZW with
 early change) and the tag-317 horizontal-differencing predictor, plus a
-strip-organized classic-TIFF container with optional GeoTIFF tags.
+strip-organized classic-TIFF container with optional GeoTIFF tags, and
+the per-code reference LZW decoder the engine's vectorized one is
+tested against.
 Test-only code — the product reader is ukis_pysat_spark/sources/geotiff.py.
 """
 
@@ -63,6 +65,51 @@ def lzw_encode(data: bytes) -> bytes:
     emit(257)
     if accbits:
         out.append((acc << (8 - accbits)) & 0xFF)
+    return bytes(out)
+
+
+def lzw_decode(raw: bytes) -> bytes:
+    """Reference TIFF-variant LZW decoder (TIFF 6.0 §13): the simple
+    per-code loop, the differential-test twin of the engine's
+    vectorized `sources.geotiff._lzw_decode`.  MSB-first bit packing,
+    code 256 = ClearCode, 257 = EndOfInformation, table entries from
+    258, code width 9→12 bits with the TIFF 'early change' (width grows
+    one code early, when the next free index reaches 2^width - 1)."""
+    out = bytearray()
+    base = [bytes([i]) for i in range(256)] + [b"", b""]
+    table = list(base)
+    nbits = 9
+    prev = b""
+    bitpos = 0
+    total_bits = len(raw) * 8
+    while bitpos + nbits <= total_bits:
+        byte_i = bitpos >> 3
+        chunk = int.from_bytes(raw[byte_i : byte_i + 3].ljust(3, b"\0"), "big")
+        code = (chunk >> (24 - (bitpos & 7) - nbits)) & ((1 << nbits) - 1)
+        bitpos += nbits
+        if code == 256:  # ClearCode
+            table = list(base)
+            nbits = 9
+            prev = b""
+            continue
+        if code == 257:  # EndOfInformation
+            break
+        if not prev:
+            if code >= len(table):
+                raise ValueError("corrupt LZW stream: code beyond table")
+            entry = table[code]
+        elif code < len(table):
+            entry = table[code]
+            table.append(prev + entry[:1])
+        elif code == len(table):  # the KwKwK case: code == next free index
+            entry = prev + prev[:1]
+            table.append(entry)
+        else:
+            raise ValueError("corrupt LZW stream: code beyond table")
+        out += entry
+        prev = entry
+        if len(table) == (1 << nbits) - 1 and nbits < 12:
+            nbits += 1  # early change
     return bytes(out)
 
 

@@ -81,7 +81,6 @@ def main() -> None:
                 print("  dtype kinds got:", dtype_kinds(g),
                       "exp:", dtype_kinds(e))
             if ok_schema and ok_rows:
-                neq = (g.round(5).astype(str) != e.round(5).astype(str)) if False else None
                 print("  got head:", g.head(3).to_dict("records"))
                 print("  exp head:", e.head(3).to_dict("records"))
     spark.stop()

@@ -32,6 +32,7 @@ Header layout (little-endian, 20 bytes):
 
 from __future__ import annotations
 
+import math
 import struct
 import zlib
 
@@ -214,6 +215,15 @@ def peek_shape(payload: bytes) -> tuple[int, int, int]:
     """(bands, rows, cols) without decoding the body."""
     _, _, _, _, _, bands, _, rows, cols = _HEADER.unpack_from(bytes(payload[:HEADER_SIZE]), 0)
     return bands, rows, cols
+
+
+def valid_mask(arr: np.ndarray, nodata: float | None) -> np.ndarray:
+    """Boolean mask of the pixels of `arr` that are not `nodata` (all of
+    them when nodata is None); a NaN nodata masks the NaN pixels, which
+    ``arr != nan`` would count as valid."""
+    if nodata is None:
+        return np.ones(arr.shape, dtype=bool)
+    return ~np.isnan(arr) if math.isnan(nodata) else arr != nodata
 
 
 def minimum_dtype(arr: np.ndarray) -> str:

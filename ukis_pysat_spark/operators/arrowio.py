@@ -1,92 +1,80 @@
-"""Arrow-native emitter for image-row stages (the `_TileBuf` pattern of
-operators/tiling.py applied to the full images schema).
+"""The JVM<->Python Arrow boundary of every per-image stage.
 
-Every payload-emitting stage used to build per-row dicts with Python
-``bytes`` payloads into pandas object columns inside ``mapInPandas`` —
-pandas block assembly plus one bytes object per image was the dominant
-constant on pixel-emitting pipelines (removing it took tile_pixels from
-22 s to ~5 s).  This module gives apply_transforms / dn2toa /
-cast_images the same treatment:
+A stage hands its input columns, a per-row function and its output
+``pa.schema`` to one of two emitters; the Spark schema is derived from
+that ``pa.schema`` (``from_arrow_schema``), so each stage declares its
+output once.  Both emitters run as ONE ``mapInArrow`` and walk the
+input through the same row iterator (`_rows`):
 
-- the stage runs as ``mapInArrow``;
-- each output payload is appended as (header, body) uint8 chunks into a
-  shared buffer; one contiguous ``values`` buffer + an int32 offsets
-  cumsum becomes the Arrow binary column directly (zero per-row bytes
-  objects, and for fmt='raw' zero payload copies before the flush);
-- the small metadata columns ride as plain Python lists -> pa.array
-  (one value per IMAGE, negligible next to the payload).
+- every binary column (image payloads, GeoTIFF blobs, packed masks)
+  reaches the row function as a zero-copy ``pa.Buffer`` view — no
+  per-row Python ``bytes`` copies; every other column is a Python value;
+- ``map_rows`` is the scalar-row emitter: each row returns a dict of
+  equal-length output columns (lists or numpy arrays; numpy chunks
+  concatenate with numpy), and one RecordBatch leaves per input batch;
+- ``flat_map_payload_rows`` is the payload emitter: each row yields
+  (meta dict, pixel array, fmt) output rows whose encoded payload is
+  appended as (header, body) uint8 chunks into a `PayloadBuf`; one
+  contiguous ``values`` buffer + an int32 offsets cumsum becomes the
+  ``bytes`` column directly.  Flushes are bounded by payload bytes, not
+  by the input batch size, so worker memory stays flat however large
+  the images are.
 
-Flushes are bounded by payload bytes, independent of the input batch
-size, so worker memory stays flat however large the images are.
+Stages that keep state across a whole batch or flush on their own rule
+(tiling's ``_TileBuf``, the zonal/rasterize AOI-list view, pointsample,
+pixels, the halo stages) keep their own loops.
 """
 
 from __future__ import annotations
 
+from itertools import chain
 from typing import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ukis_pysat_spark import codec
 
-# column order is the engine's images schema (datagen.IMAGES_SCHEMA /
-# transforms.IMAGES_OUT_SCHEMA); 'bytes' is the payload column
-META_COLS = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash",
-             "bands", "dtype", "crs", "transform", "nodata",
-             "footprint_lon", "footprint_lat", "platform"]
-
-IMAGES_OUT_SCHEMA = (
-    "image_id string, bytes binary, w int, h int, fmt string, "
-    "caption string, phash long, bands int, dtype string, crs string, "
-    "transform array<double>, nodata double, "
-    "footprint_lon array<double>, footprint_lat array<double>, "
-    "platform string"
+# the engine's images schema (datagen.IMAGES_SCHEMA); 'bytes' is the payload
+_IMAGES_SCHEMA = pa.schema(
+    [
+        ("image_id", pa.string()),
+        ("bytes", pa.binary()),
+        ("w", pa.int32()),
+        ("h", pa.int32()),
+        ("fmt", pa.string()),
+        ("caption", pa.string()),
+        ("phash", pa.int64()),
+        ("bands", pa.int32()),
+        ("dtype", pa.string()),
+        ("crs", pa.string()),
+        ("transform", pa.list_(pa.float64())),
+        ("nodata", pa.float64()),
+        ("footprint_lon", pa.list_(pa.float64())),
+        ("footprint_lat", pa.list_(pa.float64())),
+        ("platform", pa.string()),
+    ]
 )
 
-_PA_TYPES = {
-    "image_id": pa.string(),
-    "w": pa.int32(),
-    "h": pa.int32(),
-    "fmt": pa.string(),
-    "caption": pa.string(),
-    "phash": pa.int64(),
-    "bands": pa.int32(),
-    "dtype": pa.string(),
-    "crs": pa.string(),
-    "transform": pa.list_(pa.float64()),
-    "nodata": pa.float64(),
-    "footprint_lon": pa.list_(pa.float64()),
-    "footprint_lat": pa.list_(pa.float64()),
-    "platform": pa.string(),
-}
+META_COLS = _IMAGES_SCHEMA.names
 
-# full images-schema field list, 'bytes' the payload
-_IMAGES_FIELDS = [("image_id", pa.string()), ("bytes", pa.binary())] + [
-    (n, _PA_TYPES[n]) for n in META_COLS[2:]
-]
+# payload bytes per emitted RecordBatch: bounds worker memory, and stays
+# far below the 2 GiB that pa.binary()'s int32 offsets can address
+_FLUSH_BYTES = 64 << 20
 
 
 class PayloadBuf:
-    """Accumulates rows of an arbitrary (meta..., one binary payload)
-    schema; flushes ONE RecordBatch whose payload column is built from
+    """Accumulates rows of a (meta..., ``bytes`` binary payload) schema;
+    flushes ONE RecordBatch whose payload column is built from
     (offsets, values) buffers — zero per-row bytes objects.
 
-    `fields` is the full output field list in order, as (name, pyarrow
-    type) pairs; exactly one field named `payload_name` is the binary
-    payload column (its declared type is ignored — it is always
-    pa.binary())."""
+    `schema` is the output ``pa.schema`` (or its (name, type) pairs)."""
 
-    def __init__(self, fields, payload_name: str = "bytes") -> None:
-        self.fields = list(fields)
-        self.payload_name = payload_name
-        self.types = {n: t for n, t in self.fields}
-        self.meta: dict[str, list] = {
-            n: [] for n, _ in self.fields if n != payload_name
-        }
-        self.schema = pa.schema(
-            [(n, pa.binary() if n == payload_name else t) for n, t in self.fields]
-        )
+    def __init__(self, schema) -> None:
+        self.schema = pa.schema(schema)
+        self.meta: dict[str, list] = {n: [] for n in self.schema.names if n != "bytes"}
         self.chunks: list[np.ndarray] = []  # header/body uint8 chunks
         self.sizes: list[int] = []  # total payload bytes per row
         self.n = 0
@@ -105,8 +93,8 @@ class PayloadBuf:
     def flush(self) -> pa.RecordBatch:
         if self.nbytes >= (1 << 31):  # pa.binary() carries int32 offsets
             raise ValueError(
-                "image batch exceeds 2 GiB of payload; lower flush_bytes "
-                "(a single image's payload must fit one batch)"
+                "image batch exceeds 2 GiB of payload (a single image's "
+                "payload must fit one batch)"
             )
         offsets = np.empty(self.n + 1, dtype=np.int32)
         offsets[0] = 0
@@ -116,93 +104,92 @@ class PayloadBuf:
             pa.binary(), self.n, [None, pa.py_buffer(offsets), pa.py_buffer(values)]
         )
         arrays = [
-            px if n == self.payload_name else pa.array(self.meta[n], type=self.types[n])
-            for n, _ in self.fields
+            px if f.name == "bytes" else pa.array(self.meta[f.name], type=f.type)
+            for f in self.schema
         ]
         return pa.RecordBatch.from_arrays(arrays, schema=self.schema)
 
 
-# row_fn contract: dict (python values; 'bytes' is a buffer-protocol
-# object) -> (meta dict WITHOUT payload, pixel array, fmt string)
-RowFn = Callable[[dict], tuple[dict, np.ndarray, str]]
+def _rows(batch: pa.RecordBatch) -> Iterator[dict]:
+    """One dict per row of `batch`: binary columns as zero-copy buffer
+    views (None for a null), every other column as Python values."""
+    binary = [n for n, t in zip(batch.schema.names, batch.schema.types) if t == pa.binary()]
+    lists = {n: batch.column(n).to_pylist() for n in batch.schema.names if n not in binary}
+    views = {n: batch.column(n) for n in binary}
+    for ri in range(batch.num_rows):
+        row = {n: ls[ri] for n, ls in lists.items()}
+        for n, col in views.items():
+            row[n] = col[ri].as_buffer()
+        yield row
+
+
+def _column(chunks: list, type_: pa.DataType) -> pa.Array:
+    if chunks and isinstance(chunks[0], np.ndarray):
+        return pa.array(np.concatenate(chunks), type=type_)
+    return pa.array(list(chain.from_iterable(chunks)), type=type_)
+
+
+# rows_fn contract: row dict (see _rows) -> {output column: equal-length
+# list or numpy array} for this row's output rows, or None for none
+RowsFn = Callable[[dict], "dict | None"]
+
+
+def map_rows(
+    df: DataFrame, in_cols: list[str], rows_fn: RowsFn, schema: pa.Schema
+) -> DataFrame:
+    """Run `rows_fn` over every row of `df.select(*in_cols)` and emit
+    the rows it returns, with output `schema`, as one RecordBatch per
+    input batch."""
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            outs = [o for o in map(rows_fn, _rows(batch)) if o is not None]
+            arrays = [_column([o[f.name] for o in outs], f.type) for f in schema]
+            if arrays and len(arrays[0]):
+                yield pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+    return df.select(*in_cols).mapInArrow(run, schema=from_arrow_schema(schema))
+
+
+# payload rows_fn contract: row dict (see _rows) -> iterable of
+# (meta dict WITHOUT payload, pixel array, fmt) — zero, one, or many
+# output rows per input row (flatMap).
+PayloadRowsFn = Callable[[dict], "Iterator[tuple[dict, np.ndarray, str]]"]
+
+
+def flat_map_payload_rows(
+    df: DataFrame, in_cols: list[str], rows_fn: PayloadRowsFn, schema
+) -> DataFrame:
+    """Run `rows_fn` over every row of `df.select(*in_cols)` (1 -> N
+    output rows) and emit rows of `schema` — a (meta..., ``bytes``
+    binary) ``pa.schema`` or its (name, type) pairs — through a
+    PayloadBuf, flushed every `_FLUSH_BYTES` of payload."""
+    schema = pa.schema(schema)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        buf = PayloadBuf(schema)
+        for batch in batches:
+            for row in _rows(batch):
+                for d, arr, fmt in rows_fn(row):
+                    header, body = codec.encode_chunks(arr, fmt)
+                    buf.add(d, header, body)
+                    if buf.nbytes >= _FLUSH_BYTES:
+                        yield buf.flush()
+                        buf = PayloadBuf(schema)
+        if buf.n:
+            yield buf.flush()
+
+    return df.select(*in_cols).mapInArrow(run, schema=from_arrow_schema(schema))
 
 
 def map_image_rows(
     images: DataFrame,
     in_cols: list[str],
-    row_fn: RowFn,
-    flush_bytes: int = 64 << 20,
+    row_fn: Callable[[dict], tuple[dict, np.ndarray, str]],
 ) -> DataFrame:
-    """Run `row_fn` over every image row and emit images-schema rows
-    through the Arrow-native buffer (one decode + one encode per row,
-    no pandas in the loop) — `flat_map_payload_rows` with one output
-    row per input row."""
+    """`flat_map_payload_rows` with one images-schema output row per
+    input row: `row_fn` returns (meta dict WITHOUT payload, pixel array,
+    fmt)."""
     return flat_map_payload_rows(
-        images, in_cols, lambda row: (row_fn(row),), _IMAGES_FIELDS,
-        flush_bytes=flush_bytes,
+        images, in_cols, lambda row: (row_fn(row),), _IMAGES_SCHEMA
     )
-
-
-_DDL_OF_PA = {
-    pa.string(): "string",
-    pa.binary(): "binary",
-    pa.int32(): "int",
-    pa.int64(): "long",
-    pa.float32(): "float",
-    pa.float64(): "double",
-    pa.list_(pa.float64()): "array<double>",
-}
-
-
-def _ddl(fields) -> str:
-    return ", ".join(f"{n} {_DDL_OF_PA[t]}" for n, t in fields)
-
-
-# rows_fn contract: dict (python values; 'bytes' is a buffer-protocol
-# object) -> iterable of (meta dict WITHOUT payload, pixel array, fmt)
-# — zero, one, or many output rows per input row (flatMap).
-RowsFn = Callable[[dict], "Iterator[tuple[dict, np.ndarray, str]]"]
-
-
-def flat_map_payload_rows(
-    images: DataFrame,
-    in_cols: list[str],
-    rows_fn: RowsFn,
-    fields: list,
-    payload_name: str = "bytes",
-    flush_bytes: int = 64 << 20,
-    in_payload: str | None = None,
-) -> DataFrame:
-    """Generalized Arrow-native emitter: run `rows_fn` over every input
-    row (1 -> N output rows) and emit rows of the caller-declared
-    (meta..., payload binary) schema through a PayloadBuf — same
-    zero-per-row-bytes discipline as map_image_rows, with flushes
-    bounded by payload size, not input batch size.
-
-    `in_payload` names the INPUT payload column handed to `rows_fn` as a
-    zero-copy buffer view; it defaults to `payload_name` so a caller that
-    renames the payload column keeps the no-bytes-objects path on input
-    too (pass explicitly when input and output payload names differ)."""
-    fields = [(n, t) for n, t in fields]
-    src = payload_name if in_payload is None else in_payload
-
-    def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        buf = PayloadBuf(fields, payload_name)
-        for batch in batches:
-            names = [n for n in batch.schema.names if n != src]
-            lists = [batch.column(n).to_pylist() for n in names]
-            payload = batch.column(src) if src in batch.schema.names else None
-            for ri in range(batch.num_rows):
-                row = {n: ls[ri] for n, ls in zip(names, lists)}
-                if payload is not None:
-                    row[src] = payload[ri].as_buffer()
-                for d, arr, fmt in rows_fn(row):
-                    header, body = codec.encode_chunks(arr, fmt)
-                    buf.add(d, header, body)
-                    if buf.nbytes >= flush_bytes:
-                        yield buf.flush()
-                        buf = PayloadBuf(fields, payload_name)
-        if buf.n:
-            yield buf.flush()
-
-    return images.select(*in_cols).mapInArrow(emit, schema=_ddl(fields))

@@ -17,14 +17,12 @@ stage:
   pixels with ``|diff| > threshold``.
 
 Only the tiny stats rows leave the stage — the difference raster is
-never materialized unless ``emit_mask`` asks for it, in which case the
+never materialized unless ``change_mask`` asks for it, in which case the
 binary change mask (|diff| > threshold, uint8) leaves through the
-zero-copy PayloadBuf emitter instead.
+payload emitter instead (operators/arrowio.py).
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -34,12 +32,7 @@ import pyspark.sql.functions as F
 from ukis_pysat_spark import codec
 from ukis_pysat_spark.operators import arrowio
 
-CHANGE_SCHEMA = (
-    "image_id string, band int, n_valid long, mean_diff double, "
-    "min_diff double, max_diff double, rmse double, n_changed long"
-)
-
-_CHANGE_PA_SCHEMA = pa.schema(
+CHANGE_SCHEMA = pa.schema(
     [
         ("image_id", pa.string()),
         ("band", pa.int32()),
@@ -52,17 +45,21 @@ _CHANGE_PA_SCHEMA = pa.schema(
     ]
 )
 
-MASK_FIELDS = [
-    ("image_id", pa.string()),
-    ("bytes", pa.binary()),
-    ("w", pa.int32()),
-    ("h", pa.int32()),
-    ("fmt", pa.string()),
-    ("bands", pa.int32()),
-    ("dtype", pa.string()),
-    ("transform", pa.list_(pa.float64())),
-    ("n_changed", pa.int64()),
-]
+MASK_SCHEMA = pa.schema(
+    [
+        ("image_id", pa.string()),
+        ("bytes", pa.binary()),
+        ("w", pa.int32()),
+        ("h", pa.int32()),
+        ("fmt", pa.string()),
+        ("bands", pa.int32()),
+        ("dtype", pa.string()),
+        ("transform", pa.list_(pa.float64())),
+        ("n_changed", pa.int64()),
+    ]
+)
+
+_PAIR_COLS = ["image_id", "bytes_a", "transform", "nodata_a", "bytes_b", "transform_b", "nodata_b"]
 
 
 def _joined(images_a: DataFrame, images_b: DataFrame) -> DataFrame:
@@ -81,15 +78,18 @@ def _joined(images_a: DataFrame, images_b: DataFrame) -> DataFrame:
     return a.join(b, "image_id")
 
 
-def _decode_pair(batch, ri, transforms_a, transforms_b):
-    arr_a = codec.decode(batch.column("bytes_a")[ri].as_buffer()).astype(np.float64)
-    arr_b = codec.decode(batch.column("bytes_b")[ri].as_buffer()).astype(np.float64)
-    if arr_a.shape != arr_b.shape or transforms_a[ri] != transforms_b[ri]:
+def _pair(row: dict):
+    """Decode one joined row's two epochs and mask the pixels valid in
+    both: (a, b, valid) as float64 (bands, h, w) arrays."""
+    arr_a = codec.decode(row["bytes_a"]).astype(np.float64)
+    arr_b = codec.decode(row["bytes_b"]).astype(np.float64)
+    if arr_a.shape != arr_b.shape or row["transform"] != row["transform_b"]:
         raise ValueError(
             "change detection requires identical grids per image_id "
             f"(shapes {arr_a.shape} vs {arr_b.shape}); warp one epoch first"
         )
-    return arr_a, arr_b
+    valid = codec.valid_mask(arr_a, row["nodata_a"]) & codec.valid_mask(arr_b, row["nodata_b"])
+    return arr_a, arr_b, valid
 
 
 def change_stats(
@@ -97,107 +97,58 @@ def change_stats(
 ) -> DataFrame:
     """Per-(image, band) statistics of ``b - a`` over pixels valid in
     BOTH epochs: n_valid, mean/min/max difference, RMSE, and
-    n_changed = count(|diff| > threshold)."""
+    n_changed = count(|diff| > threshold).  Bands with no valid pixel
+    emit no row."""
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column("image_id").to_pylist()
-            ta = batch.column("transform").to_pylist()
-            tb = batch.column("transform_b").to_pylist()
-            na = batch.column("nodata_a").to_pylist()
-            nb_ = batch.column("nodata_b").to_pylist()
-            cols: dict[str, list] = {n: [] for n in _CHANGE_PA_SCHEMA.names}
-            for ri in range(batch.num_rows):
-                arr_a, arr_b = _decode_pair(batch, ri, ta, tb)
-                valid = np.ones(arr_a.shape, dtype=bool)
-                if na[ri] is not None:
-                    valid &= arr_a != na[ri]
-                if nb_[ri] is not None:
-                    valid &= arr_b != nb_[ri]
-                d = arr_b - arr_a
-                n = valid.sum(axis=(1, 2))
-                dm = np.where(valid, d, 0.0)
-                s1 = dm.sum(axis=(1, 2))
-                s2 = (dm * dm).sum(axis=(1, 2))
-                mn = np.where(valid, d, np.inf).min(axis=(1, 2))
-                mx = np.where(valid, d, -np.inf).max(axis=(1, 2))
-                chg = (valid & (np.abs(d) > threshold)).sum(axis=(1, 2))
-                keep = n > 0
-                nk = int(keep.sum())
-                if nk == 0:
-                    continue
-                safe = np.maximum(n, 1)
-                cols["image_id"].extend([ids[ri]] * nk)
-                cols["band"].extend(np.flatnonzero(keep).tolist())
-                cols["n_valid"].extend(n[keep].tolist())
-                cols["mean_diff"].extend((s1 / safe)[keep].tolist())
-                cols["min_diff"].extend(mn[keep].tolist())
-                cols["max_diff"].extend(mx[keep].tolist())
-                cols["rmse"].extend(np.sqrt(s2 / safe)[keep].tolist())
-                cols["n_changed"].extend(chg[keep].tolist())
-            if cols["image_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(cols[f.name], type=f.type)
-                        for f in _CHANGE_PA_SCHEMA
-                    ],
-                    schema=_CHANGE_PA_SCHEMA,
-                )
+    def rows_fn(row: dict) -> dict | None:
+        arr_a, arr_b, valid = _pair(row)
+        d = arr_b - arr_a
+        n = valid.sum(axis=(1, 2))
+        keep = n > 0
+        if not keep.any():
+            return None
+        dm = np.where(valid, d, 0.0)
+        s1 = dm.sum(axis=(1, 2))
+        s2 = (dm * dm).sum(axis=(1, 2))
+        mn = np.where(valid, d, np.inf).min(axis=(1, 2))
+        mx = np.where(valid, d, -np.inf).max(axis=(1, 2))
+        chg = (valid & (np.abs(d) > threshold)).sum(axis=(1, 2))
+        safe = np.maximum(n, 1)
+        return {
+            "image_id": [row["image_id"]] * int(keep.sum()),
+            "band": np.flatnonzero(keep),
+            "n_valid": n[keep],
+            "mean_diff": (s1 / safe)[keep],
+            "min_diff": mn[keep],
+            "max_diff": mx[keep],
+            "rmse": np.sqrt(s2 / safe)[keep],
+            "n_changed": chg[keep],
+        }
 
-    return _joined(images_a, images_b).mapInArrow(run, schema=CHANGE_SCHEMA)
-
-
-MASK_SCHEMA = (
-    "image_id string, bytes binary, w int, h int, fmt string, bands int, "
-    "dtype string, transform array<double>, n_changed long"
-)
+    return arrowio.map_rows(_joined(images_a, images_b), _PAIR_COLS, rows_fn, CHANGE_SCHEMA)
 
 
 def change_mask(
     images_a: DataFrame, images_b: DataFrame, threshold: float
 ) -> DataFrame:
     """Binary change-mask rasters: uint8 payload with 1 where any band
-    differs by more than `threshold` between mutually valid pixels.
-    Both input payloads stay zero-copy Arrow buffer views (two payload
-    columns — flat_map_payload_rows handles only one, so this stage
-    drives the PayloadBuf directly)."""
+    differs by more than `threshold` between mutually valid pixels."""
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        buf = arrowio.PayloadBuf(MASK_FIELDS)
-        for batch in batches:
-            ids = batch.column("image_id").to_pylist()
-            ta = batch.column("transform").to_pylist()
-            tb = batch.column("transform_b").to_pylist()
-            na = batch.column("nodata_a").to_pylist()
-            nb_ = batch.column("nodata_b").to_pylist()
-            for ri in range(batch.num_rows):
-                arr_a, arr_b = _decode_pair(batch, ri, ta, tb)
-                valid = np.ones(arr_a.shape, dtype=bool)
-                if na[ri] is not None:
-                    valid &= arr_a != na[ri]
-                if nb_[ri] is not None:
-                    valid &= arr_b != nb_[ri]
-                changed = (valid & (np.abs(arr_b - arr_a) > threshold)).any(axis=0)
-                mask = changed.astype(np.uint8)[None, :, :]
-                header, body = codec.encode_chunks(mask, "raw")
-                buf.add(
-                    {
-                        "image_id": ids[ri],
-                        "w": mask.shape[2],
-                        "h": mask.shape[1],
-                        "fmt": "raw",
-                        "bands": 1,
-                        "dtype": "uint8",
-                        "transform": ta[ri],
-                        "n_changed": int(changed.sum()),
-                    },
-                    header,
-                    body,
-                )
-                if buf.nbytes >= (64 << 20):
-                    yield buf.flush()
-                    buf = arrowio.PayloadBuf(MASK_FIELDS)
-        if buf.n:
-            yield buf.flush()
+    def rows_fn(row: dict):
+        arr_a, arr_b, valid = _pair(row)
+        changed = (valid & (np.abs(arr_b - arr_a) > threshold)).any(axis=0)
+        meta = {
+            "image_id": row["image_id"],
+            "w": changed.shape[1],
+            "h": changed.shape[0],
+            "fmt": "raw",
+            "bands": 1,
+            "dtype": "uint8",
+            "transform": row["transform"],
+            "n_changed": int(changed.sum()),
+        }
+        yield meta, changed.astype(np.uint8)[None, :, :], "raw"
 
-    return _joined(images_a, images_b).mapInArrow(run, schema=MASK_SCHEMA)
+    return arrowio.flat_map_payload_rows(
+        _joined(images_a, images_b), _PAIR_COLS, rows_fn, MASK_SCHEMA
+    )

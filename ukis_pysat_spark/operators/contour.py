@@ -28,20 +28,14 @@ vector pass per case class, no per-cell Python).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ukis_pysat_spark import codec
+from ukis_pysat_spark.operators import arrowio
 
-CONTOUR_SCHEMA = (
-    "image_id string, band int, level double, r int, c int, "
-    "x0 double, y0 double, x1 double, y1 double"
-)
-
-_PA_SCHEMA = pa.schema(
+CONTOUR_SCHEMA = pa.schema(
     [
         ("image_id", pa.string()),
         ("band", pa.int32()),
@@ -153,44 +147,21 @@ def contour(
         raise ValueError("levels must be non-empty")
     levels = [float(v) for v in levels]
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column("image_id").to_pylist()
-            payload = batch.column("bytes")
-            tcol = batch.column("transform").to_pylist()
-            nodatas = batch.column("nodata").to_pylist()
-            cols = {n: [] for n in _PA_SCHEMA.names}
-            for ri in range(batch.num_rows):
-                arr = codec.decode(payload[ri].as_buffer()).astype(np.float64)
-                nb, h, w = arr.shape
-                if h < 2 or w < 2:
-                    continue
-                plane = arr[min(band, nb - 1)]
-                a, _b, c0, _d, e, f0 = tcol[ri]
-                xs = c0 + (np.arange(w) + 0.5) * a
-                ys = f0 + (np.arange(h) + 0.5) * e
-                for level in levels:
-                    rr, cc, x0, y0, x1, y1 = _plane_segments(
-                        plane, nodatas[ri], level, xs, ys
-                    )
-                    n = rr.size
-                    if not n:
-                        continue
-                    cols["image_id"].extend([ids[ri]] * n)
-                    cols["band"].extend([min(band, nb - 1)] * n)
-                    cols["level"].extend([level] * n)
-                    cols["r"].extend(rr.tolist())
-                    cols["c"].extend(cc.tolist())
-                    cols["x0"].extend(x0.tolist())
-                    cols["y0"].extend(y0.tolist())
-                    cols["x1"].extend(x1.tolist())
-                    cols["y1"].extend(y1.tolist())
-            if cols["image_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[f.name], type=f.type) for f in _PA_SCHEMA],
-                    schema=_PA_SCHEMA,
-                )
+    def rows_fn(row: dict) -> dict | None:
+        arr = codec.decode(row["bytes"]).astype(np.float64)
+        nb, h, w = arr.shape
+        if h < 2 or w < 2:
+            return None
+        b = min(band, nb - 1)
+        a, _b, c0, _d, e, f0 = row["transform"]
+        xs = c0 + (np.arange(w) + 0.5) * a
+        ys = f0 + (np.arange(h) + 0.5) * e
+        segs = [_plane_segments(arr[b], row["nodata"], level, xs, ys) for level in levels]
+        n = [seg[0].size for seg in segs]
+        cols = dict(zip(("r", "c", "x0", "y0", "x1", "y1"), map(np.concatenate, zip(*segs))))
+        cols.update(image_id=[row["image_id"]] * sum(n), band=np.full(sum(n), b), level=np.repeat(levels, n))
+        return cols
 
-    return images.select("image_id", "bytes", "transform", "nodata").mapInArrow(
-        run, schema=CONTOUR_SCHEMA
+    return arrowio.map_rows(
+        images, ["image_id", "bytes", "transform", "nodata"], rows_fn, CONTOUR_SCHEMA
     )

@@ -344,5 +344,4 @@ def cost_distance_grid(
         ["image_id", "transform", "w", "h", "valid", "d"],
         out_fn,
         _GRID_FIELDS,
-        in_payload="d",
     )

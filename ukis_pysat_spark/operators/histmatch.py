@@ -128,5 +128,4 @@ def match_histogram(
          "bytes_ref", "nodata_ref"],
         rows_fn,
         HISTMATCH_FIELDS,
-        in_payload="bytes",
     )

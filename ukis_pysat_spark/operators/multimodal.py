@@ -6,13 +6,11 @@ are not in this environment) — but the Spark-side plumbing (schema,
 Arrow batch shape, partitioning) is real and tested, so dropping in a
 real decoder is a one-function change.
 
-All three payload-touching operators run as a SINGLE ``mapInArrow``
-stage (round 4): decode_stats assembles columnar output lists directly
-into RecordBatches (no pandas, no per-row dicts), and the two
-payload-EMITTING operators (resize_images, frame_sample) go through the
-Arrow-native PayloadBuf of operators/arrowio.py — one contiguous values
-buffer + offsets per flush, zero per-row Python bytes objects, the same
-discipline as the tiling/dn2toa emitters.
+Every payload-touching operator runs as a SINGLE ``mapInArrow`` stage
+through operators/arrowio.py: the stats stages (decode_stats,
+compute_phash, band_histogram) through ``map_rows``, the
+payload-EMITTING ones (resize_images, frame_sample, decode_audio)
+through ``flat_map_payload_rows``.
 
 - decode_stats      per-image band statistics (mean/std/min/max) —
                     a feature-extraction pass that never ships pixels.
@@ -27,8 +25,6 @@ discipline as the tiling/dn2toa emitters.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
@@ -37,12 +33,7 @@ import pyspark.sql.functions as F
 from ukis_pysat_spark import codec
 from ukis_pysat_spark.operators import arrowio
 
-STATS_SCHEMA = (
-    "image_id string, band int, mean double, std double, "
-    "min double, max double, n_valid long"
-)
-
-_STATS_PA_SCHEMA = pa.schema(
+STATS_SCHEMA = pa.schema(
     [
         ("image_id", pa.string()),
         ("band", pa.int32()),
@@ -56,56 +47,39 @@ _STATS_PA_SCHEMA = pa.schema(
 
 
 def decode_stats(images: DataFrame, nodata: float | None = 0.0) -> DataFrame:
-    """Per-band pixel statistics over valid (!= nodata) pixels.
+    """Per-band pixel statistics over the valid pixels (!= nodata; a
+    NaN nodata masks the NaN pixels), one row per band."""
 
-    One mapInArrow stage; the payload column enters as zero-copy Arrow
-    buffer views and the (tiny) output rows are assembled as columnar
-    lists -> one RecordBatch per input batch — no pandas anywhere."""
+    def rows_fn(row: dict) -> dict:
+        arr = codec.decode(row["bytes"]).astype(np.float64)
+        nb = arr.shape[0]
+        # all bands in one vectorized pass (S2 scenes have 13):
+        # masked moments via sums, extremes via +-inf sentinels
+        valid = codec.valid_mask(arr, nodata)
+        n = valid.sum(axis=(1, 2))
+        safe_n = np.maximum(n, 1)
+        masked = np.where(valid, arr, 0.0)
+        s1 = masked.sum(axis=(1, 2))
+        mean = s1 / safe_n
+        # two-pass variance: E[x^2]-E[x]^2 cancels catastrophically
+        # for high-mean/low-variance bands (6.8% rel. error observed
+        # at mean 1e7, sigma 0.5); sum of squared deviations doesn't
+        dev = np.where(valid, arr - mean[:, None, None], 0.0)
+        var = (dev * dev).sum(axis=(1, 2)) / safe_n
+        mn = np.where(valid, arr, np.inf).min(axis=(1, 2))
+        mx = np.where(valid, arr, -np.inf).max(axis=(1, 2))
+        empty = n == 0
+        return {
+            "image_id": [row["image_id"]] * nb,
+            "band": np.arange(nb),
+            "mean": np.where(empty, 0.0, mean),
+            "std": np.where(empty, 0.0, np.sqrt(var)),
+            "min": np.where(empty, 0.0, mn),
+            "max": np.where(empty, 0.0, mx),
+            "n_valid": n,
+        }
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column("image_id").to_pylist()
-            payload = batch.column("bytes")
-            cols: dict[str, list] = {n: [] for n in _STATS_PA_SCHEMA.names}
-            for ri in range(batch.num_rows):
-                arr = codec.decode(payload[ri].as_buffer()).astype(np.float64)
-                nb = arr.shape[0]
-                # all bands in one vectorized pass (S2 scenes have 13):
-                # masked moments via sums, extremes via +-inf sentinels
-                if nodata is None:
-                    valid = np.ones(arr.shape, dtype=bool)
-                else:
-                    valid = arr != nodata
-                n = valid.sum(axis=(1, 2))
-                safe_n = np.maximum(n, 1)
-                masked = np.where(valid, arr, 0.0)
-                s1 = masked.sum(axis=(1, 2))
-                mean = s1 / safe_n
-                # two-pass variance: E[x^2]-E[x]^2 cancels catastrophically
-                # for high-mean/low-variance bands (6.8% rel. error observed
-                # at mean 1e7, sigma 0.5); sum of squared deviations doesn't
-                dev = np.where(valid, arr - mean[:, None, None], 0.0)
-                var = (dev * dev).sum(axis=(1, 2)) / safe_n
-                mn = np.where(valid, arr, np.inf).min(axis=(1, 2))
-                mx = np.where(valid, arr, -np.inf).max(axis=(1, 2))
-                empty = n == 0
-                cols["image_id"].extend([ids[ri]] * nb)
-                cols["band"].extend(range(nb))
-                cols["mean"].extend(np.where(empty, 0.0, mean).tolist())
-                cols["std"].extend(np.where(empty, 0.0, np.sqrt(var)).tolist())
-                cols["min"].extend(np.where(empty, 0.0, mn).tolist())
-                cols["max"].extend(np.where(empty, 0.0, mx).tolist())
-                cols["n_valid"].extend(n.tolist())
-            if cols["image_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(cols[f.name], type=f.type)
-                        for f in _STATS_PA_SCHEMA
-                    ],
-                    schema=_STATS_PA_SCHEMA,
-                )
-
-    return images.select("image_id", "bytes").mapInArrow(run, schema=STATS_SCHEMA)
+    return arrowio.map_rows(images, ["image_id", "bytes"], rows_fn, STATS_SCHEMA)
 
 
 def phash64_arr(arr: np.ndarray) -> int:
@@ -154,33 +128,20 @@ def phash64_arr(arr: np.ndarray) -> int:
     return int(packed.astype(np.int64))
 
 
-_PHASH_PA_SCHEMA = pa.schema([("image_id", pa.string()), ("phash", pa.int64())])
-
-
 def compute_phash(images: DataFrame) -> DataFrame:
     """Compute the 64-bit perceptual hash from pixel payloads:
-    (image_id, phash) in one ``mapInArrow`` stage (payloads enter as
-    zero-copy Arrow buffer views; output is two flat columns).
+    (image_id, phash) in one ``mapInArrow`` stage.
 
     Feeds ``dedup.phash_neardup`` / ``dedup.hamming_pairs`` when the
     catalog has no precomputed phash column; when it does, prefer the
     precomputed column — near-dup then never touches pixels."""
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            payload = batch.column("bytes")
-            out = np.empty(batch.num_rows, dtype=np.int64)
-            for ri in range(batch.num_rows):
-                out[ri] = phash64_arr(codec.decode(payload[ri].as_buffer()))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column("image_id"), pa.array(out, type=pa.int64())],
-                schema=_PHASH_PA_SCHEMA,
-            )
+    def rows_fn(row: dict) -> dict:
+        return {"image_id": [row["image_id"]], "phash": [phash64_arr(codec.decode(row["bytes"]))]}
 
-    return images.select("image_id", "bytes").mapInArrow(
-        run, schema="image_id string, phash long"
+    return arrowio.map_rows(
+        images, ["image_id", "bytes"], rows_fn,
+        pa.schema([("image_id", pa.string()), ("phash", pa.int64())]),
     )
 
 
@@ -232,13 +193,13 @@ def resize_images(
         images,
         ["image_id", "bytes", "caption"],
         rows_fn,
-        fields=[
+        pa.schema([
             ("image_id", pa.string()),
             ("bytes", pa.binary()),
             ("w", pa.int32()),
             ("h", pa.int32()),
             ("caption", pa.string()),
-        ],
+        ]),
     )
 
 
@@ -256,11 +217,11 @@ def frame_sample(videos: DataFrame, every_n: int = 2) -> DataFrame:
         videos,
         ["image_id", "bytes"],
         rows_fn,
-        fields=[
+        pa.schema([
             ("image_id", pa.string()),
             ("frame", pa.int32()),
             ("bytes", pa.binary()),
-        ],
+        ]),
     )
 
 
@@ -467,19 +428,17 @@ def decode_audio(audio: DataFrame) -> DataFrame:
         audio,
         ["image_id", "bytes"],
         rows_fn,
-        fields=[
+        pa.schema([
             ("image_id", pa.string()),
             ("bytes", pa.binary()),
             ("channels", pa.int32()),
             ("sample_rate", pa.int32()),
             ("n_samples", pa.int64()),
-        ],
+        ]),
     )
 
 
-HIST_SCHEMA = "image_id string, band int, bin int, count long"
-
-_HIST_PA_SCHEMA = pa.schema(
+HIST_SCHEMA = pa.schema(
     [
         ("image_id", pa.string()),
         ("band", pa.int32()),
@@ -506,36 +465,23 @@ def band_histogram(
         raise ValueError("need bins > 0 and hi > lo")
     width = (hi - lo) / bins
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column("image_id").to_pylist()
-            payload = batch.column("bytes")
-            cols: dict[str, list] = {n: [] for n in _HIST_PA_SCHEMA.names}
-            for ri in range(batch.num_rows):
-                arr = codec.decode(payload[ri].as_buffer()).astype(np.float64)
-                nb = arr.shape[0]
-                flat = arr.reshape(nb, -1)
-                bidx = np.floor((flat - lo) / width)
-                ok = (bidx >= 0) & (bidx < bins)
-                if nodata is not None:
-                    ok &= flat != nodata
-                band_of = np.broadcast_to(
-                    np.arange(nb, dtype=np.int64)[:, None], flat.shape
-                )
-                key = band_of[ok] * bins + bidx[ok].astype(np.int64)
-                counts = np.bincount(key, minlength=nb * bins)
-                nz = np.flatnonzero(counts)
-                cols["image_id"].extend([ids[ri]] * nz.size)
-                cols["band"].extend((nz // bins).tolist())
-                cols["bin"].extend((nz % bins).tolist())
-                cols["count"].extend(counts[nz].tolist())
-            if cols["image_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(cols[f.name], type=f.type)
-                        for f in _HIST_PA_SCHEMA
-                    ],
-                    schema=_HIST_PA_SCHEMA,
-                )
+    def rows_fn(row: dict) -> dict:
+        arr = codec.decode(row["bytes"]).astype(np.float64)
+        nb = arr.shape[0]
+        flat = arr.reshape(nb, -1)
+        bidx = np.floor((flat - lo) / width)
+        ok = (bidx >= 0) & (bidx < bins)
+        if nodata is not None:
+            ok &= flat != nodata
+        band_of = np.broadcast_to(np.arange(nb, dtype=np.int64)[:, None], flat.shape)
+        key = band_of[ok] * bins + bidx[ok].astype(np.int64)
+        counts = np.bincount(key, minlength=nb * bins)
+        nz = np.flatnonzero(counts)
+        return {
+            "image_id": [row["image_id"]] * nz.size,
+            "band": nz // bins,
+            "bin": nz % bins,
+            "count": counts[nz],
+        }
 
-    return images.select("image_id", "bytes").mapInArrow(run, schema=HIST_SCHEMA)
+    return arrowio.map_rows(images, ["image_id", "bytes"], rows_fn, HIST_SCHEMA)

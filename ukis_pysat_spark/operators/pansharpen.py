@@ -135,5 +135,4 @@ def pansharpen(
          "bytes_pan", "transform", "crs", "nodata_pan"],
         rows_fn,
         PANSHARPEN_FIELDS,
-        in_payload="bytes_pan",
     )

@@ -29,22 +29,15 @@ pairs — the per-tile labels are already canonical within the tile.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from ukis_pysat_spark import codec
+from ukis_pysat_spark.operators import arrowio
 
-POLYGONIZE_SCHEMA = (
-    "image_id string, region_id long, value double, n_pixels long, "
-    "r0 int, c0 int, r1 int, c1 int, "
-    "left double, top double, right double, bottom double"
-)
-
-_PA_SCHEMA = pa.schema(
+POLYGONIZE_SCHEMA = pa.schema(
     [
         ("image_id", pa.string()),
         ("region_id", pa.int64()),
@@ -119,59 +112,8 @@ def _region_table(plane: np.ndarray, nod):
     c0 = np.minimum.reduceat(cc, starts)
     c1 = np.maximum.reduceat(cc, starts)
     vals = flat_v[region_ids]
-    keep = np.ones(region_ids.size, dtype=bool)
-    if nod is not None:
-        keep = vals != nod
+    keep = codec.valid_mask(vals, nod)
     return labels, region_ids, vals, counts, r0, c0, r1, c1, keep
-
-
-def _region_batches(band: int, quantize: float | None):
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        num_names = [n for n in _PA_SCHEMA.names if n != "image_id"]
-        for batch in batches:
-            ids = batch.column("image_id").to_pylist()
-            payload = batch.column("bytes")
-            transforms_col = batch.column("transform").to_pylist()
-            nodatas = batch.column("nodata").to_pylist()
-            # numpy chunk accumulation (regions-out is tens of millions
-            # of rows at scale: per-element list extends were ~half the
-            # stage); one concatenate per column per batch
-            sid: list = []
-            chunks: dict[str, list] = {n: [] for n in num_names}
-            for ri in range(batch.num_rows):
-                arr = codec.decode(payload[ri].as_buffer()).astype(np.float64)
-                nb, h, w = arr.shape
-                plane = arr[min(band, nb - 1)]
-                a, _b, c, _d, e, f_ = transforms_col[ri]
-                plane, nod = _quantized(plane, nodatas[ri], quantize)
-                (_labels, region_ids, vals, counts,
-                 r0, c0, r1, c1, keep) = _region_table(plane, nod)
-                nk = int(keep.sum())
-                if nk == 0:
-                    continue
-                sid.append([ids[ri]] * nk)
-                kr0, kc0, kr1, kc1 = r0[keep], c0[keep], r1[keep], c1[keep]
-                chunks["region_id"].append(region_ids[keep])
-                chunks["value"].append(vals[keep])
-                chunks["n_pixels"].append(counts[keep])
-                chunks["r0"].append(kr0.astype(np.int32))
-                chunks["c0"].append(kc0.astype(np.int32))
-                chunks["r1"].append(kr1.astype(np.int32))
-                chunks["c1"].append(kc1.astype(np.int32))
-                chunks["left"].append(c + kc0 * a)
-                chunks["top"].append(f_ + kr0 * e)
-                chunks["right"].append(c + (kc1 + 1) * a)
-                chunks["bottom"].append(f_ + (kr1 + 1) * e)
-            if sid:
-                arrays = [pa.array([v for ch in sid for v in ch], type=pa.string())]
-                for n in num_names:
-                    f = _PA_SCHEMA.field(n)
-                    arrays.append(
-                        pa.array(np.concatenate(chunks[n]), type=f.type)
-                    )
-                yield pa.RecordBatch.from_arrays(arrays, schema=_PA_SCHEMA)
-
-    return run
 
 
 def polygonize(
@@ -185,9 +127,32 @@ def polygonize(
     are dropped.  `quantize` bins values to floor(v / quantize)
     INSIDE the stage — equivalent to a pixel_math hop before
     polygonize, minus the extra decode/encode payload crossing."""
-    return images.select(
-        "image_id", "bytes", "transform", "nodata"
-    ).mapInArrow(_region_batches(band, quantize), schema=POLYGONIZE_SCHEMA)
+
+    def rows_fn(row: dict) -> dict:
+        arr = codec.decode(row["bytes"]).astype(np.float64)
+        a, _b, c, _d, e, f_ = row["transform"]
+        plane, nod = _quantized(arr[min(band, arr.shape[0] - 1)], row["nodata"], quantize)
+        (_labels, region_ids, vals, counts,
+         r0, c0, r1, c1, keep) = _region_table(plane, nod)
+        r0, c0, r1, c1 = r0[keep], c0[keep], r1[keep], c1[keep]
+        return {
+            "image_id": [row["image_id"]] * r0.size,
+            "region_id": region_ids[keep],
+            "value": vals[keep],
+            "n_pixels": counts[keep],
+            "r0": r0,
+            "c0": c0,
+            "r1": r1,
+            "c1": c1,
+            "left": c + c0 * a,
+            "top": f_ + r0 * e,
+            "right": c + (c1 + 1) * a,
+            "bottom": f_ + (r1 + 1) * e,
+        }
+
+    return arrowio.map_rows(
+        images, ["image_id", "bytes", "transform", "nodata"], rows_fn, POLYGONIZE_SCHEMA
+    )
 
 
 def _sieve_plane(plane: np.ndarray, nod, threshold: int) -> np.ndarray:
@@ -282,9 +247,19 @@ def sieve(threshold: int, band: int | None = None):
     return t
 
 
-GRID_STAGE_SCHEMA = (
-    "kind int, gid long, value double, n_pixels long, "
-    "g_r0 long, g_c0 long, g_r1 long, g_c1 long, ekey long, pos long"
+GRID_STAGE_SCHEMA = pa.schema(
+    [
+        ("kind", pa.int32()),
+        ("gid", pa.int64()),
+        ("value", pa.float64()),
+        ("n_pixels", pa.int64()),
+        ("g_r0", pa.int64()),
+        ("g_c0", pa.int64()),
+        ("g_r1", pa.int64()),
+        ("g_c1", pa.int64()),
+        ("ekey", pa.int64()),
+        ("pos", pa.int64()),
+    ]
 )
 
 GRID_REGIONS_SCHEMA = (
@@ -294,7 +269,7 @@ GRID_REGIONS_SCHEMA = (
 )
 
 
-def _grid_stage(grid_transform, grid_w, tile, band, quantize):
+def _grid_rows(grid_transform, grid_w, tile, band, quantize):
     """Per-tile labeling for polygonize_grid: emits region rows
     (kind=0, GLOBAL pixel coords, gid = min global flat index) and
     boundary-strip rows (kind=1) that pair same-value pixels across
@@ -304,89 +279,57 @@ def _grid_stage(grid_transform, grid_w, tile, band, quantize):
     yields exactly the cross-tile merge edges."""
     ga, gc0, ge, gf0 = grid_transform[0], grid_transform[2], grid_transform[4], grid_transform[5]
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        schema = pa.schema(
-            [
-                ("kind", pa.int32()),
-                ("gid", pa.int64()),
-                ("value", pa.float64()),
-                ("n_pixels", pa.int64()),
-                ("g_r0", pa.int64()),
-                ("g_c0", pa.int64()),
-                ("g_r1", pa.int64()),
-                ("g_c1", pa.int64()),
-                ("ekey", pa.int64()),
-                ("pos", pa.int64()),
-            ]
-        )
-        for batch in batches:
-            payload = batch.column("bytes")
-            transforms_col = batch.column("transform").to_pylist()
-            nodatas = batch.column("nodata").to_pylist()
-            cols: dict[str, list] = {n: [] for n in schema.names}
+    def rows_fn(row: dict) -> dict:
+        arr = codec.decode(row["bytes"]).astype(np.float64)
+        nb, th, tw = arr.shape
+        a, _b, c, _d, e, f_ = row["transform"]
+        # tile indices from the tile's own affine vs the grid's
+        tx = int(round((c - gc0) / (ga * tile)))
+        ty = int(round((f_ - gf0) / (ge * tile)))
+        gr0, gc_0 = ty * tile, tx * tile
+        plane, nod = _quantized(arr[min(band, nb - 1)], row["nodata"], quantize)
+        (labels, region_ids, vals, counts,
+         r0, c0, r1, c1, keep) = _region_table(plane, nod)
 
-            def emit(kind, gid, value, n_pixels=0, g_r0=0, g_c0=0,
-                     g_r1=0, g_c1=0, ekey=0, pos=0):
-                cols["kind"].append(kind)
-                cols["gid"].append(int(gid))
-                cols["value"].append(float(value))
-                cols["n_pixels"].append(int(n_pixels))
-                cols["g_r0"].append(int(g_r0))
-                cols["g_c0"].append(int(g_c0))
-                cols["g_r1"].append(int(g_r1))
-                cols["g_c1"].append(int(g_c1))
-                cols["ekey"].append(int(ekey))
-                cols["pos"].append(int(pos))
+        # local min flat index -> global flat index (the local
+        # row-major order agrees with the global one inside a
+        # tile, so the min converts directly)
+        def to_gid(lab):
+            return (gr0 + lab // tw) * grid_w + (gc_0 + lab % tw)
 
-            for ri in range(batch.num_rows):
-                arr = codec.decode(payload[ri].as_buffer()).astype(np.float64)
-                nb, th, tw = arr.shape
-                plane = arr[min(band, nb - 1)]
-                a, _b, c, _d, e, f_ = transforms_col[ri]
-                # tile indices from the tile's own affine vs the grid's
-                tx = int(round((c - gc0) / (ga * tile)))
-                ty = int(round((f_ - gf0) / (ge * tile)))
-                gr0, gc_0 = ty * tile, tx * tile
-                plane, nod = _quantized(plane, nodatas[ri], quantize)
-                (labels, region_ids, vals, counts,
-                 r0, c0, r1, c1, keep) = _region_table(plane, nod)
-                # local min flat index -> global flat index (the local
-                # row-major order agrees with the global one inside a
-                # tile, so the min converts directly)
-                def to_gid(lab):
-                    return (gr0 + lab // tw) * grid_w + (gc_0 + lab % tw)
-                for i in np.flatnonzero(keep):
-                    emit(
-                        0, to_gid(int(region_ids[i])), vals[i], counts[i],
-                        gr0 + r0[i], gc_0 + c0[i], gr0 + r1[i], gc_0 + c1[i],
-                    )
-                lab2 = labels.reshape(th, tw)
-                valid = (
-                    np.ones_like(plane, dtype=bool)
-                    if nod is None else plane != nod
-                )
-                # boundary strips: ekey packs (orientation, boundary x, y)
-                def strip(lab_line, val_line, ok, ekey, gpos0):
-                    for off in np.flatnonzero(ok):
-                        emit(1, to_gid(int(lab_line[off])), val_line[off],
-                             ekey=ekey, pos=gpos0 + off)
-                vkey = lambda bx, by: ((by * (1 << 24) + bx) << 1)
-                hkey = lambda bx, by: ((by * (1 << 24) + bx) << 1) | 1
-                # right edge -> boundary v(tx, ty); left -> v(tx-1, ty)
-                strip(lab2[:, -1], plane[:, -1], valid[:, -1], vkey(tx, ty), gr0)
-                if tx > 0:
-                    strip(lab2[:, 0], plane[:, 0], valid[:, 0], vkey(tx - 1, ty), gr0)
-                # bottom edge -> boundary h(tx, ty); top -> h(tx, ty-1)
-                strip(lab2[-1, :], plane[-1, :], valid[-1, :], hkey(tx, ty), gc_0)
-                if ty > 0:
-                    strip(lab2[0, :], plane[0, :], valid[0, :], hkey(tx, ty - 1), gc_0)
-            if cols["kind"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[n], type=schema.field(n).type) for n in schema.names],
-                    schema=schema,
-                )
+        lab2 = labels.reshape(th, tw)
+        valid = codec.valid_mask(plane, nod)
+        # boundary strips (labels, values, valid, ekey, global pos of
+        # the first pixel); ekey packs (orientation, boundary x, y)
+        vkey = lambda bx, by: ((by * (1 << 24) + bx) << 1)
+        hkey = lambda bx, by: ((by * (1 << 24) + bx) << 1) | 1
+        # right edge -> boundary v(tx, ty); left -> v(tx-1, ty)
+        strips = [(lab2[:, -1], plane[:, -1], valid[:, -1], vkey(tx, ty), gr0)]
+        if tx > 0:
+            strips.append((lab2[:, 0], plane[:, 0], valid[:, 0], vkey(tx - 1, ty), gr0))
+        # bottom edge -> boundary h(tx, ty); top -> h(tx, ty-1)
+        strips.append((lab2[-1, :], plane[-1, :], valid[-1, :], hkey(tx, ty), gc_0))
+        if ty > 0:
+            strips.append((lab2[0, :], plane[0, :], valid[0, :], hkey(tx, ty - 1), gc_0))
+        offs = [np.flatnonzero(ok) for _, _, ok, _, _ in strips]
+        nr, ns = int(keep.sum()), sum(o.size for o in offs)
+        zr, zs = np.zeros(nr, np.int64), np.zeros(ns, np.int64)
+        return {
+            "kind": np.repeat([0, 1], [nr, ns]),
+            "gid": np.concatenate(
+                [to_gid(region_ids[keep])] + [to_gid(s[0][o]) for s, o in zip(strips, offs)]
+            ),
+            "value": np.concatenate([vals[keep]] + [s[1][o] for s, o in zip(strips, offs)]),
+            "n_pixels": np.concatenate([counts[keep], zs]),
+            "g_r0": np.concatenate([gr0 + r0[keep], zs]),
+            "g_c0": np.concatenate([gc_0 + c0[keep], zs]),
+            "g_r1": np.concatenate([gr0 + r1[keep], zs]),
+            "g_c1": np.concatenate([gc_0 + c1[keep], zs]),
+            "ekey": np.concatenate([zr] + [np.full(o.size, s[3]) for s, o in zip(strips, offs)]),
+            "pos": np.concatenate([zr] + [s[4] + o for s, o in zip(strips, offs)]),
+        }
 
-    return run
+    return rows_fn
 
 
 def polygonize_grid(
@@ -416,9 +359,9 @@ def polygonize_grid(
     iterations run on the merge edges alone."""
     from ukis_pysat_spark.operators import graph
 
-    staged = tiles.select("bytes", "transform", "nodata").mapInArrow(
-        _grid_stage(grid_transform, grid_w, tile, band, quantize),
-        schema=GRID_STAGE_SCHEMA,
+    staged = arrowio.map_rows(
+        tiles, ["bytes", "transform", "nodata"],
+        _grid_rows(grid_transform, grid_w, tile, band, quantize), GRID_STAGE_SCHEMA,
     ).localCheckpoint()  # one decode+label pass feeds both consumers
     regions = staged.where(F.col("kind") == 0)
     strips = staged.where(F.col("kind") == 1).select("ekey", "pos", "value", "gid")

@@ -28,20 +28,14 @@ embarrassingly parallel across images, no shuffle.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ukis_pysat_spark import codec
+from ukis_pysat_spark.operators import arrowio
 
-GLCM_SCHEMA = (
-    "image_id string, band int, n_pairs long, contrast double, "
-    "dissimilarity double, homogeneity double, energy double"
-)
-
-_GLCM_PA = pa.schema(
+GLCM_SCHEMA = pa.schema(
     [
         ("image_id", pa.string()),
         ("band", pa.int32()),
@@ -69,68 +63,47 @@ def glcm_features(
         raise ValueError("offset must be nonzero")
     L = levels
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column("image_id").to_pylist()
-            payload = batch.column("bytes")
-            nodatas = batch.column("nodata").to_pylist()
-            cols: dict[str, list] = {f.name: [] for f in _GLCM_PA}
-            for ri in range(batch.num_rows):
-                arr = codec.decode(payload[ri].as_buffer()).astype(np.float64)
-                nb, h, w = arr.shape
-                nod = nodatas[ri]
-                for b in range(nb):
-                    z = arr[b]
-                    valid = (
-                        np.ones(z.shape, dtype=bool) if nod is None else z != nod
-                    )
-                    if not valid.any():
-                        continue
-                    mn = z[valid].min()
-                    mx = z[valid].max()
-                    if mx > mn:
-                        q = np.floor((z - mn) * float(L) / (mx - mn))
-                        q = np.minimum(q, L - 1).astype(np.int64)
-                    else:
-                        q = np.zeros(z.shape, dtype=np.int64)
-                    # directed pairs: center (r, c) with neighbor
-                    # (r+dr, c+dc), both in-grid and valid
-                    r0, r1 = max(-dr, 0), h - max(dr, 0)
-                    c0, c1 = max(-dc, 0), w - max(dc, 0)
-                    if r0 >= r1 or c0 >= c1:
-                        continue
-                    ci = q[r0:r1, c0:c1]
-                    ni = q[r0 + dr : r1 + dr, c0 + dc : c1 + dc]
-                    ok = (
-                        valid[r0:r1, c0:c1]
-                        & valid[r0 + dr : r1 + dr, c0 + dc : c1 + dc]
-                    )
-                    if not ok.any():
-                        continue
-                    pair = ci[ok] * L + ni[ok]
-                    n = np.bincount(pair, minlength=L * L).astype(np.int64)
-                    N = int(n.sum())
-                    i = np.arange(L * L, dtype=np.int64) // L
-                    j = np.arange(L * L, dtype=np.int64) % L
-                    d2 = (i - j) * (i - j)
-                    contrast = float(int((n * d2).sum())) / N
-                    dissim = float(int((n * np.abs(i - j)).sum())) / N
-                    hom_num = int((n * 1048576 // (1 + d2)).sum())
-                    homog = hom_num / 1048576.0 / N
-                    energy = float(int((n * n).sum())) / (N * N)
-                    cols["image_id"].append(ids[ri])
-                    cols["band"].append(b)
-                    cols["n_pairs"].append(N)
-                    cols["contrast"].append(contrast)
-                    cols["dissimilarity"].append(dissim)
-                    cols["homogeneity"].append(homog)
-                    cols["energy"].append(energy)
-            if cols["image_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[f.name], type=f.type) for f in _GLCM_PA],
-                    schema=_GLCM_PA,
-                )
+    def rows_fn(row: dict) -> dict:
+        arr = codec.decode(row["bytes"]).astype(np.float64)
+        nb, h, w = arr.shape
+        cols: dict[str, list] = {f.name: [] for f in GLCM_SCHEMA}
+        for b in range(nb):
+            z = arr[b]
+            valid = codec.valid_mask(z, row["nodata"])
+            if not valid.any():
+                continue
+            mn = z[valid].min()
+            mx = z[valid].max()
+            if mx > mn:
+                q = np.floor((z - mn) * float(L) / (mx - mn))
+                q = np.minimum(q, L - 1).astype(np.int64)
+            else:
+                q = np.zeros(z.shape, dtype=np.int64)
+            # directed pairs: center (r, c) with neighbor
+            # (r+dr, c+dc), both in-grid and valid
+            r0, r1 = max(-dr, 0), h - max(dr, 0)
+            c0, c1 = max(-dc, 0), w - max(dc, 0)
+            if r0 >= r1 or c0 >= c1:
+                continue
+            ci = q[r0:r1, c0:c1]
+            ni = q[r0 + dr : r1 + dr, c0 + dc : c1 + dc]
+            ok = valid[r0:r1, c0:c1] & valid[r0 + dr : r1 + dr, c0 + dc : c1 + dc]
+            if not ok.any():
+                continue
+            pair = ci[ok] * L + ni[ok]
+            n = np.bincount(pair, minlength=L * L).astype(np.int64)
+            N = int(n.sum())
+            i = np.arange(L * L, dtype=np.int64) // L
+            j = np.arange(L * L, dtype=np.int64) % L
+            d2 = (i - j) * (i - j)
+            hom_num = int((n * 1048576 // (1 + d2)).sum())
+            cols["image_id"].append(row["image_id"])
+            cols["band"].append(b)
+            cols["n_pairs"].append(N)
+            cols["contrast"].append(float(int((n * d2).sum())) / N)
+            cols["dissimilarity"].append(float(int((n * np.abs(i - j)).sum())) / N)
+            cols["homogeneity"].append(hom_num / 1048576.0 / N)
+            cols["energy"].append(float(int((n * n).sum())) / (N * N))
+        return cols
 
-    return images.select("image_id", "bytes", "nodata").mapInArrow(
-        run, schema=GLCM_SCHEMA
-    )
+    return arrowio.map_rows(images, ["image_id", "bytes", "nodata"], rows_fn, GLCM_SCHEMA)

@@ -48,17 +48,17 @@ from __future__ import annotations
 
 import math
 import re
-from typing import Callable, Iterator
+from typing import Callable
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from ukis_pysat_spark import codec
 from ukis_pysat_spark.operators import arrowio
-from ukis_pysat_spark.operators.arrowio import IMAGES_OUT_SCHEMA, META_COLS as _META_COLS
+from ukis_pysat_spark.operators.arrowio import META_COLS as _META_COLS
+from ukis_pysat_spark.operators.multimodal import STATS_SCHEMA
 
 # A transform takes (arr, meta) and returns (arr, meta); meta is a dict
 # with keys transform (list[6]), nodata, crs.
@@ -294,46 +294,31 @@ def valid_data_bbox(images: DataFrame, nodata: float = 0.0) -> DataFrame:
     (rasterio.windows.get_data_window semantics, raster.py:104-111).
     Returns (image_id, left, bottom, right, top).  One mapInArrow
     stage: payloads enter as zero-copy buffer views and the four
-    doubles leave as columnar lists — no pandas anywhere."""
-    import pyarrow as pa
+    doubles leave as one row."""
 
-    out_pa = pa.schema(
-        [("image_id", pa.string()), ("left", pa.float64()),
-         ("bottom", pa.float64()), ("right", pa.float64()),
-         ("top", pa.float64())]
+    def rows_fn(row: dict) -> dict:
+        valid = (codec.decode(row["bytes"]) != nodata).any(axis=0)
+        rows_any = np.flatnonzero(valid.any(axis=1))
+        cols_any = np.flatnonzero(valid.any(axis=0))
+        a, _, c, _, e, f_ = row["transform"]
+        if rows_any.size == 0:
+            r0 = r1 = c0 = c1 = 0
+        else:
+            r0, r1 = int(rows_any[0]), int(rows_any[-1]) + 1
+            c0, c1 = int(cols_any[0]), int(cols_any[-1]) + 1
+        return {
+            "image_id": [row["image_id"]],
+            "left": [c + c0 * a],
+            "bottom": [f_ + r1 * e],
+            "right": [c + c1 * a],
+            "top": [f_ + r0 * e],
+        }
+
+    schema = pa.schema(
+        [("image_id", pa.string()), ("left", pa.float64()), ("bottom", pa.float64()),
+         ("right", pa.float64()), ("top", pa.float64())]
     )
-
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column("image_id").to_pylist()
-            trans = batch.column("transform").to_pylist()
-            payload = batch.column("bytes")
-            cols: dict[str, list] = {n: [] for n in out_pa.names}
-            for ri in range(batch.num_rows):
-                arr = codec.decode(payload[ri].as_buffer())
-                valid = (arr != nodata).any(axis=0)
-                rows_any = np.flatnonzero(valid.any(axis=1))
-                cols_any = np.flatnonzero(valid.any(axis=0))
-                a, _, c, _, e, f_ = trans[ri]
-                if rows_any.size == 0:
-                    r0 = r1 = c0 = c1 = 0
-                else:
-                    r0, r1 = int(rows_any[0]), int(rows_any[-1]) + 1
-                    c0, c1 = int(cols_any[0]), int(cols_any[-1]) + 1
-                cols["image_id"].append(ids[ri])
-                cols["left"].append(c + c0 * a)
-                cols["bottom"].append(f_ + r1 * e)
-                cols["right"].append(c + c1 * a)
-                cols["top"].append(f_ + r0 * e)
-            if cols["image_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[f.name], f.type) for f in out_pa],
-                    schema=out_pa,
-                )
-
-    return images.select("image_id", "bytes", "transform").mapInArrow(
-        run, schema="image_id string, left double, bottom double, right double, top double"
-    )
+    return arrowio.map_rows(images, ["image_id", "bytes", "transform"], rows_fn, schema)
 
 
 # --- P5/P6/P7: mask / pad --------------------------------------------------
@@ -604,60 +589,29 @@ def dn2toa_stats(
         "processing_baseline", "thermal_band_idx",
     ]
 
-    _stats_schema = pa.schema(
-        [
-            ("image_id", pa.string()),
-            ("band", pa.int32()),
-            ("mean", pa.float64()),
-            ("std", pa.float64()),
-            ("min", pa.float64()),
-            ("max", pa.float64()),
-            ("n_valid", pa.int64()),
-        ]
-    )
+    def rows_fn(row: dict) -> dict:
+        toa = dn2toa_arrays(
+            codec.decode(row["bytes"]), row["platform"],
+            row["sun_elevation"], row["mult_reflectance"],
+            row["add_reflectance"], row["mult_radiance"],
+            row["add_radiance"], row["k1"], row["k2"],
+            row["thermal_band_idx"], row["quantification_value"],
+            row["radio_add_offset"], row["processing_baseline"],
+            wavelengths=wavelengths,
+        ).astype(np.float64)
+        nb = toa.shape[0]
+        return {
+            "image_id": [row["image_id"]] * nb,
+            "band": np.arange(nb),
+            "mean": toa.mean(axis=(1, 2)),
+            "std": toa.std(axis=(1, 2)),
+            "min": toa.min(axis=(1, 2)),
+            "max": toa.max(axis=(1, 2)),
+            "n_valid": np.full(nb, toa.shape[1] * toa.shape[2]),
+        }
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # single mapInArrow stage (round 5; matches decode_stats): the
-        # payload enters as zero-copy buffer views and the tiny stats
-        # rows assemble as columnar lists -> one RecordBatch per input
-        # batch — no pandas block assembly of 128-row payload batches
-        for batch in batches:
-            names = [n for n in batch.schema.names if n != "bytes"]
-            lists = [batch.column(n).to_pylist() for n in names]
-            payload = batch.column("bytes")
-            cols: dict[str, list] = {f.name: [] for f in _stats_schema}
-            for ri in range(batch.num_rows):
-                row = {n: ls[ri] for n, ls in zip(names, lists)}
-                toa = dn2toa_arrays(
-                    codec.decode(payload[ri].as_buffer()), row["platform"],
-                    row["sun_elevation"], row["mult_reflectance"],
-                    row["add_reflectance"], row["mult_radiance"],
-                    row["add_radiance"], row["k1"], row["k2"],
-                    row["thermal_band_idx"], row["quantification_value"],
-                    row["radio_add_offset"], row["processing_baseline"],
-                    wavelengths=wavelengths,
-                ).astype(np.float64)
-                nb = toa.shape[0]
-                npx = int(toa.shape[1] * toa.shape[2])
-                cols["image_id"].extend([row["image_id"]] * nb)
-                cols["band"].extend(range(nb))
-                cols["mean"].extend(toa.mean(axis=(1, 2)).tolist())
-                cols["std"].extend(toa.std(axis=(1, 2)).tolist())
-                cols["min"].extend(toa.min(axis=(1, 2)).tolist())
-                cols["max"].extend(toa.max(axis=(1, 2)).tolist())
-                cols["n_valid"].extend([npx] * nb)
-            if cols["image_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[f.name], type=f.type) for f in _stats_schema],
-                    schema=_stats_schema,
-                )
-
-    return joined.select("image_id", "bytes", "platform", *meta_cols).mapInArrow(
-        run,
-        schema=(
-            "image_id string, band int, mean double, std double, "
-            "min double, max double, n_valid long"
-        ),
+    return arrowio.map_rows(
+        joined, ["image_id", "bytes", "platform", *meta_cols], rows_fn, STATS_SCHEMA
     )
 
 

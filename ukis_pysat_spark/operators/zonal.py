@@ -396,7 +396,7 @@ def _valid(win: np.ndarray, inside, nod) -> np.ndarray | None:
     when every pixel counts; a NaN nodata masks the NaN pixels."""
     if nod is None:
         return None if inside is None else np.broadcast_to(inside, win.shape)
-    valid = ~np.isnan(win) if math.isnan(nod) else win != nod
+    valid = codec.valid_mask(win, nod)
     if inside is not None:
         valid &= inside
     return valid

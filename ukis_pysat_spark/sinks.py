@@ -12,6 +12,7 @@ compression is the Parquet codec.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ukis_pysat_spark import codec
@@ -68,7 +69,10 @@ def write_images(
 # / GeoTIFF 1.1).  All stages are Arrow-batched mapInArrow/mapInPandas;
 # nothing collects to the driver, so the sink scales with partitions.
 
-_GTIFF_SCHEMA = "image_id string, caption string, n_bytes long, tiff binary"
+_GTIFF_SCHEMA = pa.schema(
+    [("image_id", pa.string()), ("caption", pa.string()),
+     ("n_bytes", pa.int64()), ("tiff", pa.binary())]
+)
 _GTIFF_COLS = ["image_id", "bytes", "caption", "transform", "crs", "nodata"]
 
 
@@ -84,48 +88,26 @@ def to_geotiff(
     smallest representing dtype per image (reference raster.py:555),
     anything else casts.  Composable: write the result to Parquet /
     Iceberg for a blob table, or hand it to write_geotiff_files."""
-    import pyarrow as pa
-
     from ukis_pysat_spark.sources.geotiff import write_geotiff
 
-    out_schema = pa.schema(
-        [("image_id", pa.string()), ("caption", pa.string()),
-         ("n_bytes", pa.int64()), ("tiff", pa.binary())]
-    )
+    def rows_fn(row: dict) -> dict:
+        arr = codec.decode(row["bytes"])
+        if dtype == "min":
+            arr = arr.astype(codec.minimum_dtype(arr), copy=False)
+        elif dtype is not None:
+            arr = arr.astype(np.dtype(dtype), copy=False)
+        tiff = write_geotiff(
+            arr,
+            transform=row["transform"],
+            crs=row["crs"],
+            nodata=row["nodata"],
+            compression=compression,
+            predictor=predictor,
+        )
+        return {"image_id": [row["image_id"]], "caption": [row["caption"]],
+                "n_bytes": [len(tiff)], "tiff": [tiff]}
 
-    def run(batches):
-        for batch in batches:
-            ids = batch.column("image_id").to_pylist()
-            caps = batch.column("caption").to_pylist()
-            trans = batch.column("transform").to_pylist()
-            crss = batch.column("crs").to_pylist()
-            nods = batch.column("nodata").to_pylist()
-            payload = batch.column("bytes")
-            tiffs = []
-            for ri in range(batch.num_rows):
-                arr = codec.decode(payload[ri].as_buffer())
-                if dtype == "min":
-                    arr = arr.astype(codec.minimum_dtype(arr), copy=False)
-                elif dtype is not None:
-                    arr = arr.astype(np.dtype(dtype), copy=False)
-                tiffs.append(
-                    write_geotiff(
-                        arr,
-                        transform=trans[ri],
-                        crs=crss[ri],
-                        nodata=nods[ri],
-                        compression=compression,
-                        predictor=predictor,
-                    )
-                )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.string()), pa.array(caps, pa.string()),
-                 pa.array([len(t) for t in tiffs], pa.int64()),
-                 pa.array(tiffs, pa.binary())],
-                schema=out_schema,
-            )
-
-    return images.select(*_GTIFF_COLS).mapInArrow(run, schema=_GTIFF_SCHEMA)
+    return arrowio.map_rows(images, _GTIFF_COLS, rows_fn, _GTIFF_SCHEMA)
 
 
 def from_geotiff(blobs: DataFrame, tiff_col: str = "tiff", fmt: str = "raw") -> DataFrame:

@@ -43,51 +43,6 @@ _TYPE_FMT = {1: "B", 3: "H", 4: "I", 6: "b", 8: "h", 9: "i", 11: "f", 12: "d",
              16: "Q", 17: "q", 18: "Q"}
 
 
-def _lzw_decode_py(raw: bytes) -> bytes:
-    """Reference TIFF-variant LZW decoder (TIFF 6.0 §13): the simple
-    per-code loop, kept as the differential-test twin of the
-    vectorized `_lzw_decode` below.  MSB-first bit packing, code 256 =
-    ClearCode, 257 = EndOfInformation, table entries from 258, code
-    width 9→12 bits with the TIFF 'early change' (width grows one code
-    early, when the next free index reaches 2^width - 1)."""
-    out = bytearray()
-    base = [bytes([i]) for i in range(256)] + [b"", b""]
-    table = list(base)
-    nbits = 9
-    prev = b""
-    bitpos = 0
-    total_bits = len(raw) * 8
-    while bitpos + nbits <= total_bits:
-        byte_i = bitpos >> 3
-        chunk = int.from_bytes(raw[byte_i : byte_i + 3].ljust(3, b"\0"), "big")
-        code = (chunk >> (24 - (bitpos & 7) - nbits)) & ((1 << nbits) - 1)
-        bitpos += nbits
-        if code == 256:  # ClearCode
-            table = list(base)
-            nbits = 9
-            prev = b""
-            continue
-        if code == 257:  # EndOfInformation
-            break
-        if not prev:
-            if code >= len(table):
-                raise ValueError("corrupt LZW stream: code beyond table")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + entry[:1])
-        elif code == len(table):  # the KwKwK case: code == next free index
-            entry = prev + prev[:1]
-            table.append(entry)
-        else:
-            raise ValueError("corrupt LZW stream: code beyond table")
-        out += entry
-        prev = entry
-        if len(table) == (1 << nbits) - 1 and nbits < 12:
-            nbits += 1  # early change
-    return bytes(out)
-
-
 # Last data-code ordinal (1-based, counted per ClearCode segment) read
 # at 9/10/11 bits: the decode table holds 258 + (k-1) entries after
 # processing code k, and early change widens at 2^width - 1 entries.
@@ -95,8 +50,8 @@ _LZW_RUN_ENDS = ((254, 9), (766, 10), (1790, 11))
 
 
 def _lzw_decode(raw: bytes) -> bytes:
-    """Vectorized TIFF-variant LZW decode (same semantics as
-    `_lzw_decode_py`), two passes:
+    """Vectorized TIFF-variant LZW decode (same semantics as the
+    per-code reference decoder tests/tiffgen.lzw_decode), two passes:
 
     1. Code extraction: the code-width schedule between ClearCodes is
        deterministic (see _LZW_RUN_ENDS), so whole width-runs of codes
