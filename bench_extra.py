@@ -192,14 +192,14 @@ def build_registry(spark, sf: float):
         ).count(),
         "ph_dn2toa_noop": lambda: noop(transforms.dn2toa(toa_images, toa_metadata)),
         # point_sample phase probes
-        "ph_psamp_cand": lambda: spatial_join.points_in_aois(
+        "ph_psamp_cand": lambda: spatial_join._pip_candidates(
             bench_pts,
             images.select(
                 F.col("image_id").alias("aoi_id"),
                 F.col("footprint_lon").alias("ring_lon"),
                 F.col("footprint_lat").alias("ring_lat"),
             ),
-            res=12, exact=False,
+            "point_id", "lon", "lat", res=12,
         ).count(),
         "ph_psamp_pairs": lambda: spatial_join.points_in_aois(
             bench_pts,

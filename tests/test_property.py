@@ -110,3 +110,52 @@ def test_pairwise_pip_matches_scalar_property(seed, n):
         for i in range(n)
     ]
     assert got.tolist() == exp
+
+
+def _ring(kind: str, rng, cx: float, cy: float, size: float):
+    """One closed test ring of the given kind around (cx, cy)."""
+    if kind == "convex":  # regular polygon, 3..8 vertices
+        t = np.linspace(0, 2 * np.pi, int(rng.integers(3, 9)), endpoint=False)
+        t += rng.uniform(0, 2 * np.pi)
+        xs, ys = cx + size * np.cos(t), cy + size * np.sin(t)
+    elif kind == "star":  # 5/2 pentagram: even-odd interior is not the hull
+        t = np.radians(90 + 144 * np.arange(5))
+        xs, ys = cx + size * np.cos(t), cy + size * np.sin(t)
+    elif kind == "collinear":  # triangle with a redundant mid-edge vertex
+        xs = cx + size * np.array([-1.0, 0.0, 1.0, 0.0])
+        ys = cy + size * np.array([-1.0, -1.0, -1.0, 1.0])
+    else:  # box across the antimeridian
+        w, e = 180.0 - size, -180.0 + size * rng.uniform(0.2, 1.0)
+        xs = np.array([w, e, e, w])
+        ys = cy + size * np.array([-1.0, -1.0, 1.0, 1.0])
+    xs = (xs + 180.0) % 360.0 - 180.0
+    return np.append(xs, xs[0]), np.append(ys, ys[0])
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.integers(0, 2**32 - 1), st.integers(1, 30))
+def test_pairwise_polygon_matches_scalar_property(seed, n):
+    """The batched production kernel polygon_intersects_pairwise agrees
+    with the scalar oracle pair by pair over convex, star, collinear
+    and antimeridian rings placed near each other (touching, nested,
+    crossing and apart)."""
+    from tests import geometry_oracle
+
+    rng = np.random.Generator(np.random.Philox(key=np.uint64(seed)))
+    kinds = ["convex", "star", "collinear", "antimeridian"]
+    a_rings, b_rings = [], []
+    for _ in range(n):
+        cx = float(rng.uniform(-175, 175))
+        cy = float(rng.uniform(-60, 60))
+        ka, kb = rng.choice(kinds, 2)
+        if "antimeridian" in (ka, kb):
+            cx = 179.0 * float(rng.choice([-1.0, 1.0]))
+        a_rings.append(_ring(ka, rng, cx, cy, float(rng.uniform(0.5, 3.0))))
+        dx, dy = rng.uniform(-4, 4, 2)
+        b_rings.append(_ring(kb, rng, cx + dx, cy + dy, float(rng.uniform(0.5, 3.0))))
+    got = geometry.polygon_intersects_pairwise(
+        [a[0] for a in a_rings], [a[1] for a in a_rings],
+        [b[0] for b in b_rings], [b[1] for b in b_rings],
+    )
+    exp = [geometry_oracle.polygon_intersects(*a, *b) for a, b in zip(a_rings, b_rings)]
+    assert got.tolist() == exp

@@ -8,10 +8,19 @@ import pyspark.sql.functions as F
 
 from ukis_pysat_spark import datagen
 from ukis_pysat_spark.operators import geometry, knn, spatial_join
+from tests import geometry_oracle as oracle
 
 
 def _pairs(df):
     return set((r.image_id, r.aoi_id) for r in df.collect())
+
+
+def _intersects(a, b) -> bool:
+    """The production kernel polygon_intersects_pairwise on one pair."""
+    return bool(geometry.polygon_intersects_pairwise(
+        [np.asarray(a[0], float)], [np.asarray(a[1], float)],
+        [np.asarray(b[0], float)], [np.asarray(b[1], float)],
+    )[0])
 
 
 def test_pip_oracle_agreement():
@@ -31,21 +40,101 @@ def test_polygon_intersects_cases():
     crossing = (np.array([1, 3, 3, 1.0]), np.array([1, 1, 3, 3.0]))
     # containment without vertex-in: big diamond around the square
     diamond = (np.array([-3, 1, 5, 1.0]), np.array([1, -3, 1, 5.0]))
-    assert not geometry.polygon_intersects(*sq, *far)
-    assert geometry.polygon_intersects(*sq, *inside)
-    assert geometry.polygon_intersects(*sq, *crossing)
-    assert geometry.polygon_intersects(*sq, *diamond)
-    assert geometry.polygon_intersects(*diamond, *sq)
+    assert not _intersects(sq, far)
+    assert _intersects(sq, inside)
+    assert _intersects(sq, crossing)
+    assert _intersects(sq, diamond)
+    assert _intersects(diamond, sq)
 
 
-def test_cover_contains_point_cells():
+def test_cover_contains_point_cells(spark):
+    """The relational cell index (point_ixy + cell_key, with_cells)
+    equals its numpy oracle cell for cell: points at +-180, +-90 and at
+    random, and ring covers of random, seam, pole and wrapping rings."""
     ring_lon = np.array([10.0, 10.5, 10.5, 10.0, 10.0])
     ring_lat = np.array([50.0, 50.0, 50.4, 50.4, 50.0])
-    cover = set(geometry.cover_polygon(ring_lon, ring_lat, 12).tolist())
-    pts = geometry.cell_of_points(
+    cover = set(oracle.cover_polygon(ring_lon, ring_lat, 12).tolist())
+    pts = oracle.cell_of_points(
         np.array([10.1, 10.49, 10.25]), np.array([50.05, 50.39, 50.2]), 12
     )
     assert set(pts.tolist()) <= cover
+
+    res = 8
+    rng = np.random.Generator(np.random.Philox(key=np.uint64(8)))
+    edge_lon = [-180.0, 180.0, 0.0, -180.0 + 360.0 / 256 * 3, 179.999999]
+    edge_lat = [-90.0, 90.0, 0.0, -90.0 + 180.0 / 256 * 5, -89.999999]
+    lon = np.concatenate([np.repeat(edge_lon, 5), rng.uniform(-180, 180, 280)])
+    lat = np.concatenate([np.tile(edge_lat, 5), rng.uniform(-90, 90, 280)])
+    pdf = pd.DataFrame({"pid": np.arange(len(lon)), "lon": lon, "lat": lat})
+    cell = spatial_join.cell_key(res, *spatial_join.point_ixy(F.col("lon"), F.col("lat"), res))
+    got = spark.createDataFrame(pdf).select("pid", cell.alias("cell")).toPandas()
+    got = got.sort_values("pid")["cell"].to_numpy()
+    assert got.tolist() == oracle.cell_of_points(lon, lat, res).tolist()
+
+    rings = [
+        _box_ring(170.0, 180.0, 0.0, 1.0),       # east edge exactly +180
+        _box_ring(-180.0, -170.0, 0.0, 1.0),     # west edge exactly -180
+        _box_ring(178.0, -178.0, 0.0, 2.0),      # wraps
+        _box_ring(10.0, 20.0, 80.0, 90.0),       # touches the north pole
+        _box_ring(10.0, 20.0, -90.0, -80.0),     # touches the south pole
+        _box_ring(179.0, -179.0, 85.0, 90.0),    # wraps at the pole
+    ]
+    for _ in range(196):  # random star-shaped rings, some across the seam
+        m = int(rng.integers(4, 9))
+        t = np.sort(rng.uniform(0, 2 * np.pi, m))
+        r = rng.uniform(0.3, 1.0, m)
+        x = rng.uniform(-180, 180) + rng.uniform(0.05, 20) * r * np.cos(t)
+        y = rng.uniform(-85, 85) + rng.uniform(0.05, 10) * r * np.sin(t)
+        x = (x + 180.0) % 360.0 - 180.0
+        y = np.clip(y, -90.0, 90.0)
+        rings.append((list(np.append(x, x[0])), list(np.append(y, y[0]))))
+    ring_df = spark.createDataFrame(
+        [(i, [float(v) for v in rl], [float(v) for v in ra]) for i, (rl, ra) in enumerate(rings)],
+        "rid int, ring_lon array<double>, ring_lat array<double>",
+    )
+    covers = {}
+    for row in spatial_join.with_cells(ring_df, "ring_lon", "ring_lat", res).collect():
+        covers.setdefault(row.rid, []).append(row.cell)
+    n_wrap = 0
+    for i, (rl, ra) in enumerate(rings):
+        rl, ra = np.asarray(rl), np.asarray(ra)
+        if rl.max() - rl.min() > 180.0:  # wraps: west > east
+            n_wrap += 1
+            exp = oracle.cover_bbox(rl[rl >= 0].min(), ra.min(), rl[rl < 0].max(), ra.max(), res)
+        else:
+            exp = oracle.cover_polygon(rl, ra, res)
+        assert sorted(covers[i]) == sorted(exp.tolist()), (i, rl, ra)
+    assert n_wrap >= 5
+
+
+def test_knn_ring_matches_numpy_neighbors(spark):
+    """The relational ring neighborhood of the indexed kNN equals the
+    numpy oracle: with k above the candidate count the raw ring answer
+    holds exactly the points whose cell is in neighbors(centroid cell),
+    across the antimeridian and at the pole."""
+    res, ring = 6, 2
+    n = 1 << res
+    ix, iy = np.meshgrid(np.arange(n), np.arange(n), indexing="ij")
+    lon = -180.0 + (ix.ravel() + 0.5) * 360.0 / n
+    lat = -90.0 + (iy.ravel() + 0.5) * 180.0 / n
+    pts = spark.createDataFrame(pd.DataFrame(
+        {"point_id": [f"p{i}" for i in range(lon.size)], "lon": lon, "lat": lat}
+    ))
+    centroids = [("seam_pole", -179.9, 88.0), ("mid", 3.0, -10.0), ("seam", 179.5, 1.0)]
+    aois = spark.createDataFrame(
+        centroids, "aoi_id string, centroid_lon double, centroid_lat double"
+    )
+    got = {
+        (r.aoi_id, r.point_id)
+        for r in knn._knn_ring(pts, aois, 1000, res, ring, "point_id", "lon", "lat").collect()
+    }
+    pt_cells = oracle.cell_of_points(lon, lat, res)
+    exp = set()
+    for aoi_id, clon, clat in centroids:
+        c = int(oracle.cell_of_points(np.array([clon]), np.array([clat]), res)[0])
+        hood = set(oracle.neighbors(c, ring).tolist())
+        exp |= {(aoi_id, f"p{i}") for i in np.flatnonzero(np.isin(pt_cells, list(hood)))}
+    assert got == exp
 
 
 def test_spatial_join_matches_bruteforce(spark):
@@ -166,12 +255,17 @@ def _aoi_df(spark, aoi_id, lon, lat):
     )
 
 
+def _raw_ring(scenes, aoi, k=3, res=6, ring=1):
+    """The uncertified ring answer of knn_indexed on a scene table."""
+    return knn._knn_ring(knn.scene_centroids(scenes), aoi, k, res, ring, **knn._SCENE_COLS)
+
+
 def test_knn_indexed_exact_fallback_under_return(spark):
     """VERDICT r2 #4a: all scenes outside the ring -> the raw ring path
-    returns ZERO rows; exact_fallback must equal knn_broadcast."""
+    returns ZERO rows; the certified answer must equal knn_broadcast."""
     scenes = _scenes_df(spark, [(f"s{i}", float(i), 40.0) for i in range(10)])
     aoi = _aoi_df(spark, "a0", 0.0, 0.0)  # 40 deg of latitude away
-    raw = knn.knn_indexed(scenes, aoi, k=3, res=6, ring=1, exact_fallback=False)
+    raw = _raw_ring(scenes, aoi)
     assert raw.count() < 3  # provable under-return
     fixed = knn.knn_indexed(scenes, aoi, k=3, res=6, ring=1).toPandas()
     exact = knn.knn_broadcast(scenes, aoi, k=3).toPandas()
@@ -191,7 +285,7 @@ def test_knn_indexed_exact_fallback_kth_outside_ring(spark):
     outside_near = [("out0", -6.0, 0.1)]  # ~680 km but 2 lon cells away
     scenes = _scenes_df(spark, inside_far + outside_near)
     aoi = _aoi_df(spark, "a0", 0.1, 0.1)
-    raw = knn.knn_indexed(scenes, aoi, k=3, res=6, ring=1, exact_fallback=False).toPandas()
+    raw = _raw_ring(scenes, aoi).toPandas()
     assert "out0" not in set(raw["image_id"]), "fixture: out0 must be outside the ring"
     exact = knn.knn_broadcast(scenes, aoi, k=3).toPandas()
     assert exact.sort_values("rank")["image_id"].iloc[0] == "out0"
@@ -378,7 +472,7 @@ def test_points_in_aois_antimeridian(spark):
 def test_knn_indexed_antimeridian(spark):
     """The ring neighborhood must WRAP at +-180: scenes on the far side
     of the seam are genuine ring candidates (not fallback rescues), so
-    the RAW pruned path (exact_fallback=False) already equals the
+    the RAW pruned ring answer already equals the
     periodic-haversine broadcast top-k."""
     scenes = _scenes_df(
         spark,
@@ -392,11 +486,7 @@ def test_knn_indexed_antimeridian(spark):
     aoi = _aoi_df(spark, "a0", -179.9, 0.0)
     exact = knn.knn_broadcast(scenes, aoi, k=3).toPandas().sort_values("rank")
     assert list(exact["image_id"]) == ["s_w1", "s_e2", "s_e1"]
-    raw = (
-        knn.knn_indexed(scenes, aoi, k=3, res=6, ring=1, exact_fallback=False)
-        .toPandas()
-        .sort_values("rank")
-    )
+    raw = _raw_ring(scenes, aoi).toPandas().sort_values("rank")
     assert list(raw["image_id"]) == list(exact["image_id"])
     assert np.allclose(raw["dist_km"], exact["dist_km"])
     cert = (
@@ -444,14 +534,14 @@ def test_point_on_edge_consistent_across_paths(spark):
 
 def test_polygon_intersects_boundary_and_wrap_units():
     sq = _box_ring(0.0, 2.0, 0.0, 2.0)
-    assert geometry.polygon_intersects(*sq, *_box_ring(2.0, 3.0, 0.0, 2.0))
-    assert geometry.polygon_intersects(*sq, *_box_ring(2.0, 3.0, 2.0, 3.0))
-    assert not geometry.polygon_intersects(*sq, *_box_ring(2.0001, 3.0, 0.0, 2.0))
+    assert _intersects(sq, _box_ring(2.0, 3.0, 0.0, 2.0))
+    assert _intersects(sq, _box_ring(2.0, 3.0, 2.0, 3.0))
+    assert not _intersects(sq, _box_ring(2.0001, 3.0, 0.0, 2.0))
     wrap_a = _box_ring(178.0, -178.0, 0.0, 2.0)
-    assert geometry.polygon_intersects(*wrap_a, *_box_ring(179.0, 179.5, 0.5, 1.0))
-    assert geometry.polygon_intersects(*wrap_a, *_box_ring(-179.5, -179.0, 0.5, 1.0))
-    assert not geometry.polygon_intersects(*wrap_a, *_box_ring(0.0, 1.0, 0.0, 1.0))
-    # pairwise twin agrees
+    assert _intersects(wrap_a, _box_ring(179.0, 179.5, 0.5, 1.0))
+    assert _intersects(wrap_a, _box_ring(-179.5, -179.0, 0.5, 1.0))
+    assert not _intersects(wrap_a, _box_ring(0.0, 1.0, 0.0, 1.0))
+    # one batch of three pairs gives the same verdicts
     got = geometry.polygon_intersects_pairwise(
         [np.array(wrap_a[0])] * 3,
         [np.array(wrap_a[1])] * 3,
@@ -604,3 +694,31 @@ def test_sat_fast_path_adversarial_rings(spark):
     got = _pairs(spatial_join.spatial_join(imgs, aois, res=8))
     exp = _pairs(spatial_join.spatial_join_bruteforce(imgs, aois))
     assert got == exp
+
+
+def test_null_and_empty_rings_intersect_nothing(spark):
+    """A null or empty ring on either side intersects nothing: the
+    brute-force oracle agrees with the indexed join (whose cell cover
+    gives such rings no cell), and points_in_aois drops them too."""
+    quad = ([0.2, 1.5, 1.2, 0.1, 0.2], [0.2, 0.3, 1.4, 1.1, 0.2])  # not a box
+    imgs = spark.createDataFrame(
+        [("img_ok", *_box_ring(0.0, 1.0, 0.0, 1.0)), ("img_null", None, None),
+         ("img_empty", [], [])],
+        "image_id string, footprint_lon array<double>, footprint_lat array<double>",
+    )
+    aois = _aois_from_rings(
+        spark, [("a_near", quad), ("a_far", _box_ring(10.0, 11.0, 10.0, 11.0))]
+    ).unionByName(spark.createDataFrame(
+        [("a_null", None, None, 0.0, 0.0, None, None, None, None),
+         ("a_empty", [], [], 0.0, 0.0, None, None, None, None)],
+        datagen.AOI_SCHEMA,
+    ))
+    expected = {("img_ok", "a_near")}
+    assert _pairs(spatial_join.spatial_join(imgs, aois, res=8)) == expected
+    assert _pairs(spatial_join.spatial_join_bruteforce(imgs, aois)) == expected
+    pts = spark.createDataFrame(
+        [("p1", 0.5, 0.5), ("p2", 10.5, 10.5), ("p3", 0.0, 0.0)],
+        "point_id string, lon double, lat double",
+    )
+    got = {(r.point_id, r.aoi_id) for r in spatial_join.points_in_aois(pts, aois, res=8).collect()}
+    assert got == {("p1", "a_near"), ("p2", "a_far")}

@@ -19,8 +19,7 @@ resolution; the cell equi-join prunes the candidate set before the
 same exact top-k.  A post-condition check certifies each AOI (>= k
 candidates AND k-th distance within the ring's provably-covered
 radius); AOIs the ring cannot certify are re-answered EXACTLY by the
-broadcast scan, so the operator is exact for any ring size
-(exact_fallback=False restores the raw pruned behavior).  The ring
+broadcast scan, so the operator is exact for any ring size.  The ring
 neighborhood WRAPS in longitude at +-180 (pmod) and the certificate's
 lon guard is periodic-safe, so exactness holds across the antimeridian
 too.
@@ -38,7 +37,7 @@ from pyspark.sql import Column, DataFrame, Window
 import pyspark.sql.functions as F
 
 from ukis_pysat_spark.operators import geometry
-from ukis_pysat_spark.operators.spatial_join import DEFAULT_RES
+from ukis_pysat_spark.operators.spatial_join import DEFAULT_RES, cell_key, point_ixy
 
 EARTH_RADIUS_KM = geometry.EARTH_RADIUS_KM
 # scene_centroids' column names, for the generic point-table entry points
@@ -110,64 +109,27 @@ def knn_indexed(
     k: int = 5,
     res: int = 6,
     ring: int = 2,
-    exact_fallback: bool = True,
 ) -> DataFrame:
     """Candidate-pruned kNN over a scene table: the generic indexed
     point-kNN below on relational scene centroids."""
     return knn_points_indexed(
-        scene_centroids(images),
-        aois,
-        k=k,
-        res=res,
-        ring=ring,
-        exact_fallback=exact_fallback,
-        **_SCENE_COLS,
+        scene_centroids(images), aois, k=k, res=res, ring=ring, **_SCENE_COLS
     )
 
 
-def knn_points_indexed(
-    points: DataFrame,
-    aois: DataFrame,
-    k: int = 5,
-    res: int = 6,
-    ring: int = 2,
-    exact_fallback: bool = True,
-    id_col: str = "point_id",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
+def _knn_ring(
+    points: DataFrame, aois: DataFrame, k: int, res: int, ring: int,
+    id_col: str, lon_col: str, lat_col: str,
 ) -> DataFrame:
-    """Candidate-pruned kNN: point cell equi-joined against a
-    (2*ring+1)^2 neighborhood of each AOI centroid cell (round 5:
-    generalized from the scene-table variant so ANY (id, lon, lat)
-    table gets the scale path — the last broadcast-only entry point).
-
-    exact_fallback=True (default) makes the result EXACT regardless of
-    ring size: an AOI's ring answer is kept only when it is provably
-    complete (it found >= k candidates and its k-th distance lies inside
-    the radius the ring is guaranteed to cover); every other AOI is
-    re-answered by the exact broadcast scan.  The stragglers are the
-    exception by construction, so the extra scan carries a tiny
-    broadcast side — and when NO AOI escalates, AQE's empty-relation
-    propagation skips it entirely."""
-    n = F.lit(1 << res)
-    # lon folds modulo n (antimeridian seam), lat clamps at the poles
-    ix = F.pmod(F.floor((F.col(lon_col) + 180.0) / 360.0 * n), n)
-    iy = F.least(F.greatest(F.floor((F.col(lat_col) + 90.0) / 180.0 * n), F.lit(0)), n - 1)
-    point_cell = (
-        F.lit(res).cast("long") * F.lit(1 << 58).cast("long")
-        + ix.cast("long") * F.lit(1 << 29).cast("long")
-        + iy.cast("long")
+    """The raw, uncertified ring answer of ``knn_points_indexed``: top-k
+    over the points in the (2*ring+1)^2 cell neighborhood of the AOI
+    centroid — two relational explode(sequence(-ring, ring)) offsets,
+    lon WRAPS at the antimeridian (pmod), lat clamps at the poles."""
+    scenes = points.select(id_col, lon_col, lat_col).withColumn(
+        "cell", cell_key(res, *point_ixy(F.col(lon_col), F.col(lat_col), res))
     )
-    scenes = points.select(id_col, lon_col, lat_col).withColumn("cell", point_cell)
-
-    # ring neighborhood relationally: the AOI centroid cell's (ix, iy)
-    # crossed with two explode(sequence(-ring, ring)) offset generators
-    # (geometry.neighbors semantics): lon WRAPS at the antimeridian
-    # (pmod), lat clamps at the poles — no UDF
-    aix = F.pmod(F.floor((F.col("centroid_lon") + 180.0) / 360.0 * n), n).cast("long")
-    aiy = F.least(
-        F.greatest(F.floor((F.col("centroid_lat") + 90.0) / 180.0 * n), F.lit(0)), n - 1
-    ).cast("long")
+    n = F.lit(1 << res)
+    aix, aiy = point_ixy(F.col("centroid_lon"), F.col("centroid_lat"), res)
     r_ = F.lit(int(ring))
     aoi_ring = (
         aois.select("aoi_id", "centroid_lon", "centroid_lat",
@@ -178,11 +140,10 @@ def knn_points_indexed(
             "aoi_id",
             "centroid_lon",
             "centroid_lat",
-            (
-                F.lit(res).cast("long") * F.lit(1 << 58).cast("long")
-                + F.pmod(F.col("_ix") + F.col("_dx"), n.cast("long"))
-                * F.lit(1 << 29).cast("long")
-                + F.least(F.greatest(F.col("_iy") + F.col("_dy"), F.lit(0)), n.cast("long") - 1)
+            cell_key(
+                res,
+                F.pmod(F.col("_ix") + F.col("_dx"), n),
+                F.least(F.greatest(F.col("_iy") + F.col("_dy"), F.lit(0)), n - 1),
             ).alias("cell"),
         )
         .dropDuplicates(["aoi_id", "cell"])  # pole clamp / lon wrap can collide
@@ -193,9 +154,33 @@ def knn_points_indexed(
             F.col(lon_col), F.col(lat_col), F.col("centroid_lon"), F.col("centroid_lat")
         ),
     )
-    ranked = _topk(cand, k, id_col)
-    if not exact_fallback:
-        return ranked
+    return _topk(cand, k, id_col)
+
+
+def knn_points_indexed(
+    points: DataFrame,
+    aois: DataFrame,
+    k: int = 5,
+    res: int = 6,
+    ring: int = 2,
+    id_col: str = "point_id",
+    lon_col: str = "lon",
+    lat_col: str = "lat",
+) -> DataFrame:
+    """Candidate-pruned kNN: point cell equi-joined against a
+    (2*ring+1)^2 neighborhood of each AOI centroid cell (round 5:
+    generalized from the scene-table variant so ANY (id, lon, lat)
+    table gets the scale path — the last broadcast-only entry point).
+
+    The result is EXACT regardless of ring size: an AOI's ring answer
+    (``_knn_ring``) is kept only when it is provably complete (it found
+    >= k candidates and its k-th distance lies inside the radius the
+    ring is guaranteed to cover); every other AOI is re-answered by the
+    exact broadcast scan.  The stragglers are the
+    exception by construction, so the extra scan carries a tiny
+    broadcast side — and when NO AOI escalates, AQE's empty-relation
+    propagation skips it entirely."""
+    ranked = _knn_ring(points, aois, k, res, ring, id_col, lon_col, lat_col)
 
     # ---- ring-sufficiency certificate ------------------------------------
     # A scene OUTSIDE the (2r+1)^2 neighborhood differs from the AOI

@@ -17,6 +17,11 @@ north rule's core operator:
    edge-crossing, pure numpy) inside an Arrow-batched UDF restores
    exact semantics — output rows match a brute-force O(n*m) oracle.
 
+Cell index: resolution r splits lon/lat into 2^r x 2^r rectangular
+cells; ``cell_key`` packs a cell id as (r << 58) | (ix << 29) | iy
+(ix, iy < 2^29, r <= 29) and ``point_ixy`` is the point->cell rule.
+Ring covers are bbox covers: a candidate superset (PBSM lineage).
+
 Boundary semantics are CLOSED engine-wide: 'intersects' means 'share
 any point', boundary included — the relational <=/>= box-box fast path
 and the general polygon refine agree on touching geometries.
@@ -52,6 +57,25 @@ def _cell_index(coord: Column, origin: float, span: float, res: int) -> Column:
         F.greatest(F.floor((coord + F.lit(origin)) / F.lit(span) * F.lit(n)), F.lit(0)),
         F.lit(n - 1),
     ).cast("long")
+
+
+def cell_key(res: int, ix: Column, iy: Column) -> Column:
+    """Pack (res, ix, iy) into the int64 cell id (res<<58) | (ix<<29) | iy.
+    ix and iy must already lie in [0, 2^res)."""
+    return (
+        F.lit(int(res) << 58).cast("long")
+        + ix.cast("long") * F.lit(1 << 29).cast("long")
+        + iy.cast("long")
+    )
+
+
+def point_ixy(lon: Column, lat: Column, res: int) -> tuple[Column, Column]:
+    """(ix, iy) of the cell holding each point: lon folds modulo n (a
+    point at exactly +180 lands in seam cell 0, matching the cover's
+    east-edge fold); lat clamps at the poles."""
+    n = F.lit(1 << res)
+    ix = F.pmod(F.floor((lon + F.lit(180.0)) / F.lit(360.0) * n), n)
+    return ix, _cell_index(lat, 90.0, 180.0, res)
 
 
 def lon_interval(lon_col: Column) -> tuple[Column, Column]:
@@ -103,11 +127,11 @@ def with_cells(df: DataFrame, lon_col: str, lat_col: str, res: int = DEFAULT_RES
     array_min/array_max and the ix x iy cell grid from two nested
     explode(sequence(...)) generators — whole-stage-codegen'd JVM
     expressions, zero Python in the spatial join's filter stage.
-    Cell packing matches geometry.cell_id: (res<<58) | (ix<<29) | iy.
-    Rings crossing the antimeridian (lon_interval convention) cover a
-    wrapped ix range — the sequence runs past n-1 and is folded back
-    with pmod, so Pacific footprints land in the seam cells on both
-    sides instead of covering (or missing) the whole globe.
+    Null or empty rings get no cell.  Rings crossing the antimeridian
+    (lon_interval convention) cover a wrapped ix range — the sequence
+    runs past n-1 and is folded back with pmod, so Pacific footprints
+    land in the seam cells on both sides instead of covering (or
+    missing) the whole globe.
 
     The lon interval is computed ONCE per row, as two temporary columns
     before the explode, so the Generate's index math references two
@@ -124,7 +148,6 @@ def with_cells(df: DataFrame, lon_col: str, lat_col: str, res: int = DEFAULT_RES
     ix1 = F.least(ix1_raw, ix0 + F.lit(n - 1))
     iy0 = _cell_index(F.array_min(F.col(lat_col)), 90.0, 180.0, res)
     iy1 = _cell_index(F.array_max(F.col(lat_col)), 90.0, 180.0, res)
-    base = F.lit(int(res) << 58).cast("long")
     cov_lon0, cov_lon1 = lon_interval(F.col(lon_col))
     return (
         df.withColumns({"_cov_lon0": cov_lon0, "_cov_lon1": cov_lon1})
@@ -132,9 +155,7 @@ def with_cells(df: DataFrame, lon_col: str, lat_col: str, res: int = DEFAULT_RES
         .withColumn("_iy", F.explode(F.sequence(iy0, iy1)))
         .withColumn(
             "cell",
-            base
-            + F.pmod(F.col("_ix"), F.lit(n).cast("long")) * F.lit(1 << 29).cast("long")
-            + F.col("_iy"),
+            cell_key(res, F.pmod(F.col("_ix"), F.lit(n).cast("long")), F.col("_iy")),
         )
         .drop("_cov_lon0", "_cov_lon1", "_ix", "_iy")
     )
@@ -475,7 +496,7 @@ def spatial_join(
         )
     )
     return decided_ids.unionByName(
-        hard.mapInArrow(_refine_batches, schema="image_id string, aoi_id string")
+        _refine(hard, _polygons_keep, ["image_id", "aoi_id"], "image_id string, aoi_id string")
     )
 
 
@@ -494,50 +515,65 @@ def _ring_views(col) -> list:
     return np.split(values, offsets[1:-1] - offsets[0])
 
 
-def _refine_batches(batches):
-    """Exact polygon-polygon refinement (geometry.polygon_intersects_
-    pairwise) as an Arrow-native stage.
+def _refine(pairs: DataFrame, make_keep, out_cols: list[str], schema: str) -> DataFrame:
+    """The exact refine of every vector join, one ``mapInArrow`` stage:
+    refine rows are tiny, so RecordBatches (capped at 128 rows by the
+    session) are gathered into ``_REFINE_CHUNK``-row tables, and each
+    table is decided by ONE vectorized ``keep(table) -> bool mask``
+    call; ``make_keep()`` builds ``keep`` once per task, so a kernel may
+    memoize across tables.  Kept rows leave as ``out_cols``/``schema``.
 
-    The session caps Arrow batches at 128 rows to protect payload
-    operators, but refine rows are tiny — at millions of candidate
-    pairs the per-batch cost is the whole game.  So this runs under
-    ``mapInArrow`` (round 5; the pandas version paid ~1.5 s/160k-scene
-    join just materializing per-row list objects into object columns),
-    appends raw RecordBatches, and processes accumulated chunks with
-    Arrow-level filters + numpy views over the list buffers.
+    Every list column is a ring; a null or empty ring on either side
+    intersects nothing (the cell cover gives it no cell), so such rows
+    are dropped before the kernel."""
 
-    Verdicts are MEMOIZED per distinct geometry pair (r7): co-
-    registered scene stacks repeat footprints exactly, so a hotspot's
-    millions of (same footprint, same AOI) candidate pairs pay one PIP
-    each — the cache key is the raw coordinate bytes, so equality is
-    exact, never hash-trusted."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+    def run(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
+        keep = make_keep()
+
+        def decide(buf: list):
+            tbl = pa.Table.from_batches(buf).combine_chunks()
+            rings = [c for c, f in zip(tbl.columns, tbl.schema) if pa.types.is_list(f.type)]
+            shortest = pc.min_element_wise(*map(pc.list_value_length, rings), skip_nulls=False)
+            ok = pc.fill_null(pc.greater(shortest, 0), False)
+            if not pc.all(ok).as_py():
+                tbl = tbl.filter(ok).combine_chunks()
+            if tbl.num_rows:
+                kept = tbl.select(out_cols).filter(pa.array(keep(tbl)))
+                yield from kept.combine_chunks().to_batches()
+
+        buf, n = [], 0
+        for batch in batches:
+            buf.append(batch)
+            n += batch.num_rows
+            if n >= _REFINE_CHUNK:
+                yield from decide(buf)
+                buf, n = [], 0
+        if n:
+            yield from decide(buf)
+
+    return pairs.mapInArrow(run, schema=schema)
+
+
+def _polygons_keep():
+    """Footprint x ring polygon-intersects kernel of the refine, its
+    verdicts MEMOIZED per distinct geometry pair (r7): co-registered
+    scene stacks repeat footprints exactly, so a hotspot's millions of
+    (same footprint, same AOI) pairs pay one test each — the key is the
+    raw coordinate bytes, so equality is exact, never hash-trusted."""
     verdicts: dict[bytes, bool] = {}
 
-    def process(tbl: pa.Table):
-        # null geometry marks a pair pre-proven by the relational
-        # box-box bbox test — id-copy fast path, no PIP
-        pre = pc.is_null(tbl.column("footprint_lon"))
-        ids = tbl.select(["image_id", "aoi_id"])
-        if pc.all(pre).as_py():
-            for b in ids.combine_chunks().to_batches():
-                yield b
-            return
-        for b in ids.filter(pre).combine_chunks().to_batches():
-            yield b
-        hard = tbl.filter(pc.invert(pre)).combine_chunks()
-        fl = _ring_views(hard.column("footprint_lon"))
-        fa = _ring_views(hard.column("footprint_lat"))
-        rl = _ring_views(hard.column("ring_lon"))
-        ra = _ring_views(hard.column("ring_lat"))
-        nh = len(fl)
+    def keep(tbl) -> np.ndarray:
+        fl = _ring_views(tbl.column("footprint_lon"))
+        fa = _ring_views(tbl.column("footprint_lat"))
+        rl = _ring_views(tbl.column("ring_lon"))
+        ra = _ring_views(tbl.column("ring_lat"))
         keys = [
             fl[i].tobytes() + fa[i].tobytes() + b"|" + rl[i].tobytes() + ra[i].tobytes()
-            for i in range(nh)
+            for i in range(len(fl))
         ]
-        keep = np.empty(nh, dtype=bool)
         miss = [i for i, k in enumerate(keys) if verdicts.get(k) is None]
         if miss:
             got = geometry.polygon_intersects_pairwise(
@@ -550,24 +586,9 @@ def _refine_batches(batches):
                 verdicts.clear()
             for i, v in zip(miss, got):
                 verdicts[keys[i]] = bool(v)
-        for i, k in enumerate(keys):
-            keep[i] = verdicts[k]
-        kept = hard.select(["image_id", "aoi_id"]).filter(pa.array(keep))
-        for b in kept.combine_chunks().to_batches():
-            yield b
+        return np.fromiter((verdicts[k] for k in keys), dtype=bool, count=len(keys))
 
-    buf: list[pa.RecordBatch] = []
-    n = 0
-    for batch in batches:
-        if not batch.num_rows:
-            continue
-        buf.append(batch)
-        n += batch.num_rows
-        if n >= _REFINE_CHUNK:
-            yield from process(pa.Table.from_batches(buf))
-            buf, n = [], 0
-    if buf:
-        yield from process(pa.Table.from_batches(buf))
+    return keep
 
 
 def spatial_join_bruteforce(images: DataFrame, aois: DataFrame) -> DataFrame:
@@ -577,50 +598,19 @@ def spatial_join_bruteforce(images: DataFrame, aois: DataFrame) -> DataFrame:
     cand = images.select("image_id", "footprint_lon", "footprint_lat").crossJoin(
         F.broadcast(aois.select("aoi_id", "ring_lon", "ring_lat"))
     )
-    return cand.mapInArrow(_refine_batches, schema="image_id string, aoi_id string")
+    return _refine(cand, _polygons_keep, ["image_id", "aoi_id"], "image_id string, aoi_id string")
 
 
-def points_in_aois(
-    points: DataFrame,
-    aois: DataFrame,
-    id_col: str = "point_id",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    res: int = DEFAULT_RES,
-    exact: bool = True,
-    keep_coords: bool = False,
+def _pip_candidates(
+    points: DataFrame, aois: DataFrame, id_col: str, lon_col: str, lat_col: str, res: int
 ) -> DataFrame:
-    """Point-in-polygon join: cell equi-join + exact PIP refine.
-
-    The point side only needs cell_of_points (one cell per point — pure
-    relational arithmetic, no UDF); the AOI side gets a polygon cover.
-
-    keep_coords=True additionally returns the point's (lon_col,
-    lat_col) columns — they already ride the candidate join, so callers
-    that need coordinates per pair (point sampling's fold) avoid
-    re-joining the point table against the full pair set (r7).
-    """
-    n = F.lit(1 << res)
-    # lon folds modulo n (a point at exactly +180 lands in seam cell 0,
-    # matching the cover's east-edge fold); lat clamps at the poles
-    ix = F.pmod(F.floor((F.col(lon_col) + F.lit(180.0)) / F.lit(360.0) * n), n)
-    iy = F.least(
-        F.greatest(F.floor((F.col(lat_col) + F.lit(90.0)) / F.lit(180.0) * n), F.lit(0)),
-        n - 1,
-    )
-    cell = (
-        (F.lit(res).cast("long") * F.lit(1 << 58).cast("long"))
-        + (ix.cast("long") * F.lit(1 << 29).cast("long"))
-        + iy.cast("long")
-    )
-    pts = points.withColumn("cell", cell)
-    # per-ring bounds are PRECOMPUTED as plain columns on the AOI side
-    # BEFORE the cell join (r7, guide §2.3): lon_interval expands to a
-    # CASE WHEN + array_filter lambda tree, and referencing it in the
-    # join condition makes Spark re-evaluate that tree PER CANDIDATE
-    # PAIR (measured: a hot cell at sf1.0 spent minutes in
-    # HashJoin.boundCondition).  As columns the per-pair test is four
-    # scalar comparisons.
+    """Candidate phase of ``points_in_aois``: (point, AOI) pairs whose
+    point lies in the ring's bbox, with the ring and its box flag."""
+    pts = points.withColumn("cell", cell_key(res, *point_ixy(F.col(lon_col), F.col(lat_col), res)))
+    # per-ring bounds are plain columns computed BEFORE the cell join
+    # (r7): lon_interval's CASE WHEN + filter-lambda tree in the join
+    # condition was re-evaluated PER CANDIDATE PAIR (minutes in
+    # HashJoin.boundCondition on a hot sf1.0 cell)
     r_lon0, r_lon1 = lon_interval(F.col("ring_lon"))
     aoi_cells = with_cells(
         aois.select(
@@ -634,12 +624,9 @@ def points_in_aois(
         "ring_lat",
         res,
     )
-    # relational point-in-bbox pre-refine kills most false candidates
-    # (cell covers are bbox supersets) before any Python runs; for
-    # axis-aligned box AOIs point-in-bbox IS the exact test.  The lon
-    # test is circular (antimeridian-correct; reduces to plain closed
-    # between for ordinary rings).
-    cand = (
+    # the relational point-in-bbox pre-refine (circular in lon) kills
+    # most false candidates; for axis-aligned box AOIs it IS exact
+    return (
         pts.join(aoi_cells, "cell")
         .filter(
             (F.pmod(F.col(lon_col) - F.col("_rl0"), F.lit(360.0))
@@ -649,63 +636,46 @@ def points_in_aois(
         )
         .select(id_col, lon_col, lat_col, "aoi_id", "_abox", "ring_lon", "ring_lat")
     )
+
+
+def points_in_aois(
+    points: DataFrame,
+    aois: DataFrame,
+    id_col: str = "point_id",
+    lon_col: str = "lon",
+    lat_col: str = "lat",
+    res: int = DEFAULT_RES,
+    keep_coords: bool = False,
+) -> DataFrame:
+    """Point-in-polygon join: cell equi-join + exact PIP refine.
+
+    The point side only needs one cell per point (point_ixy — pure
+    relational arithmetic, no UDF); the AOI side gets a polygon cover.
+
+    keep_coords=True additionally returns the point's (lon_col,
+    lat_col) columns — they already ride the candidate join, so callers
+    that need coordinates per pair (point sampling's fold) avoid
+    re-joining the point table against the full pair set (r7).
+    """
+    cand = _pip_candidates(points, aois, id_col, lon_col, lat_col, res)
     out_cols = [id_col, lon_col, lat_col, "aoi_id"] if keep_coords else [id_col, "aoi_id"]
-    if not exact:
-        return cand.select(*out_cols)
 
-    def refine(batches):
-        """Arrow-native PIP refine (round 5, same shape as the
-        polygon-polygon _refine_batches): RecordBatch accumulation into
-        large chunks, pairwise PIP over list-buffer views — no pandas,
-        no per-row list objects.  Only hard (non-box) pairs reach this
-        stage since r7's branch split; the null-ring guard is kept for
-        robustness."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
+    def pip(tbl) -> np.ndarray:
+        return geometry.points_in_rings_pairwise(
+            tbl.column(lon_col).to_numpy(),
+            tbl.column(lat_col).to_numpy(),
+            _ring_views(tbl.column("ring_lon")),
+            _ring_views(tbl.column("ring_lat")),
+        )
 
-        def process(tbl: pa.Table):
-            pre = pc.is_null(tbl.column("ring_lon"))
-            ids = tbl.select(out_cols)
-            if pc.all(pre).as_py():  # box AOIs: bbox test already exact
-                yield from ids.combine_chunks().to_batches()
-                return
-            yield from ids.filter(pre).combine_chunks().to_batches()
-            hard = tbl.filter(pc.invert(pre)).combine_chunks()
-            keep = geometry.points_in_rings_pairwise(
-                hard.column(lon_col).to_numpy(),
-                hard.column(lat_col).to_numpy(),
-                _ring_views(hard.column("ring_lon")),
-                _ring_views(hard.column("ring_lat")),
-            )
-            kept = hard.select(out_cols).filter(pa.array(keep))
-            yield from kept.combine_chunks().to_batches()
-
-        buf: list[pa.RecordBatch] = []
-        n = 0
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            buf.append(batch)
-            n += batch.num_rows
-            if n >= _REFINE_CHUNK:
-                yield from process(pa.Table.from_batches(buf))
-                buf, n = [], 0
-        if buf:
-            yield from process(pa.Table.from_batches(buf))
-
-    # branch split at the Python boundary (r7, the spatial_join
-    # pattern): box-AOI pairs are DECIDED by the bbox test above, so
-    # they leave on a JVM-only branch instead of round-tripping through
-    # the Arrow stage as id-copies — at a hotspot that removes tens of
-    # millions of rows from the Python boundary.  Only the (rare)
-    # non-box rings carry their geometry into the exact PIP refine.
+    # branch split at the Python boundary (r7): box-AOI pairs are
+    # DECIDED by the bbox test and leave on a JVM-only branch; only
+    # non-box rings carry their geometry into the exact PIP refine
     decided_ids = cand.filter(F.col("_abox")).select(*out_cols)
     hard = cand.filter(~F.col("_abox")).select(
         id_col, lon_col, lat_col, "aoi_id", "ring_lon", "ring_lat"
     )
     coord_schema = f", {lon_col} double, {lat_col} double" if keep_coords else ""
     return decided_ids.unionByName(
-        hard.mapInArrow(
-            refine, schema=f"{id_col} string{coord_schema}, aoi_id string"
-        )
+        _refine(hard, lambda: pip, out_cols, f"{id_col} string{coord_schema}, aoi_id string")
     )

@@ -62,7 +62,6 @@ def stream_points_in_aois(
     points_stream: DataFrame,
     aois: DataFrame,
     res: int = 12,
-    exact: bool = True,
 ) -> DataFrame:
     """STREAM-STATIC spatial join: a continuously-arriving point feed
     against a static (broadcastable) AOI table.
@@ -76,7 +75,7 @@ def stream_points_in_aois(
     memberships at ingest time."""
     from ukis_pysat_spark.operators import spatial_join
 
-    return spatial_join.points_in_aois(points_stream, aois, res=res, exact=exact)
+    return spatial_join.points_in_aois(points_stream, aois, res=res)
 
 
 def stream_image_neardup(
