@@ -16,6 +16,7 @@ from ukis_pysat_spark.operators import tiling
 from ukis_pysat_spark.plans.checkpoint import (
     CheckpointedRun,
     _footer_lineage,
+    _planned_tasks,
     run_stage_in_batches,
 )
 
@@ -340,3 +341,90 @@ def test_footer_lineage_fails_closed(tmp_path):
         _footer_lineage(str(tmp_path), "key")
     os.remove(tmp_path / "part-00000.parquet")
     assert _footer_lineage(str(tmp_path), "key") == {}
+
+
+def _files_input(spark, tmp_path):
+    """80 images in 8 Parquet files: a file scan of P = 8 tasks."""
+    path = str(tmp_path / "images")
+    datagen.gen_images(spark, 80, profile="bench", partitions=8).write.parquet(path)
+    imgs = spark.read.parquet(path)
+    assert imgs.rdd.getNumPartitions() == 8
+    return imgs
+
+
+def _src_partitions(ckpt, stage):
+    per_batch = {}
+    for r in ckpt.metrics(stage).collect():
+        per_batch.setdefault(r.batch_id, set()).add(r.src_partition)
+    return per_batch
+
+
+def test_batch_runs_on_its_share_of_input_tasks(spark, tmp_path):
+    """Each of 3 batches of an 8-task input runs on ceil(8/3) = 3 tasks,
+    not 8, so its lineage names at most 3 src_partitions."""
+    imgs = _files_input(spark, tmp_path)
+    ckpt = CheckpointedRun(spark, str(tmp_path / "run"))
+    run_stage_in_batches(ckpt, imgs, "tiles", "image_id", _transform, n_batches=3)
+    per_batch = _src_partitions(ckpt, "tiles")
+    assert sorted(per_batch) == ["b0000", "b0001", "b0002"]
+    assert all(0 < len(parts) <= 3 for parts in per_batch.values()), per_batch
+    assert sum(r.row_count for r in ckpt.metrics("tiles").collect()) == 80 * 4
+
+
+def test_planned_tasks_reads_the_plan_without_a_job(spark, tmp_path, count_jobs):
+    imgs = _files_input(spark, tmp_path)
+    cached = imgs.repartition(3).cache()
+    for df in (
+        imgs,
+        imgs.repartition(5, "image_id"),
+        imgs.join(F.broadcast(imgs.select("image_id").limit(10)), "image_id"),
+        imgs.unionByName(imgs),
+        imgs.coalesce(3),
+        cached,
+    ):
+        n, jobs = count_jobs(lambda: _planned_tasks(df._jdf.queryExecution().executedPlan()))
+        assert (n, jobs) == (df.rdd.getNumPartitions(), 0)
+    cached.unpersist()
+
+
+# Spark jobs of one 3-batch run over the 8-file input: one write per
+# batch, for the 3 or 2 pending batches; the anti-join resume adds the
+# committed files' schema read (1) and, per batch, the committed keys'
+# aggregate and its broadcast (2); a repartitioned input adds its
+# shuffle stage per batch.  Reading the input's task count adds none.
+RUN_JOBS = {"fresh": 3, "unchanged_resume": 2, "changed_resume": 1 + 3 * 3, "exchange": 3 * 2}
+
+
+@pytest.mark.parametrize("case", sorted(RUN_JOBS))
+def test_reading_input_tasks_runs_no_job(spark, tmp_path, count_jobs, case):
+    imgs = _files_input(spark, tmp_path)
+    if case == "exchange":
+        imgs = imgs.repartition(5, "image_id")
+    ckpt = CheckpointedRun(spark, str(tmp_path / "run"))
+    if case.endswith("_resume"):
+        with pytest.raises(RuntimeError, match="injected failure"):
+            run_stage_in_batches(ckpt, imgs, "tiles", "image_id", _transform,
+                                 n_batches=2 if case == "changed_resume" else 3, fail_after=1)
+    _, jobs = count_jobs(lambda: run_stage_in_batches(
+        ckpt, imgs, "tiles", "image_id", _transform, n_batches=3))
+    assert jobs == RUN_JOBS[case]
+    final = ckpt.committed("tiles")
+    assert final.count() == final.select("image_id", "tile_id").distinct().count() == 80 * 4
+
+
+def test_crash_and_resume_on_coalesced_batches(spark, tmp_path):
+    """Crash a 3-batch run after its first commit, then resume: the
+    result equals the one-shot transform with no duplicate key, and the
+    lineage sums to the committed rows."""
+    imgs = _files_input(spark, tmp_path)
+    ckpt = CheckpointedRun(spark, str(tmp_path / "run"))
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_stage_in_batches(ckpt, imgs, "tiles", "image_id", _transform,
+                             n_batches=3, fail_after=1)
+    assert len(_src_partitions(ckpt, "tiles")) == 1
+    run_stage_in_batches(ckpt, imgs, "tiles", "image_id", _transform, n_batches=3)
+    final = ckpt.committed("tiles").drop("src_partition")
+    oneshot = _transform(imgs)
+    assert final.count() == final.select("image_id", "tile_id").distinct().count()
+    assert final.exceptAll(oneshot).count() == 0 == oneshot.exceptAll(final).count()
+    assert sum(r.row_count for r in ckpt.metrics("tiles").collect()) == final.count()

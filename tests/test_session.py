@@ -133,3 +133,17 @@ def test_codegen_cache_holds_engine_working_set(spark):
     assert compiles.getCount() == before
     images.unpersist()
     aois.unpersist()
+
+
+def test_codegen_class_reused_under_another_stage_id(spark):
+    """A plan that runs again as another whole-stage codegen stage (here
+    the second input of a union; under adaptive execution the order in
+    which stages finish) reuses its generated class."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    first = spark.range(32).selectExpr("id * 1009 + 2 AS v").where("v % 3 = 2")
+    second = spark.range(64).selectExpr("id * 1013 + 3 AS v").where("v % 5 = 1")
+    first.collect()
+    second.collect()  # codegen stage 1, as `first` was
+    before = compiles.getCount()
+    assert len(first.unionByName(second).collect()) == 11 + 13  # `second` is stage 2
+    assert compiles.getCount() == before

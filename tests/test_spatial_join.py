@@ -5,6 +5,7 @@ output rows')."""
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
+import pytest
 
 from ukis_pysat_spark import datagen
 from ukis_pysat_spark.operators import geometry, knn, spatial_join
@@ -467,6 +468,25 @@ def test_points_in_aois_antimeridian(spark):
         ("p1", "Q"), ("p2", "Q"), ("p4", "Q"),
     }
     assert got == expected, got
+
+
+@pytest.mark.parametrize("keep_coords", [False, True])
+def test_points_in_aois_non_string_id(spark, keep_coords):
+    """A long point id through the exact PIP refine (a quad AOI is not
+    a box): the output keeps the input's id type and nullability."""
+    quad = ([10.0, 11.0, 10.5, 9.5, 10.0], [50.0, 50.5, 51.5, 51.0, 50.0])
+    pts = spark.createDataFrame(
+        [(1, 10.2, 50.6), (2, 9.6, 50.1), (3, 10.4, 51.2)], "point_id long, lon double, lat double"
+    )
+    out = spatial_join.points_in_aois(
+        pts, _aois_from_rings(spark, [("Q", quad)]), keep_coords=keep_coords
+    )
+    assert out.schema["point_id"].dataType == pts.schema["point_id"].dataType
+    assert [f.nullable for f in out.schema] == [True] * len(out.schema)
+    inside = geometry.points_in_polygon(
+        np.array([10.2, 9.6, 10.4]), np.array([50.6, 50.1, 51.2]), np.array(quad[0]), np.array(quad[1])
+    )
+    assert sorted(r.point_id for r in out.collect()) == [i + 1 for i in np.flatnonzero(inside)]
 
 
 def test_knn_indexed_antimeridian(spark):

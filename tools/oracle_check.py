@@ -3,6 +3,10 @@ entry and its oracle_sql() side-by-side, compare row count, schema
 (column names), and value hash (columns sorted by name, rows sorted).
 
 Usage: python tools/oracle_check.py [sf_dir] [query ...]
+
+A query name may be a queries() entry or a member of a folded suite
+(``spatial_box_join`` runs ``spatial_suite``); any other name fails the
+run before Spark starts.
 """
 
 from __future__ import annotations
@@ -42,20 +46,31 @@ def dtype_kinds(df: pd.DataFrame) -> list:
     return [df[c].dtype.kind for c in df.columns]
 
 
+def selected(names: list[str], queries: dict, suites: dict[str, list[str]]) -> list[str]:
+    """The ``queries`` entries that ``names`` ask for, in registration
+    order (all of them when ``names`` is empty); a member of a folded
+    suite asks for its suite.  Exits non-zero listing unknown names."""
+    suite_of = {m: s for s, members in suites.items() for m in members}
+    unknown = [n for n in names if n not in queries and n not in suite_of]
+    if unknown:
+        raise SystemExit(f"unknown query names: {' '.join(unknown)}")
+    want = {suite_of.get(n, n) for n in names}
+    return [q for q in queries if not want or q in want]
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    qs = entry.queries()
+    names = selected(sys.argv[2:], qs, entry._SUITES)
     spark = get_spark("oracle-check", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    qs = entry.queries()
     os_ = entry.oracle_sql()
     fails = 0
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+    for name in names:
+        fn = qs[name]
         try:
             got = fn(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001

@@ -45,6 +45,7 @@ import math
 import numpy as np
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 
 from ukis_pysat_spark.operators import geometry
 
@@ -515,7 +516,9 @@ def _ring_views(col) -> list:
     return np.split(values, offsets[1:-1] - offsets[0])
 
 
-def _refine(pairs: DataFrame, make_keep, out_cols: list[str], schema: str) -> DataFrame:
+def _refine(
+    pairs: DataFrame, make_keep, out_cols: list[str], schema: str | T.StructType
+) -> DataFrame:
     """The exact refine of every vector join, one ``mapInArrow`` stage:
     refine rows are tiny, so RecordBatches (capped at 128 rows by the
     session) are gathered into ``_REFINE_CHUNK``-row tables, and each
@@ -675,7 +678,9 @@ def points_in_aois(
     hard = cand.filter(~F.col("_abox")).select(
         id_col, lon_col, lat_col, "aoi_id", "ring_lon", "ring_lat"
     )
-    coord_schema = f", {lon_col} double, {lat_col} double" if keep_coords else ""
-    return decided_ids.unionByName(
-        _refine(hard, lambda: pip, out_cols, f"{id_col} string{coord_schema}, aoi_id string")
+    # typed from the input, so a point id of any type works; declared
+    # nullable, so the plan does not depend on the input's nullability
+    schema = T.StructType(
+        [T.StructField(f.name, f.dataType) for f in hard.select(*out_cols).schema]
     )
+    return decided_ids.unionByName(_refine(hard, lambda: pip, out_cols, schema))

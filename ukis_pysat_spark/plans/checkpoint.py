@@ -42,7 +42,21 @@ its lineage rebuilt from the same footers on the next
 ``run_stage_in_batches``.
 
 ``run_stage_in_batches`` buckets by ``pmod(xxhash64(key), n_batches)``
-and a committed ``b%04d`` batch of the current ``(key_col, n_batches)``
+and runs each batch on ``ceil(P / n_batches)`` tasks, P being the
+input's task count: a narrow ``coalesce`` before the transform, so a
+batch task reads about as many input bytes as an input task.  Each
+batch holds ~1/n_batches of the rows, but every task pays a fixed cost
+whatever its rows: ~0.055 CPU-s per ``mapInArrow`` task and 0.04-0.07
+CPU-s more when the task also writes Parquet, its own small ``part-*``
+file (tile_pixels of one input on 4 to 32 tasks, 4 vCPUs).  With all P
+tasks per batch, four tiling batches cost 3.2x one batch; on their
+share they cost 1.65x (8,000 tiles, 4 vCPUs).  P is read from the
+input's physical plan, so reading it runs no Spark job (executing a
+plan that holds an exchange would run its stages).  Each batch still
+scans the whole input and filters its bucket after the scan, ~0.2
+CPU-s per batch more than a key-only scan.
+
+A committed ``b%04d`` batch of the current ``(key_col, n_batches)``
 is final, so when every committed batch came from that batching no
 pending bucket's key can be committed and the anti-join cannot remove
 anything.  The batching is recorded in ``{base}/{stage}/_batching.json``
@@ -65,9 +79,10 @@ Iceberg snapshot), metrics ride a second table partitioned by
 contents (snapshot isolation: readers never see an in-flight batch).
 The catalog path is unchanged by the footer lineage and the batching
 record: it aggregates the committed rows and always resumes through the
-anti-join.  No Iceberg runtime jar ships in this environment, so the
-catalog path is exercised only where one is configured (the test skips
-cleanly); the Parquet ``_SUCCESS`` protocol stays the default.
+anti-join.  Its batches run on the same ``ceil(P / n_batches)`` tasks.
+No Iceberg runtime jar ships in this environment, so the catalog path
+is exercised only where one is configured (the test skips cleanly); the
+Parquet ``_SUCCESS`` protocol stays the default.
 """
 
 from __future__ import annotations
@@ -187,8 +202,10 @@ class CheckpointedRun:
         """Atomically commit one batch of a stage + its lineage metrics.
 
         The data write carries the executor partition id so lineage is
-        per *physical* partition of the producing stage.  In Parquet mode
-        this is one Spark job: the lineage comes from the written footers.
+        per *physical* partition of the producing stage: under
+        ``run_stage_in_batches`` that is the batch's coalesced task, one
+        of ``ceil(P / n_batches)``.  In Parquet mode this is one Spark
+        job: the lineage comes from the written footers.
         """
         out = df.withColumn("src_partition", F.spark_partition_id())
         if self.catalog is not None:
@@ -373,6 +390,28 @@ class CheckpointedRun:
         return self.spark.read.parquet(*paths).select(*cols)
 
 
+def _planned_tasks(plan) -> int:
+    """Tasks the physical ``plan`` runs on, read without running a Spark
+    job (executing a plan that holds an exchange runs its stages first):
+    an exchange, a range or a coalesce states its count; a leaf scan
+    builds its RDD, which runs no job; a union runs on the sum of its
+    inputs' tasks, any other node on its widest input's (a broadcast
+    join on its streamed side)."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":  # a leaf in the tree: read the plan it will run
+        return _planned_tasks(plan.executedPlan())
+    if name == "InMemoryTableScan":  # building an unfilled cache would run it
+        return _planned_tasks(plan.relation().cachedPlan())
+    n = plan.outputPartitioning().numPartitions()
+    if n:
+        return n
+    kids = plan.children()
+    if kids.isEmpty():
+        return plan.execute().getNumPartitions()
+    counts = [_planned_tasks(kids.apply(i)) for i in range(kids.size())]
+    return sum(counts) if name == "Union" else max(counts)
+
+
 def run_stage_in_batches(
     ckpt: CheckpointedRun,
     inputs: DataFrame,
@@ -383,15 +422,19 @@ def run_stage_in_batches(
     fail_after: int | None = None,
 ) -> None:
     """Drive a stage as N resumable batches (deterministic bucketing by
-    key hash, never by partition index). `fail_after` injects a crash
-    after that many batch commits — used by the resume tests.  In
-    Parquet mode a resume first rebuilds any committed batch's missing
-    lineage, and skips the anti-join when the batching is unchanged."""
+    key hash, never by partition index), each on ``ceil(P / n_batches)``
+    of the input's P tasks. `fail_after` injects a crash after that many
+    batch commits — used by the resume tests.  In Parquet mode a resume
+    first rebuilds any committed batch's missing lineage, and skips the
+    anti-join when the batching is unchanged."""
     committed = {p.rsplit("batch=", 1)[-1] for p in ckpt._committed_batches(stage)}
     anti_join = True
     if ckpt.catalog is None:
         ckpt._repair_lineage(stage, key_col, committed)
         anti_join = not ckpt._batching_unchanged(stage, key_col, n_batches, committed)
+    # P comes from `inputs`: the anti-join does not change it, and
+    # executing its plan to count `todo`'s partitions would run 2 jobs
+    tasks = -(-_planned_tasks(inputs._jdf.queryExecution().executedPlan()) // n_batches)
     todo = ckpt.resume_filter(inputs, stage, key_col) if anti_join else inputs
     bucket = F.pmod(F.xxhash64(key_col), F.lit(n_batches)).cast("int")
     work = todo.withColumn("_bucket", bucket)
@@ -410,7 +453,7 @@ def run_stage_in_batches(
             batch_id += f"n{n_batches:04d}"
             if batch_id in committed:
                 continue
-        batch = work.filter(F.col("_bucket") == b).drop("_bucket")
+        batch = work.filter(F.col("_bucket") == b).drop("_bucket").coalesce(tasks)
         # write directly — no emptiness pre-count: the transform runs
         # ONCE per batch (an empty committed batch is harmless: it adds
         # no keys and no metrics groups)
