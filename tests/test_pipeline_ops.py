@@ -432,6 +432,39 @@ def test_embedding_neardup_blocked_matches_relational(spark):
     assert len(common) >= max(len(r), 1) * 0.99
 
 
+def test_embedding_neardup_blocked_empty_blocks_on_arrow(spark):
+    """Fewer vectors than blocks: some block pairs have one empty side
+    and some blocks hold two vectors (the gi == gj dedup); the pairs
+    equal the relational twin's and the GEMM runs on the Arrow path."""
+    rng = np.random.default_rng(5)
+    base = rng.normal(size=(4, 8))
+    vecs = np.vstack([base, base[:3] + rng.normal(scale=0.3, size=(3, 8)), rng.normal(size=(3, 8))])
+    emb = spark.createDataFrame(
+        [(i * 7 + 1, v.astype(np.float32).tolist()) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>",
+    )
+    n_blocks = 16
+    blocks = [
+        r.b for r in emb.select(F.pmod(F.xxhash64("vec_id"), F.lit(n_blocks)).alias("b")).collect()
+    ]
+    assert len(set(blocks)) < len(blocks) < n_blocks  # a shared block and empty blocks
+    blk = dedup.embedding_neardup_blocked(emb, threshold=0.3, n_blocks=n_blocks)
+    plan = blk._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapCoGroupsInArrow" in plan and "FlatMapCoGroupsInPandas" not in plan
+    got = {(r.id_a, r.id_b): r.cosine for r in blk.collect()}
+    want = {(r.id_a, r.id_b): r.cosine for r in dedup.embedding_neardup(emb, threshold=0.3).collect()}
+    assert got.keys() == want.keys() and len(want) >= 3
+    assert all(abs(got[k] - want[k]) <= 1e-6 for k in want)
+
+
+def test_embedding_neardup_blocked_ragged_vectors_raise(spark):
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [1.0, 0.0, 0.0])], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(Exception, match="one length"):
+        dedup.embedding_neardup_blocked(emb, threshold=0.5, n_blocks=1).collect()
+
+
 def test_ngram_jaccard_prefix_filter_exact(spark):
     """Prefix-filtered candidate generation (AllPairs) must return the
     IDENTICAL pair set + jaccard values as the naive exact self-join."""

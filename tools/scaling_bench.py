@@ -1,17 +1,16 @@
-"""Two-cluster-size scaling evidence (BASELINE.md protocol).
+"""The scaling leg: the same spatial job (tiling + spatial join + kNN
+over a materialized synthetic images/AOI corpus) at a given number of
+cores, printing one JSON line with its throughput.  Run the two core
+counts as interleaved legs of ``tools/interleave.py``:
 
-Runs the SAME spatial job (tiling + spatial join + kNN over a
-materialized synthetic images/AOI corpus) at a given parallelism and
-prints one JSON line with throughput.  The driver for the protocol:
+    python tools/interleave.py . . --cores 8,32 --rounds 3 -- python3 tools/scaling_bench.py {cores}
 
-    spark-submit --master local[8]  --py-files upss.zip tools/scaling_bench.py 8
-    spark-submit --master local[32] --py-files upss.zip tools/scaling_bench.py 32
-
-scaling_efficiency = throughput_32 / (4 * throughput_8)  (gate: >= 0.8)
+scaling efficiency = the report's ``throughput_rows_per_sec`` ratio / 4
+(its ``median_efficiency``; gate: >= 0.8).
 
 Shuffle partitions scale with cores; the input is identical (seeded,
-materialized once); a warm-up pass runs before the timed repetitions
-and the median of 3 is reported.
+materialized once); warm-up passes run before the timed repetitions
+and the median of ``SCALE_REPS`` is reported.
 """
 
 from __future__ import annotations
@@ -22,7 +21,7 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ukis_pysat_spark import datagen
 from ukis_pysat_spark.operators import knn, spatial_join, tiling

@@ -25,7 +25,9 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
 import pyspark.sql.functions as F
 from pyspark.sql.types import ArrayType, LongType
 
@@ -781,6 +783,20 @@ def cosine_col(a: Column, b: Column) -> Column:
     return dot / (na * nb)
 
 
+_COSINE_PAIRS = pa.schema([("id_a", pa.int64()), ("id_b", pa.int64()), ("cosine", pa.float64())])
+
+
+def _block_matrix(col: pa.ChunkedArray) -> np.ndarray:
+    """A list<float> column as a (rows, dim) float64 matrix: one reshape
+    of its values buffer.  Null vectors or vectors of unequal length
+    raise, since the reshape would misalign them."""
+    arr = col.combine_chunks()
+    lens = np.diff(arr.offsets.to_numpy())
+    if arr.null_count or lens.min() != lens.max():
+        raise ValueError("embedding_neardup_blocked needs non-null vectors of one length")
+    return arr.flatten().to_numpy(zero_copy_only=False).astype(np.float64).reshape(len(arr), -1)
+
+
 def embedding_neardup_blocked(
     embeddings: DataFrame, threshold: float = 0.95, n_blocks: int | None = None
 ) -> DataFrame:
@@ -789,11 +805,14 @@ def embedding_neardup_blocked(
     The corpus is hashed into B blocks; every unordered block pair
     (i, j), i <= j, becomes one cogroup task that multiplies block i
     against block j with a single numpy matmul and emits only pairs
-    above threshold.  Nothing is collected to the driver and nothing is
-    broadcast: each row is shuffled at most B times (the left side of
-    block i fans out to pairs (i, i..B-1), the right side to (0..j, j)),
-    so shuffle volume is n*B rows while task memory is bounded by two
-    blocks ~ 2*(n/B)*dim*8 bytes — pick B ~ sqrt(n*dim*8/mem_budget).
+    above threshold.  Both blocks reach the task as Arrow tables
+    (``applyInArrow``), each block matrix one reshape of its list
+    column's values buffer.  Nothing is collected to the driver and
+    nothing is broadcast: each row is shuffled at most B times (the left
+    side of block i fans out to pairs (i, i..B-1), the right side to
+    (0..j, j)), so shuffle volume is n*B rows while task memory is
+    bounded by two blocks ~ 2*(n/B)*dim*8 bytes — pick
+    B ~ sqrt(n*dim*8/mem_budget).
     O(n^2) FLOPs but fully vectorized and horizontally scalable; for
     web-scale corpora where even n^2 FLOPs are prohibitive use
     similarity.lsh_ann.
@@ -825,14 +844,13 @@ def embedding_neardup_blocked(
         F.col("embedding").alias("embedding_r"),
     )
 
-    def gemm(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        gi, gj = int(key[0]), int(key[1])
-        if not len(lpdf) or not len(rpdf):
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        la = np.asarray(lpdf["vec_id"].values, dtype=np.int64)
-        ra = np.asarray(rpdf["vec_id_r"].values, dtype=np.int64)
-        lm = np.stack([np.asarray(v, dtype=np.float64) for v in lpdf["embedding"]])
-        rm = np.stack([np.asarray(v, dtype=np.float64) for v in rpdf["embedding_r"]])
+    def gemm(key, left: pa.Table, right: pa.Table) -> pa.Table:
+        if not left.num_rows or not right.num_rows:
+            return _COSINE_PAIRS.empty_table()
+        la = left.column("vec_id").to_numpy()
+        ra = right.column("vec_id_r").to_numpy()
+        lm = _block_matrix(left.column("embedding"))
+        rm = _block_matrix(right.column("embedding_r"))
         lm /= np.linalg.norm(lm, axis=1, keepdims=True)
         rm /= np.linalg.norm(rm, axis=1, keepdims=True)
         sims = lm @ rm.T
@@ -841,21 +859,17 @@ def embedding_neardup_blocked(
         lo = np.minimum(ia, ib)
         hi = np.maximum(ia, ib)
         mask = lo < hi  # drop self pairs; canonicalize id_a < id_b
-        if gi == gj:
+        if key[0].as_py() == key[1].as_py():
             # same block on both sides: keep each unordered pair once
             mask &= ia < ib
-        return pd.DataFrame(
-            {
-                "id_a": lo[mask],
-                "id_b": hi[mask],
-                "cosine": np.round(sims[ki[mask], kj[mask]], 6),
-            }
+        return pa.table(
+            [lo[mask], hi[mask], np.round(sims[ki[mask], kj[mask]], 6)], schema=_COSINE_PAIRS
         )
 
     return (
         left.groupBy("gi", "gj")
         .cogroup(right.groupBy("gi", "gj"))
-        .applyInPandas(gemm, schema="id_a long, id_b long, cosine double")
+        .applyInArrow(gemm, schema=from_arrow_schema(_COSINE_PAIRS))
     )
 
 
