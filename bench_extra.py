@@ -8,14 +8,16 @@ Usage:
 
 The session is ``get_spark``'s default, ``local[$SPARK_GRAFT_CPUS]``
 (else every CPU).  Each query runs once to warm up, then ``--reps``
-times.  Prints one JSON line per query as it finishes:
-{"name": ..., "secs": [...], "min": ..., "rows": N, "sf": ...}.
+times (default 5).  Prints one JSON line per query as it finishes:
+{"name": ..., "secs": [...], "median": ..., "iqr": ..., "rows": N, "sf": ...};
+``iqr`` is the interquartile spread of the reps, the leg's own noise.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import statistics
 import time
 
 from tools.registry import QUERIES, Inputs, run
@@ -25,12 +27,14 @@ from ukis_pysat_spark.session import get_spark
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("names", nargs="*")
-    ap.add_argument("--reps", type=int, default=2)
+    ap.add_argument("--reps", type=int, default=5)
     ap.add_argument("--list", action="store_true", help="print the registry's query names")
     args = ap.parse_args()
     if args.list:
         print("\n".join(sorted(QUERIES)))
         return
+    if args.reps < 1:
+        raise SystemExit("--reps must be at least 1")
     unknown = [n for n in args.names if n not in QUERIES]
     if unknown:
         raise SystemExit(f"unknown query names: {' '.join(unknown)}")
@@ -44,7 +48,9 @@ def main() -> None:
             t0 = time.perf_counter()
             rows = run(name, QUERIES[name](inputs))
             secs.append(round(time.perf_counter() - t0, 3))
-        out = {"name": name, "secs": secs, "min": min(secs), "rows": rows, "sf": inputs.sf}
+        q = statistics.quantiles(secs, n=4, method="inclusive") if len(secs) > 1 else secs * 3
+        out = {"name": name, "secs": secs, "median": round(q[1], 3),
+               "iqr": round(q[2] - q[0], 3), "rows": rows, "sf": inputs.sf}
         print(json.dumps(out), flush=True)
     spark.stop()
 

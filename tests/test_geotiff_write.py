@@ -222,20 +222,34 @@ def test_spark_geotiff_loop_and_file_sink(spark, tmp_path):
     out_dir = str(tmp_path / "tifs")
     manifest = sinks.write_geotiff_files(imgs, out_dir, compression="lzw").collect()
     assert len(manifest) == 8 and all(os.path.getsize(m["path"]) > 0 for m in manifest)
-    back = sinks.from_geotiff(
-        spark.read.format("binaryFile").load(out_dir + "/*.tif")
-        .selectExpr(
-            "replace(reverse(split(path, '/'))[0], '.tif', '') AS image_id",
-            "reverse(split(path, '/'))[0] AS caption",
-            "content AS tiff",
-        )
-    )
+    back = geotiff.ingest_geotiffs(spark.read.format("binaryFile").load(out_dir))
     c = {r["image_id"]: r for r in back.collect()}
     assert set(c) == set(a)
     for k, ra in a.items():
         assert np.array_equal(
             codec.decode(bytes(ra["bytes"])), codec.decode(bytes(c[k]["bytes"]))
         ), k
+        assert c[k]["caption"] == f"{k}.tif"
+        for col in ("transform", "crs", "nodata", "dtype"):
+            assert ra[col] == c[k][col], (k, col)
+
+
+def test_ingest_raises_on_a_truncated_tiff(spark, tmp_path):
+    """A file whose magic claims TIFF but whose body does not decode
+    fails the ingest instead of vanishing from the images table; files
+    without PNG or TIFF magic are still dropped."""
+    from pyspark.errors import PythonException
+
+    whole = geotiff.write_geotiff(_fixture("uint16"), compression="deflate")
+    (tmp_path / "ok.tif").write_bytes(whole)
+    (tmp_path / "notes.txt").write_bytes(b"not a raster")
+    files = spark.read.format("binaryFile").load(str(tmp_path))
+    assert [r.image_id for r in geotiff.ingest_geotiffs(files).collect()] == ["ok"]
+
+    (tmp_path / "cut.tif").write_bytes(whole[:64])
+    files = spark.read.format("binaryFile").load(str(tmp_path))
+    with pytest.raises(PythonException):
+        geotiff.ingest_geotiffs(files).collect()
 
 
 def test_proj_string_crs_roundtrips_via_citation():

@@ -383,6 +383,21 @@ _RASTER_DDL = (
     "image_id string, bytes binary, w int, h int, fmt string, bands int, "
     "dtype string, crs string, transform array<double>, nodata double"
 )
+_IMAGES_DDL = (
+    "image_id string, bytes binary, w int, h int, fmt string, "
+    "caption string, phash long, bands int, dtype string, crs string, "
+    "transform array<double>, nodata double, "
+    "footprint_lon array<double>, footprint_lat array<double>, "
+    "platform string"
+)
+_METADATA_DDL = (
+    "image_id string, platform string, sun_elevation double, "
+    "mult_reflectance array<double>, add_reflectance array<double>, "
+    "mult_radiance array<double>, add_radiance array<double>, "
+    "k1 array<double>, k2 array<double>, "
+    "quantification_value double, radio_add_offset array<double>, "
+    "processing_baseline double, thermal_band_idx array<int>"
+)
 
 
 def _grid_stage(images):
@@ -417,7 +432,7 @@ _ARROW_ROW_STAGES = [
     ("valid_data_bbox", lambda im, meta: transforms.valid_data_bbox(im),
      "image_id string, left double, bottom double, right double, top double"),
     ("dn2toa_stats", transforms.dn2toa_stats, _STATS_DDL),
-    ("dn2toa", transforms.dn2toa, datagen.IMAGES_SCHEMA),
+    ("dn2toa", transforms.dn2toa, _IMAGES_DDL),
     ("to_geotiff", lambda im, meta: sinks.to_geotiff(im),
      "image_id string, caption string, n_bytes long, tiff binary"),
     ("polygonize", lambda im, meta: polygonize.polygonize(im),
@@ -445,3 +460,31 @@ def test_arrow_row_stage_schema_and_plan(spark, images_parquet, build, ddl):
     plan = _plan(df)
     assert plan.count("MapInArrow") == 1, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
+
+
+def test_sources_and_sinks_are_one_arrow_stage(spark, images_parquet, tmp_path):
+    """Raster ingest is a JVM projection over from_geotiff's stage, and
+    each scene parser is one arrowio stage: every one plans exactly one
+    MapInArrow and no MapInPandas.  The GeoTIFF file sink is two (encode,
+    then write)."""
+    from ukis_pysat_spark.sources import geotiff, ingest
+
+    (tmp_path / "scene.tif").write_bytes(b"II*\x00")  # planned, never read
+    files = spark.read.format("binaryFile").load(str(tmp_path))
+    for df in (
+        geotiff.ingest_geotiffs(files),
+        ingest.list_scene_idents(files),
+        ingest.parse_manifests(files),
+        ingest.parse_scene_metadata(files),
+        ingest.parse_annotations(files),
+    ):
+        plan = _plan(df)
+        assert plan.count("MapInArrow") == 1, plan
+        assert "MapInPandas" not in plan, plan
+    images = spark.read.parquet(images_parquet)
+    plan = _plan(sinks.write_geotiff_files(images, str(tmp_path / "tifs")))
+    assert plan.count("MapInArrow") == 2 and "MapInPandas" not in plan, plan
+    # datagen's Spark schemas, derived from arrowio's Arrow ones, equal
+    # the DDL they were written in before
+    assert datagen.IMAGES_SCHEMA == spark.createDataFrame([], _IMAGES_DDL).schema
+    assert datagen.METADATA_SCHEMA == spark.createDataFrame([], _METADATA_DDL).schema

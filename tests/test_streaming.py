@@ -312,7 +312,7 @@ def test_stream_points_in_aois_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    joined = ingest.stream_points_in_aois(stream, aoi_df, res=10)
+    joined = spatial_join.points_in_aois(stream, aoi_df, res=10)
     assert joined.isStreaming
     q = (
         joined.writeStream.format("parquet")

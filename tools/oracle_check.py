@@ -6,7 +6,8 @@ Usage: python tools/oracle_check.py [sf_dir] [query ...]
 
 A query name may be a queries() entry or a member of a folded suite
 (``spatial_box_join`` runs ``spatial_suite``); any other name fails the
-run before Spark starts.
+run before Spark starts.  The session is ``get_spark``'s default, as in
+every other tool.
 """
 
 from __future__ import annotations
@@ -62,7 +63,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     qs = entry.queries()
     names = selected(sys.argv[2:], qs, entry._SUITES)
-    spark = get_spark("oracle-check", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("oracle-check")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:

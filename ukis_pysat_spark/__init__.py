@@ -7,14 +7,16 @@ engine is a distributed, lazy, columnar design:
 
 - images + captions live as rows of a Parquet/Iceberg-style table
   (image_id, bytes, w, h, fmt, caption, phash, + geo columns);
-- pixels are decoded ONLY inside Arrow-vectorized pandas UDFs
-  (mapInPandas / pandas_udf) — never per-row Python, never on the driver;
+- pixels are decoded ONLY inside ``mapInArrow`` stages on one Arrow
+  boundary (operators/arrowio.py) — never per-row Python UDFs, never on
+  the driver; raster files enter through the same boundary
+  (sources/geotiff.ingest_geotiffs over sinks.from_geotiff);
 - raster<->vector operations (footprint cell cover, point-in-polygon,
   kNN) are expressed as cell-keyed equi-joins + numpy refinement so
   Catalyst/AQE pick the physical plan (broadcast vs shuffle, skew split);
 - tiling reproduces the reference's sliding-window get_tiles semantics
   (ukis_pysat/raster.py:485-505) as a relational explode (window
-  geometry) or a pixel-emitting grouped Arrow UDF (tile extraction).
+  geometry) or a pixel-emitting ``mapInArrow`` stage (tile extraction).
 
 Subpackages:
     codec       in-house deterministic raster byte codec (raw/rawz/q8)

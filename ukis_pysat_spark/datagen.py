@@ -26,9 +26,11 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 import pyspark.sql.functions as F
 
 from ukis_pysat_spark import codec
+from ukis_pysat_spark.operators import arrowio
 
 PIXEL_DEG = 8.983152871870239e-05  # nominal pixel size (deg/px)
 # dummy.tif's exact affine, derived from the reference's golden bounds
@@ -38,13 +40,9 @@ REF_PIXEL_Y = -8.983152879592029e-05
 REF_ORIGIN = (11.896863892, 51.515176657)  # dummy.tif origin (lon, lat)
 REF_SHAPE = (1, 764, 679)  # dummy.tif (bands, rows, cols)
 
-IMAGES_SCHEMA = (
-    "image_id string, bytes binary, w int, h int, fmt string, "
-    "caption string, phash long, bands int, dtype string, crs string, "
-    "transform array<double>, nodata double, "
-    "footprint_lon array<double>, footprint_lat array<double>, "
-    "platform string"
-)
+# Spark forms of the Arrow schemas declared in operators/arrowio.py
+IMAGES_SCHEMA = from_arrow_schema(arrowio.IMAGES_SCHEMA)
+METADATA_SCHEMA = from_arrow_schema(arrowio.METADATA_SCHEMA)
 
 AOI_SCHEMA = (
     "aoi_id string, ring_lon array<double>, ring_lat array<double>, "
@@ -257,16 +255,6 @@ def gen_aois(
 
     parts = max(4, min(n // 128 + 1, 64))
     return spark.range(0, n, numPartitions=parts).mapInPandas(gen, schema=AOI_SCHEMA)
-
-
-METADATA_SCHEMA = (
-    "image_id string, platform string, sun_elevation double, "
-    "mult_reflectance array<double>, add_reflectance array<double>, "
-    "mult_radiance array<double>, add_radiance array<double>, "
-    "k1 array<double>, k2 array<double>, "
-    "quantification_value double, radio_add_offset array<double>, "
-    "processing_baseline double, thermal_band_idx array<int>"
-)
 
 
 def metadata_pdf(ids: np.ndarray, seed: int = 42, profile: str = "mixed") -> pd.DataFrame:

@@ -1,4 +1,9 @@
-"""The JVM<->Python Arrow boundary of every per-image stage.
+"""The JVM<->Python Arrow boundary of every per-image stage, and of the
+sources and sinks: raster blobs become images rows in
+``sinks.from_geotiff`` (the stage under ``sources/geotiff.ingest_geotiffs``),
+``sources/ingest``'s scene listing and manifest, MTL/MTD and annotation
+parsers are ``map_rows`` stages, and so is the GeoTIFF file sink
+(``sinks.write_geotiff_files``).
 
 A stage hands its input columns, a per-row function and its output
 ``pa.schema`` to one of two emitters; the Spark schema is derived from
@@ -23,6 +28,9 @@ input through the same row iterator (`_rows`):
 Stages that keep state across a whole batch or flush on their own rule
 (tiling's ``_TileBuf``, the zonal/rasterize AOI-list view, pointsample,
 pixels, the halo stages) keep their own loops.
+
+The images and metadata tables' schemas are declared here once, in
+Arrow; ``datagen`` derives their Spark forms.
 """
 
 from __future__ import annotations
@@ -37,8 +45,11 @@ from pyspark.sql.pandas.types import from_arrow_schema
 
 from ukis_pysat_spark import codec
 
-# the engine's images schema (datagen.IMAGES_SCHEMA); 'bytes' is the payload
-_IMAGES_SCHEMA = pa.schema(
+# The Arrow forms of the engine's images and metadata tables, declared
+# once: datagen derives their Spark forms (``datagen.IMAGES_SCHEMA``,
+# ``datagen.METADATA_SCHEMA``) with ``from_arrow_schema``.  'bytes' is
+# the images payload.
+IMAGES_SCHEMA = pa.schema(
     [
         ("image_id", pa.string()),
         ("bytes", pa.binary()),
@@ -58,7 +69,26 @@ _IMAGES_SCHEMA = pa.schema(
     ]
 )
 
-META_COLS = _IMAGES_SCHEMA.names
+_F64S = pa.list_(pa.float64())
+METADATA_SCHEMA = pa.schema(
+    [
+        ("image_id", pa.string()),
+        ("platform", pa.string()),
+        ("sun_elevation", pa.float64()),
+        ("mult_reflectance", _F64S),
+        ("add_reflectance", _F64S),
+        ("mult_radiance", _F64S),
+        ("add_radiance", _F64S),
+        ("k1", _F64S),
+        ("k2", _F64S),
+        ("quantification_value", pa.float64()),
+        ("radio_add_offset", _F64S),
+        ("processing_baseline", pa.float64()),
+        ("thermal_band_idx", pa.list_(pa.int32())),
+    ]
+)
+
+META_COLS = IMAGES_SCHEMA.names
 
 # payload bytes per emitted RecordBatch: bounds worker memory, and stays
 # far below the 2 GiB that pa.binary()'s int32 offsets can address
@@ -191,5 +221,5 @@ def map_image_rows(
     input row: `row_fn` returns (meta dict WITHOUT payload, pixel array,
     fmt)."""
     return flat_map_payload_rows(
-        images, in_cols, lambda row: (row_fn(row),), _IMAGES_SCHEMA
+        images, in_cols, lambda row: (row_fn(row),), IMAGES_SCHEMA
     )

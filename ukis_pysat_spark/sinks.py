@@ -66,14 +66,17 @@ def write_images(
 # compress, raster.py:535-580): the engine's payloads leave as real
 # GeoTIFF files — one strip-organized GTiff per image row, written by
 # sources/geotiff.write_geotiff (pure-numpy container writer, TIFF 6.0
-# / GeoTIFF 1.1).  All stages are Arrow-batched mapInArrow/mapInPandas;
-# nothing collects to the driver, so the sink scales with partitions.
+# / GeoTIFF 1.1).  Every stage is one arrowio mapInArrow; nothing
+# collects to the driver, so the sink scales with partitions.
 
 _GTIFF_SCHEMA = pa.schema(
     [("image_id", pa.string()), ("caption", pa.string()),
      ("n_bytes", pa.int64()), ("tiff", pa.binary())]
 )
 _GTIFF_COLS = ["image_id", "bytes", "caption", "transform", "crs", "nodata"]
+_FILES_SCHEMA = pa.schema(
+    [("image_id", pa.string()), ("path", pa.string()), ("n_bytes", pa.int64())]
+)
 
 
 def to_geotiff(
@@ -111,19 +114,22 @@ def to_geotiff(
 
 
 def from_geotiff(blobs: DataFrame, tiff_col: str = "tiff", fmt: str = "raw") -> DataFrame:
-    """(image_id, caption, tiff) blob rows -> images table: parse each
-    GeoTIFF (sources/geotiff.read_geotiff), re-encode with the engine
-    codec, rebuild the geo columns from the parsed tags.  The read twin
-    of to_geotiff — to_geotiff |> from_geotiff is a lossless loop.
-    Arrow-native: each blob enters as a zero-copy buffer view and the
-    re-encoded payloads leave through the chunked PayloadBuf."""
+    """(image_id, caption, tiff) blob rows -> images table: decode each
+    GeoTIFF or PNG blob (sources/png.read_image sniffs the magic),
+    re-encode with the engine codec, rebuild the geo columns from the
+    parsed tags (PNGs land on the default unit grid).  The engine's one
+    blob -> images stage: the read twin of to_geotiff (to_geotiff |>
+    from_geotiff is a lossless loop) and the stage under
+    sources/geotiff.ingest_geotiffs.  Arrow-native: each blob enters as
+    a zero-copy buffer view and the re-encoded payloads leave through
+    the chunked PayloadBuf."""
     import pyspark.sql.functions as F
 
     from ukis_pysat_spark.datagen import phash64
-    from ukis_pysat_spark.sources.geotiff import read_geotiff
+    from ukis_pysat_spark.sources.png import read_image
 
     def row_fn(row: dict):
-        arr, meta = read_geotiff(bytes(row["bytes"]))
+        arr, meta = read_image(bytes(row["bytes"]))
         t = meta["transform"] or [1.0, 0.0, 0.0, 0.0, -1.0, 0.0]
         lon0, lat0 = t[2], t[5]
         lon1 = lon0 + arr.shape[2] * t[0]
@@ -168,21 +174,13 @@ def write_geotiff_files(
     n_bytes) manifest — an action on it performs the writes."""
     import os
 
-    import pandas as pd
-
     blobs = to_geotiff(images, dtype=dtype, compression=compression, predictor=predictor)
 
-    def run(batches):
+    def rows_fn(row: dict) -> dict:
         os.makedirs(out_dir, exist_ok=True)
-        for pdf in batches:
-            paths = []
-            for r in pdf.itertuples(index=False):
-                p = os.path.join(out_dir, f"{r.image_id}.tif")
-                with open(p, "wb") as fh:
-                    fh.write(r.tiff)
-                paths.append(p)
-            yield pd.DataFrame(
-                {"image_id": pdf["image_id"], "path": paths, "n_bytes": pdf["n_bytes"]}
-            )
+        path = os.path.join(out_dir, f"{row['image_id']}.tif")
+        with open(path, "wb") as fh:
+            fh.write(row["tiff"])
+        return {"image_id": [row["image_id"]], "path": [path], "n_bytes": [row["n_bytes"]]}
 
-    return blobs.mapInPandas(run, schema="image_id string, path string, n_bytes long")
+    return arrowio.map_rows(blobs, ["image_id", "n_bytes", "tiff"], rows_fn, _FILES_SCHEMA)

@@ -18,24 +18,21 @@ profile the reference's fixtures (and most L1 scene quicklooks) use:
 - geo tags: ModelPixelScale + ModelTiepoint -> GDAL-style affine,
   GeoKeyDirectory -> EPSG code, GDAL_NODATA -> nodata.
 
-The decoder is called per row inside Arrow-batched UDFs — a binaryFile
-scan of scene files becomes an `images` table (ingest_geotiffs), each
-payload re-encoded with the engine codec.  This is a data-format
-reader, written from the public TIFF 6.0 / GeoTIFF specs — not a port
-of any GDAL code.
+The decoder runs per row in the one Arrow stage that turns raster blobs
+into `images` rows (sinks.from_geotiff, through png.read_image's magic
+sniff), each payload re-encoded with the engine codec; ingest_geotiffs
+feeds that stage from a binaryFile scan of scene files with JVM
+expressions only.  This is a data-format reader, written from the
+public TIFF 6.0 / GeoTIFF specs — not a port of any GDAL code.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-
-from ukis_pysat_spark import codec
 
 _TYPE_SIZES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 6: 1, 7: 1, 8: 2, 9: 4, 10: 8,
                11: 4, 12: 8, 16: 8, 17: 8, 18: 8}
@@ -517,58 +514,33 @@ def read_geotiff(data: bytes) -> tuple[np.ndarray, dict]:
 def ingest_geotiffs(files: DataFrame, fmt: str = "raw") -> DataFrame:
     """binaryFile scan rows -> engine `images` table rows.
 
-    Magic-sniffing decode (GeoTIFF/BigTIFF or PNG — sources/png.py);
-    payloads are decoded once and re-encoded with the engine codec;
-    geo metadata land in plain columns (IMAGES_SCHEMA minus caption
-    semantics: caption <- file name, platform <- name prefix).  PNGs
-    carry no geo metadata and ingest on the default unit grid."""
-    import zlib
+    A projection over ``sinks.from_geotiff``, the one blob -> images
+    stage: rows whose content starts with PNG or TIFF magic decode there
+    (png.read_image sniffs both; other files are filtered out before the
+    stage), image_id <- file stem, caption <- file name, platform <- file
+    name prefix.  A file whose magic claims PNG or TIFF but that fails to
+    decode fails the job.  PNGs carry no geo metadata and ingest on the
+    default unit grid."""
+    import pyspark.sql.functions as F
 
-    from ukis_pysat_spark.datagen import IMAGES_SCHEMA, phash64
-    from ukis_pysat_spark.sources.png import read_image
+    from ukis_pysat_spark.sinks import from_geotiff
+    from ukis_pysat_spark.sources.ingest import _platform
+    from ukis_pysat_spark.sources.png import PNG_SIG
 
-    prefix_platform = {"LC08": "Landsat8", "LE07": "Landsat7", "LT05": "Landsat5"}
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                name = r.path.rsplit("/", 1)[-1]
-                try:
-                    arr, meta = read_image(r.content)
-                except (ValueError, NotImplementedError, struct.error, zlib.error):
-                    continue
-                ident = name.rsplit(".", 1)[0]
-                platform = prefix_platform.get(name[:4])
-                if platform is None and name.startswith("S2"):
-                    platform = "Sentinel2"
-                t = meta["transform"] or [1.0, 0.0, 0.0, 0.0, -1.0, 0.0]
-                lon0, lat0 = t[2], t[5]
-                lon1 = lon0 + arr.shape[2] * t[0]
-                lat1 = lat0 + arr.shape[1] * t[4]
-                rows.append(
-                    {
-                        "image_id": ident,
-                        "bytes": codec.encode(arr, fmt),
-                        "w": int(arr.shape[2]),
-                        "h": int(arr.shape[1]),
-                        "fmt": fmt,
-                        "caption": name,
-                        "phash": phash64(arr),
-                        "bands": int(arr.shape[0]),
-                        "dtype": str(arr.dtype),
-                        "crs": meta["crs"] or "EPSG:4326",
-                        "transform": [float(v) for v in t],
-                        "nodata": meta["nodata"] if meta["nodata"] is not None else 0.0,
-                        "footprint_lon": [lon0, lon1, lon1, lon0, lon0],
-                        "footprint_lat": [lat0, lat0, lat1, lat1, lat0],
-                        "platform": platform or "",
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return files.select("path", "content").mapInPandas(run, schema=IMAGES_SCHEMA)
+    magic = F.hex(F.substring("content", 1, len(PNG_SIG)))  # upper-case hex
+    is_image = (
+        (magic == PNG_SIG.hex().upper())
+        | magic.startswith(b"II".hex().upper())
+        | magic.startswith(b"MM".hex().upper())
+    )
+    name = F.regexp_extract("path", "[^/]*$", 0)
+    blobs = files.where(is_image).select(
+        F.regexp_replace(name, r"\.[^.]*$", "").alias("image_id"),
+        name.alias("caption"),
+        F.col("content").alias("tiff"),
+    )
+    images = from_geotiff(blobs, fmt=fmt)  # platform '' where no prefix matches
+    return images.withColumn("platform", _platform(F.col("caption"), F.col("platform")))
 
 
 # --------------------------------------------------------------------------

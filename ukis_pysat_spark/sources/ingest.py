@@ -6,16 +6,21 @@ Reference behavior re-expressed distributed:
   scene names and transparently unzips archives while chdir-ing the
   process (ukis_pysat/file.py:29-62 — process-global state we must not
   replicate).  Here: a ``binaryFile`` scan with recursive lookup; zip
-  payloads are expanded *in memory per row* inside an Arrow UDF — no
+  payloads are expanded *in memory per row* (``list_scene_idents``) — no
   tempdirs, no global chdir, safe under task retries.
 
 - ``parse_manifests``: footprint (gml:coordinates with the lat/lon swap,
   file.py:160-168), origin country (file.py:172-187), IPF version
-  (file.py:190-205) extracted with xml.etree inside one mapInPandas over
-  the manifest payloads; emitted as plain columns.
+  (file.py:190-205) extracted with xml.etree; emitted as plain columns.
+
+- ``parse_scene_metadata``: Landsat MTL / Sentinel-2 MTD rescale factors
+  (raster.py:294-410) as a metadata table.
 
 - ``parse_annotations``: rangePixelSpacing in meters + the derived
   degrees value (file.py:208-233).
+
+Each parser is one ``arrowio.map_rows`` stage over the (path, content)
+rows of a scan, with its output declared once as a ``pa.schema``.
 """
 
 from __future__ import annotations
@@ -24,16 +29,32 @@ import io
 import re
 import xml.etree.ElementTree as ET
 import zipfile
-from typing import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyspark.sql.functions as F
+from pyspark.sql import Column, DataFrame, SparkSession
+
+from ukis_pysat_spark.operators import arrowio
 
 SCENE_PATTERN = re.compile(r"^S[1-3]._+")  # file.py:43
 
 _GML = "{http://www.opengis.net/gml}coordinates"
 _FACILITY = "{http://www.esa.int/safe/sentinel-1.0}facility"
 _SOFTWARE = "{http://www.esa.int/safe/sentinel-1.0}software"
+
+# file-name prefix -> platform: scene ingest (geotiff.ingest_geotiffs)
+# and MTL parsing read this one table
+_PLATFORM_PREFIXES = {
+    "LC08": "Landsat8", "LE07": "Landsat7", "LT05": "Landsat5", "S2": "Sentinel2",
+}
+
+
+def _platform(name: Column, otherwise: Column) -> Column:
+    """Platform of a file-name column by its prefix, else `otherwise`."""
+    out = otherwise
+    for prefix, platform in _PLATFORM_PREFIXES.items():
+        out = F.when(name.startswith(prefix), platform).otherwise(out)
+    return out
 
 
 def scan_scene_files(
@@ -48,6 +69,12 @@ def scan_scene_files(
     )
 
 
+_IDENTS_SCHEMA = pa.schema(
+    [("path", pa.string()), ("ident", pa.string()),
+     ("from_zip", pa.bool_()), ("kind", pa.string())]
+)
+
+
 def list_scene_idents(files: DataFrame) -> DataFrame:
     """Scene identifiers matching the reference's ^S[1-3]._+ gate:
     plain files, scene DIRECTORIES (the reference's primary case —
@@ -57,42 +84,31 @@ def list_scene_idents(files: DataFrame) -> DataFrame:
     opened in memory, never extracted to disk.  One row per distinct
     (ident, kind); `path` is an arbitrary witness file."""
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                parts = r.path.split("/")
-                name = parts[-1]
-                stem = name.rsplit(".", 1)[0] if "." in name else name
-                # scene directories anywhere on the path
-                for comp in parts[:-1]:
-                    if SCENE_PATTERN.match(comp):
-                        rows.append(
-                            {"path": r.path, "ident": comp, "from_zip": False, "kind": "dir"}
-                        )
-                if name.endswith(".zip"):
-                    try:
-                        with zipfile.ZipFile(io.BytesIO(r.content)) as z:
-                            inner = {n.split("/", 1)[0] for n in z.namelist()}
-                        for ident in inner:
-                            ident = ident.rsplit(".", 1)[0] if "." in ident else ident
-                            if SCENE_PATTERN.match(ident):
-                                rows.append(
-                                    {"path": r.path, "ident": ident, "from_zip": True,
-                                     "kind": "zip"}
-                                )
-                    except zipfile.BadZipFile:
-                        continue
-                elif SCENE_PATTERN.match(stem):
-                    rows.append(
-                        {"path": r.path, "ident": stem, "from_zip": False, "kind": "file"}
-                    )
-            if rows:
-                yield pd.DataFrame(rows)
+    def rows_fn(row: dict) -> dict | None:
+        parts = row["path"].split("/")
+        name = parts[-1]
+        stem = name.rsplit(".", 1)[0] if "." in name else name
+        # scene directories anywhere on the path
+        found = [(comp, False, "dir") for comp in parts[:-1] if SCENE_PATTERN.match(comp)]
+        if name.endswith(".zip"):
+            try:
+                with zipfile.ZipFile(io.BytesIO(row["content"])) as z:
+                    inner = {n.split("/", 1)[0] for n in z.namelist()}
+            except zipfile.BadZipFile:
+                inner = set()
+            for ident in inner:
+                ident = ident.rsplit(".", 1)[0] if "." in ident else ident
+                if SCENE_PATTERN.match(ident):
+                    found.append((ident, True, "zip"))
+        elif SCENE_PATTERN.match(stem):
+            found.append((stem, False, "file"))
+        if not found:
+            return None
+        idents, from_zip, kinds = zip(*found)
+        return {"path": [row["path"]] * len(found), "ident": idents,
+                "from_zip": from_zip, "kind": kinds}
 
-    out = files.select("path", "content").mapInPandas(
-        scan, schema="path string, ident string, from_zip boolean, kind string"
-    )
+    out = arrowio.map_rows(files, ["path", "content"], rows_fn, _IDENTS_SCHEMA)
     return out.dropDuplicates(["ident", "kind"])
 
 
@@ -125,29 +141,25 @@ def parse_manifest_bytes(content: bytes) -> dict:
     return out
 
 
+_MANIFEST_SCHEMA = pa.schema(
+    [("footprint_lon", pa.list_(pa.float64())), ("footprint_lat", pa.list_(pa.float64())),
+     ("origin", pa.string()), ("ipf", pa.float64()), ("path", pa.string())]
+)
+
+
 def parse_manifests(files: DataFrame) -> DataFrame:
-    """mapInPandas over (path, content) manifest rows."""
+    """(path, content) manifest rows -> one parsed row each; rows that
+    are not well-formed XML are dropped."""
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    d = parse_manifest_bytes(r.content)
-                except ET.ParseError:
-                    continue
-                d["path"] = r.path
-                rows.append(d)
-            if rows:
-                yield pd.DataFrame(rows)
+    def rows_fn(row: dict) -> dict | None:
+        try:
+            d = parse_manifest_bytes(bytes(row["content"]))
+        except ET.ParseError:
+            return None
+        d["path"] = row["path"]
+        return {k: [v] for k, v in d.items()}
 
-    return files.select("path", "content").mapInPandas(
-        parse,
-        schema=(
-            "footprint_lon array<double>, footprint_lat array<double>, "
-            "origin string, ipf double, path string"
-        ),
-    )
+    return arrowio.map_rows(files, ["path", "content"], rows_fn, _MANIFEST_SCHEMA)
 
 
 # --- Landsat MTL / Sentinel-2 MTD rescale-factor ingestion ------------------
@@ -160,8 +172,6 @@ _MTL_GROUPS = {
     2: ("LANDSAT_METADATA_FILE", "LEVEL1_RADIOMETRIC_RESCALING",
         "LEVEL1_THERMAL_CONSTANTS", "LEVEL1_THERMAL_CONSTANTS"),
 }
-
-_FNAME_PLATFORM = {"LC08": "Landsat8", "LE07": "Landsat7", "LT05": "Landsat5"}
 
 
 def _mtl_coerce(val: str):
@@ -308,36 +318,35 @@ def parse_scene_metadata(files: DataFrame) -> DataFrame:
     the _MTL/_MTD suffix); platform from the filename prefix
     (LC08/LE07/LT05 -> Landsat-8/7/5, S2* -> Sentinel-2).
     """
-    from ukis_pysat_spark.datagen import METADATA_SCHEMA
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                name = r.path.rsplit("/", 1)[-1]
-                try:
-                    if name.endswith("_MTL.txt"):
-                        ident = name[: -len("_MTL.txt")]
-                        platform = _FNAME_PLATFORM.get(name[:4])
-                        if platform is None:
-                            continue
-                        rows.append(
-                            metadata_from_mtl(
-                                bytes(r.content).decode("utf-8", "replace"), platform, ident
-                            )
-                        )
-                    elif name.endswith("_MTD.xml"):
-                        ident = name[: -len("_MTD.xml")]
-                        rows.append(metadata_from_mtd(bytes(r.content), ident))
-                except (ValueError, ET.ParseError):
-                    continue
-            if rows:
-                yield pd.DataFrame(rows)
+    def rows_fn(row: dict) -> dict | None:
+        name = row["path"].rsplit("/", 1)[-1]
+        try:
+            if name.endswith("_MTL.txt") and row["platform"].startswith("Landsat"):
+                ident = name[: -len("_MTL.txt")]
+                text = bytes(row["content"]).decode("utf-8", "replace")
+                d = metadata_from_mtl(text, row["platform"], ident)
+            elif name.endswith("_MTD.xml"):
+                d = metadata_from_mtd(bytes(row["content"]), name[: -len("_MTD.xml")])
+            else:
+                return None
+        except (ValueError, ET.ParseError):
+            return None
+        return {k: [v] for k, v in d.items()}
 
-    return files.select("path", "content").mapInPandas(parse, schema=METADATA_SCHEMA)
+    named = files.withColumn("platform", _platform(F.regexp_extract("path", "[^/]*$", 0), F.lit("")))
+    return arrowio.map_rows(
+        named, ["path", "content", "platform"], rows_fn, arrowio.METADATA_SCHEMA
+    )
 
 
 PIXEL_SPACING_DEG_PER_10M = 8.983152841195215e-5  # file.py:230
+
+
+_ANNOTATION_SCHEMA = pa.schema(
+    [("path", pa.string()), ("polarization", pa.string()),
+     ("spacing_m", pa.float64()), ("spacing_deg", pa.float64())]
+)
 
 
 def parse_annotations(files: DataFrame, polarization: str = "HH") -> DataFrame:
@@ -348,34 +357,26 @@ def parse_annotations(files: DataFrame, polarization: str = "HH") -> DataFrame:
     """
     pol = polarization.lower()
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                name = r.path.rsplit("/", 1)[-1]
-                parts = name.split("-")
-                if len(parts) <= 3 or parts[3] != pol or not name.endswith(".xml"):
-                    continue
-                try:
-                    root = ET.fromstring(r.content)
-                except ET.ParseError:
-                    continue
-                for elem in root.iter("imageInformation"):
-                    for child in elem.iter():
-                        if child.tag == "rangePixelSpacing" and child.text:
-                            m = float(child.text)
-                            rows.append(
-                                {
-                                    "path": r.path,
-                                    "polarization": polarization,
-                                    "spacing_m": m,
-                                    "spacing_deg": (m / 10.0) * PIXEL_SPACING_DEG_PER_10M,
-                                }
-                            )
-            if rows:
-                yield pd.DataFrame(rows)
+    def rows_fn(row: dict) -> dict | None:
+        name = row["path"].rsplit("/", 1)[-1]
+        parts = name.split("-")
+        if len(parts) <= 3 or parts[3] != pol or not name.endswith(".xml"):
+            return None
+        try:
+            root = ET.fromstring(bytes(row["content"]))
+        except ET.ParseError:
+            return None
+        spacing_m = [
+            float(child.text)
+            for elem in root.iter("imageInformation")
+            for child in elem.iter()
+            if child.tag == "rangePixelSpacing" and child.text
+        ]
+        return {
+            "path": [row["path"]] * len(spacing_m),
+            "polarization": [polarization] * len(spacing_m),
+            "spacing_m": spacing_m,
+            "spacing_deg": [(m / 10.0) * PIXEL_SPACING_DEG_PER_10M for m in spacing_m],
+        }
 
-    return files.select("path", "content").mapInPandas(
-        parse,
-        schema="path string, polarization string, spacing_m double, spacing_deg double",
-    )
+    return arrowio.map_rows(files, ["path", "content"], rows_fn, _ANNOTATION_SCHEMA)

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 import pyspark.sql.functions as F
 
-from ukis_pysat_spark.operators.dedup import hamming_blocks
+from ukis_pysat_spark.operators.dedup import _popcount_u64, hamming_blocks
 from ukis_pysat_spark.operators.text import fingerprint
 
 OUT_SCHEMA = "fp string, doc_id long, text string"
@@ -108,14 +108,6 @@ HAMMING_OUT_SCHEMA = "id_new string, id_seen string, hamming int"
 HAMMING_STATE_SCHEMA = "ids array<string>, hashes array<long>"
 
 
-def _popcount64(x: np.ndarray) -> np.ndarray:
-    """Per-element popcount of an int64 array (numpy<2 has no
-    bitwise_count): unpack each 8-byte element to bits and sum."""
-    return np.unpackbits(x.view(np.uint8).reshape(-1, 8), axis=1).sum(
-        axis=1, dtype=np.int64
-    )
-
-
 def _make_hamming_fn(max_hamming: int, ttl_ms: int | None) -> Callable:
     def _hamming_fn(
         key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -145,7 +137,7 @@ def _make_hamming_fn(max_hamming: int, ttl_ms: int | None) -> Callable:
                     x = np.bitwise_xor(
                         np.asarray(hashes, dtype=np.int64), np.int64(h)
                     )
-                    ham = _popcount64(x)
+                    ham = _popcount_u64(x.view(np.uint64))
                     for i in np.nonzero(ham <= max_hamming)[0]:
                         out_new.append(str(iid))
                         out_seen.append(ids[int(i)])

@@ -9,8 +9,13 @@ streaming entry points a continuously-arriving scene feed needs:
 - ``stream_tile_counts``: stateless tiling of streamed scenes (the
   relational tile_windows composes with streaming sources unchanged —
   one logical plan, batch or streaming).
-- ``stream_events_windowed``: watermarked sliding-window counts over an
-  event stream (late data handled by the watermark).
+- ``stream_image_neardup``: near-duplicate image events at ingest
+  (decode to a perceptual hash, then the checkpointed hamming state of
+  ``streaming/dedup.stream_hamming_pairs``).
+
+The stateless batch operators compose with streaming sources unchanged:
+``spatial_join.points_in_aois`` over a point stream is a stream-static
+join against a static AOI table, with no wrapper.
 
 All sinks go through ``foreachBatch`` + the engine's CheckpointedRun
 commit so a crashed stream resumes without duplicates (idempotent
@@ -41,41 +46,6 @@ def stream_tile_counts(images_stream: DataFrame, width: int = 256, height: int =
     relational so the same operator serves batch and streaming plans."""
     win = tiling.tile_windows(images_stream, width, height, overlap)
     return win.groupBy("image_id").agg(F.count("*").alias("n_tiles"))
-
-
-def stream_events_windowed(
-    events: DataFrame,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Watermarked sliding-window event counts (late rows beyond the
-    watermark are dropped, state is bounded)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide), F.col("event_type"))
-        .agg(F.count("*").alias("n"), F.sum("value").alias("sum_value"))
-    )
-
-
-def stream_points_in_aois(
-    points_stream: DataFrame,
-    aois: DataFrame,
-    res: int = 12,
-) -> DataFrame:
-    """STREAM-STATIC spatial join: a continuously-arriving point feed
-    against a static (broadcastable) AOI table.
-
-    The batch ``points_in_aois`` operator is stateless — a relational
-    cell equi-join plus a mapInArrow PIP refine — so the SAME logical
-    plan runs unchanged over a streaming point source (Spark's
-    stream-static inner equi-join + a stateless Arrow map).  No state
-    store, no watermark: each micro-batch joins independently, which
-    is exactly the semantics of enriching a scene/point feed with AOI
-    memberships at ingest time."""
-    from ukis_pysat_spark.operators import spatial_join
-
-    return spatial_join.points_in_aois(points_stream, aois, res=res)
 
 
 def stream_image_neardup(
