@@ -5,6 +5,7 @@ import pytest
 
 from ukis_pysat_spark import codec, datagen
 from ukis_pysat_spark.operators import change, transforms
+from tests.conftest import images_pdf
 
 
 def _epochs(spark, n=10):
@@ -23,7 +24,7 @@ def test_change_stats_matches_numpy(spark):
         (r["image_id"], r["band"]): r
         for r in change.change_stats(a, b, threshold=5.0).collect()
     }
-    pdf = datagen.images_pdf(np.arange(10), profile="mixed")
+    pdf = images_pdf(np.arange(10), profile="mixed")
     checked = 0
     for _, img in pdf.iterrows():
         arr = codec.decode(img["bytes"]).astype(np.float64)

@@ -222,6 +222,15 @@ def test_spark_geotiff_loop_and_file_sink(spark, tmp_path):
     out_dir = str(tmp_path / "tifs")
     manifest = sinks.write_geotiff_files(imgs, out_dir, compression="lzw").collect()
     assert len(manifest) == 8 and all(os.path.getsize(m["path"]) > 0 for m in manifest)
+    # each file is byte for byte to_geotiff's blob of the same row
+    blobs = {
+        r["image_id"]: bytes(r["tiff"])
+        for r in sinks.to_geotiff(imgs, compression="lzw").collect()
+    }
+    for m in manifest:
+        with open(m["path"], "rb") as fh:
+            assert fh.read() == blobs[m["image_id"]], m["image_id"]
+        assert m["n_bytes"] == len(blobs[m["image_id"]])
     back = geotiff.ingest_geotiffs(spark.read.format("binaryFile").load(out_dir))
     c = {r["image_id"]: r for r in back.collect()}
     assert set(c) == set(a)

@@ -5,6 +5,7 @@ def test_band_histogram_matches_numpy(spark):
     import numpy as np
     from ukis_pysat_spark import codec, datagen
     from ukis_pysat_spark.operators import multimodal
+    from tests.conftest import images_pdf
 
     imgs = datagen.gen_images(spark, 8, profile="mixed")
     bins, lo, hi = 16, 0.0, 2048.0
@@ -12,7 +13,7 @@ def test_band_histogram_matches_numpy(spark):
     got = {
         (r["image_id"], r["band"], r["bin"]): r["count"] for r in rows
     }
-    pdf = datagen.images_pdf(np.arange(8), profile="mixed")
+    pdf = images_pdf(np.arange(8), profile="mixed")
     n_checked = 0
     for _, img in pdf.iterrows():
         arr = codec.decode(img["bytes"]).astype(np.float64)

@@ -5,6 +5,7 @@ import pytest
 
 from ukis_pysat_spark import codec, datagen
 from ukis_pysat_spark.operators import overviews
+from tests.conftest import images_pdf
 
 
 def _np_level(arr, f, nod):
@@ -24,7 +25,7 @@ def test_overviews_match_numpy_blocks(spark):
     imgs = datagen.gen_images(spark, 6, profile="mixed")
     rows = overviews.build_overviews(imgs, factors=(2, 4)).collect()
     got = {(r["image_id"], r["level"]): r for r in rows}
-    pdf = datagen.images_pdf(np.arange(6), profile="mixed")
+    pdf = images_pdf(np.arange(6), profile="mixed")
     checked = 0
     for _, img in pdf.iterrows():
         arr = codec.decode(img["bytes"]).astype(np.float64)

@@ -1,0 +1,86 @@
+"""The package's surface and its one Python boundary, checked without
+starting Spark: every public package function is named from outside
+``tests/``, and the batch engine crosses into Python through Arrow only
+(no pandas UDFs, no ``mapInPandas``, no pandas import)."""
+
+import ast
+import glob
+import os
+import re
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(ROOT, "ukis_pysat_spark")
+
+# Public functions that may be reached from tests/ only.
+ALLOWED_TESTS_ONLY = {
+    # Column-expression twins of the ukis-pysat scene-metadata API
+    "pixel_spacing_degree",
+    "proj_string_from_footprint",
+    # oracles the benchmark imports
+    "knn_bruteforce_oracle",
+    "spatial_join_bruteforce",
+}
+
+# The files outside tests/ that use the package.
+USERS = ["bench.py", "bench_extra.py", "__spark_entry__.py", "tools/*.py", "perfbench/*.py"]
+
+
+def _rel(path: str) -> str:
+    return os.path.relpath(path, ROOT)
+
+
+def _package_files() -> list[str]:
+    return sorted(glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True))
+
+
+def _public_functions() -> dict[str, str]:
+    """Public top-level function name -> its package file."""
+    out = {}
+    for path in _package_files():
+        for node in ast.parse(open(path).read()).body:
+            if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
+                out[node.name] = _rel(path)
+    return out
+
+
+def test_no_public_function_is_reached_only_from_tests():
+    """A public function must be named somewhere besides its own `def`:
+    called or documented in the package, or used by the files outside
+    tests/ (a word match, so a module docstring that lists an entry
+    point counts as naming it)."""
+    users = _package_files() + [
+        p for pat in USERS for p in sorted(glob.glob(os.path.join(ROOT, pat)))
+    ]
+    text = "\n".join(open(p).read() for p in users)
+    unreached = {
+        f"{path}:{name}" for name, path in _public_functions().items()
+        if name not in ALLOWED_TESTS_ONLY
+        and len(re.findall(rf"\b{re.escape(name)}\b", text)) < 2
+    }
+    assert unreached == set(), "move these into tests/ or delete them"
+
+
+def test_allow_list_names_package_functions():
+    assert ALLOWED_TESTS_ONLY <= set(_public_functions())
+
+
+# pandas stays only where another API needs it: the kNN oracle's
+# driver-side frames and the streaming state API (applyInPandasWithState).
+PANDAS_FILES = {
+    "ukis_pysat_spark/operators/knn.py",
+    "ukis_pysat_spark/streaming/dedup.py",
+    "ukis_pysat_spark/streaming/events.py",
+}
+_PANDAS_IMPORT = re.compile(r"^\s*(import pandas\b|from pandas\b)", re.M)
+_PANDAS_API = re.compile(r"pandas_udf|mapInPandas|applyInPandas\(")
+
+
+def test_batch_engine_crosses_into_python_through_arrow_only():
+    streaming = os.path.join(PKG, "streaming") + os.sep
+    api = {
+        _rel(p) for p in _package_files()
+        if not p.startswith(streaming) and _PANDAS_API.search(open(p).read())
+    }
+    assert api == set()
+    imports = {_rel(p) for p in _package_files() if _PANDAS_IMPORT.search(open(p).read())}
+    assert imports <= PANDAS_FILES, imports - PANDAS_FILES

@@ -226,6 +226,13 @@ def test_embedding_neardup_matches_duckdb(spark):
 # --- similarity -------------------------------------------------------------
 
 
+def recall_at_k(approx: pd.DataFrame, exact: pd.DataFrame, k: int) -> float:
+    """Fraction of exact top-k pairs recovered by the ANN result."""
+    e = {(r.query_id, r.vec_id) for r in exact.itertuples(index=False) if r.rank <= k}
+    a = {(r.query_id, r.vec_id) for r in approx.itertuples(index=False) if r.rank <= k}
+    return len(e & a) / max(len(e), 1)
+
+
 def _queries(spark, n=5):
     e = _emb(spark)
     return (
@@ -257,12 +264,110 @@ def test_brute_force_topk_matches_duckdb(spark):
     assert np.allclose(got["cosine"].values, exp["cosine"].values, atol=2e-6)
 
 
+def _vectors(spark, n: int, dim: int, seed: int):
+    rng = np.random.Generator(np.random.Philox(key=seed))
+    vecs = rng.standard_normal((n, dim)).astype(np.float32)
+    df = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)], "vec_id long, embedding array<float>"
+    )
+    return df, vecs.astype(np.float64)
+
+
+def _udf_lists(df, udf, col: str = "embedding", key: str = "vec_id") -> list:
+    return [r.b for r in df.select(key, udf(col).alias("b")).orderBy(key).collect()]
+
+
+@pytest.mark.parametrize("multiprobe", [False, True])
+def test_lsh_buckets_match_numpy(spark, multiprobe):
+    """lsh's bucket lists, restated per row: table t's bucket is its
+    sign bits MSB-first plus t * 2^(planes+1); multiprobe appends the
+    bucket's 1-bit flips after it."""
+    n_planes, n_tables, seed = 5, 3, 11
+    df, m = _vectors(spark, 60, 8, seed=3)
+    planes = similarity._hyperplanes(8, n_planes, n_tables, seed)
+    signs = [(m @ planes[t].T) > 0 for t in range(n_tables)]
+    want = []
+    for i in range(len(m)):
+        row = []
+        for t in range(n_tables):
+            b = sum(int(s) << (n_planes - 1 - j) for j, s in enumerate(signs[t][i]))
+            b += t << (n_planes + 1)
+            row += [b] + ([b ^ (1 << j) for j in range(n_planes)] if multiprobe else [])
+        want.append(row)
+    got = _udf_lists(df, similarity._bucket_udf(n_planes, n_tables, seed, multiprobe))
+    assert got == want
+
+
+@pytest.mark.parametrize("n_probe", [1, 3])
+def test_ivf_assign_matches_numpy(spark, n_probe):
+    """ivf's list ids, restated per row: the n_probe centroids of
+    highest cosine, best first."""
+    df, m = _vectors(spark, 60, 8, seed=4)
+    centroids = np.random.Generator(np.random.Philox(key=9)).standard_normal((6, 8))
+    centroids /= np.linalg.norm(centroids, axis=1, keepdims=True)
+    sims = (m / np.linalg.norm(m, axis=1, keepdims=True)) @ centroids.T
+    want = [sorted(range(6), key=lambda j: -s[j])[:n_probe] for s in sims]
+    assert _udf_lists(df, similarity._ivf_assign_udf(centroids, n_probe)) == want
+
+
+def test_minhash_band_buckets_match_python(spark):
+    """minhash's band buckets, restated in Python integers: signature
+    h = min over shingles of (x * a + b) mod 2^61-1 (int64 products
+    wrap), all zeros for an empty shingle list; bucket = FNV-1a-style
+    fold of the band's rows, shifted right by one, plus band * 2^40."""
+    n_hashes, bands, seed, m61 = 12, 4, 5, (1 << 61) - 1
+    rng = np.random.Generator(np.random.Philox(key=21))
+    shingles = [rng.integers(-(1 << 62), 1 << 62, size=int(k)).tolist()
+                for k in rng.integers(1, 30, size=40)]
+    shingles[7] = []
+    df = spark.createDataFrame(list(enumerate(shingles)), "doc_id long, sh array<bigint>")
+    prng = np.random.Generator(np.random.Philox(key=np.uint64(seed)))
+    a = prng.integers(1, m61, size=n_hashes, dtype=np.int64).tolist()
+    b = prng.integers(0, m61, size=n_hashes, dtype=np.int64).tolist()
+
+    def wrap64(x: int) -> int:
+        return (x + (1 << 63)) % (1 << 64) - (1 << 63)
+
+    want = []
+    for hs in shingles:
+        xs = [h & ((1 << 63) - 1) for h in hs]
+        sig = [min(wrap64(wrap64(x * ai) + bi) % m61 for x in xs) if xs else 0
+               for ai, bi in zip(a, b)]
+        row = []
+        for band in range(bands):
+            acc = 0xCBF29CE484222325
+            for v in sig[band * 3 : band * 3 + 3]:
+                acc = ((acc ^ v) * 0x100000001B3) % (1 << 64)
+            row.append((acc >> 1) + band * (1 << 40))
+        want.append(row)
+    udf = dedup._band_buckets_udf(n_hashes, bands, seed)
+    assert _udf_lists(df, udf, "sh", "doc_id") == want
+    assert want[7] == _udf_lists(
+        spark.createDataFrame([(0, [])], "doc_id long, sh array<bigint>"), udf, "sh", "doc_id"
+    )[0]
+
+
+@pytest.mark.parametrize("rows", [
+    [(0, [1.0, 2.0, 3.0]), (1, [1.0, 2.0, 3.0, 4.0, 5.0])],
+    [(0, [1.0, 2.0]), (1, None)],
+], ids=["ragged", "null"])
+def test_vector_udfs_fail_closed(spark, rows):
+    """A batch holding vectors of two lengths, or a null vector, raises
+    in lsh and ivf instead of pairing values with the wrong rows."""
+    from pyspark.errors import PythonException
+
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").coalesce(1)
+    for udf in (similarity._bucket_udf(4, 2, 7, True), similarity._ivf_assign_udf(np.eye(2), 1)):
+        with pytest.raises(PythonException, match="one length"):
+            _udf_lists(df, udf)
+
+
 def test_lsh_ann_recall(spark):
     e = _emb(spark)
     q = _queries(spark, n=8)
     exact = similarity.brute_force_topk(e, q, k=5).toPandas()
     approx = similarity.lsh_ann(e, q, k=5, n_planes=6, n_tables=8, multiprobe=True).toPandas()
-    rec = similarity.recall_at_k(approx, exact, k=5)
+    rec = recall_at_k(approx, exact, k=5)
     assert rec >= 0.5, f"LSH recall {rec} too low"
 
 
@@ -482,13 +587,13 @@ def test_ivf_ann_recall(spark):
     q = _queries(spark, n=8)
     exact = similarity.brute_force_topk(e, q, k=5).toPandas()
     approx = similarity.ivf_ann(e, q, k=5, n_lists=8, n_probe=4).toPandas()
-    rec = similarity.recall_at_k(approx, exact, k=5)
+    rec = recall_at_k(approx, exact, k=5)
     # uniform random embeddings have little cluster structure, so the
     # probe/lists ratio is close to a uniform hit rate; measured 0.575
     assert rec >= 0.5, f"IVF recall {rec} too low"
     # full probe == exact (every list probed -> brute force)
     full = similarity.ivf_ann(e, q, k=5, n_lists=8, n_probe=8).toPandas()
-    assert similarity.recall_at_k(full, exact, k=5) == 1.0
+    assert recall_at_k(full, exact, k=5) == 1.0
 
 
 def test_ngram_jaccard_auto_path_selection(spark):
@@ -913,6 +1018,20 @@ def test_compute_phash_matches_precomputed_column(spark):
     }
 
 
+def frame_neardup(videos, every_n: int = 1, max_hamming: int = 6):
+    """Frame-level near-duplicate pairs across video payloads: every
+    nth frame (frame_sample) hashed to its 64-bit perceptual hash
+    (compute_phash), then the pigeonhole hamming join; frame ids are
+    'video_id#frame'."""
+    frames = multimodal.frame_sample(videos, every_n).select(
+        F.concat_ws("#", "image_id", F.col("frame").cast("string")).alias("image_id"),
+        "bytes",
+    )
+    return dedup.hamming_pairs(
+        multimodal.compute_phash(frames), "image_id", "phash", max_hamming, 64
+    )
+
+
 def test_frame_neardup_finds_shared_frames(spark):
     """frame_neardup: two 'videos' sharing identical frames pair at
     hamming 0; per-frame phash matches a direct numpy recomputation."""
@@ -925,7 +1044,7 @@ def test_frame_neardup_finds_shared_frames(spark):
     vids = spark.createDataFrame(rows, "image_id string, bytes binary")
     pairs = {
         (r.id_a, r.id_b, r.hamming)
-        for r in multimodal.frame_neardup(vids, every_n=1, max_hamming=0).collect()
+        for r in frame_neardup(vids, every_n=1, max_hamming=0).collect()
     }
     # vidB frame 0 == vidA frame 2, vidB frame 1 == vidA frame 3
     assert ("vidA#2", "vidB#0", 0) in pairs

@@ -15,13 +15,22 @@ from ukis_pysat_spark.operators import (
     arrowio, change, contour, dedup, histmatch, knn, multimodal, pansharpen,
     polygonize, spatial_join, texture, tiling, transforms,
 )
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, aois_pdf
 
 
 @pytest.fixture(scope="module")
 def images_parquet(spark, tmp_path_factory):
     p = str(tmp_path_factory.mktemp("plans") / "images")
     datagen.gen_images(spark, 24, profile="bench").write.mode("overwrite").parquet(p)
+    return p
+
+
+@pytest.fixture(scope="module")
+def metadata_parquet(spark, images_parquet):
+    """The metadata table, materialized so that datagen's own MapInArrow
+    source does not show up in the stage plans under audit."""
+    p = images_parquet + "_meta_plan"
+    datagen.gen_metadata(spark, 24, profile="bench").write.mode("overwrite").parquet(p)
     return p
 
 
@@ -42,19 +51,20 @@ def test_tile_windows_prunes_bytes(spark, images_parquet):
         assert marker not in plan, marker
 
 
-def test_spatial_join_filter_stage_is_jvm(spark, images_parquet):
+def test_spatial_join_filter_stage_is_jvm(spark, images_parquet, tmp_path):
     """The candidate-generation (cell cover + equi-join + dedup) stage
     must contain no Python nodes; the ONLY Python in the whole join is
     the final exact-refine — a mapInArrow stage since round 5 (raw
     RecordBatch accumulation, no pandas block assembly)."""
     images = spark.read.parquet(images_parquet)
-    aois = datagen.gen_aois(spark, 10)
+    datagen.gen_aois(spark, 10).write.parquet(str(tmp_path / "aois"))
+    aois = spark.read.parquet(str(tmp_path / "aois"))
     plan = _plan(spatial_join.spatial_join(images, aois, res=12))
     # r7 shape: a Union of (JVM-decided pairs) and (hard pairs ->
     # exact refine).  The ONLY MapInArrow in the whole join plan is
-    # that refine; relationally decided pairs never reach Python
-    # (datagen's MapInPandas source nodes for the aoi side are
-    # discounted — they are the test fixture's source, not the join).
+    # that refine; relationally decided pairs never reach Python (the
+    # aoi side is read from Parquet, so datagen's own stage is not in
+    # the plan).
     assert "Union" in plan
     assert plan.count("MapInArrow") == 1  # the hard-pair refine only
     assert "ArrowEvalPython" not in plan  # no pandas-UDF cell cover
@@ -66,7 +76,7 @@ def test_knn_below_crossover_is_broadcast_window_topk(spark, images_parquet):
     before the shuffle, all JVM (the AOIs come from a local table, so
     no fixture Python node either)."""
     images = spark.read.parquet(images_parquet)
-    aois = spark.createDataFrame(datagen.aois_pdf(np.arange(5)))
+    aois = spark.createDataFrame(aois_pdf(np.arange(5)))
     plan = _plan(knn.knn(images, aois, k=3))
     assert "BroadcastNestedLoopJoin" in plan, plan
     assert any(
@@ -76,9 +86,9 @@ def test_knn_below_crossover_is_broadcast_window_topk(spark, images_parquet):
         assert marker not in plan, marker
 
 
-def test_dn2toa_broadcasts_metadata(spark, images_parquet):
+def test_dn2toa_broadcasts_metadata(spark, images_parquet, metadata_parquet):
     images = spark.read.parquet(images_parquet)
-    meta = datagen.gen_metadata(spark, 24, profile="bench")
+    meta = spark.read.parquet(metadata_parquet)
     plan = _plan(transforms.dn2toa_stats(images, meta))
     # round 5: the fused stats stage is Arrow-native like its siblings
     assert plan.count("MapInArrow") == 1, plan
@@ -100,6 +110,44 @@ def test_minhash_candidate_shuffle_is_narrow(spark):
             assert "sh#" not in ln, ln
 
 
+def _eval_types(plan: str) -> list[str]:
+    """The eval type closing each ArrowEvalPython node of `plan`."""
+    return [ln.rsplit(", ", 1)[-1] for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+
+
+def test_sketch_udfs_are_arrow_udfs(spark):
+    """minhash's band buckets, lsh's hyperplane buckets and ivf's list
+    assignment are Arrow UDFs (eval type 250), not pandas UDFs (200);
+    each query plans one on each side of its bucket join."""
+    from ukis_pysat_spark.operators import similarity
+
+    docs = spark.createDataFrame([(i, f"w{i} " * 20) for i in range(20)], ["doc_id", "text"])
+    e = spark.createDataFrame(
+        [(i, [float(i), 1.0, -1.0]) for i in range(20)], "vec_id long, embedding array<float>"
+    )
+    q = e.filter("vec_id < 3").selectExpr("vec_id AS query_id", "embedding AS query_vec")
+    centroids = np.eye(3)
+    for df in (
+        dedup.minhash_lsh_pairs(docs, n=3, n_hashes=32, bands=8),
+        similarity.lsh_ann(e, q, k=2),
+        similarity.ivf_ann(e, q, k=2, n_probe=2, centroids=centroids),
+    ):
+        plan = _plan(df)
+        assert _eval_types(plan) == ["250", "250"], plan
+        assert "MapInPandas" not in plan and "BatchEvalPython" not in plan, plan
+
+
+@pytest.mark.parametrize("gen", [
+    lambda spark: datagen.gen_images(spark, 8, profile="bench"),
+    lambda spark: datagen.gen_aois(spark, 8),
+    lambda spark: datagen.gen_metadata(spark, 8),
+], ids=["gen_images", "gen_aois", "gen_metadata"])
+def test_datagen_generators_are_one_arrow_stage(spark, gen):
+    plan = _plan(gen(spark))
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+
+
 def test_exact_dedup_partial_aggregation(spark):
     docs = spark.createDataFrame([(i, f"t {i % 5}") for i in range(50)], ["doc_id", "text"])
     plan = _plan(dedup.exact_dedup(docs))
@@ -108,18 +156,14 @@ def test_exact_dedup_partial_aggregation(spark):
     assert plan.index("HashAggregate") < plan.index("Exchange")
 
 
-def test_image_emitting_stages_are_map_in_arrow(spark, images_parquet):
+def test_image_emitting_stages_are_map_in_arrow(spark, images_parquet, metadata_parquet):
     """Round 3: the payload-emitting stages (apply_transforms, dn2toa,
     cast_images) must run as a single MapInArrow above the (possibly
     broadcast-joined) scan — no MapInPandas, no extra Python nodes."""
     from ukis_pysat_spark import sinks
 
     images = spark.read.parquet(images_parquet)
-    # materialize metadata so the datagen MapInPandas source doesn't
-    # show up in the stage plan under audit
-    meta_path = images_parquet + "_meta_plan"
-    datagen.gen_metadata(spark, 24, profile="bench").write.mode("overwrite").parquet(meta_path)
-    meta = spark.read.parquet(meta_path)
+    meta = spark.read.parquet(metadata_parquet)
     for df in (
         transforms.apply_transforms(images, [transforms.pixel_math(lambda a: a + 1)]),
         transforms.dn2toa(images, meta),
@@ -398,6 +442,11 @@ _METADATA_DDL = (
     "quantification_value double, radio_add_offset array<double>, "
     "processing_baseline double, thermal_band_idx array<int>"
 )
+_AOI_DDL = (
+    "aoi_id string, ring_lon array<double>, ring_lat array<double>, "
+    "centroid_lon double, centroid_lat double, "
+    "lon_min double, lat_min double, lon_max double, lat_max double"
+)
 
 
 def _grid_stage(images):
@@ -450,12 +499,12 @@ _ARROW_ROW_STAGES = [
 @pytest.mark.parametrize(
     "build, ddl", [s[1:] for s in _ARROW_ROW_STAGES], ids=[s[0] for s in _ARROW_ROW_STAGES]
 )
-def test_arrow_row_stage_schema_and_plan(spark, images_parquet, build, ddl):
+def test_arrow_row_stage_schema_and_plan(spark, images_parquet, metadata_parquet, build, ddl):
     """Every stage on the arrowio emitters derives its Spark schema from
     its Arrow schema: that must equal the DDL it used to declare, and
     the stage must stay ONE MapInArrow with no per-row Python eval."""
     images = spark.read.parquet(images_parquet)
-    df = build(images, datagen.gen_metadata(spark, 24, profile="bench"))
+    df = build(images, spark.read.parquet(metadata_parquet))
     assert df.schema.simpleString() == spark.createDataFrame([], ddl).schema.simpleString()
     plan = _plan(df)
     assert plan.count("MapInArrow") == 1, plan
@@ -465,8 +514,8 @@ def test_arrow_row_stage_schema_and_plan(spark, images_parquet, build, ddl):
 def test_sources_and_sinks_are_one_arrow_stage(spark, images_parquet, tmp_path):
     """Raster ingest is a JVM projection over from_geotiff's stage, and
     each scene parser is one arrowio stage: every one plans exactly one
-    MapInArrow and no MapInPandas.  The GeoTIFF file sink is two (encode,
-    then write)."""
+    MapInArrow and no MapInPandas.  So does the GeoTIFF file sink, which
+    encodes and writes each file in the same row function."""
     from ukis_pysat_spark.sources import geotiff, ingest
 
     (tmp_path / "scene.tif").write_bytes(b"II*\x00")  # planned, never read
@@ -483,8 +532,9 @@ def test_sources_and_sinks_are_one_arrow_stage(spark, images_parquet, tmp_path):
         assert "MapInPandas" not in plan, plan
     images = spark.read.parquet(images_parquet)
     plan = _plan(sinks.write_geotiff_files(images, str(tmp_path / "tifs")))
-    assert plan.count("MapInArrow") == 2 and "MapInPandas" not in plan, plan
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan, plan
     # datagen's Spark schemas, derived from arrowio's Arrow ones, equal
     # the DDL they were written in before
     assert datagen.IMAGES_SCHEMA == spark.createDataFrame([], _IMAGES_DDL).schema
     assert datagen.METADATA_SCHEMA == spark.createDataFrame([], _METADATA_DDL).schema
+    assert datagen.AOI_SCHEMA == spark.createDataFrame([], _AOI_DDL).schema

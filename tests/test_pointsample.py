@@ -11,6 +11,7 @@ import pytest
 from ukis_pysat_spark import codec, datagen
 from ukis_pysat_spark.operators import pointsample
 from ukis_pysat_spark.operators.transforms import _fwd
+from tests.conftest import images_pdf
 
 
 def _points_df(spark, pts):
@@ -54,7 +55,7 @@ def _collect(df):
 
 def test_sample_points_matches_bruteforce(spark):
     imgs = datagen.gen_images(spark, 24, profile="mixed")
-    pdf = datagen.images_pdf(np.arange(24), profile="mixed")
+    pdf = images_pdf(np.arange(24), profile="mixed")
     # points inside footprints (scenes are tiny — uniform points would
     # miss them all): a few interior fractions per scene, plus jittered
     # near-misses just outside
@@ -123,15 +124,16 @@ def test_sample_points_projected_crs(spark):
     }
 
 
-def test_sample_points_single_arrow_stage(spark):
-    imgs = datagen.gen_images(spark, 4, profile="mixed")
+def test_sample_points_single_arrow_stage(spark, tmp_path):
+    datagen.gen_images(spark, 4, profile="mixed").write.parquet(str(tmp_path / "imgs"))
+    imgs = spark.read.parquet(str(tmp_path / "imgs"))
     pts = _points_df(spark, [("p0", 0.0, 45.0)])
     plan = (
         pointsample.sample_points(imgs, pts)
         ._jdf.queryExecution().executedPlan().toString()
     )
-    # datagen contributes its MapInPandas source; the operator itself
-    # must add exactly two MapInArrow stages (PIP refine + sampler) and
+    # the images are read from Parquet, so the operator itself must
+    # plan exactly two MapInArrow stages (PIP refine + sampler) and
     # no pandas stage of its own
     assert plan.count("MapInArrow") == 2
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan

@@ -5,6 +5,7 @@ import pytest
 
 from ukis_pysat_spark import codec, datagen
 from ukis_pysat_spark.operators import polygonize, transforms
+from tests.conftest import images_pdf
 
 
 def _bfs_regions(plane, nodata):
@@ -70,7 +71,7 @@ def test_polygonize_matches_bfs(spark):
         )
         for r in rows
     }
-    pdf = datagen.images_pdf(np.arange(10), profile="mixed")
+    pdf = images_pdf(np.arange(10), profile="mixed")
     n_regions = 0
     for _, img in pdf.iterrows():
         plane = np.floor(

@@ -12,6 +12,7 @@ import pytest
 from ukis_pysat_spark import codec, datagen
 from ukis_pysat_spark.operators import rasterize, zonal
 from ukis_pysat_spark.operators.geometry import points_in_polygon
+from tests.conftest import images_pdf
 
 
 def _np_burn(w, h, transform, rows, dtype="int32", background=0.0):
@@ -78,7 +79,7 @@ def test_rasterize_matches_numpy_bruteforce(spark):
     assert len(out) > 0
 
     got = {r["image_id"]: r for r in out}
-    pdf = datagen.images_pdf(np.arange(48), profile="mixed")
+    pdf = images_pdf(np.arange(48), profile="mixed")
     n_checked = 0
     for _, img in pdf.iterrows():
         exp = _np_burn(img["w"], img["h"], img["transform"], rows)

@@ -10,6 +10,7 @@ import pytest
 from ukis_pysat_spark import datagen
 from ukis_pysat_spark.operators import geometry, knn, spatial_join
 from tests import geometry_oracle as oracle
+from tests.conftest import aois_pdf
 
 
 def _pairs(df):
@@ -200,13 +201,13 @@ def test_points_in_aois_matches_numpy(spark):
             "lat": 48.0 + 6.0 * rng.random(n),
         }
     )
-    aois_pdf = datagen.aois_pdf(np.arange(30), seed=77)
+    aois = aois_pdf(np.arange(30), seed=77)
     pts_df = spark.createDataFrame(pts)
-    aois_df = spark.createDataFrame(aois_pdf)
+    aois_df = spark.createDataFrame(aois)
     got = set((r.point_id, r.aoi_id) for r in
               spatial_join.points_in_aois(pts_df, aois_df).collect())
     exp = set()
-    for a in aois_pdf.itertuples(index=False):
+    for a in aois.itertuples(index=False):
         inside = geometry.points_in_polygon(
             pts["lon"].values, pts["lat"].values,
             np.asarray(a.ring_lon), np.asarray(a.ring_lat))

@@ -9,6 +9,25 @@ from ukis_pysat_spark.plans.checkpoint import CheckpointedRun
 from ukis_pysat_spark.streaming import ingest
 
 
+def run_stream_to_checkpointed_sink(stream_df, ckpt, stage, key_col, checkpoint_dir):
+    """Drive a streaming DataFrame into CheckpointedRun batch commits
+    through foreachBatch: the stream checkpoint replays the same batch
+    ids on restart and commit_batch overwrites its batch directory, so
+    the commits are idempotent."""
+
+    def sink(batch_df, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            ckpt.commit_batch(batch_df, stage, key_col, batch_id=f"s{batch_id:08d}")
+
+    return (
+        stream_df.writeStream.foreachBatch(sink)
+        .outputMode("update")  # aggregations emit changed groups per microbatch
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def test_stream_tiles_to_checkpointed_sink(spark, tmp_path):
     src = str(tmp_path / "images_stream")
     datagen.gen_images(spark, 24, profile="bench").write.mode("overwrite").parquet(src)
@@ -18,7 +37,7 @@ def test_stream_tiles_to_checkpointed_sink(spark, tmp_path):
     counts = ingest.stream_tile_counts(stream, 64, 64, 0)
 
     ckpt = CheckpointedRun(spark, str(tmp_path / "sink"), run_id="s1")
-    q = ingest.run_stream_to_checkpointed_sink(
+    q = run_stream_to_checkpointed_sink(
         counts, ckpt, "tile_counts", "image_id", str(tmp_path / "ckpt")
     )
     q.awaitTermination(120)
@@ -32,7 +51,7 @@ def test_stream_tiles_to_checkpointed_sink(spark, tmp_path):
 
     # restart with the same checkpoint: no new data -> no new commits
     n_before = out.count()
-    q2 = ingest.run_stream_to_checkpointed_sink(
+    q2 = run_stream_to_checkpointed_sink(
         ingest.stream_tile_counts(ingest.stream_images(spark, src), 64, 64, 0),
         ckpt, "tile_counts", "image_id", str(tmp_path / "ckpt"),
     )

@@ -10,6 +10,7 @@ import pyspark.sql.functions as F
 
 from ukis_pysat_spark import codec, datagen
 from ukis_pysat_spark.operators import transforms
+from tests.conftest import psnr
 
 MASK_BOX = (11.9027457562112939, 51.4664152338322580, 11.9477435281016131, 51.5009522690838750)
 # reference golden bounds after mask (test_raster.py:178-186)
@@ -122,7 +123,7 @@ def test_dn2toa_psnr_through_lossy_codec(spark):
             m.k1, m.k2, m.thermal_band_idx, m.quantification_value,
             m.radio_add_offset, m.processing_baseline,
         )
-        assert codec.psnr(exp, got) >= 40.0  # BASELINE.json:15 lossy gate
+        assert psnr(exp, got) >= 40.0  # BASELINE.json:15 lossy gate
 
 
 def test_warp_crs_and_resolution(spark):
@@ -279,7 +280,7 @@ def test_utm_math_self_consistency():
 
 
 def test_write_images_min_dtype_roundtrip(spark, tmp_path):
-    """S4 sink parity: dtype='min' picks the smallest representing dtype
+    """S4 sink parity (cast_images + a Parquet write): dtype='min' picks the smallest representing dtype
     (reference raster.py:555-556) and the payload roundtrips losslessly."""
     from ukis_pysat_spark import sinks
 
@@ -289,7 +290,7 @@ def test_write_images_min_dtype_roundtrip(spark, tmp_path):
         [transforms.pixel_math(lambda a: (a % 200).astype(np.float32))],
     )
     dest = str(tmp_path / "sink")
-    sinks.write_images(imgs, dest, dtype="min", out_fmt="rawz")
+    sinks.cast_images(imgs, dtype="min", out_fmt="rawz").write.parquet(dest)
     back = spark.read.parquet(dest).collect()[0]
     assert back.dtype == "uint8"
     assert back.fmt == "rawz"

@@ -15,6 +15,7 @@ from ukis_pysat_spark import codec, datagen
 from ukis_pysat_spark.operators import zonal
 from ukis_pysat_spark.operators.geometry import points_in_polygon
 from ukis_pysat_spark.operators.transforms import _fwd, _inv
+from tests.conftest import images_pdf
 
 
 def _np_zonal(arr, transform, nodata, ring_x, ring_y):
@@ -100,7 +101,7 @@ def test_zonal_matches_numpy_bruteforce(spark):
 
     # independent expectation from the generator's own pixel arrays
     exp = {}
-    pdf = datagen.images_pdf(np.arange(24), profile="mixed")
+    pdf = images_pdf(np.arange(24), profile="mixed")
     for _, img in pdf.iterrows():
         arr = codec.decode(img["bytes"]).astype(np.float64)
         for aid, rx, ry in rows:
@@ -232,7 +233,7 @@ def test_zonal_concave_and_star_rings(spark):
     rows = [concave, star]
     got = _collect_zonal(zonal.zonal_stats(imgs, _aoi_df(spark, rows), res=6))
     exp = {}
-    pdf = datagen.images_pdf(np.arange(6), profile="mixed")
+    pdf = images_pdf(np.arange(6), profile="mixed")
     for _, img in pdf.iterrows():
         arr = codec.decode(img["bytes"]).astype(np.float64)
         for aid, rx, ry in rows:
@@ -442,7 +443,7 @@ def test_zonal_mode_matches_bruteforce(spark):
         for r in zonal.zonal_mode(imgs, aois, res=6).collect()
     }
     exp = {}
-    pdf = datagen.images_pdf(np.arange(12), profile="mixed")
+    pdf = images_pdf(np.arange(12), profile="mixed")
     for _, img in pdf.iterrows():
         arr = codec.decode(img["bytes"]).astype(np.float64)
         nb, h, w = arr.shape

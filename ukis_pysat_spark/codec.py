@@ -211,12 +211,6 @@ def _decode_first(payload) -> np.ndarray:
     raise ValueError(f"unknown fmt code {fmt_code}")
 
 
-def peek_shape(payload: bytes) -> tuple[int, int, int]:
-    """(bands, rows, cols) without decoding the body."""
-    _, _, _, _, _, bands, _, rows, cols = _HEADER.unpack_from(bytes(payload[:HEADER_SIZE]), 0)
-    return bands, rows, cols
-
-
 def valid_mask(arr: np.ndarray, nodata: float | None) -> np.ndarray:
     """Boolean mask of the pixels of `arr` that are not `nodata` (all of
     them when nodata is None); a NaN nodata masks the NaN pixels, which
@@ -267,19 +261,3 @@ def minimum_dtype(arr: np.ndarray) -> str:
     if -3.4028235e38 <= lo and hi <= 3.4028235e38:
         return "float32"
     return "float64"
-
-
-def psnr(reference: np.ndarray, test: np.ndarray) -> float:
-    """Peak signal-to-noise ratio in dB (inf when identical).
-
-    Peak = dynamic range of the reference array, the convention used by
-    the pixel-fidelity gate (PSNR >= 40 dB for lossy codecs).
-    """
-    ref = reference.astype(np.float64)
-    mse = float(np.mean((ref - test.astype(np.float64)) ** 2))
-    if mse == 0.0:
-        return float("inf")
-    peak = float(ref.max() - ref.min())
-    if peak <= 0:
-        peak = 1.0
-    return 10.0 * np.log10(peak * peak / mse)

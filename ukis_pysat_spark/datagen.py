@@ -3,8 +3,10 @@
 Everything is a pure function of (seed, id) — independent of partitioning,
 task retries, and cluster size — so any row can be recomputed by an oracle
 and the same tables regenerate bit-identically at any scale.  Generation is
-*distributed*: ``spark.range(n)`` -> ``mapInPandas`` so a 10^6-image (or
-10^12-image) table is produced by executors, never the driver.
+*distributed*: ``spark.range(n)`` -> one ``arrowio.map_rows`` stage (one
+``mapInArrow``) running a per-id row function (``image_row``,
+``aoi_row``, ``metadata_row``), so a 10^6-image (or 10^12-image) table
+is produced by executors, never the driver.
 
 Schema (input_hint, BASELINE.json:15):
     image_id string, bytes binary, w int, h int, fmt string,
@@ -21,13 +23,10 @@ exactly (see /root/reference/tests/test_raster.py:362-375).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import from_arrow_schema
-import pyspark.sql.functions as F
 
 from ukis_pysat_spark import codec
 from ukis_pysat_spark.operators import arrowio
@@ -44,11 +43,13 @@ REF_SHAPE = (1, 764, 679)  # dummy.tif (bands, rows, cols)
 IMAGES_SCHEMA = from_arrow_schema(arrowio.IMAGES_SCHEMA)
 METADATA_SCHEMA = from_arrow_schema(arrowio.METADATA_SCHEMA)
 
-AOI_SCHEMA = (
-    "aoi_id string, ring_lon array<double>, ring_lat array<double>, "
-    "centroid_lon double, centroid_lat double, "
-    "lon_min double, lat_min double, lon_max double, lat_max double"
+_AOIS = pa.schema(
+    [("aoi_id", pa.string()), ("ring_lon", pa.list_(pa.float64())),
+     ("ring_lat", pa.list_(pa.float64()))]
+    + [(n, pa.float64()) for n in (
+        "centroid_lon", "centroid_lat", "lon_min", "lat_min", "lon_max", "lat_max")]
 )
+AOI_SCHEMA = from_arrow_schema(_AOIS)
 
 # Shape profiles: (bands, rows, cols, dtype) pools the generator cycles
 # through.  'golden' row 0 is the dummy.tif analog used by golden tests.
@@ -137,53 +138,55 @@ def _center_for(idx: int, seed: int, skew_frac: float) -> tuple[float, float]:
     return float(lon), float(lat)
 
 
-def images_pdf(
-    ids: np.ndarray,
+def image_row(
+    idx: int,
     seed: int = 42,
     profile: str = "mixed",
     fmt: str = "raw",
     skew_frac: float = 0.0,
-) -> pd.DataFrame:
-    """Generate image rows for the given ids (pure; used inside
-    mapInPandas on executors and directly by tests/oracles)."""
-    shapes = _PROFILES[profile]
-    noise = profile != "oracle"
-    rows = []
-    for idx in np.asarray(ids, dtype=np.int64):
-        idx = int(idx)
-        bands, h_, w_, dtype = shapes[idx % len(shapes)]
-        arr = pixels_for(idx, bands, h_, w_, dtype, seed, noise=noise)
-        if idx == 0:
-            lon0, lat0 = REF_ORIGIN
-            transform = [REF_PIXEL_X, 0.0, lon0, 0.0, REF_PIXEL_Y, lat0]
-        else:
-            clon, clat = _center_for(idx, seed, skew_frac)
-            lon0, lat0 = clon - w_ * PIXEL_DEG / 2.0, clat + h_ * PIXEL_DEG / 2.0
-            transform = [PIXEL_DEG, 0.0, lon0, 0.0, -PIXEL_DEG, lat0]
-        lon1 = lon0 + w_ * PIXEL_DEG
-        lat1 = lat0 - h_ * PIXEL_DEG
-        platform = _PLATFORMS[idx % len(_PLATFORMS)]
-        payload = codec.encode(arr, fmt)
-        rows.append(
-            {
-                "image_id": f"img{idx:08d}",
-                "bytes": payload,
-                "w": w_,
-                "h": h_,
-                "fmt": fmt,
-                "caption": f"scene {idx} over ({lon0:.3f},{lat0:.3f}) platform={platform}",
-                "phash": phash64(arr),
-                "bands": bands,
-                "dtype": dtype,
-                "crs": "EPSG:4326",
-                "transform": transform,
-                "nodata": 0.0,
-                "footprint_lon": [lon0, lon1, lon1, lon0, lon0],
-                "footprint_lat": [lat0, lat0, lat1, lat1, lat0],
-                "platform": platform,
-            }
-        )
-    return pd.DataFrame(rows)
+) -> dict:
+    """Image `idx`'s row, as {column: value} (pure; gen_images runs it
+    per id on executors, and tests/oracles call it directly)."""
+    bands, h_, w_, dtype = _PROFILES[profile][idx % len(_PROFILES[profile])]
+    arr = pixels_for(idx, bands, h_, w_, dtype, seed, noise=profile != "oracle")
+    if idx == 0:
+        lon0, lat0 = REF_ORIGIN
+        transform = [REF_PIXEL_X, 0.0, lon0, 0.0, REF_PIXEL_Y, lat0]
+    else:
+        clon, clat = _center_for(idx, seed, skew_frac)
+        lon0, lat0 = clon - w_ * PIXEL_DEG / 2.0, clat + h_ * PIXEL_DEG / 2.0
+        transform = [PIXEL_DEG, 0.0, lon0, 0.0, -PIXEL_DEG, lat0]
+    lon1 = lon0 + w_ * PIXEL_DEG
+    lat1 = lat0 - h_ * PIXEL_DEG
+    platform = _PLATFORMS[idx % len(_PLATFORMS)]
+    return {
+        "image_id": f"img{idx:08d}",
+        "bytes": codec.encode(arr, fmt),
+        "w": w_,
+        "h": h_,
+        "fmt": fmt,
+        "caption": f"scene {idx} over ({lon0:.3f},{lat0:.3f}) platform={platform}",
+        "phash": phash64(arr),
+        "bands": bands,
+        "dtype": dtype,
+        "crs": "EPSG:4326",
+        "transform": transform,
+        "nodata": 0.0,
+        "footprint_lon": [lon0, lon1, lon1, lon0, lon0],
+        "footprint_lat": [lat0, lat0, lat1, lat1, lat0],
+        "platform": platform,
+    }
+
+
+def _generate(spark: SparkSession, n: int, parts: int, row_fn, schema: pa.Schema) -> DataFrame:
+    """`spark.range(n)` -> one `row_fn(id)` row per id, in one
+    mapInArrow (arrowio.map_rows)."""
+    return arrowio.map_rows(
+        spark.range(0, n, numPartitions=parts),
+        ["id"],
+        lambda row: {k: [v] for k, v in row_fn(row["id"]).items()},
+        schema,
+    )
 
 
 def gen_images(
@@ -197,134 +200,104 @@ def gen_images(
 ) -> DataFrame:
     """Distributed deterministic images table of n rows."""
     parts = partitions or max(8, min(n // 64 + 1, 512))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield images_pdf(pdf["id"].values, seed, profile, fmt, skew_frac)
-
-    return (
-        spark.range(0, n, numPartitions=parts)
-        .mapInPandas(gen, schema=IMAGES_SCHEMA)
+    return _generate(
+        spark, n, parts,
+        lambda idx: image_row(idx, seed, profile, fmt, skew_frac),
+        arrowio.IMAGES_SCHEMA,
     )
 
 
-def aois_pdf(ids: np.ndarray, seed: int = 43, skew_frac: float = 0.0) -> pd.DataFrame:
-    """AOI polygons: alternating axis-aligned boxes and convex quads;
-    a skew_frac share concentrates on the hotspot."""
-    rows = []
-    for idx in np.asarray(ids, dtype=np.int64):
-        idx = int(idx)
-        rng = np.random.Generator(np.random.Philox(key=np.uint64(seed * 99_991 + idx)))
-        if skew_frac > 0.0 and rng.random() < skew_frac:
-            clon, clat = 11.95, 51.45
-        else:
-            clon = -20.0 + 60.0 * rng.random()
-            clat = 30.0 + 30.0 * rng.random()
-        half = 0.02 + 0.2 * rng.random()
-        if idx % 2 == 0:  # box
-            lons = [clon - half, clon + half, clon + half, clon - half, clon - half]
-            lats = [clat - half, clat - half, clat + half, clat + half, clat - half]
-        else:  # convex quad (jittered diamond)
-            j = 0.3 + 0.7 * rng.random(4)
-            lons = [clon, clon + half * j[1], clon, clon - half * j[3], clon]
-            lats = [clat - half * j[0], clat, clat + half * j[2], clat, clat - half * j[0]]
-        rows.append(
-            {
-                "aoi_id": f"aoi{idx:06d}",
-                "ring_lon": [float(v) for v in lons],
-                "ring_lat": [float(v) for v in lats],
-                "centroid_lon": float(np.mean(lons[:-1])),
-                "centroid_lat": float(np.mean(lats[:-1])),
-                "lon_min": float(min(lons)),
-                "lat_min": float(min(lats)),
-                "lon_max": float(max(lons)),
-                "lat_max": float(max(lats)),
-            }
-        )
-    return pd.DataFrame(rows)
+def aoi_row(idx: int, seed: int = 43, skew_frac: float = 0.0) -> dict:
+    """AOI `idx`'s polygon row: even ids are axis-aligned boxes, odd ids
+    convex quads; a skew_frac share concentrates on the hotspot."""
+    rng = np.random.Generator(np.random.Philox(key=np.uint64(seed * 99_991 + idx)))
+    if skew_frac > 0.0 and rng.random() < skew_frac:
+        clon, clat = 11.95, 51.45
+    else:
+        clon = -20.0 + 60.0 * rng.random()
+        clat = 30.0 + 30.0 * rng.random()
+    half = 0.02 + 0.2 * rng.random()
+    if idx % 2 == 0:  # box
+        lons = [clon - half, clon + half, clon + half, clon - half, clon - half]
+        lats = [clat - half, clat - half, clat + half, clat + half, clat - half]
+    else:  # convex quad (jittered diamond)
+        j = 0.3 + 0.7 * rng.random(4)
+        lons = [clon, clon + half * j[1], clon, clon - half * j[3], clon]
+        lats = [clat - half * j[0], clat, clat + half * j[2], clat, clat - half * j[0]]
+    return {
+        "aoi_id": f"aoi{idx:06d}",
+        "ring_lon": [float(v) for v in lons],
+        "ring_lat": [float(v) for v in lats],
+        "centroid_lon": float(np.mean(lons[:-1])),
+        "centroid_lat": float(np.mean(lats[:-1])),
+        "lon_min": float(min(lons)),
+        "lat_min": float(min(lats)),
+        "lon_max": float(max(lons)),
+        "lat_max": float(max(lats)),
+    }
 
 
 def gen_aois(
     spark: SparkSession, n: int, seed: int = 43, skew_frac: float = 0.0
 ) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield aois_pdf(pdf["id"].values, seed, skew_frac)
-
     parts = max(4, min(n // 128 + 1, 64))
-    return spark.range(0, n, numPartitions=parts).mapInPandas(gen, schema=AOI_SCHEMA)
+    return _generate(spark, n, parts, lambda idx: aoi_row(idx, seed, skew_frac), _AOIS)
 
 
-def metadata_pdf(ids: np.ndarray, seed: int = 42, profile: str = "mixed") -> pd.DataFrame:
-    """Per-image dn2toa rescale factors (the broadcast side of the TOA
-    transform; semantics mirror MTL/MTD contents, raster.py:276-422).
+def metadata_row(idx: int, seed: int = 42, profile: str = "mixed") -> dict:
+    """Image `idx`'s dn2toa rescale factors (the broadcast side of the
+    TOA transform; semantics mirror MTL/MTD contents, raster.py:276-422).
 
     The 'oracle' profile replaces the seeded factors with CLOSED-FORM
     functions of (idx, band) — plain double arithmetic any SQL engine
     reproduces bit-exactly — so the driver's DuckDB oracle can compute
     the expected TOA statistics from scratch."""
     shapes = _PROFILES[profile]
-    closed_form = profile == "oracle"
-    rows = []
-    for idx in np.asarray(ids, dtype=np.int64):
-        idx = int(idx)
-        bands = shapes[idx % len(shapes)][0]
-        rng = np.random.Generator(np.random.Philox(key=np.uint64(seed * 31_337 + idx)))
-        platform = _PLATFORMS[idx % len(_PLATFORMS)]
-        nb = bands
-        thermal = []
-        if platform == "Landsat8":
-            thermal = [i for i in range(nb) if i >= nb - 2] if nb >= 3 else []
-        elif platform in ("Landsat5", "Landsat7"):
-            thermal = [nb // 2] if nb >= 3 else []
-        if closed_form:
-            rows.append(
-                {
-                    "image_id": f"img{idx:08d}",
-                    "platform": platform,
-                    "sun_elevation": 25.0 + (idx * 13 % 40),
-                    "mult_reflectance": [2e-5 * (1.0 + 0.01 * i + 0.001 * (idx % 5)) for i in range(nb)],
-                    "add_reflectance": [-0.1 * (1.0 + 0.005 * i) for i in range(nb)],
-                    "mult_radiance": [3e-4 * (1.0 + 0.01 * i) for i in range(nb)],
-                    "add_radiance": [0.1 * (1.0 + 0.01 * i) for i in range(nb)],
-                    "k1": [774.0 + i for i in range(nb)],
-                    "k2": [1321.0 + i for i in range(nb)],
-                    "quantification_value": 10000.0,
-                    "radio_add_offset": [-1000.0 if (idx + i) % 2 == 0 else 0.0 for i in range(nb)],
-                    "processing_baseline": 4.0 if idx % 8 < 4 else 2.09,
-                    "thermal_band_idx": [int(t) for t in thermal],
-                }
-            )
-            continue
-        rows.append(
-            {
-                "image_id": f"img{idx:08d}",
-                "platform": platform,
-                "sun_elevation": 25.0 + 40.0 * rng.random(),
-                "mult_reflectance": list(2e-5 * (0.9 + 0.2 * rng.random(nb))),
-                "add_reflectance": list(-0.1 * (0.9 + 0.2 * rng.random(nb))),
-                "mult_radiance": list(3e-4 * (0.9 + 0.2 * rng.random(nb))),
-                "add_radiance": list(0.1 * (0.9 + 0.2 * rng.random(nb))),
-                "k1": list(774.0 + 10.0 * rng.random(nb)),
-                "k2": list(1321.0 + 10.0 * rng.random(nb)),
-                "quantification_value": 10000.0,
-                "radio_add_offset": list(-1000.0 * rng.integers(0, 2, nb).astype(float)),
-                "processing_baseline": 4.0 if idx % 2 == 0 else 2.09,
-                "thermal_band_idx": [int(t) for t in thermal],
-            }
-        )
-    return pd.DataFrame(rows)
+    nb = shapes[idx % len(shapes)][0]
+    rng = np.random.Generator(np.random.Philox(key=np.uint64(seed * 31_337 + idx)))
+    platform = _PLATFORMS[idx % len(_PLATFORMS)]
+    thermal = []
+    if platform == "Landsat8":
+        thermal = [i for i in range(nb) if i >= nb - 2] if nb >= 3 else []
+    elif platform in ("Landsat5", "Landsat7"):
+        thermal = [nb // 2] if nb >= 3 else []
+    if profile == "oracle":
+        return {
+            "image_id": f"img{idx:08d}",
+            "platform": platform,
+            "sun_elevation": 25.0 + (idx * 13 % 40),
+            "mult_reflectance": [2e-5 * (1.0 + 0.01 * i + 0.001 * (idx % 5)) for i in range(nb)],
+            "add_reflectance": [-0.1 * (1.0 + 0.005 * i) for i in range(nb)],
+            "mult_radiance": [3e-4 * (1.0 + 0.01 * i) for i in range(nb)],
+            "add_radiance": [0.1 * (1.0 + 0.01 * i) for i in range(nb)],
+            "k1": [774.0 + i for i in range(nb)],
+            "k2": [1321.0 + i for i in range(nb)],
+            "quantification_value": 10000.0,
+            "radio_add_offset": [-1000.0 if (idx + i) % 2 == 0 else 0.0 for i in range(nb)],
+            "processing_baseline": 4.0 if idx % 8 < 4 else 2.09,
+            "thermal_band_idx": thermal,
+        }
+    return {
+        "image_id": f"img{idx:08d}",
+        "platform": platform,
+        "sun_elevation": 25.0 + 40.0 * rng.random(),
+        "mult_reflectance": 2e-5 * (0.9 + 0.2 * rng.random(nb)),
+        "add_reflectance": -0.1 * (0.9 + 0.2 * rng.random(nb)),
+        "mult_radiance": 3e-4 * (0.9 + 0.2 * rng.random(nb)),
+        "add_radiance": 0.1 * (0.9 + 0.2 * rng.random(nb)),
+        "k1": 774.0 + 10.0 * rng.random(nb),
+        "k2": 1321.0 + 10.0 * rng.random(nb),
+        "quantification_value": 10000.0,
+        "radio_add_offset": -1000.0 * rng.integers(0, 2, nb).astype(float),
+        "processing_baseline": 4.0 if idx % 2 == 0 else 2.09,
+        "thermal_band_idx": thermal,
+    }
 
 
 def gen_metadata(
     spark: SparkSession, n: int, seed: int = 42, profile: str = "mixed"
 ) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield metadata_pdf(pdf["id"].values, seed, profile)
-
     parts = max(4, min(n // 128 + 1, 64))
-    return spark.range(0, n, numPartitions=parts).mapInPandas(gen, schema=METADATA_SCHEMA)
+    return _generate(
+        spark, n, parts, lambda idx: metadata_row(idx, seed, profile), arrowio.METADATA_SCHEMA
+    )

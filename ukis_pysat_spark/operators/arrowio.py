@@ -1,9 +1,13 @@
 """The JVM<->Python Arrow boundary of every per-image stage, and of the
-sources and sinks: raster blobs become images rows in
+sources, sinks and generators: raster blobs become images rows in
 ``sinks.from_geotiff`` (the stage under ``sources/geotiff.ingest_geotiffs``),
 ``sources/ingest``'s scene listing and manifest, MTL/MTD and annotation
 parsers are ``map_rows`` stages, and so is the GeoTIFF file sink
-(``sinks.write_geotiff_files``).
+(``sinks.write_geotiff_files``), which encodes and writes each file in
+one row function.  ``datagen``'s generators are ``map_rows`` stages over
+``spark.range``.  The batch engine's only other Python nodes are the
+Arrow UDFs of the sketch joins (dedup's MinHash bands, similarity's LSH
+and IVF buckets).
 
 A stage hands its input columns, a per-row function and its output
 ``pa.schema`` to one of two emitters; the Spark schema is derived from

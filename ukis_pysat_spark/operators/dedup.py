@@ -9,7 +9,7 @@ Five strategies over ``documents`` / ``embeddings``:
                         count (|A∩B|) and |A|+|B| — the inclusion-
                         exclusion trick keeps everything relational.
 - minhash_lsh_pairs     MinHash signatures (vectorized numpy, one
-                        pandas UDF) banded into LSH buckets; candidate
+                        Arrow UDF) banded into LSH buckets; candidate
                         pairs from a bucket self-join, verified by exact
                         Jaccard.  The scale path: no quadratic work.
 - simhash_pairs         64-bit SimHash; near-dups = equal bucket on
@@ -24,8 +24,8 @@ All pair outputs are canonicalized (id_a < id_b) and deterministic.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.pandas.types import from_arrow_schema
 import pyspark.sql.functions as F
@@ -266,25 +266,52 @@ def ngram_jaccard_pairs(
 # --- MinHash + LSH -----------------------------------------------------------
 
 _MERSENNE = (1 << 61) - 1
+_MINHASH_CHUNK = 1 << 14  # shingles hashed at once: 16 MB at 128 hashes
 
 
-def _minhash_matrix(hash_lists: pd.Series, n_hashes: int, seed: int) -> np.ndarray:
+def _minhash_matrix(hash_lists: pa.ListArray, n_hashes: int, seed: int) -> np.ndarray:
     """(rows, n_hashes) MinHash signatures from PRE-HASHED shingles
-    (int64 arrays; the string->int64 hashing runs JVM-side via
-    xxhash64 so Python only does vectorized integer math)."""
+    (an Arrow list<int64> array; the string->int64 hashing runs JVM-side
+    via xxhash64 so Python only does vectorized integer math).  A null
+    or empty shingle list signs as all zeros."""
     rng = np.random.Generator(np.random.Philox(key=np.uint64(seed)))
     a = rng.integers(1, _MERSENNE, size=n_hashes, dtype=np.int64)
     b = rng.integers(0, _MERSENNE, size=n_hashes, dtype=np.int64)
-    out = np.empty((len(hash_lists), n_hashes), dtype=np.int64)
-    for i, hs in enumerate(hash_lists):
-        if hs is None or len(hs) == 0:
-            out[i] = 0
-            continue
-        hs = np.asarray(hs, dtype=np.int64) & 0x7FFFFFFFFFFFFFFF
-        # (n_shingles, n_hashes) universal hashing mod Mersenne prime
-        m = (hs[:, None] * a[None, :] + b[None, :]) % _MERSENNE
-        out[i] = m.min(axis=0)
+    lens = pc.list_value_length(hash_lists).fill_null(0).to_numpy()
+    hs = hash_lists.flatten().to_numpy() & 0x7FFFFFFFFFFFFFFF
+    ends = np.cumsum(lens)
+    out = np.zeros((len(lens), n_hashes), dtype=np.int64)
+    r0 = 0
+    while r0 < len(lens):  # row chunks of ~_MINHASH_CHUNK shingles bound memory
+        v0 = ends[r0] - lens[r0]
+        r1 = max(int(np.searchsorted(ends, v0 + _MINHASH_CHUNK, "right")), r0 + 1)
+        rows = np.flatnonzero(lens[r0:r1]) + r0
+        if len(rows):
+            # (n_shingles, n_hashes) universal hashing mod Mersenne prime
+            m = (hs[v0 : ends[r1 - 1], None] * a[None, :] + b[None, :]) % _MERSENNE
+            out[rows] = np.minimum.reduceat(m, ends[rows] - lens[rows] - v0, axis=0)
+        r0 = r1
     return out
+
+
+def _band_buckets_udf(n_hashes: int, bands: int, seed: int):
+    """list<int64> shingle hashes -> list<int64> of `bands` LSH bucket
+    ids (FNV over each band's MinHash rows, offset per band)."""
+    rows_per_band = n_hashes // bands
+
+    @F.arrow_udf(ArrayType(LongType()))
+    def band_buckets(sh: pa.Array) -> pa.Array:
+        sig = _minhash_matrix(sh, n_hashes, seed).reshape(len(sh), bands, rows_per_band)
+        # bucket = FNV over the band's signature values
+        buckets = np.empty((len(sh), bands), dtype=np.int64)
+        for bi in range(bands):
+            acc = np.full(len(sh), 0xCBF29CE484222325, dtype=np.uint64)
+            for ri in range(rows_per_band):
+                acc = (acc ^ sig[:, bi, ri].astype(np.uint64)) * np.uint64(0x100000001B3)
+            buckets[:, bi] = (acc >> np.uint64(1)).astype(np.int64) + bi * (1 << 40)
+        return _fixed_lists(buckets)
+
+    return band_buckets
 
 
 def minhash_lsh_pairs(
@@ -308,21 +335,6 @@ def minhash_lsh_pairs(
     the exact verify stage intersects hashed shingle sets (64-bit, so
     collision-induced error is negligible and deterministic).
     """
-    rows_per_band = n_hashes // bands
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def band_buckets(sh: pd.Series) -> pd.Series:
-        sig = _minhash_matrix(sh, n_hashes, seed)
-        sig = sig.reshape(len(sh), bands, rows_per_band)
-        # bucket = FNV over the band's signature values
-        buckets = np.empty((len(sh), bands), dtype=np.int64)
-        for bi in range(bands):
-            acc = np.full(len(sh), 0xCBF29CE484222325, dtype=np.uint64)
-            for ri in range(rows_per_band):
-                acc = (acc ^ sig[:, bi, ri].astype(np.uint64)) * np.uint64(0x100000001B3)
-            buckets[:, bi] = (acc >> np.uint64(1)).astype(np.int64) + bi * (1 << 40)
-        return pd.Series(list(buckets))
-
     # shingle-less docs (fewer than n words) have no defined Jaccard;
     # the WORD-COUNT form of the gate is cheap enough to be pushed to
     # the scan side (a size(sh)>0 filter would drag the whole shingle
@@ -336,6 +348,8 @@ def minhash_lsh_pairs(
     # AFTER the candidate pairs are distinct (the ids-only candidate
     # pattern of spatial_join) — at web scale the bucket join's shuffle
     # payload is 16 bytes/row instead of the full shingle set
+    band_buckets = _band_buckets_udf(n_hashes, bands, seed)
+    # the self-join below evaluates band_buckets once on each side
     bucketed = docs_sh.select("doc_id", F.explode(band_buckets("sh")).alias("bucket"))
     a = bucketed.alias("a")
     b = bucketed.alias("b")
@@ -786,15 +800,23 @@ def cosine_col(a: Column, b: Column) -> Column:
 _COSINE_PAIRS = pa.schema([("id_a", pa.int64()), ("id_b", pa.int64()), ("cosine", pa.float64())])
 
 
-def _block_matrix(col: pa.ChunkedArray) -> np.ndarray:
+def _block_matrix(col: pa.Array | pa.ChunkedArray) -> np.ndarray:
     """A list<float> column as a (rows, dim) float64 matrix: one reshape
-    of its values buffer.  Null vectors or vectors of unequal length
-    raise, since the reshape would misalign them."""
-    arr = col.combine_chunks()
+    of its values.  Null vectors or vectors of unequal length raise,
+    since the reshape would misalign them."""
+    arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
     lens = np.diff(arr.offsets.to_numpy())
-    if arr.null_count or lens.min() != lens.max():
-        raise ValueError("embedding_neardup_blocked needs non-null vectors of one length")
-    return arr.flatten().to_numpy(zero_copy_only=False).astype(np.float64).reshape(len(arr), -1)
+    if arr.null_count or (len(lens) and lens.min() != lens.max()):
+        raise ValueError("needs non-null vectors of one length")
+    dim = int(lens[0]) if len(lens) else 0
+    return arr.flatten().to_numpy(zero_copy_only=False).astype(np.float64).reshape(len(arr), dim)
+
+
+def _fixed_lists(v: np.ndarray) -> pa.ListArray:
+    """A (rows, width) int64 matrix as a list<int64> array, one row per
+    list: an offsets array over the flat values, no per-row lists."""
+    offsets = np.arange(v.shape[0] + 1, dtype=np.int32) * np.int32(v.shape[1])
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(v.ravel(), pa.int64()))
 
 
 def embedding_neardup_blocked(

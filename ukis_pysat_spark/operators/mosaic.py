@@ -285,6 +285,7 @@ def composite(
         _contrib_batches(grid_transform, grid_w, grid_h, tile, band),
         schema="tx int, ty int, x0 int, y0 int, bytes binary",
     )
+    # a second Python stage: the tile groupBy's exchange separates the two
     return contribs.groupBy("tx", "ty").applyInArrow(
         _stack_fn(
             grid_transform, grid_w, grid_h, tile, method, crs, nodata_out, out_dtype

@@ -225,30 +225,6 @@ def frame_sample(videos: DataFrame, every_n: int = 2) -> DataFrame:
     )
 
 
-def frame_neardup(
-    videos: DataFrame, every_n: int = 1, max_hamming: int = 6
-) -> DataFrame:
-    """Frame-level near-duplicate pairs across video payloads: sample
-    every nth frame (frame_sample), hash each frame to its 64-bit
-    perceptual hash (compute_phash — both single mapInArrow stages),
-    then the relational pigeonhole hamming join (dedup.hamming_pairs).
-    Frame ids are 'video_id#frame'; pairs spanning different videos
-    reveal shared/near-identical footage, pairs within one video
-    reveal static shots — both standard signals when deduplicating a
-    video training corpus."""
-    from ukis_pysat_spark.operators.dedup import hamming_pairs
-
-    frames = frame_sample(videos, every_n).select(
-        F.concat_ws(
-            "#", "image_id", F.col("frame").cast("string")
-        ).alias("image_id"),
-        "bytes",
-    )
-    return hamming_pairs(
-        compute_phash(frames), "image_id", "phash", max_hamming, 64
-    )
-
-
 # WAVE format tags the parser accepts (anything else is compressed
 # audio and needs a real codec library)
 _WAVE_PCM = 0x0001

@@ -179,4 +179,5 @@ def sample_points(
     joined = images.select("image_id", "bytes", "transform", "crs").join(
         per_img, "image_id"
     )
+    # a second Python stage: the per-image fold's exchange follows the refine
     return joined.mapInArrow(_sample_batches, schema=SAMPLE_SCHEMA)

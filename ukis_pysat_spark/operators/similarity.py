@@ -4,7 +4,7 @@
   broadcast (it's small), similarity is relational zip_with/aggregate
   math, top-k is a row_number window (plans as WindowGroupLimit partial
   top-k, so only k rows per partition per query shuffle).
-- ``lsh_ann``: random-hyperplane LSH — a vectorized pandas UDF signs
+- ``lsh_ann``: random-hyperplane LSH — a vectorized Arrow UDF signs
   each vector against H shared hyperplanes into a bucket id; queries
   probe their bucket (+ optional multi-probe neighbors by flipping one
   bit); exact re-rank inside candidates.  The 100 TB path: candidate
@@ -14,12 +14,12 @@
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 from pyspark.sql.types import ArrayType, LongType
 
-from ukis_pysat_spark.operators.dedup import cosine_col
+from ukis_pysat_spark.operators.dedup import _block_matrix, _fixed_lists, cosine_col
 
 
 def _topk(cand: DataFrame, k: int) -> DataFrame:
@@ -57,27 +57,23 @@ def _bucket_udf(n_planes: int, n_tables: int, seed: int, multiprobe: bool):
     between the data and query sides, and no driver-side action (the
     old path ran a `.first()` on the driver to learn the dim)."""
     state: dict[int, np.ndarray] = {}
+    # each bucket, then (multiprobe) its 1-bit flips: b ^ 0 == b
+    probes = np.array([0] + [1 << j for j in range(n_planes)] if multiprobe else [0], np.int64)
+    weights = np.int64(1) << np.arange(n_planes - 1, -1, -1, dtype=np.int64)
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def buckets(vecs: pd.Series) -> pd.Series:
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+    @F.arrow_udf(ArrayType(LongType()))
+    def buckets(vecs: pa.Array) -> pa.Array:
+        m = _block_matrix(vecs)
         dim = m.shape[1]
         planes = state.get(dim)
         if planes is None:
             planes = state[dim] = _hyperplanes(dim, n_planes, n_tables, seed)
-        out = [[] for _ in range(len(vecs))]
+        base = np.empty((len(m), n_tables), dtype=np.int64)
         for t in range(n_tables):
-            signs = (m @ planes[t].T) > 0  # (n, n_planes)
-            base = np.zeros(len(vecs), dtype=np.int64)
-            for j in range(n_planes):
-                base = (base << 1) | signs[:, j].astype(np.int64)
+            signs = (m @ planes[t].T) > 0  # (n, n_planes), MSB first
             # disjoint bucket spaces per table
-            base = base + np.int64(t) * np.int64(1 << (n_planes + 1))
-            for i, b in enumerate(base):
-                out[i].append(int(b))
-                if multiprobe:  # probe all 1-bit flips too
-                    out[i].extend(int(b ^ (1 << j)) for j in range(n_planes))
-        return pd.Series(out)
+            base[:, t] = signs @ weights + np.int64(t) * np.int64(1 << (n_planes + 1))
+        return _fixed_lists((base[:, :, None] ^ probes).reshape(len(m), -1))
 
     return buckets
 
@@ -89,7 +85,6 @@ def lsh_ann(
     n_planes: int = 6,
     n_tables: int = 8,
     seed: int = 7,
-    dim: int | None = None,  # kept for API compat; inferred on executors
     multiprobe: bool = True,
 ) -> DataFrame:
     """Approximate top-k: multi-table hyperplane-LSH bucket equi-join +
@@ -103,6 +98,7 @@ def lsh_ann(
     DISTINCT candidate pair, and the (small) query vectors come back
     via a broadcast join.
     """
+    # two Python nodes: the data and the query side each bucket their own input
     b_data = _bucket_udf(n_planes, n_tables, seed, multiprobe=False)
     b_query = _bucket_udf(n_planes, n_tables, seed, multiprobe=multiprobe)
     data = embeddings.select("vec_id", F.explode(b_data("embedding")).alias("bucket"))
@@ -157,15 +153,14 @@ def train_ivf_centroids(
 def _ivf_assign_udf(centroids: np.ndarray, n_probe: int):
     C = np.ascontiguousarray(centroids, dtype=np.float64)
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def assign(vecs: pd.Series) -> pd.Series:
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+    @F.arrow_udf(ArrayType(LongType()))
+    def assign(vecs: pa.Array) -> pa.Array:
+        m = _block_matrix(vecs)
         m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
         sims = m @ C.T
         if n_probe == 1:
-            return pd.Series([[int(i)] for i in np.argmax(sims, axis=1)])
-        top = np.argsort(-sims, axis=1)[:, :n_probe]
-        return pd.Series([[int(i) for i in row] for row in top])
+            return _fixed_lists(np.argmax(sims, axis=1)[:, None])
+        return _fixed_lists(np.argsort(-sims, axis=1)[:, :n_probe])
 
     return assign
 
@@ -191,6 +186,7 @@ def ivf_ann(
     """
     if centroids is None:
         centroids = train_ivf_centroids(embeddings, n_lists=n_lists, seed=seed)
+    # two Python nodes: the data and the query side each assign their own input
     data = embeddings.select(
         "vec_id", F.explode(_ivf_assign_udf(centroids, 1)("embedding")).alias("list_id")
     )
@@ -211,10 +207,3 @@ def ivf_ann(
         ),
         k,
     )
-
-
-def recall_at_k(approx: pd.DataFrame, exact: pd.DataFrame, k: int) -> float:
-    """Fraction of exact top-k pairs recovered by the ANN result."""
-    e = {(r.query_id, r.vec_id) for r in exact.itertuples(index=False) if r.rank <= k}
-    a = {(r.query_id, r.vec_id) for r in approx.itertuples(index=False) if r.rank <= k}
-    return len(e & a) / max(len(e), 1)

@@ -2,9 +2,10 @@
 
 The reference casts the in-memory array (including the ``'min'``
 minimal-dtype choice, raster.py:555-556) and writes one GTiff with a
-driver/compression profile.  The engine's sink is a table write: the
-payload is cast + re-encoded per row in one Arrow stage, then the rows
-land in Parquet (zstd) — or any table format the caller points at.
+driver/compression profile.  The engine's sink is a table write:
+``cast_images`` casts + re-encodes the payload per row in one Arrow
+stage, then the caller lands the rows in Parquet (zstd) — or any table
+format it points at.
 Payload-level compression maps to the codec's ``rawz`` format; columnar
 compression is the Parquet codec.
 """
@@ -40,27 +41,6 @@ def cast_images(images: DataFrame, dtype: str = "min", out_fmt: str | None = Non
     return arrowio.map_image_rows(images, _META_COLS, row_fn)
 
 
-def write_images(
-    images: DataFrame,
-    path: str,
-    dtype: str = "min",
-    out_fmt: str | None = None,
-    mode: str = "overwrite",
-    compression: str = "zstd",
-    partition_by: list[str] | None = None,
-) -> None:
-    """Sink: cast (incl. 'min') + encode + Parquet write.
-
-    On a catalog-backed cluster swap the final write for
-    ``df.writeTo(table).append()`` — everything upstream is unchanged.
-    """
-    out = cast_images(images, dtype=dtype, out_fmt=out_fmt)
-    writer = out.write.mode(mode).option("compression", compression)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
 # --------------------------------------------------------------------------
 # GeoTIFF sink/source (reference S4, write_to_file driver='GTiff' +
 # compress, raster.py:535-580): the engine's payloads leave as real
@@ -79,6 +59,29 @@ _FILES_SCHEMA = pa.schema(
 )
 
 
+def _geotiff_encoder(dtype: str | None, compression: str, predictor: int | str):
+    """row (_GTIFF_COLS) -> one GeoTIFF blob of its payload + geo
+    metadata: the encode shared by to_geotiff and write_geotiff_files."""
+    from ukis_pysat_spark.sources.geotiff import write_geotiff
+
+    def encode(row: dict) -> bytes:
+        arr = codec.decode(row["bytes"])
+        if dtype == "min":
+            arr = arr.astype(codec.minimum_dtype(arr), copy=False)
+        elif dtype is not None:
+            arr = arr.astype(np.dtype(dtype), copy=False)
+        return write_geotiff(
+            arr,
+            transform=row["transform"],
+            crs=row["crs"],
+            nodata=row["nodata"],
+            compression=compression,
+            predictor=predictor,
+        )
+
+    return encode
+
+
 def to_geotiff(
     images: DataFrame,
     dtype: str | None = None,
@@ -90,23 +93,12 @@ def to_geotiff(
     metadata.  dtype: None keeps the stored dtype, 'min' picks the
     smallest representing dtype per image (reference raster.py:555),
     anything else casts.  Composable: write the result to Parquet /
-    Iceberg for a blob table, or hand it to write_geotiff_files."""
-    from ukis_pysat_spark.sources.geotiff import write_geotiff
+    Iceberg for a blob table; write_geotiff_files writes the same blobs
+    as files."""
+    encode = _geotiff_encoder(dtype, compression, predictor)
 
     def rows_fn(row: dict) -> dict:
-        arr = codec.decode(row["bytes"])
-        if dtype == "min":
-            arr = arr.astype(codec.minimum_dtype(arr), copy=False)
-        elif dtype is not None:
-            arr = arr.astype(np.dtype(dtype), copy=False)
-        tiff = write_geotiff(
-            arr,
-            transform=row["transform"],
-            crs=row["crs"],
-            nodata=row["nodata"],
-            compression=compression,
-            predictor=predictor,
-        )
+        tiff = encode(row)
         return {"image_id": [row["image_id"]], "caption": [row["caption"]],
                 "n_bytes": [len(tiff)], "tiff": [tiff]}
 
@@ -170,17 +162,21 @@ def write_geotiff_files(
     """Sink: one `<image_id>.tif` per row under out_dir, written from
     the executors (posix paths here; on a cluster point out_dir at a
     fuse/NFS mount, or keep the blobs in a table via to_geotiff and
-    let the object store take them).  Returns the (image_id, path,
-    n_bytes) manifest — an action on it performs the writes."""
+    let the object store take them).  Each row is encoded (as
+    to_geotiff does) and written in the same stage, so the blob never
+    crosses back to the JVM.  Returns the (image_id, path, n_bytes)
+    manifest — an action on it performs the writes."""
     import os
 
-    blobs = to_geotiff(images, dtype=dtype, compression=compression, predictor=predictor)
+    encode = _geotiff_encoder(dtype, compression, predictor)
 
     def rows_fn(row: dict) -> dict:
+        tiff = encode(row)
         os.makedirs(out_dir, exist_ok=True)
         path = os.path.join(out_dir, f"{row['image_id']}.tif")
         with open(path, "wb") as fh:
-            fh.write(row["tiff"])
-        return {"image_id": [row["image_id"]], "path": [path], "n_bytes": [row["n_bytes"]]}
+            fh.write(tiff)
+        return {"image_id": [row["image_id"]], "path": [path], "n_bytes": [len(tiff)]}
 
-    return arrowio.map_rows(blobs, ["image_id", "n_bytes", "tiff"], rows_fn, _FILES_SCHEMA)
+    cols = [c for c in _GTIFF_COLS if c != "caption"]
+    return arrowio.map_rows(images, cols, rows_fn, _FILES_SCHEMA)

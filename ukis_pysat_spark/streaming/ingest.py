@@ -17,9 +17,10 @@ The stateless batch operators compose with streaming sources unchanged:
 ``spatial_join.points_in_aois`` over a point stream is a stream-static
 join against a static AOI table, with no wrapper.
 
-All sinks go through ``foreachBatch`` + the engine's CheckpointedRun
-commit so a crashed stream resumes without duplicates (idempotent
-batch ids).
+A stream lands idempotently when each ``foreachBatch`` micro-batch is
+committed with ``CheckpointedRun.commit_batch`` under its batch id: a
+restart replays the same ids, so a crashed stream resumes without
+duplicates.
 """
 
 from __future__ import annotations
@@ -69,34 +70,6 @@ def stream_image_neardup(
     hashes = multimodal.compute_phash(images_stream)
     return sdedup.stream_hamming_pairs(
         hashes, "image_id", "phash", max_hamming=max_hamming, ttl_seconds=ttl_seconds
-    )
-
-
-def run_stream_to_checkpointed_sink(
-    stream_df: DataFrame,
-    ckpt,
-    stage: str,
-    key_col: str,
-    checkpoint_dir: str,
-):
-    """Drive a streaming DataFrame into CheckpointedRun batch commits.
-
-    foreachBatch receives a deterministic batch_id; commits are
-    idempotent under restart because the stream checkpoint replays the
-    same batch ids and commit_batch overwrites its batch directory.
-    """
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ckpt.commit_batch(batch_df, stage, key_col, batch_id=f"s{batch_id:08d}")
-
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .outputMode("update")  # aggregations emit changed groups per microbatch
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
 
 
