@@ -65,9 +65,12 @@ def test_allow_list_names_package_functions():
 
 
 # pandas stays only where another API needs it: the kNN oracle's
-# driver-side frames and the streaming state API (applyInPandasWithState).
+# driver-side frames, the streaming state API (applyInPandasWithState),
+# and the worker daemon, which preloads pandas only because PySpark's
+# Arrow worker path imports it (no engine code in a worker uses it).
 PANDAS_FILES = {
     "ukis_pysat_spark/operators/knn.py",
+    "ukis_pysat_spark/pydaemon.py",
     "ukis_pysat_spark/streaming/dedup.py",
     "ukis_pysat_spark/streaming/events.py",
 }

@@ -1,7 +1,10 @@
 """Per-task and per-query start-up costs that get_spark removes: the
-worker daemon's zip re-read skip and the generated-class cache."""
+worker daemon's zip re-read skip, its preloaded and frozen worker stack,
+and the generated-class cache."""
 
 import importlib
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -94,6 +97,68 @@ def test_addpyfile_zip_imports_in_worker(spark, tmp_path):
     assert len(rows) == 8
     assert {r.value for r in rows} == {42}
     assert {r.installed for r in rows} == {sys.version_info < (3, 12)}
+
+
+def test_workers_inherit_a_frozen_arrow_stack(spark):
+    """Workers fork from a daemon that loaded pyarrow, numpy and pandas
+    and froze them out of the collector, so the collection a reused
+    worker runs after each task walks only the task's own objects."""
+
+    def probe(batches):
+        import gc
+
+        import pyarrow as pa
+
+        for b in batches:
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "frozen": [gc.get_freeze_count()] * b.num_rows,
+                    "tracked": [len(gc.get_objects())] * b.num_rows,
+                }
+            )
+
+    rows = spark.range(8, numPartitions=4).mapInArrow(probe, "frozen long, tracked long").collect()
+    assert len(rows) == 8
+    assert min(r.frozen for r in rows) > 30_000  # the stock daemon freezes nothing
+    assert max(r.tracked for r in rows) < 20_000  # a stock worker tracks ~75,000
+
+
+def test_blas_works_in_forked_workers(spark):
+    """numpy started its OpenBLAS threads in the daemon before the fork;
+    a matmul in every worker still returns the right product."""
+
+    def matmul(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        for b in batches:
+            ok = []
+            for seed in b.column(0).to_pylist():
+                rng = np.random.default_rng(seed)
+                # large enough for OpenBLAS to split it over its threads;
+                # einsum without optimize multiplies in numpy's own loops
+                x, y = rng.random((256, 192)), rng.random((192, 224))
+                want = np.einsum("ik,kj->ij", x, y, optimize=False)
+                ok.append(bool(np.allclose(x @ y, want)))
+            yield pa.RecordBatch.from_pydict({"ok": ok})
+
+    rows = spark.range(16, numPartitions=4).mapInArrow(matmul, "ok boolean").collect()
+    assert [r.ok for r in rows] == [True] * 16
+
+
+def test_importing_pydaemon_loads_no_dataframe_stack():
+    """The preload runs only when the daemon runs as ``__main__``: the
+    driver, which imports the module to name it, keeps pandas and
+    pyarrow out (a fresh interpreter, since the tests import pandas)."""
+    code = (
+        "import sys; import ukis_pysat_spark.pydaemon; "
+        "print(sorted(m for m in ('pandas', 'pyarrow') if m in sys.modules))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, check=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert out.stdout.split() == ["[]"]
 
 
 def test_codegen_cache_holds_engine_working_set(spark):

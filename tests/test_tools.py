@@ -1,6 +1,6 @@
 """The measurement tools checked without starting Spark: the registry
-against bench.py's leaves, the interleaving driver on fake legs, and
-every tool importing cleanly."""
+against bench.py's leaves, the interleaving driver on fake legs, the CPU
+split on a fake ``/proc``, and every tool importing cleanly."""
 
 import ast
 import glob
@@ -14,7 +14,7 @@ import time
 import pytest
 
 import bench_extra
-from tools import interleave, registry
+from tools import cpu_split, interleave, registry
 from ukis_pysat_spark import session
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -151,7 +151,7 @@ def test_tools_import_without_spark(monkeypatch):
         assert "SparkSession.builder" not in open(path).read(), path
         spec = importlib.util.spec_from_file_location(f"_probe_{os.path.basename(path)[:-3]}", path)
         spec.loader.exec_module(importlib.util.module_from_spec(spec))
-    assert len(paths) == 7
+    assert len(paths) == 8
 
 
 def test_bench_extra_lists_and_rejects_names_without_spark(monkeypatch, capsys):
@@ -163,3 +163,67 @@ def test_bench_extra_lists_and_rejects_names_without_spark(monkeypatch, capsys):
     with pytest.raises(SystemExit) as e:
         bench_extra.main()
     assert e.value.code == "unknown query names: no_such_q"
+
+
+def _fake_proc(root, procs: dict) -> None:
+    """``procs``: pid -> (comm, ticks, start, {tid: (comm, ticks, start)},
+    {tid: child pids}); ``ticks`` is split into utime and stime."""
+    def stat(path, pid, comm, ticks, start):
+        fields = ["S", "1", *["0"] * 9, str(ticks - ticks // 3), str(ticks // 3), *["0"] * 6, str(start)]
+        path.mkdir(parents=True, exist_ok=True)
+        (path / "stat").write_text(f"{pid} ({comm}) {' '.join(fields)} 0 0\n")
+
+    for pid, (comm, ticks, start, threads, children) in procs.items():
+        stat(root / str(pid), pid, comm, ticks, start)
+        for tid, (tcomm, tticks, tstart) in {pid: (comm, 0, start), **threads}.items():
+            stat(root / str(pid) / "task" / str(tid), tid, tcomm, tticks, tstart)
+            (root / str(pid) / "task" / str(tid) / "children").write_text(
+                " ".join(map(str, children.get(tid, ())))
+            )
+
+
+def test_cpu_split_classifies_threads():
+    assert [cpu_split.thread_class(c) for c in (
+        "C2 CompilerThre", "C1 CompilerThre", "GC Thread#3", "G1 Conc#0", "G1 Refine#0",
+        "Executor task l", "VM Thread", "dag-scheduler-e", "java",
+    )] == ["c2", "c1", "gc", "gc", "gc", "executor", "jvm_other", "jvm_other", "jvm_other"]
+
+
+def test_cpu_split_counts_exited_jvm_threads(tmp_path):
+    """A C2 thread that exits between the snapshots leaves its CPU in
+    the JVM's total only: it reads as jvm_exited, not as a negative C2
+    delta.  A new thread (here one reusing a tid) counts from zero, and
+    the processes below the JVM are the Python workers."""
+    jvm_threads = {
+        11: ("C2 CompilerThre", 500, 7), 12: ("GC Thread#0", 40, 7),
+        13: ("Executor task l", 300, 8), 14: ("VM Thread", 10, 7),
+    }
+    before_tree = {
+        1: ("python3", 100, 1, {}, {1: [10]}),
+        10: ("java", 900, 5, jvm_threads, {13: [20]}),
+        20: ("python", 50, 9, {}, {20: [21]}),
+        21: ("python", 30, 10, {}, {}),
+        99: ("java", 5000, 2, {}, {}),  # another session's JVM: not in the tree
+    }
+    _fake_proc(tmp_path / "t0", before_tree)
+    before = cpu_split.snapshot(1, str(tmp_path / "t0"))
+    assert {k[0] for k in before} == {1, 10, 20, 21}
+
+    after_tree = dict(before_tree)
+    after_tree[1] = ("python3", 130, 1, {}, {1: [10]})
+    # C2 #11 ran 200 more ticks, then exited; a new C2 took tid 11
+    after_tree[10] = ("java", 900 + 200 + 150 + 25 + 400 + 5 + 30, 5, {
+        11: ("C2 CompilerThre", 30, 60), 12: ("GC Thread#0", 65, 7),
+        13: ("Executor task l", 700, 8), 14: ("VM Thread", 15, 7),
+        15: ("C1 CompilerThre", 150, 61),
+    }, {13: [20]})
+    after_tree[21] = ("python", 80, 10, {}, {})
+    after_tree[20] = ("python", 50, 9, {}, {20: [21, 22]})
+    after_tree[22] = ("python", 20, 70, {}, {})
+    _fake_proc(tmp_path / "t1", after_tree)
+    got = cpu_split.split(before, cpu_split.snapshot(1, str(tmp_path / "t1")))
+    tick = os.sysconf("SC_CLK_TCK")
+    assert {k: round(v * tick) for k, v in got.items()} == {
+        "c2": 30, "c1": 150, "gc": 25, "executor": 400, "jvm_other": 5,
+        "jvm_exited": 200, "python_workers": 70, "driver": 30,
+    }

@@ -46,13 +46,15 @@ and runs each batch on ``ceil(P / n_batches)`` tasks, P being the
 input's task count: a narrow ``coalesce`` before the transform, so a
 batch task reads about as many input bytes as an input task.  Each
 batch holds ~1/n_batches of the rows, but every task pays a fixed cost
-whatever its rows: ~0.055 CPU-s per ``mapInArrow`` task and 0.04-0.07
-CPU-s more when the task also writes Parquet, its own small ``part-*``
-file (tile_pixels of one input on 4 to 32 tasks, 4 vCPUs).  With all P
-tasks per batch, four tiling batches cost 3.2x one batch; on their
-share they cost 1.65x (8,000 tiles, 4 vCPUs).  P is read from the
-input's physical plan, so reading it runs no Spark job (executing a
-plan that holds an exchange would run its stages).  Each batch still
+whatever its rows: ~0.01 CPU-s per ``mapInArrow`` task, mostly the
+JVM side of the Arrow boundary, and ~0.02 CPU-s more when the task
+also writes Parquet, its own small ``part-*`` file (tile_pixels of one
+500-image input on 4 to 32 tasks, 4 vCPUs).  With all P tasks per
+batch, four tiling batches cost 2.9-3.3x one batch; on their share
+they cost 1.7-1.9x (8,000 tiles, 4 vCPUs, three runs of medians of
+7).  P is read from the input's physical plan, so reading it runs no
+Spark job (executing a plan that holds an exchange would run its
+stages).  Each batch still
 scans the whole input and filters its bucket after the scan, ~0.2
 CPU-s per batch more than a key-only scan.
 

@@ -18,6 +18,24 @@ stock ``pyspark.daemon`` manager; forked workers inherit the wrapper.
 A rewritten archive is still re-read, and a new ``addPyFile`` archive
 still gets a new importer, so imports see exactly what they saw before.
 
+Before the manager forks any worker, the daemon also loads what a
+worker needs for an Arrow task: importing ``pyspark.daemon`` loads the
+worker module, and the daemon adds ``numpy``, ``pandas`` and
+``pyarrow`` (PySpark's Arrow eval path checks the pandas version, so a
+worker imports pandas though no engine code uses it); then it runs
+``gc.collect()`` and ``gc.freeze()``.  A reused worker runs a full
+``gc.collect()`` after every task; without the freeze each one walked
+the ~73k objects of that stack.  Forked workers inherit the stack in the
+collector's permanent generation, so the collection walks only what the
+worker created since (under 1k objects after tiling and zonal tasks):
+an identity ``mapInArrow`` over 32 tasks fell from 16.4 to 1.3 ms of
+Python CPU per task, and the Python workers' CPU in a tile_io benchmark
+pass from 2.3-2.4 to 0.9-1.0 s (4-vCPU VM, passes 2-4 of one session).
+The engine's own modules are not preloaded: workers import them from
+their PYTHONPATH and ``addPyFile`` archives as before.  OpenBLAS starts
+its threads at ``import numpy``, before the fork; its own fork handlers
+leave BLAS working in the workers.
+
 Run with ``python -m ukis_pysat_spark.pydaemon`` (Spark does this).
 """
 
@@ -77,6 +95,13 @@ if __name__ == "__main__":
     from ukis_pysat_spark import pydaemon
 
     pydaemon.install()
-    from pyspark import daemon
+    import gc
 
+    import numpy  # noqa: F401
+    import pandas  # noqa: F401
+    import pyarrow  # noqa: F401
+    from pyspark import daemon  # imports pyspark.worker
+
+    gc.collect()
+    gc.freeze()
     daemon.manager()

@@ -14,6 +14,12 @@ The knobs below are the ones that matter at 100 TB scale:
   archive entries per task (16 importers over pyspark.zip, the py4j zip
   and the spark-core jar); with the daemon the Python workers' time in
   a traced tile_io benchmark pass fell from 19.6 to 7.0 s (4-vCPU VM).
+  The daemon also preloads the stack a worker needs for an Arrow task
+  (the worker module, which importing ``pyspark.daemon`` loads, plus
+  numpy, pandas and pyarrow) and ``gc.freeze()``s it before forking,
+  so the full collection a reused worker runs after every task walks
+  only that task's objects, not the ~73k of the stack:
+  Python CPU per identity ``mapInArrow`` task fell from 16.4 to 1.3 ms.
   The package root goes on the workers' PYTHONPATH so the daemon can
   import it;
 - a generated-class cache of ``CODEGEN_CACHE_ENTRIES``: Spark's default
