@@ -212,3 +212,39 @@ def test_codegen_class_reused_under_another_stage_id(spark):
     before = compiles.getCount()
     assert len(first.unionByName(second).collect()) == 11 + 13  # `second` is stage 2
     assert compiles.getCount() == before
+
+
+def _vm_option(spark, name: str) -> str:
+    jvm = spark._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    return bean.getVMOption(name).getValue()
+
+
+def test_driver_jvm_runs_the_jit_and_memory_policy(spark):
+    """The JVM get_spark launched runs one C1 and one C2 compiler thread
+    and bounds direct memory at 8 GB."""
+    assert _vm_option(spark, "CICompilerCount") == "2"
+    assert _vm_option(spark, "MaxDirectMemorySize") == str(8 << 30)
+
+
+def test_callers_java_options_add_to_the_policy(tmp_path):
+    """A caller's ``spark.driver.extraJavaOptions`` (perfbench passes its
+    own) reaches the JVM next to get_spark's flags instead of replacing
+    them (a fresh interpreter, since the test session's JVM is up)."""
+    code = (
+        "import sys; from ukis_pysat_spark.session import get_spark\n"
+        "s = get_spark('java-options-probe', master='local[1]', extra_conf={\n"
+        "    'spark.driver.extraJavaOptions': '-Djava.io.tmpdir=' + sys.argv[1]})\n"
+        "rt = s._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()\n"
+        "print('\\n'.join(rt.getInputArguments()))\n"
+        "s.stop()\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code, str(tmp_path)], capture_output=True, text=True, check=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))), timeout=300,
+    )
+    args = out.stdout.split()
+    assert f"-Djava.io.tmpdir={tmp_path}" in args
+    assert {"-XX:CICompilerCount=2", "-XX:MaxDirectMemorySize=8g"} <= set(args)

@@ -24,8 +24,10 @@ for A and M for B.
 
 Round i runs A first when i is even and B first when it is odd.  A leg
 that times out or prints no JSON line is retried once; a second failure
-ends the run (exit status 1).  A leg's result is the last JSON line of
-its standard output.  Each finished round prints one JSON line
+ends the run (exit status 1).  A leg's result is every JSON-object line
+of its standard output merged into one, a later line winning a repeated
+key, so perfbench's per-operation summary line reaches the report next
+to its result line.  Each finished round prints one JSON line
 {"round", "order", "a", "b"}, flushed before the next leg starts, so a
 killed run keeps its rounds.  The last line is the report: for every
 numeric leaf of the legs' results (dotted path) the per-pair values,
@@ -62,15 +64,18 @@ def tree(rev: str, tmp: str, repo: str = REPO) -> str:
     return dest
 
 
-def last_json(stdout: str) -> dict | None:
-    for line in reversed(stdout.splitlines()):
+def merged_json(stdout: str) -> dict | None:
+    """Every JSON-object line of ``stdout`` merged into one dict, a later
+    line winning a repeated key; None without such a line."""
+    merged = None
+    for line in stdout.splitlines():
         line = line.strip()
         if line.startswith("{"):
             try:
-                return json.loads(line)
+                merged = {**(merged or {}), **json.loads(line)}
             except ValueError:
                 continue
-    return None
+    return merged
 
 
 def run_leg(cmd: list[str], cwd: str, timeout: float) -> dict:
@@ -89,7 +94,7 @@ def run_leg(cmd: list[str], cwd: str, timeout: float) -> dict:
                 raise
             print(f"leg {cmd} attempt {attempt}: timed out after {timeout} s", file=sys.stderr)
             continue
-        result = last_json(out)
+        result = merged_json(out)
         if result is not None:
             return result
         print(f"leg {cmd} attempt {attempt}: no JSON line (exit {proc.returncode})\n{err[-1500:]}",

@@ -32,7 +32,35 @@ The knobs below are the ones that matter at 100 TB scale:
   on which running stage finishes first.  With the id in the class name
   a repeated query whose ids came out in another order had another
   source, the cache key, and compiled again (measured: 1 of 31 re-runs
-  of one spatial_join plan compiled 6 new classes).
+  of one spatial_join plan compiled 6 new classes);
+- the driver JVM's flags, ``DRIVER_JAVA_OPTIONS``: 8 GB of direct
+  memory for the netty buffers of the Arrow feed, and one C1 and one C2
+  JIT compiler thread (``-XX:CICompilerCount=2``, the fewest tiered
+  compilation allows; JDK 17 starts 1 C1 + 2 C2 threads on 4 CPUs and
+  15 threads on 32).  Most of a benchmark pass was C2 compiling the
+  engine.  JDK 17 raises the tier-4 thresholds as the queue per C2
+  thread grows and drops queued methods that went cold, so with one C2
+  thread lukewarm methods likely stay at C1 while hot ones still reach
+  C2 (the mechanism is not measured; the CPU is).  On a 4-vCPU VM, in
+  a fresh JVM's tile_io passes (``tools/cpu_split.py``), the C2 threads
+  used ~4.0 CPU-s in the first pass, not ~7.1, and ~2.4 in the second,
+  not ~2.9; from the sixth pass on a pass costs the same CPU either way.
+  perfbench's tile_io ``pass_cpu_s`` fell from 6.96 to 5.94 (10
+  interleaved pairs, lower in 9).  The count is one constant for every
+  core count and was measured only on 4 vCPUs, where it cuts 3 compiler
+  threads to 2: there ``bench.py`` at sf0.1 summed 51.6 s of query time
+  before and 51.7 s after (medians of 10 pairs, parent IQR 4.1 s).  On
+  32 cores (15 threads by default), and so in ``bench.py`` at sf1.0 on
+  local[32], one long JVM where C2 pays off, it is unverified.  The
+  flags go in ``spark.driver.defaultJavaOptions``, which Spark puts
+  before ``spark.driver.extraJavaOptions`` on the JVM's command line, so
+  a caller that sets its own extraJavaOptions (perfbench does) adds
+  flags instead of dropping these.  Setting it replaces any
+  defaultJavaOptions from ``spark-defaults.conf``: put such driver flags
+  in ``spark.driver.extraJavaOptions`` instead (in spark-defaults.conf
+  or through ``extra_conf``).  Both take effect only when this process
+  launches the JVM: under spark-submit pass them with ``--conf``.
+  Executors on a cluster are JVMs of their own and keep their defaults.
 """
 
 from __future__ import annotations
@@ -53,6 +81,10 @@ ARROW_MAX_RECORDS = 128
 # holds the engine's generated classes with headroom (one pass of either
 # benchmark workload compiles ~110 distinct classes)
 CODEGEN_CACHE_ENTRIES = 2000
+
+# the driver JVM's flags (module docstring): direct memory for the Arrow
+# feed's netty buffers (see ARROW_MAX_RECORDS), one C1 and one C2 thread
+DRIVER_JAVA_OPTIONS = "-XX:MaxDirectMemorySize=8g -XX:CICompilerCount=2"
 
 # the directory (or zip) holding this package, for the worker daemon
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -97,8 +129,9 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         # effective when this process launches the JVM (plain python);
-        # under spark-submit pass the same via --conf (JVM already up)
-        .config("spark.driver.extraJavaOptions", "-XX:MaxDirectMemorySize=8g")
+        # under spark-submit the JVM is already up.  Not extraJavaOptions:
+        # a caller's extraJavaOptions would replace these, not add to them
+        .config("spark.driver.defaultJavaOptions", DRIVER_JAVA_OPTIONS)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.codegen.useIdInClassName", "false")
