@@ -8,6 +8,8 @@ import glob
 import os
 import re
 
+import pytest
+
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(ROOT, "ukis_pysat_spark")
 
@@ -87,3 +89,22 @@ def test_batch_engine_crosses_into_python_through_arrow_only():
     assert api == set()
     imports = {_rel(p) for p in _package_files() if _PANDAS_IMPORT.search(open(p).read())}
     assert imports <= PANDAS_FILES, imports - PANDAS_FILES
+
+
+# The Arrow output side has one owner: the binary payload build lives in
+# arrowio.PayloadBuf, and output batches are assembled there; dedup's
+# hamming pair emitter filters arrays it was handed rather than
+# assembling columns.
+OUTPUT_BATCH_CALLS = {
+    "from_buffers(": {"ukis_pysat_spark/operators/arrowio.py"},
+    "RecordBatch.from_arrays(": {
+        "ukis_pysat_spark/operators/arrowio.py",
+        "ukis_pysat_spark/operators/dedup.py",
+    },
+}
+
+
+@pytest.mark.parametrize("call", sorted(OUTPUT_BATCH_CALLS))
+def test_output_batches_are_built_in_arrowio(call):
+    users = {_rel(p) for p in _package_files() if call in open(p).read()}
+    assert users <= OUTPUT_BATCH_CALLS[call], users - OUTPUT_BATCH_CALLS[call]

@@ -310,22 +310,41 @@ def test_knn_auto_chooser_paths():
     assert 40 <= expect <= 8 * 40, expect
     assert 4 <= res <= 14
     # res clamps at both ends
-    assert knn.choose_knn_path(100, 10**7, k=5, crossover=10)[1] == 4
-    assert knn.choose_knn_path(10**15, 10**6, k=1, crossover=10)[1] == 14
+    assert knn.choose_knn_path(100, 10**7, k=5)[1] == 4
+    assert knn.choose_knn_path(10**15, 10**6, k=1)[1] == 14
+
+
+def _chooser_res(n_points: int, k: int) -> int:
+    """The res choose_knn_path sizes the indexed path at for n_points
+    (it does not depend on the AOI count once the pairs pass the
+    crossover)."""
+    path, res = knn.choose_knn_path(n_points, knn._CROSSOVER_PAIRS, k)
+    assert path == "indexed"
+    return res
+
+
+def _assert_knn_equal(got, exp, id_col):
+    g = got.sort_values(["aoi_id", "rank"]).reset_index(drop=True)
+    e = exp.sort_values(["aoi_id", "rank"]).reset_index(drop=True)
+    assert list(g[id_col]) == list(e["image_id"])
+    assert np.allclose(g["dist_km"], e["dist_km"])
 
 
 def test_knn_auto_matches_broadcast_on_both_paths(spark):
-    """knn() returns identical rows whichever physical path the chooser
-    takes (crossover forced to send the same input down each)."""
+    """knn() and both physical paths the chooser picks between (the
+    broadcast scan, and the indexed path at the chooser's res) return
+    the oracle's rows."""
     imgs = datagen.gen_images(spark, 200, profile="bench")
     aois = datagen.gen_aois(spark, 8)
-    exact = knn.knn_broadcast(imgs, aois, k=3).toPandas()
-    for crossover in (10**9, 1):  # broadcast path, then indexed path
-        got = knn.knn(imgs, aois, k=3, crossover=crossover).toPandas()
-        g = got.sort_values(["aoi_id", "rank"]).reset_index(drop=True)
-        e = exact.sort_values(["aoi_id", "rank"]).reset_index(drop=True)
-        assert (g["image_id"] == e["image_id"]).all(), crossover
-        assert np.allclose(g["dist_km"], e["dist_km"])
+    scenes = knn.scene_centroids(imgs)
+    exp = knn.knn_bruteforce_oracle(scenes.toPandas(), aois.toPandas(), k=3)
+    cols = knn._SCENE_COLS
+    for got in (
+        knn.knn(imgs, aois, k=3),
+        knn.knn_points(scenes, aois, k=3, **cols),
+        knn.knn_points_indexed(scenes, aois, k=3, res=_chooser_res(200, 3), **cols),
+    ):
+        _assert_knn_equal(got.toPandas(), exp, "image_id")
 
 
 def test_knn_indexed_certified_skips_fallback(spark):
@@ -628,37 +647,28 @@ def test_points_in_rings_pairwise_matches_scalar():
 
 
 def test_knn_points_auto_matches_broadcast_on_both_paths(spark):
-    """The generic point-table kNN (round 5) must return identical rows
-    on the broadcast and certified-indexed paths."""
-    from tests.conftest import SF_DIR  # noqa: F401
+    """The generic point-table kNN (round 5): knn_points_auto and both
+    physical paths (the broadcast scan, and the certified indexed path
+    at the chooser's res) return the oracle's rows."""
     rng = np.random.Generator(np.random.Philox(key=np.uint64(9)))
     n = 300
-    pts = spark.createDataFrame(pd.DataFrame({
+    pdf = pd.DataFrame({
         "point_id": [f"p{i:04d}" for i in range(n)],
         "lon": -20.0 + 50.0 * rng.random(n),
         "lat": 25.0 + 30.0 * rng.random(n),
-    }))
+    })
+    pts = spark.createDataFrame(pdf)
     aois = datagen.gen_aois(spark, 7)
-    exact = knn.knn_points(pts, aois, k=4).toPandas()
-    for crossover in (10**9, 1):
-        got = knn.knn_points_auto(pts, aois, k=4, crossover=crossover).toPandas()
-        g = got.sort_values(["aoi_id", "rank"]).reset_index(drop=True)
-        e = exact.sort_values(["aoi_id", "rank"]).reset_index(drop=True)
-        assert list(g["point_id"]) == list(e["point_id"]), crossover
-        assert np.allclose(g["dist_km"], e["dist_km"])
-
-
-def test_spatial_join_auto_res(spark):
-    """res=None measures mean geometry extents and picks a sane cell
-    resolution; output rows are identical to any fixed res (exactness
-    is res-independent)."""
-    imgs = datagen.gen_images(spark, 100, profile="bench", skew_frac=0.3)
-    aois = datagen.gen_aois(spark, 40, skew_frac=0.3)
-    r = spatial_join.choose_res(imgs, aois)
-    assert 3 <= r <= 16
-    auto = _pairs(spatial_join.spatial_join(imgs, aois, res=None))
-    fixed = _pairs(spatial_join.spatial_join(imgs, aois, res=12))
-    assert auto == fixed
+    exp = knn.knn_bruteforce_oracle(
+        pdf.rename(columns={"point_id": "image_id", "lon": "scene_lon", "lat": "scene_lat"}),
+        aois.toPandas(), k=4,
+    )
+    for got in (
+        knn.knn_points_auto(pts, aois, k=4),
+        knn.knn_points(pts, aois, k=4),
+        knn.knn_points_indexed(pts, aois, k=4, res=_chooser_res(n, 4)),
+    ):
+        _assert_knn_equal(got.toPandas(), exp, "point_id")
 
 
 def test_sat_fast_path_adversarial_rings(spark):

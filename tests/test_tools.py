@@ -63,10 +63,13 @@ def _drive(capsys, args: list[str], cmd: list[str]):
 
 def test_driver_alternates_and_reports(tmp_path, capsys):
     # two JSON lines merge, the later one winning a repeated key
+    # ... and a line with a 'name' key nests under that name
     cmd = _leg(
         tmp_path,
         "print(json.dumps({'s': {'w': cores}, 't': {'v': -1}})); print('{log line')\n"
-        "print(json.dumps({'t': {'v': cores * 10 + calls}, 'ok': True}))\n",
+        "print(json.dumps({'t': {'v': cores * 10 + calls}, 'ok': True}))\n"
+        "print(json.dumps({'name': 'q1', 'median': cores}))\n"
+        "print(json.dumps({'name': 'q2', 'median': cores + 0.5}))\n",
     )
     *rounds, rep = _drive(capsys, [".", ".", "--cores", "1,2", "--rounds", "3"], cmd)
     assert (tmp_path / "log").read_text().split() == ["1", "2", "2", "1", "1", "2"]
@@ -78,7 +81,10 @@ def test_driver_alternates_and_reports(tmp_path, capsys):
     assert leaf["iqr_a"] == pytest.approx(2.0)  # inclusive quartiles of 10, 13, 14: 11.5 and 13.5
     assert leaf["b_lower"] == 0
     assert rep["leaves"]["s.w"]["a"] == [1, 1, 1] and rep["leaves"]["s.w"]["b"] == [2, 2, 2]
-    assert list(rep["leaves"]) == ["s.w", "t.v"]  # booleans are not numeric leaves
+    assert rep["leaves"]["q1.median"]["b"] == [2, 2, 2]
+    assert rep["leaves"]["q2.median"]["a"] == [1.5, 1.5, 1.5]
+    # booleans and names are not numeric leaves
+    assert list(rep["leaves"]) == ["q1.median", "q2.median", "s.w", "t.v"]
 
 
 def test_driver_report_spread_wins_and_efficiency():

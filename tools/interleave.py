@@ -19,15 +19,17 @@ for A and M for B.
     # the scaling gate: efficiency = throughput ratio / core ratio
     SCALE_N_IMAGES=2000 python tools/interleave.py . . --cores 1,4 -- \\
         python3 tools/scaling_bench.py {cores}
-    # one registry query
-    python tools/interleave.py HEAD~1 . -- python3 bench_extra.py embedding_neardup_blocked
+    # registry queries, one leaf per query and statistic
+    python tools/interleave.py HEAD~1 . -- python3 bench_extra.py tile_pixels zonal_stats
 
 Round i runs A first when i is even and B first when it is odd.  A leg
 that times out or prints no JSON line is retried once; a second failure
 ends the run (exit status 1).  A leg's result is every JSON-object line
 of its standard output merged into one, a later line winning a repeated
 key, so perfbench's per-operation summary line reaches the report next
-to its result line.  Each finished round prints one JSON line
+to its result line.  A line with a ``name`` key is nested under that
+name, so a ``bench_extra.py`` leg of several queries reports each one
+(``tile_pixels.median``, ``zonal_stats.median``, ...).  Each finished round prints one JSON line
 {"round", "order", "a", "b"}, flushed before the next leg starts, so a
 killed run keeps its rounds.  The last line is the report: for every
 numeric leaf of the legs' results (dotted path) the per-pair values,
@@ -66,15 +68,20 @@ def tree(rev: str, tmp: str, repo: str = REPO) -> str:
 
 def merged_json(stdout: str) -> dict | None:
     """Every JSON-object line of ``stdout`` merged into one dict, a later
-    line winning a repeated key; None without such a line."""
+    line winning a repeated key; a line that carries a string ``name``
+    is nested under that name, so one leg can report several queries.
+    None without such a line."""
     merged = None
     for line in stdout.splitlines():
         line = line.strip()
         if line.startswith("{"):
             try:
-                merged = {**(merged or {}), **json.loads(line)}
+                obj = json.loads(line)
             except ValueError:
                 continue
+            if isinstance(obj.get("name"), str):
+                obj = {obj["name"]: obj}
+            merged = {**(merged or {}), **obj}
     return merged
 
 

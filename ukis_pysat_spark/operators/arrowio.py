@@ -9,29 +9,34 @@ one row function.  ``datagen``'s generators are ``map_rows`` stages over
 Arrow UDFs of the sketch joins (dedup's MinHash bands, similarity's LSH
 and IVF buckets).
 
-A stage hands its input columns, a per-row function and its output
-``pa.schema`` to one of two emitters; the Spark schema is derived from
-that ``pa.schema`` (``from_arrow_schema``), so each stage declares its
-output once.  Both emitters run as ONE ``mapInArrow`` and walk the
-input through the same row iterator (`_rows`):
+Input side: a stage that walks rows reads them through one row
+iterator (`_rows`): every binary column (image payloads, GeoTIFF blobs,
+packed masks) reaches the row function as a zero-copy ``pa.Buffer``
+view — no per-row Python ``bytes`` copies; every other column is a
+Python value.
 
-- every binary column (image payloads, GeoTIFF blobs, packed masks)
-  reaches the row function as a zero-copy ``pa.Buffer`` view — no
-  per-row Python ``bytes`` copies; every other column is a Python value;
-- ``map_rows`` is the scalar-row emitter: each row returns a dict of
-  equal-length output columns (lists or numpy arrays; numpy chunks
-  concatenate with numpy), and one RecordBatch leaves per input batch;
-- ``flat_map_payload_rows`` is the payload emitter: each row yields
-  (meta dict, pixel array, fmt) output rows whose encoded payload is
-  appended as (header, body) uint8 chunks into a `PayloadBuf`; one
-  contiguous ``values`` buffer + an int32 offsets cumsum becomes the
-  ``bytes`` column directly.  Flushes are bounded by payload bytes, not
-  by the input batch size, so worker memory stays flat however large
-  the images are.
+Output side: every Python stage builds its output batches through ONE
+buffer, `PayloadBuf`, under one flush rule (`emit`): a batch leaves
+when its payload reaches 64 MiB or its rows reach 2^20, so worker
+memory stays flat however large the images are.  A stage hands the
+buffer groups of n rows; per column a scalar (one value over the n
+rows), a list, a numpy array or a ``pa.Array``; and for the schema's
+binary payload column either one (header, body) pair per row or one
+uint8 buffer with per-row sizes (tiling's window-shape groups).  The
+payload column is one contiguous ``values`` buffer plus an int32
+offsets cumsum.  Each stage declares its output ``pa.schema`` once;
+the Spark schema is derived from it (``from_arrow_schema``).
 
-Stages that keep state across a whole batch or flush on their own rule
-(tiling's ``_TileBuf``, the zonal/rasterize AOI-list view, pointsample,
-pixels, the halo stages) keep their own loops.
+- ``map_rows``: each row returns a dict of equal-length output columns
+  (lists or numpy arrays); at most one batch leaves per input batch;
+- ``map_groups``: each row yields output groups (tiling, to_pixels,
+  mosaic's contributions), one buffer per task;
+- ``flat_map_payload_rows``: each row yields (meta dict, pixel array,
+  fmt) output rows whose pixels are encoded into the payload column;
+- ``emit``: the stages that read whole input columns at once (the
+  zonal/rasterize AOI-list view, pointsample's folded points) or emit
+  per ``applyInArrow`` group (timeseries, mosaic's stack) feed it their
+  groups directly.
 
 The images and metadata tables' schemas are declared here once, in
 Arrow; ``datagen`` derives their Spark forms.
@@ -39,8 +44,9 @@ Arrow; ``datagen`` derives their Spark forms.
 
 from __future__ import annotations
 
-from itertools import chain
-from typing import Callable, Iterator
+from itertools import chain, groupby
+from operator import itemgetter
+from typing import Callable, Iterable, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -94,54 +100,139 @@ METADATA_SCHEMA = pa.schema(
 
 META_COLS = IMAGES_SCHEMA.names
 
-# payload bytes per emitted RecordBatch: bounds worker memory, and stays
-# far below the 2 GiB that pa.binary()'s int32 offsets can address
+# the one flush rule of every Python output stage: a batch leaves when
+# its payload reaches _FLUSH_BYTES (bounds worker memory, and stays far
+# below the 2 GiB that pa.binary()'s int32 offsets address) or its rows
+# reach _FLUSH_ROWS
 _FLUSH_BYTES = 64 << 20
+_FLUSH_ROWS = 1 << 20
+
+
+def _kind(chunk) -> int:
+    """0: a scalar, one value over its group's rows; 1: a list, tuple or
+    numpy array of the group's values; 2: a ``pa.Array`` of them."""
+    if isinstance(chunk, (list, tuple, np.ndarray)):
+        return 1
+    return 2 if isinstance(chunk, pa.Array) else 0
+
+
+def _column(chunks: list, ns: list[int], type_: pa.DataType) -> pa.Array:
+    """One output column from its per-group chunks; ``ns`` holds the
+    groups' row counts.  Each run of chunks of one kind becomes one
+    array: scalars take over their values (one string over n rows costs
+    an index array, not n Python references), lists and numpy arrays
+    concatenate, ``pa.Array`` chunks pass through."""
+    parts = []
+    for kind, run in groupby(zip(map(_kind, chunks), chunks, ns), key=itemgetter(0)):
+        _, vals, reps = zip(*run)
+        if kind == 0:
+            arr = pa.array(vals, type=type_)
+            if any(r != 1 for r in reps):
+                arr = arr.take(pa.array(np.repeat(np.arange(len(vals)), reps)))
+            parts.append(arr)
+        elif kind == 2:
+            parts.extend(vals)
+        elif all(isinstance(v, np.ndarray) for v in vals):
+            parts.append(pa.array(np.concatenate(vals), type=type_))
+        else:
+            parts.append(pa.array(list(chain.from_iterable(vals)), type=type_))
+    if len(parts) == 1:
+        return parts[0]
+    return pa.concat_arrays(parts) if parts else pa.array([], type=type_)
 
 
 class PayloadBuf:
-    """Accumulates rows of a (meta..., ``bytes`` binary payload) schema;
-    flushes ONE RecordBatch whose payload column is built from
-    (offsets, values) buffers — zero per-row bytes objects.
+    """The package's one output buffer: accumulates groups of rows of
+    `schema` (a ``pa.schema`` or its (name, type) pairs) and flushes
+    them as ONE RecordBatch.
 
-    `schema` is the output ``pa.schema`` (or its (name, type) pairs)."""
+    The schema's first binary column is its payload column.  A group
+    may fill it through `add`'s ``payload`` instead of a column chunk;
+    the column is then built from (offsets, values) buffers, with zero
+    per-row bytes objects."""
 
     def __init__(self, schema) -> None:
         self.schema = pa.schema(schema)
-        self.meta: dict[str, list] = {n: [] for n in self.schema.names if n != "bytes"}
-        self.chunks: list[np.ndarray] = []  # header/body uint8 chunks
-        self.sizes: list[int] = []  # total payload bytes per row
+        self.payload_col = next(
+            (f.name for f in self.schema if f.type == pa.binary()), None
+        )
+        self._reset()
+
+    def _reset(self) -> None:
+        self.cols: dict[str, list] = {n: [] for n in self.schema.names}
+        self.ns: list[int] = []  # rows per group
+        self.values: list[np.ndarray] = []  # payload uint8 chunks
+        self.lengths: list[int] = []  # payload bytes per row
         self.n = 0
         self.nbytes = 0
 
-    def add(self, d: dict, header: bytes, body: np.ndarray) -> None:
-        for k in self.meta:
-            self.meta[k].append(d[k])
-        self.chunks.append(np.frombuffer(header, dtype=np.uint8))
-        self.chunks.append(body)
-        size = len(header) + body.nbytes
-        self.sizes.append(size)
-        self.n += 1
-        self.nbytes += size
+    def add(self, n: int, cols: dict, payload=None, sizes=None) -> None:
+        """Append a group of `n` rows.  `cols` holds one chunk per
+        column: a scalar (repeated over the n rows), or a list, tuple,
+        numpy array or ``pa.Array`` of n values.  `payload` fills the
+        payload column: a list of n (header, body) pairs, one per row;
+        or, with `sizes`, one uint8 buffer holding the n payloads back to
+        back, `sizes` being their byte sizes (one int for all, or n of
+        them)."""
+        skip = None if payload is None else self.payload_col
+        for name, chunks in self.cols.items():
+            if name != skip:
+                chunks.append(cols[name])
+        if payload is not None:
+            if sizes is None:
+                sizes = [len(h) + b.nbytes for h, b in payload]
+                for h, b in payload:
+                    self.values += (np.frombuffer(h, dtype=np.uint8), b)
+                self.lengths += sizes
+                self.nbytes += sum(sizes)
+            else:
+                self.values.append(payload)
+                self.lengths += [sizes] * n if np.isscalar(sizes) else np.asarray(sizes).tolist()
+                self.nbytes += payload.nbytes
+        self.ns.append(n)
+        self.n += n
 
     def flush(self) -> pa.RecordBatch:
-        if self.nbytes >= (1 << 31):  # pa.binary() carries int32 offsets
-            raise ValueError(
-                "image batch exceeds 2 GiB of payload (a single image's "
-                "payload must fit one batch)"
-            )
-        offsets = np.empty(self.n + 1, dtype=np.int32)
-        offsets[0] = 0
-        np.cumsum(np.asarray(self.sizes, dtype=np.int64), out=offsets[1:])
-        values = np.concatenate(self.chunks) if self.chunks else np.empty(0, np.uint8)
-        px = pa.Array.from_buffers(
-            pa.binary(), self.n, [None, pa.py_buffer(offsets), pa.py_buffer(values)]
-        )
+        """The buffered rows as one RecordBatch; the buffer is empty after."""
         arrays = [
-            px if f.name == "bytes" else pa.array(self.meta[f.name], type=f.type)
+            self._payload()
+            if f.name == self.payload_col and self.lengths
+            else _column(self.cols[f.name], self.ns, f.type)
             for f in self.schema
         ]
-        return pa.RecordBatch.from_arrays(arrays, schema=self.schema)
+        batch = pa.RecordBatch.from_arrays(arrays, schema=self.schema)
+        self._reset()
+        return batch
+
+    def _payload(self) -> pa.Array:
+        if self.nbytes >= (1 << 31):  # pa.binary() carries int32 offsets
+            raise ValueError(
+                "output batch exceeds 2 GiB of payload (one group's payload "
+                "must fit one batch)"
+            )
+        lengths = np.asarray(self.lengths, dtype=np.int64)
+        if lengths.size != self.n:
+            raise ValueError("every group of a payload batch must carry its payload")
+        offsets = np.empty(self.n + 1, dtype=np.int32)
+        offsets[0] = 0
+        np.cumsum(lengths, out=offsets[1:])
+        values = np.concatenate(self.values) if self.values else np.empty(0, np.uint8)
+        return pa.Array.from_buffers(
+            pa.binary(), self.n, [None, pa.py_buffer(offsets), pa.py_buffer(values)]
+        )
+
+
+def emit(schema, groups: Iterable[tuple]) -> Iterator[pa.RecordBatch]:
+    """RecordBatches of `schema` from `groups`, each a tuple of
+    `PayloadBuf.add`'s arguments (n, cols[, payload[, sizes]]), under
+    the one flush rule."""
+    buf = PayloadBuf(schema)
+    for group in groups:
+        buf.add(*group)
+        if buf.nbytes >= _FLUSH_BYTES or buf.n >= _FLUSH_ROWS:
+            yield buf.flush()
+    if buf.n:
+        yield buf.flush()
 
 
 def _rows(batch: pa.RecordBatch) -> Iterator[dict]:
@@ -157,12 +248,6 @@ def _rows(batch: pa.RecordBatch) -> Iterator[dict]:
         yield row
 
 
-def _column(chunks: list, type_: pa.DataType) -> pa.Array:
-    if chunks and isinstance(chunks[0], np.ndarray):
-        return pa.array(np.concatenate(chunks), type=type_)
-    return pa.array(list(chain.from_iterable(chunks)), type=type_)
-
-
 # rows_fn contract: row dict (see _rows) -> {output column: equal-length
 # list or numpy array} for this row's output rows, or None for none
 RowsFn = Callable[[dict], "dict | None"]
@@ -172,15 +257,36 @@ def map_rows(
     df: DataFrame, in_cols: list[str], rows_fn: RowsFn, schema: pa.Schema
 ) -> DataFrame:
     """Run `rows_fn` over every row of `df.select(*in_cols)` and emit
-    the rows it returns, with output `schema`, as one RecordBatch per
-    input batch."""
+    the rows it returns, with output `schema`; one buffer per input
+    batch, so each batch in leaves as one batch out unless the flush
+    rule splits it."""
+
+    def groups(batch: pa.RecordBatch) -> Iterator[tuple]:
+        for out in map(rows_fn, _rows(batch)):
+            if out is not None:
+                yield len(next(iter(out.values()))), out
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            outs = [o for o in map(rows_fn, _rows(batch)) if o is not None]
-            arrays = [_column([o[f.name] for o in outs], f.type) for f in schema]
-            if arrays and len(arrays[0]):
-                yield pa.RecordBatch.from_arrays(arrays, schema=schema)
+            yield from emit(schema, groups(batch))
+
+    return df.select(*in_cols).mapInArrow(run, schema=from_arrow_schema(schema))
+
+
+# groups_fn contract: row dict (see _rows) -> iterable of `emit` groups,
+# (n, cols[, payload[, sizes]]) — zero, one or many per input row
+GroupsFn = Callable[[dict], Iterable[tuple]]
+
+
+def map_groups(df: DataFrame, in_cols: list[str], groups_fn: GroupsFn, schema) -> DataFrame:
+    """Run `groups_fn` over every row of `df.select(*in_cols)` and emit
+    the row groups it yields, with output `schema`, through one buffer
+    per task."""
+    schema = pa.schema(schema)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        rows = chain.from_iterable(map(_rows, batches))
+        return emit(schema, chain.from_iterable(map(groups_fn, rows)))
 
     return df.select(*in_cols).mapInArrow(run, schema=from_arrow_schema(schema))
 
@@ -196,24 +302,21 @@ def flat_map_payload_rows(
 ) -> DataFrame:
     """Run `rows_fn` over every row of `df.select(*in_cols)` (1 -> N
     output rows) and emit rows of `schema` — a (meta..., ``bytes``
-    binary) ``pa.schema`` or its (name, type) pairs — through a
-    PayloadBuf, flushed every `_FLUSH_BYTES` of payload."""
+    binary) ``pa.schema`` or its (name, type) pairs — with each row's
+    encoded pixels as its payload."""
+
     schema = pa.schema(schema)
+    # one row per group: a scalar is its one value, except in list columns
+    lists = [f.name for f in schema if pa.types.is_list(f.type)]
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        buf = PayloadBuf(schema)
-        for batch in batches:
-            for row in _rows(batch):
-                for d, arr, fmt in rows_fn(row):
-                    header, body = codec.encode_chunks(arr, fmt)
-                    buf.add(d, header, body)
-                    if buf.nbytes >= _FLUSH_BYTES:
-                        yield buf.flush()
-                        buf = PayloadBuf(schema)
-        if buf.n:
-            yield buf.flush()
+    def groups_fn(row: dict) -> Iterator[tuple]:
+        for meta, arr, fmt in rows_fn(row):
+            cols = dict(meta)
+            for k in lists:
+                cols[k] = [cols[k]]
+            yield 1, cols, [codec.encode_chunks(arr, fmt)]
 
-    return df.select(*in_cols).mapInArrow(run, schema=from_arrow_schema(schema))
+    return map_groups(df, in_cols, groups_fn, schema)
 
 
 def map_image_rows(

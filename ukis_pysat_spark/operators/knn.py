@@ -230,9 +230,11 @@ def knn_points_indexed(
     return ranked.join(F.broadcast(sat_ids), "aoi_id").unionByName(exact)
 
 
-def choose_knn_path(
-    n_scenes: int, n_aois: int, k: int, ring: int = 2, crossover: int = 40_000_000
-) -> tuple[str, int]:
+# pair count at or below which the broadcast scan wins (choose_knn_path)
+_CROSSOVER_PAIRS = 40_000_000
+
+
+def choose_knn_path(n_scenes: int, n_aois: int, k: int, ring: int = 2) -> tuple[str, int]:
     """Pick the physical kNN strategy from measured inputs (the same
     discipline as dedup.choose_prefix_filter: decide from cheap counts,
     not caller folklore).  Returns (path, res).
@@ -249,7 +251,7 @@ def choose_knn_path(
     spreads under-certify and escalate to the exact fallback, which
     keeps the answer exact at the cost of a second scan):
     n_scenes*(2*ring+1)^2 / 4^res ~= target."""
-    if n_scenes * n_aois <= crossover:
+    if n_scenes * n_aois <= _CROSSOVER_PAIRS:
         return "broadcast", 0
     target = max(8 * k, 64)
     expect = n_scenes * (2 * ring + 1) ** 2 / target
@@ -262,14 +264,12 @@ def knn(
     aois: DataFrame,
     k: int = 5,
     ring: int = 2,
-    crossover: int = 40_000_000,
 ) -> DataFrame:
     """Exact kNN over a scene table with an automatic physical-path
     choice (VERDICT r4 #3: no 'caller must know' trap): knn_points_auto
     on the relational scene centroids."""
     return knn_points_auto(
-        scene_centroids(images), aois, k=k, ring=ring, crossover=crossover,
-        **_SCENE_COLS,
+        scene_centroids(images), aois, k=k, ring=ring, **_SCENE_COLS
     )
 
 
@@ -278,7 +278,6 @@ def knn_points_auto(
     aois: DataFrame,
     k: int = 5,
     ring: int = 2,
-    crossover: int = 40_000_000,
     id_col: str = "point_id",
     lon_col: str = "lon",
     lat_col: str = "lat",
@@ -295,8 +294,7 @@ def knn_points_auto(
         .collect()
     )
     path, res = choose_knn_path(
-        int(counts.get("s", 0)), int(counts.get("a", 0)), k,
-        ring=ring, crossover=crossover,
+        int(counts.get("s", 0)), int(counts.get("a", 0)), k, ring=ring
     )
     if path == "broadcast":
         return knn_points(points, aois, k=k, id_col=id_col, lon_col=lon_col, lat_col=lat_col)

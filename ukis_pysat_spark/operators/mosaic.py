@@ -17,7 +17,7 @@ is one distributed plan over the whole images table:
    the tile's pixel centers by inverse-affine nearest-neighbor
    (center-in-source-cell semantics, consistent with the engine's
    closed-boundary membership); nodata becomes NaN.  Contributions
-   leave through the zero-copy PayloadBuf emitter.
+   leave through the package's zero-copy output buffer.
 3. **Stack stage** (groupBy tile + applyInArrow): each tile's cropped
    contributions become (flat pixel index, value) COO pairs and are
    reduced per pixel with one lexsort + grouped slicing (exact
@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from ukis_pysat_spark import codec
-from ukis_pysat_spark.operators.arrowio import PayloadBuf
+from ukis_pysat_spark.operators import arrowio
 
 _METHODS = ("median", "mean", "min", "max", "count")
 
@@ -96,67 +96,50 @@ def _tile_cover(images: DataFrame, grid_transform, grid_w, grid_h, tile):
     )
 
 
-def _contrib_batches(grid_transform, grid_w, grid_h, tile, band):
+def _contributions(grid_transform, grid_w, grid_h, tile, band):
     ga, gc, ge, gf = grid_transform[0], grid_transform[2], grid_transform[4], grid_transform[5]
+    # rows for one image arrive adjacent (the explode preserves input
+    # order inside a partition): decode once per image, hold ONE image
+    decoded: dict[str, np.ndarray] = {}
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        buf = PayloadBuf(_CONTRIB_FIELDS)
-        for batch in batches:
-            payload = batch.column("bytes")
-            transforms_col = batch.column("transform").to_pylist()
-            nodatas = batch.column("nodata").to_pylist()
-            txs = batch.column("tx").to_pylist()
-            tys = batch.column("ty").to_pylist()
-            # rows for one image arrive adjacent (the explode preserves
-            # input order inside a partition): decode once per image
-            ids = batch.column("image_id").to_pylist()
-            decoded: dict[str, np.ndarray] = {}
-            for ri in range(batch.num_rows):
-                iid = ids[ri]
-                arr = decoded.get(iid)
-                if arr is None:
-                    decoded.clear()  # hold ONE image at a time
-                    arr = codec.decode(payload[ri].as_buffer()).astype(np.float64)
-                    decoded[iid] = arr
-                nb, sh, sw = arr.shape
-                plane = arr[min(band, nb - 1)]
-                a, _b, c, _d, e, f_ = transforms_col[ri]
-                nod = nodatas[ri]
-                tx, ty = txs[ri], tys[ri]
-                c0, r0 = tx * tile, ty * tile
-                tw = min(tile, grid_w - c0)
-                th = min(tile, grid_h - r0)
-                # target pixel centers -> source cells (inverse affine,
-                # center-in-cell: floor((coord - origin) / step))
-                xs = gc + (np.arange(c0, c0 + tw, dtype=np.float64) + 0.5) * ga
-                ys = gf + (np.arange(r0, r0 + th, dtype=np.float64) + 0.5) * ge
-                sc = np.floor((xs - c) / a).astype(np.int64)
-                sr = np.floor((ys - f_) / e).astype(np.int64)
-                # xs/ys are monotone, so the in-source runs are
-                # contiguous: crop the contribution to its covered
-                # sub-window (a small scene on a big tile ships only
-                # its own pixels, keeping the shuffle O(source px))
-                okc = np.flatnonzero((sc >= 0) & (sc < sw))
-                okr = np.flatnonzero((sr >= 0) & (sr < sh))
-                if okc.size == 0 or okr.size == 0:
-                    continue
-                x0, y0 = int(okc[0]), int(okr[0])
-                sub = plane[sr[okr][:, None], sc[okc][None, :]]
-                if nod is not None:
-                    sub = np.where(sub == nod, np.nan, sub)
-                if np.isnan(sub).all():
-                    continue
-                header, body = codec.encode_chunks(
-                    np.ascontiguousarray(sub[None, :, :]), "raw"
-                )
-                buf.add({"tx": tx, "ty": ty, "x0": x0, "y0": y0}, header, body)
-                if buf.nbytes >= (64 << 20):
-                    yield buf.flush()
-                    buf = PayloadBuf(_CONTRIB_FIELDS)
-        if buf.n:
-            yield buf.flush()
+    def contrib(row: dict) -> Iterator[tuple]:
+        iid = row["image_id"]
+        arr = decoded.get(iid)
+        if arr is None:
+            decoded.clear()
+            arr = codec.decode(row["bytes"]).astype(np.float64)
+            decoded[iid] = arr
+        nb, sh, sw = arr.shape
+        plane = arr[min(band, nb - 1)]
+        a, _b, c, _d, e, f_ = row["transform"]
+        nod = row["nodata"]
+        tx, ty = row["tx"], row["ty"]
+        c0, r0 = tx * tile, ty * tile
+        tw = min(tile, grid_w - c0)
+        th = min(tile, grid_h - r0)
+        # target pixel centers -> source cells (inverse affine,
+        # center-in-cell: floor((coord - origin) / step))
+        xs = gc + (np.arange(c0, c0 + tw, dtype=np.float64) + 0.5) * ga
+        ys = gf + (np.arange(r0, r0 + th, dtype=np.float64) + 0.5) * ge
+        sc = np.floor((xs - c) / a).astype(np.int64)
+        sr = np.floor((ys - f_) / e).astype(np.int64)
+        # xs/ys are monotone, so the in-source runs are contiguous: crop
+        # the contribution to its covered sub-window (a small scene on a
+        # big tile ships only its own pixels, keeping the shuffle O(source
+        # px))
+        okc = np.flatnonzero((sc >= 0) & (sc < sw))
+        okr = np.flatnonzero((sr >= 0) & (sr < sh))
+        if okc.size == 0 or okr.size == 0:
+            return
+        sub = plane[sr[okr][:, None], sc[okc][None, :]]
+        if nod is not None:
+            sub = np.where(sub == nod, np.nan, sub)
+        if np.isnan(sub).all():
+            return
+        cols = {"tx": tx, "ty": ty, "x0": int(okc[0]), "y0": int(okr[0])}
+        yield 1, cols, [codec.encode_chunks(np.ascontiguousarray(sub[None, :, :]), "raw")]
 
-    return run
+    return contrib
 
 
 _OUT_PA = pa.schema(
@@ -230,23 +213,12 @@ def _stack_fn(grid_transform, grid_w, grid_h, tile, method, crs, nodata_out, out
                 out[covered] = sv[ss + cs - 1]
         canvas = out.reshape(th, tw).astype(np_dtype)[None, :, :]
         transform = [ga, 0.0, gc + c0 * ga, 0.0, ge, gf + r0 * ge]
-        yield pa.RecordBatch.from_pydict(
-            {
-                "tx": [tx],
-                "ty": [ty],
-                "bytes": [codec.encode(canvas, "raw")],
-                "w": [tw],
-                "h": [th],
-                "fmt": ["raw"],
-                "bands": [1],
-                "dtype": [str(np_dtype)],
-                "crs": [crs],
-                "transform": [transform],
-                "nodata": [float(nodata_out)],
-                "n_scenes": [n_scenes],
-            },
-            schema=_OUT_PA,
-        )
+        cols = {
+            "tx": tx, "ty": ty, "w": tw, "h": th, "fmt": "raw", "bands": 1,
+            "dtype": str(np_dtype), "crs": crs, "transform": [transform],
+            "nodata": float(nodata_out), "n_scenes": n_scenes,
+        }
+        yield from arrowio.emit(_OUT_PA, [(1, cols, [codec.encode_chunks(canvas, "raw")])])
 
     return stack
 
@@ -281,9 +253,11 @@ def composite(
         images.select("image_id", "bytes", "w", "h", "transform", "nodata"),
         grid_transform, grid_w, grid_h, tile,
     )
-    contribs = covered.mapInArrow(
-        _contrib_batches(grid_transform, grid_w, grid_h, tile, band),
-        schema="tx int, ty int, x0 int, y0 int, bytes binary",
+    contribs = arrowio.map_groups(
+        covered,
+        ["image_id", "bytes", "transform", "nodata", "tx", "ty"],
+        _contributions(grid_transform, grid_w, grid_h, tile, band),
+        _CONTRIB_FIELDS,
     )
     # a second Python stage: the tile groupBy's exchange separates the two
     return contribs.groupBy("tx", "ty").applyInArrow(

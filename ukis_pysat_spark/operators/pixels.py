@@ -7,13 +7,13 @@ is "give me every pixel as a row" so plain SQL / joins / ML featurizers
 can take over.  ``to_pixels`` emits one row per (band, row, col) with
 the pixel-CENTER map coordinates from the affine transform.
 
-Physical strategy: one ``mapInArrow`` stage, zero shuffle.  Per image
-the (band, r, c, val) columns are built as whole numpy arrays (C-order
-broadcasts, no per-pixel Python); image_id expands C-side through an
-Arrow dictionary array.  Output batches flush on a row bound so worker
-memory stays flat regardless of image size.  The op multiplies row
-count by h*w*bands — it is an explicit materializer; filter bands or
-crop first when only a subset is needed.
+Physical strategy: one ``arrowio.map_groups`` stage, zero shuffle.  Per
+image the (band, r, c, val) columns are built as whole numpy arrays
+(C-order broadcasts, no per-pixel Python) and leave as one group of the
+package's output buffer, whose row bound keeps worker memory flat
+regardless of image size.  The op multiplies row count by h*w*bands —
+it is an explicit materializer; filter bands or crop first when only a
+subset is needed.
 """
 
 from __future__ import annotations
@@ -25,10 +25,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ukis_pysat_spark import codec
-
-PIXELS_SCHEMA = (
-    "image_id string, band int, r int, c int, x double, y double, val double"
-)
+from ukis_pysat_spark.operators import arrowio
 
 _PA_SCHEMA = pa.schema(
     [
@@ -47,7 +44,6 @@ def to_pixels(
     images: DataFrame,
     band: int | None = None,
     drop_nodata: bool = False,
-    flush_rows: int = 1 << 20,
 ) -> DataFrame:
     """One row per pixel: (image_id, band, r, c, x, y, val) where (x, y)
     is the pixel-center map coordinate ``transform * (c + 0.5, r + 0.5)``
@@ -55,85 +51,37 @@ def to_pixels(
     band; ``drop_nodata`` skips rows whose value equals the image's
     nodata."""
 
-    def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ids: list[str] = []
-        idx_chunks: list[np.ndarray] = []
-        cols: dict[str, list[np.ndarray]] = {k: [] for k in ("band", "r", "c", "x", "y", "val")}
-        n_rows = 0
+    def pixels(row: dict) -> Iterator[tuple]:
+        arr = codec.decode(row["bytes"])
+        if band is not None:
+            arr = arr[band : band + 1]
+        nb, h, w = arr.shape
+        a, b_, c0, d_, e, f_ = row["transform"]
+        val = arr.reshape(-1).astype(np.float64)
+        bidx = np.repeat(
+            np.arange(nb, dtype=np.int32)
+            if band is None
+            else np.array([band], dtype=np.int32),
+            h * w,
+        )
+        rr = np.tile(np.repeat(np.arange(h, dtype=np.int32), w), nb)
+        cc = np.tile(np.arange(w, dtype=np.int32), nb * h)
+        if drop_nodata and row["nodata"] is not None:
+            keep = val != row["nodata"]
+            val, bidx, rr, cc = val[keep], bidx[keep], rr[keep], cc[keep]
+        if val.size == 0:
+            return
+        rc = rr.astype(np.float64) + 0.5
+        cf = cc.astype(np.float64) + 0.5
+        yield val.size, {
+            "image_id": row["image_id"],
+            "band": bidx,
+            "r": rr,
+            "c": cc,
+            "x": c0 + cf * a + rc * b_,
+            "y": f_ + cf * d_ + rc * e,
+            "val": val,
+        }
 
-        def flush():
-            nonlocal ids, idx_chunks, cols, n_rows
-            idx = (
-                np.concatenate(idx_chunks)
-                if idx_chunks
-                else np.empty(0, dtype=np.int32)
-            )
-            iid = pa.DictionaryArray.from_arrays(
-                pa.array(idx, type=pa.int32()), pa.array(ids, type=pa.string())
-            ).cast(pa.string())
-            arrs = [iid] + [
-                pa.array(
-                    np.concatenate(cols[k]) if cols[k] else np.empty(0, _NP[k]),
-                    type=_PA_SCHEMA.field(k).type,
-                )
-                for k in ("band", "r", "c", "x", "y", "val")
-            ]
-            batch = pa.RecordBatch.from_arrays(arrs, schema=_PA_SCHEMA)
-            ids, idx_chunks, n_rows = [], [], 0
-            cols = {k: [] for k in cols}
-            return batch
-
-        for batch in batches:
-            names = [n for n in batch.schema.names if n != "bytes"]
-            lists = [batch.column(n).to_pylist() for n in names]
-            payload = batch.column("bytes")
-            for ri in range(batch.num_rows):
-                row = {n: ls[ri] for n, ls in zip(names, lists)}
-                arr = codec.decode(payload[ri].as_buffer())
-                if band is not None:
-                    arr = arr[band : band + 1]
-                nb, h, w = arr.shape
-                a, b_, c0, d_, e, f_ = row["transform"]
-                val = arr.reshape(-1).astype(np.float64)
-                bidx = np.repeat(
-                    np.arange(nb, dtype=np.int32)
-                    if band is None
-                    else np.array([band], dtype=np.int32),
-                    h * w,
-                )
-                rr = np.tile(np.repeat(np.arange(h, dtype=np.int32), w), nb)
-                cc = np.tile(np.arange(w, dtype=np.int32), nb * h)
-                if drop_nodata and row["nodata"] is not None:
-                    keep = val != row["nodata"]
-                    val, bidx, rr, cc = val[keep], bidx[keep], rr[keep], cc[keep]
-                if val.size == 0:
-                    continue
-                rc = rr.astype(np.float64) + 0.5
-                cf = cc.astype(np.float64) + 0.5
-                x = c0 + cf * a + rc * b_
-                y = f_ + cf * d_ + rc * e
-                ids.append(row["image_id"])
-                idx_chunks.append(
-                    np.full(val.size, len(ids) - 1, dtype=np.int32)
-                )
-                for k, v in (("band", bidx), ("r", rr), ("c", cc), ("x", x), ("y", y), ("val", val)):
-                    cols[k].append(v)
-                n_rows += val.size
-                if n_rows >= flush_rows:
-                    yield flush()
-        if n_rows:
-            yield flush()
-
-    return images.select("image_id", "bytes", "transform", "nodata").mapInArrow(
-        emit, schema=PIXELS_SCHEMA
-    )
-
-
-_NP = {
-    "band": np.int32,
-    "r": np.int32,
-    "c": np.int32,
-    "x": np.float64,
-    "y": np.float64,
-    "val": np.float64,
-}
+    in_cols = ["image_id", "bytes", "transform", "nodata"]
+    return arrowio.map_groups(images, in_cols, pixels, _PA_SCHEMA)

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from ukis_pysat_spark import codec
+from ukis_pysat_spark.operators import arrowio
 from ukis_pysat_spark.operators import spatial_join as sj
 from ukis_pysat_spark.operators.zonal import _is_lonlat
 
@@ -59,7 +60,7 @@ _SAMPLE_PA_SCHEMA = pa.schema(
     ]
 )
 
-def _sample_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _sample_groups(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple]:
     """Arrow-native gather: point coordinates are read as zero-copy
     numpy views of the folded list column (offsets + flat child
     arrays), per-image output columns stay numpy/Arrow end to end —
@@ -78,8 +79,6 @@ def _sample_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatc
         pid_all = flat.field("pid")
         plon_all = flat.field("plon").to_numpy(zero_copy_only=False)
         plat_all = flat.field("plat").to_numpy(zero_copy_only=False)
-        out: dict[str, list] = {n: [] for n in _SAMPLE_PA_SCHEMA.names}
-        n_rows = 0
         for ri in range(batch.num_rows):
             s, e = offs[ri], offs[ri + 1]
             if s == e:
@@ -102,40 +101,21 @@ def _sample_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatc
                 continue
             sel = np.nonzero(ok)[0]
             cc, rr = cc[sel], rr[sel]
-            n_ok = sel.size
             # band-major layout; every column built vectorized
-            take_idx = pa.array(np.tile(sel + s, nb).astype(np.int64))
-            out["point_id"].append(pid_all.take(take_idx))
-            out["image_id"].append(
-                pa.array([ids[ri]], type=pa.string()).take(
-                    pa.array(np.zeros(n_ok * nb, dtype=np.int64))
-                )
-            )
-            out["band"].append(
-                pa.array(np.repeat(np.arange(nb, dtype=np.int32), n_ok))
-            )
-            out["r"].append(pa.array(np.tile(rr.astype(np.int32), nb)))
-            out["c"].append(pa.array(np.tile(cc.astype(np.int32), nb)))
-            out["val"].append(pa.array(arr[:, rr, cc].ravel()))
-            n_rows += n_ok * nb
-            if n_rows >= 1 << 20:  # bound stage memory on hotspot images
-                yield pa.RecordBatch.from_arrays(
-                    [pa.concat_arrays(out[f.name]) for f in _SAMPLE_PA_SCHEMA],
-                    schema=_SAMPLE_PA_SCHEMA,
-                )
-                out = {n: [] for n in _SAMPLE_PA_SCHEMA.names}
-                n_rows = 0
-        if n_rows:
-            yield pa.RecordBatch.from_arrays(
-                [pa.concat_arrays(out[f.name]) for f in _SAMPLE_PA_SCHEMA],
-                schema=_SAMPLE_PA_SCHEMA,
-            )
+            yield sel.size * nb, {
+                "point_id": pid_all.take(pa.array(np.tile(sel + s, nb))),
+                "image_id": ids[ri],
+                "band": np.repeat(np.arange(nb, dtype=np.int32), sel.size),
+                "r": np.tile(rr, nb),
+                "c": np.tile(cc, nb),
+                "val": arr[:, rr, cc].ravel(),
+            }
 
 
 def sample_points(
     images: DataFrame,
     points: DataFrame,
-    res: int | None = sj.DEFAULT_RES,
+    res: int = sj.DEFAULT_RES,
     id_col: str = "point_id",
     lon_col: str = "lon",
     lat_col: str = "lat",
@@ -180,4 +160,7 @@ def sample_points(
         per_img, "image_id"
     )
     # a second Python stage: the per-image fold's exchange follows the refine
-    return joined.mapInArrow(_sample_batches, schema=SAMPLE_SCHEMA)
+    return joined.mapInArrow(
+        lambda batches: arrowio.emit(_SAMPLE_PA_SCHEMA, _sample_groups(batches)),
+        schema=SAMPLE_SCHEMA,
+    )

@@ -32,7 +32,6 @@ exploits.
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -206,6 +205,34 @@ _GRID_FIELDS = [
 ]
 
 
+_STRIPS_PA = pa.schema(
+    [("dtx", pa.int32()), ("dty", pa.int32()), ("gr", pa.int64()), ("gc", pa.int64())]
+)
+# the 8 neighbor tiles as (dtx, dty), rows outer
+_NEIGHBORS = np.array([(dx, dy) for dy in (-1, 0, 1) for dx in (-1, 0, 1) if dx or dy])
+
+
+def _halo_rows(tx, ty, gr, gc, tile: int, k: int, **vals) -> dict | None:
+    """The halo strips tile (tx, ty) sends its neighbors, as map_rows
+    columns: one row per (neighbor tile, cell) for every cell (global
+    row `gr`, column `gc`) within `k` pixels of that neighbor's extent,
+    neighbor-major in `_NEIGHBORS` order; `vals` are per-cell columns
+    carried along.  None when no cell is that near a neighbor."""
+    r0 = ((ty + _NEIGHBORS[:, 1]) * tile - k)[:, None]
+    c0 = ((tx + _NEIGHBORS[:, 0]) * tile - k)[:, None]
+    span = tile + 2 * k
+    j, i = np.nonzero((gr >= r0) & (gr < r0 + span) & (gc >= c0) & (gc < c0 + span))
+    if j.size == 0:
+        return None
+    return {
+        "dtx": (tx + _NEIGHBORS[j, 0]).astype(np.int32),
+        "dty": (ty + _NEIGHBORS[j, 1]).astype(np.int32),
+        "gr": gr[i],
+        "gc": gc[i],
+        **{n: v[i] for n, v in vals.items()},
+    }
+
+
 def proximity_grid(
     tiles: DataFrame,
     grid_transform: list[float],
@@ -241,61 +268,23 @@ def proximity_grid(
     ga, gc0 = grid_transform[0], grid_transform[2]
     ge, gf0 = grid_transform[4], grid_transform[5]
 
-    def strips_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        schema = pa.schema(
-            [
-                ("dtx", pa.int32()),
-                ("dty", pa.int32()),
-                ("gr", pa.int64()),
-                ("gc", pa.int64()),
-            ]
-        )
-        for batch in batches:
-            payload = batch.column("bytes")
-            tcol = batch.column("transform").to_pylist()
-            cols = {n: [] for n in schema.names}
-            for ri in range(batch.num_rows):
-                arr = codec.decode(payload[ri].as_buffer())
-                plane = arr[min(band, arr.shape[0] - 1)].astype(np.float64)
-                h, w = plane.shape
-                a, _b, c, _d, e, f_ = tcol[ri]
-                tx = int(round((c - gc0) / (ga * tile)))
-                ty = int(round((f_ - gf0) / (ge * tile)))
-                if target_values is None:
-                    tgt = plane != 0.0
-                else:
-                    tgt = np.isin(plane, np.asarray(target_values, float))
-                tr, tc = np.nonzero(tgt)
-                if tr.size == 0:
-                    continue
-                gr = tr.astype(np.int64) + ty * tile
-                gc = tc.astype(np.int64) + tx * tile
-                for dty in (-1, 0, 1):
-                    for dtx in (-1, 0, 1):
-                        if dtx == 0 and dty == 0:
-                            continue
-                        # neighbor bbox expanded by k, in global coords
-                        r0 = (ty + dty) * tile - k
-                        r1 = (ty + dty) * tile + tile + k
-                        c0 = (tx + dtx) * tile - k
-                        c1 = (tx + dtx) * tile + tile + k
-                        m = (gr >= r0) & (gr < r1) & (gc >= c0) & (gc < c1)
-                        n = int(m.sum())
-                        if not n:
-                            continue
-                        cols["dtx"].extend([tx + dtx] * n)
-                        cols["dty"].extend([ty + dty] * n)
-                        cols["gr"].extend(gr[m].tolist())
-                        cols["gc"].extend(gc[m].tolist())
-            if cols["dtx"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[n], type=schema.field(n).type) for n in schema.names],
-                    schema=schema,
-                )
+    def strips_fn(row: dict):
+        arr = codec.decode(row["bytes"])
+        plane = arr[min(band, arr.shape[0] - 1)].astype(np.float64)
+        a, _b, c, _d, e, f_ = row["transform"]
+        tx = int(round((c - gc0) / (ga * tile)))
+        ty = int(round((f_ - gf0) / (ge * tile)))
+        if target_values is None:
+            tgt = plane != 0.0
+        else:
+            tgt = np.isin(plane, np.asarray(target_values, float))
+        tr, tc = np.nonzero(tgt)
+        gr = tr.astype(np.int64) + ty * tile
+        gc = tc.astype(np.int64) + tx * tile
+        return _halo_rows(tx, ty, gr, gc, tile, k)
 
     strips = (
-        tiles.select("bytes", "transform")
-        .mapInArrow(strips_fn, schema="dtx int, dty int, gr long, gc long")
+        arrowio.map_rows(tiles, ["bytes", "transform"], strips_fn, _STRIPS_PA)
         .groupBy("dtx", "dty")
         .agg(
             F.collect_list("gr").alias("halo_r"),

@@ -46,7 +46,7 @@ import pyspark.sql.functions as F
 
 from ukis_pysat_spark import codec
 from ukis_pysat_spark.operators import spatial_join as sj
-from ukis_pysat_spark.operators.arrowio import PayloadBuf
+from ukis_pysat_spark.operators import arrowio
 from ukis_pysat_spark.operators.zonal import (
     _AoiListView,
     _WinCache,
@@ -78,9 +78,8 @@ RASTERIZE_SCHEMA = (
 def _burn_batches(dtype: str, background: float, fmt: str):
     np_dtype = np.dtype(dtype)
 
-    def burn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def burn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple]:
         win_cache = _WinCache()
-        buf = PayloadBuf(RASTERIZE_FIELDS)
         for batch in batches:
             ids = batch.column("image_id").to_pylist()
             ws = batch.column("w").to_pylist()
@@ -111,36 +110,27 @@ def _burn_batches(dtype: str, background: float, fmt: str):
                         np.maximum(target, val, out=target)
                     else:
                         target[inside] = np.maximum(target[inside], val)
-                header, body = codec.encode_chunks(canvas, fmt)
-                buf.add(
-                    {
-                        "image_id": ids[ri],
-                        "w": w,
-                        "h": h,
-                        "fmt": fmt,
-                        "bands": 1,
-                        "dtype": dtype,
-                        "crs": crss[ri],
-                        "transform": transforms_col[ri],
-                        "nodata": float(background),
-                        "burned": int(np.count_nonzero(canvas != background)),
-                    },
-                    header,
-                    body,
-                )
-                if buf.nbytes >= (64 << 20):
-                    yield buf.flush()
-                    buf = PayloadBuf(RASTERIZE_FIELDS)
-        if buf.n:
-            yield buf.flush()
+                cols = {
+                    "image_id": ids[ri],
+                    "w": w,
+                    "h": h,
+                    "fmt": fmt,
+                    "bands": 1,
+                    "dtype": dtype,
+                    "crs": crss[ri],
+                    "transform": [transforms_col[ri]],
+                    "nodata": float(background),
+                    "burned": int(np.count_nonzero(canvas != background)),
+                }
+                yield 1, cols, [codec.encode_chunks(canvas, fmt)]
 
-    return burn
+    return lambda batches: arrowio.emit(RASTERIZE_FIELDS, burn(batches))
 
 
 def rasterize(
     targets: DataFrame,
     aois: DataFrame,
-    res: int | None = sj.DEFAULT_RES,
+    res: int = sj.DEFAULT_RES,
     value_col: str | None = None,
     dtype: str = "int32",
     background: float = 0.0,

@@ -294,37 +294,6 @@ def sat_box_separated(axes: Column, x0, x1, y0, y1) -> Column:
     )
 
 
-def choose_res(images: DataFrame, aois: DataFrame, sample: int = 1024) -> int:
-    """Pick a cell resolution from MEASURED geometry extents (the
-    dedup/knn chooser discipline: no caller folklore).  Output rows are
-    res-INDEPENDENT (any res yields the same exact join — res only
-    moves the cover-size vs candidate-selectivity tradeoff), so this
-    is purely a performance choice: aim the cell size at the mean
-    geometry extent, giving ~1-2 cells per geometry side, bounded
-    sample, one tiny Spark action."""
-    ext = (
-        images.select(
-            (F.array_max("footprint_lon") - F.array_min("footprint_lon")).alias("dx"),
-            (F.array_max("footprint_lat") - F.array_min("footprint_lat")).alias("dy"),
-        )
-        .limit(int(sample))
-        .unionByName(
-            aois.select(
-                (F.array_max("ring_lon") - F.array_min("ring_lon")).alias("dx"),
-                (F.array_max("ring_lat") - F.array_min("ring_lat")).alias("dy"),
-            ).limit(int(sample))
-        )
-        .agg(F.avg((F.col("dx") + F.col("dy")) / 2.0).alias("m"))
-        .collect()[0]["m"]
-    )
-    if ext is None or ext <= 0:
-        return DEFAULT_RES
-    # wrap-convention extents (planar span > 180) would skew the mean;
-    # they are rare and only make res coarser, which stays correct
-    res = int(round(math.log2(360.0 / min(float(ext), 360.0))))
-    return max(3, min(res, 16))
-
-
 def _cell_tables(
     images: DataFrame, aois: DataFrame, res: int, flags: bool
 ) -> tuple[DataFrame, DataFrame]:
@@ -396,7 +365,7 @@ def _bbox_overlap() -> Column:
 def candidate_pairs(
     images: DataFrame,
     aois: DataFrame,
-    res: int | None = DEFAULT_RES,
+    res: int = DEFAULT_RES,
 ) -> DataFrame:
     """Deduped (image_id, aoi_id) bbox-overlap candidates — a SUPERSET
     of ``spatial_join`` with recall 1.0 (a false candidate exists only
@@ -409,8 +378,6 @@ def candidate_pairs(
     skip the whole refine machinery — the geometry re-join, the SAT
     evaluation and the Python refine of the exact join (r7; measured
     ~16 s of zonal_stats' 40 s at the sf1.0 hotspot)."""
-    if res is None:
-        res = choose_res(images, aois)
     img_cells, aoi_cells = _cell_tables(images, aois, res, flags=False)
     return (
         img_cells.join(aoi_cells, "cell")
@@ -423,13 +390,12 @@ def candidate_pairs(
 def spatial_join(
     images: DataFrame,
     aois: DataFrame,
-    res: int | None = DEFAULT_RES,
+    res: int = DEFAULT_RES,
 ) -> DataFrame:
     """Exact scene-footprint x AOI-polygon intersection join.
 
     Returns distinct (image_id, aoi_id) pairs whose geometries
-    intersect.  res=None measures the inputs and picks the cell
-    resolution itself (choose_res).
+    intersect.
 
     Exactness fast paths decide pairs INSIDE the cell join (r7):
 
@@ -453,8 +419,6 @@ def spatial_join(
     Python stage cost more than the whole candidate phase, and the
     r7 follow-up showed the two post-dedup geometry joins of the
     branch-split plan cost another ~16 s at sf1.0."""
-    if res is None:
-        res = choose_res(images, aois)
     # explicit isnotnull on the join ids: the hard branch's downstream
     # geometry join infers these and pushes them through the dedup
     # aggregate into the shared subtree — with the filters already

@@ -37,6 +37,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ukis_pysat_spark import codec
+from ukis_pysat_spark.operators import arrowio
 
 GAPFILL_SCHEMA = (
     "series_id string, epoch double, bytes binary, w int, h int, "
@@ -173,23 +174,12 @@ def gapfill_series(
         else:
             filled, counts = _fill_stack(stack, ts, nod)
         _, nb, h, w = stack.shape
-        cols: dict[str, list] = {n: [] for n in _PA_SCHEMA.names}
-        for k in range(stack.shape[0]):
-            cols["series_id"].append(sid)
-            cols["epoch"].append(float(ts[k]))
-            cols["bytes"].append(codec.encode(filled[k], "raw"))
-            cols["w"].append(w)
-            cols["h"].append(h)
-            cols["fmt"].append("raw")
-            cols["bands"].append(nb)
-            cols["dtype"].append("float64")
-            cols["transform"].append(transforms_[k])
-            cols["nodata"].append(nod)
-            cols["n_filled"].append(int(counts[k]))
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(cols[f.name], type=f.type) for f in _PA_SCHEMA],
-            schema=_PA_SCHEMA,
-        )
+        cols = {
+            "series_id": sid, "epoch": ts, "w": w, "h": h, "fmt": "raw", "bands": nb,
+            "dtype": "float64", "transform": transforms_, "nodata": nod, "n_filled": counts,
+        }
+        payload = [codec.encode_chunks(plane, "raw") for plane in filled]
+        yield from arrowio.emit(_PA_SCHEMA, [(len(ts), cols, payload)])
 
     return sel.groupBy("series_id").applyInArrow(fill_group, schema=GAPFILL_SCHEMA)
 
@@ -306,27 +296,13 @@ def trend_series(
             ok, (sv - slope * st) / np.maximum(n, 1.0), out_nod
         )
         nb, h, w = n.shape
-        cols: dict[str, list] = {f.name: [] for f in _COMPOSITE_PA}
-        for stat, plane, pn in (
-            ("slope", slope, out_nod),
-            ("intercept", intercept, out_nod),
-            ("n_valid", n, 0.0),
-        ):
-            cols["series_id"].append(sid)
-            cols["stat"].append(stat)
-            cols["n_epochs"].append(T)
-            cols["bytes"].append(codec.encode(plane, "raw"))
-            cols["w"].append(w)
-            cols["h"].append(h)
-            cols["fmt"].append("raw")
-            cols["bands"].append(nb)
-            cols["dtype"].append("float64")
-            cols["transform"].append(transforms_[0])
-            cols["nodata"].append(pn)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(cols[f.name], type=f.type) for f in _COMPOSITE_PA],
-            schema=_COMPOSITE_PA,
-        )
+        cols = {
+            "series_id": sid, "stat": list(TREND_STATS), "n_epochs": T, "w": w, "h": h,
+            "fmt": "raw", "bands": nb, "dtype": "float64", "transform": [transforms_[0]] * 3,
+            "nodata": [out_nod, out_nod, 0.0],
+        }
+        payload = [codec.encode_chunks(plane, "raw") for plane in (slope, intercept, n)]
+        yield from arrowio.emit(_COMPOSITE_PA, [(3, cols, payload)])
 
     return sel.groupBy("series_id").applyInArrow(trend_group, schema=COMPOSITE_SCHEMA)
 
@@ -363,20 +339,11 @@ def composite_series(
         sid, ts, stack, transforms_, nod = loaded
         vals = _composite_stack(stack, nod, stat)
         nb, h, w = vals.shape
-        out_nod = 0.0 if stat == "count" else nod
-        cols = [
-            pa.array([sid], type=pa.string()),
-            pa.array([stat], type=pa.string()),
-            pa.array([stack.shape[0]], type=pa.int32()),
-            pa.array([codec.encode(vals, "raw")], type=pa.binary()),
-            pa.array([w], type=pa.int32()),
-            pa.array([h], type=pa.int32()),
-            pa.array(["raw"], type=pa.string()),
-            pa.array([nb], type=pa.int32()),
-            pa.array(["float64"], type=pa.string()),
-            pa.array([transforms_[0]], type=pa.list_(pa.float64())),
-            pa.array([out_nod], type=pa.float64()),
-        ]
-        yield pa.RecordBatch.from_arrays(cols, schema=_COMPOSITE_PA)
+        cols = {
+            "series_id": sid, "stat": stat, "n_epochs": stack.shape[0], "w": w, "h": h,
+            "fmt": "raw", "bands": nb, "dtype": "float64", "transform": [transforms_[0]],
+            "nodata": 0.0 if stat == "count" else nod,
+        }
+        yield from arrowio.emit(_COMPOSITE_PA, [(1, cols, [codec.encode_chunks(vals, "raw")])])
 
     return sel.groupBy("series_id").applyInArrow(comp_group, schema=COMPOSITE_SCHEMA)

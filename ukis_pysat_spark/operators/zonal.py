@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from ukis_pysat_spark import codec
+from ukis_pysat_spark.operators import arrowio
 from ukis_pysat_spark.operators import spatial_join as sj
 from ukis_pysat_spark.operators.geometry import points_in_polygon
 
@@ -402,40 +403,15 @@ def _valid(win: np.ndarray, inside, nod) -> np.ndarray | None:
     return valid
 
 
-class _StatsRows:
-    """Output columns of one zonal batch, accumulated as chunks (string
-    columns as Python lists, numeric columns as numpy arrays) and
-    concatenated once."""
-
-    __slots__ = ("schema", "sid", "said", "nums")
-
-    def __init__(self, schema: pa.Schema):
-        self.schema = schema
-        self.sid: list = []
-        self.said: list = []
-        self.nums: dict[str, list] = {n: [] for n in schema.names[2:]}
-
-    def add(self, image_id: str, aoi_ids: list, cols: dict) -> None:
-        """One per-band result (``cols``: one array per numeric column,
-        one entry per kept band) for every AOI in ``aoi_ids``."""
-        nk = cols["band"].size
-        if nk == 0:
-            return
-        kf = len(aoi_ids)
-        self.sid.append([image_id] * (nk * kf))
-        self.said.append(aoi_ids if nk == 1 else [a for a in aoi_ids for _ in range(nk)])
-        for n, v in cols.items():
-            self.nums[n].append(np.tile(v, kf) if kf > 1 else v)
-
-    def batch(self) -> pa.RecordBatch:
-        arrays = [
-            pa.array([v for chunk in self.sid for v in chunk], type=pa.string()),
-            pa.array([v for chunk in self.said for v in chunk], type=pa.string()),
-        ] + [
-            pa.array(np.concatenate(self.nums[f.name]), type=f.type)
-            for f in list(self.schema)[2:]
-        ]
-        return pa.RecordBatch.from_arrays(arrays, schema=self.schema)
+def _stats_group(image_id: str, aoi_ids: list, cols: dict) -> tuple:
+    """One per-band result (``cols``: one array per numeric column, one
+    entry per kept band) for every AOI in ``aoi_ids``, as one output
+    group of AOI-major rows."""
+    nk, kf = cols["band"].size, len(aoi_ids)
+    out = {n: np.tile(v, kf) if kf > 1 else v for n, v in cols.items()}
+    out["image_id"] = image_id
+    out["aoi_id"] = [a for a in aoi_ids for _ in range(nk)]
+    return nk * kf, out
 
 
 def _zonal_stage(kernel, schema: pa.Schema):
@@ -443,7 +419,7 @@ def _zonal_stage(kernel, schema: pa.Schema):
     image once, window its folded AOIs and reduce every window with
     ``kernel(win, valid) -> {column: array over kept bands}``."""
 
-    def zonal_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def zonal_groups(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple]:
         win_cache = _WinCache()
         for batch in batches:
             ids = batch.column("image_id").to_pylist()
@@ -452,7 +428,6 @@ def _zonal_stage(kernel, schema: pa.Schema):
             nodatas = batch.column("nodata").to_pylist()
             crss = batch.column("crs").to_pylist()
             aois = _AoiListView(batch.column("aois"))
-            rows = _StatsRows(schema)
             for ri in range(batch.num_rows):
                 arr = codec.decode(payload[ri].as_buffer()).astype(np.float64)
                 _, h, w = arr.shape
@@ -462,15 +437,13 @@ def _zonal_stage(kernel, schema: pa.Schema):
                 )
                 for i, (c0, c1, r0, r1, inside) in parts:
                     win = arr[:, r0:r1, c0:c1]
-                    rows.add(ids[ri], [aois.ids[i]], kernel(win, _valid(win, inside, nod)))
+                    yield _stats_group(ids[ri], [aois.ids[i]], kernel(win, _valid(win, inside, nod)))
                 if full:
-                    rows.add(
+                    yield _stats_group(
                         ids[ri], [aois.ids[i] for i in full], kernel(arr, _valid(arr, None, nod))
                     )
-            if rows.sid:
-                yield rows.batch()
 
-    return zonal_batches
+    return lambda batches: arrowio.emit(schema, zonal_groups(batches))
 
 
 def _stats(win: np.ndarray, valid):
@@ -497,7 +470,7 @@ def _stats(win: np.ndarray, valid):
 def zonal_stats(
     images: DataFrame,
     aois: DataFrame,
-    res: int | None = sj.DEFAULT_RES,
+    res: int = sj.DEFAULT_RES,
 ) -> DataFrame:
     """Per-band pixel statistics of each image restricted to each
     intersecting AOI polygon.
@@ -558,7 +531,7 @@ def _modes(win: np.ndarray, valid):
 def zonal_mode(
     images: DataFrame,
     aois: DataFrame,
-    res: int | None = sj.DEFAULT_RES,
+    res: int = sj.DEFAULT_RES,
 ) -> DataFrame:
     """Zonal MAJORITY (mode): the most frequent valid pixel value of
     each image restricted to each intersecting AOI — the land-cover /
@@ -581,7 +554,7 @@ ZONAL_GRID_SCHEMA = (
 def zonal_stats_grid(
     tiles: DataFrame,
     aois: DataFrame,
-    res: int | None = sj.DEFAULT_RES,
+    res: int = sj.DEFAULT_RES,
 ) -> DataFrame:
     """Zonal statistics over a TILED raster grid (mosaic / rasterize
     output): per-(AOI, band) aggregates of the grid pixels inside each
