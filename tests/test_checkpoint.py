@@ -15,6 +15,7 @@ from ukis_pysat_spark import datagen
 from ukis_pysat_spark.operators import tiling
 from ukis_pysat_spark.plans.checkpoint import (
     CheckpointedRun,
+    _batch_id,
     _footer_lineage,
     _planned_tasks,
     run_stage_in_batches,
@@ -23,6 +24,13 @@ from ukis_pysat_spark.plans.checkpoint import (
 
 def _transform(batch):
     return tiling.tile_windows(batch, 64, 64, 0)
+
+
+def _ids(n_batches, buckets=None):
+    """The batch ids of ``buckets`` (all by default) of an image_id
+    batching into ``n_batches``."""
+    return [_batch_id(b, n_batches, "image_id")
+            for b in (range(n_batches) if buckets is None else buckets)]
 
 
 def test_resume_after_injected_failure(spark, tmp_path):
@@ -164,10 +172,10 @@ def test_resume_unchanged_batching_skips_anti_join(spark, tmp_path, count_jobs):
     assert final.count() == final.select("image_id", "tile_id").distinct().count() == 40 * 4
 
 
-def test_changed_batching_keeps_anti_join_exactly_once(spark, tmp_path):
-    """Crash at n_batches=2, resume at n_batches=4: the batching record
-    no longer matches, so the anti-join runs and no tile is written
-    twice or lost."""
+def test_changed_batching_resumes_exactly_once_without_anti_join(spark, tmp_path):
+    """Crash at n_batches=2, resume at n_batches=4: each pending bucket
+    drops the keys the committed mod-2 bucket covers, a column predicate
+    with no join, and no tile is written twice or lost."""
     imgs = datagen.gen_images(spark, 40, profile="bench")
     ckpt = CheckpointedRun(spark, str(tmp_path / "run"))
     with pytest.raises(RuntimeError, match="injected failure"):
@@ -176,7 +184,7 @@ def test_changed_batching_keeps_anti_join_exactly_once(spark, tmp_path):
     plans = []
     run_stage_in_batches(ckpt, imgs, "tiles", "image_id", _planning(_transform, plans),
                          n_batches=4)
-    assert plans and all("LeftAnti" in p for p in plans)
+    assert len(plans) == 4 and not any("LeftAnti" in p for p in plans)
     oneshot = _transform(imgs)
 
     def assert_exactly_once():
@@ -185,20 +193,21 @@ def test_changed_batching_keeps_anti_join_exactly_once(spark, tmp_path):
         assert final.exceptAll(oneshot).count() == 0 == oneshot.exceptAll(final).count()
 
     assert_exactly_once()
-    # the stage now mixes batchings: a further resume still anti-joins
+    # the stage now mixes batchings: losing the last commit redoes that
+    # bucket alone, less the keys the mod-2 bucket covers
     plans.clear()
-    shutil.rmtree(tmp_path / "run" / "tiles" / "batch=b0003")
+    shutil.rmtree(tmp_path / "run" / "tiles" / f"batch={_ids(4, [3])[0]}")
     run_stage_in_batches(ckpt, imgs, "tiles", "image_id", _planning(_transform, plans),
                          n_batches=4)
-    assert plans and all("LeftAnti" in p for p in plans)
+    assert len(plans) == 1 and not any("LeftAnti" in p for p in plans)
     assert_exactly_once()
 
 
 def test_shrunk_batching_commits_uncovered_buckets(spark, tmp_path):
-    """Crash at n_batches=4 after b0000 and b0001, resume at 2: those
-    ids hold only the mod-4 buckets 0 and 1, so they are not skipped.
-    The mod-2 buckets' remaining keys land under ids naming the new
-    batching, which a further resume at 2 treats as final."""
+    """Crash at n_batches=4 after buckets 0 and 1, resume at 2: those
+    ids hold only the mod-4 buckets 0 and 1, so both mod-2 buckets are
+    pending and commit their keys less the covered ones under ids naming
+    the new batching, which a further resume at 2 treats as final."""
     imgs = datagen.gen_images(spark, 40, profile="bench")
     ckpt = CheckpointedRun(spark, str(tmp_path / "run"))
     with pytest.raises(RuntimeError, match="injected failure"):
@@ -209,8 +218,7 @@ def test_shrunk_batching_commits_uncovered_buckets(spark, tmp_path):
     final = ckpt.committed("tiles").drop("src_partition")
     assert final.count() == final.select("image_id", "tile_id").distinct().count()
     assert final.exceptAll(oneshot).count() == 0 == oneshot.exceptAll(final).count()
-    assert {os.path.basename(p) for p in ckpt._committed_batches("tiles")} == {
-        "batch=b0000", "batch=b0001", "batch=b0000n0002", "batch=b0001n0002"}
+    assert ckpt._committed_ids("tiles") == {*_ids(4, [0, 1]), *_ids(2)}
     plans = []
     run_stage_in_batches(ckpt, imgs, "tiles", "image_id", _planning(_transform, plans),
                          n_batches=2)
@@ -226,12 +234,12 @@ def test_resume_rebuilds_missing_lineage(spark, tmp_path):
     with pytest.raises(RuntimeError, match="injected failure"):
         run_stage_in_batches(ckpt, imgs, "tiles", "image_id", _transform,
                              n_batches=4, fail_after=1)
-    shutil.rmtree(base / "_metrics" / "tiles" / "batch=b0000")
+    shutil.rmtree(base / "_metrics" / "tiles" / f"batch={_ids(4, [0])[0]}")
     run_stage_in_batches(ckpt, imgs, "tiles", "image_id", _transform, n_batches=4)
     per_batch = {}
     for r in ckpt.metrics("tiles").collect():
         per_batch[r.batch_id] = per_batch.get(r.batch_id, 0) + r.row_count
-    assert sorted(per_batch) == ["b0000", "b0001", "b0002", "b0003"]
+    assert sorted(per_batch) == _ids(4)
     assert sum(per_batch.values()) == ckpt.committed("tiles").count() == 20 * 4
 
 
@@ -366,7 +374,7 @@ def test_batch_runs_on_its_share_of_input_tasks(spark, tmp_path):
     ckpt = CheckpointedRun(spark, str(tmp_path / "run"))
     run_stage_in_batches(ckpt, imgs, "tiles", "image_id", _transform, n_batches=3)
     per_batch = _src_partitions(ckpt, "tiles")
-    assert sorted(per_batch) == ["b0000", "b0001", "b0002"]
+    assert sorted(per_batch) == _ids(3)
     assert all(0 < len(parts) <= 3 for parts in per_batch.values()), per_batch
     assert sum(r.row_count for r in ckpt.metrics("tiles").collect()) == 80 * 4
 
@@ -388,11 +396,10 @@ def test_planned_tasks_reads_the_plan_without_a_job(spark, tmp_path, count_jobs)
 
 
 # Spark jobs of one 3-batch run over the 8-file input: one write per
-# batch, for the 3 or 2 pending batches; the anti-join resume adds the
-# committed files' schema read (1) and, per batch, the committed keys'
-# aggregate and its broadcast (2); a repartitioned input adds its
+# pending batch, 3 or 2 (a resume onto another batching reads no
+# committed data, so it adds none); a repartitioned input adds its
 # shuffle stage per batch.  Reading the input's task count adds none.
-RUN_JOBS = {"fresh": 3, "unchanged_resume": 2, "changed_resume": 1 + 3 * 3, "exchange": 3 * 2}
+RUN_JOBS = {"fresh": 3, "unchanged_resume": 2, "changed_resume": 3, "exchange": 3 * 2}
 
 
 @pytest.mark.parametrize("case", sorted(RUN_JOBS))
@@ -428,3 +435,56 @@ def test_crash_and_resume_on_coalesced_batches(spark, tmp_path):
     assert final.count() == final.select("image_id", "tile_id").distinct().count()
     assert final.exceptAll(oneshot).count() == 0 == oneshot.exceptAll(final).count()
     assert sum(r.row_count for r in ckpt.metrics("tiles").collect()) == final.count()
+
+
+@pytest.fixture(scope="module")
+def images40(spark):
+    imgs = datagen.gen_images(spark, 40, profile="bench")
+    return imgs, _transform(imgs).drop("src_partition")
+
+
+@pytest.mark.parametrize("n_crash,fail_after,n_resume", [
+    (4, 2, 2), (2, 1, 4), (3, 1, 2), (1, 1, 3), (4, 3, 3), (4, 1, 4),
+])
+def test_resume_matches_one_shot_across_batchings(
+    spark, tmp_path, count_jobs, images40, n_crash, fail_after, n_resume
+):
+    """Differential: crash after ``fail_after`` of ``n_crash`` batches,
+    resume at ``n_resume``; the committed rows equal the one-shot
+    transform exactly once, lineage sums to them, and the resume runs
+    one Spark job per pending batch."""
+    imgs, oneshot = images40
+    ckpt = CheckpointedRun(spark, str(tmp_path / "run"))
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_stage_in_batches(ckpt, imgs, "tiles", "image_id", _transform,
+                             n_batches=n_crash, fail_after=fail_after)
+    pending = set(_ids(n_resume)) - ckpt._committed_ids("tiles")
+    _, jobs = count_jobs(lambda: run_stage_in_batches(
+        ckpt, imgs, "tiles", "image_id", _transform, n_batches=n_resume))
+    assert jobs == len(pending)
+    final = ckpt.committed("tiles").drop("src_partition")
+    assert final.count() == final.select("image_id", "tile_id").distinct().count()
+    assert final.exceptAll(oneshot).count() == 0 == oneshot.exceptAll(final).count()
+    assert sum(r.row_count for r in ckpt.metrics("tiles").collect()) == final.count()
+
+
+def test_resume_fails_closed_on_ids_it_cannot_read(spark, tmp_path):
+    """A committed id that does not name a bucket of the key (streaming's
+    ``s%08d``, a bare ``b%04d``, another key column's id) raises before
+    any write, as does a batch count the four-digit ids cannot hold."""
+    imgs = datagen.gen_images(spark, 8, profile="bench")
+    out = _transform(imgs)
+    for i, bad in enumerate(["s00000001", "b0000", _batch_id(0, 2, "caption")]):
+        ckpt = CheckpointedRun(spark, str(tmp_path / f"run{i}"))
+        ckpt.commit_batch(out, "tiles", "image_id", batch_id=bad)
+        with pytest.raises(ValueError, match=bad):
+            ckpt.resume_filter(imgs, "tiles", "image_id")
+        with pytest.raises(ValueError, match=bad):
+            run_stage_in_batches(ckpt, imgs, "tiles", "image_id", _transform, n_batches=2)
+        assert ckpt._committed_ids("tiles") == {bad}
+        assert os.listdir(tmp_path / f"run{i}" / "tiles") == [f"batch={bad}"]
+    for n in (0, 10_000):
+        ckpt = CheckpointedRun(spark, str(tmp_path / f"n{n}"))
+        with pytest.raises(ValueError, match="1..9999"):
+            run_stage_in_batches(ckpt, imgs, "tiles", "image_id", _transform, n_batches=n)
+        assert not (tmp_path / f"n{n}").exists()

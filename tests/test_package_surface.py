@@ -108,3 +108,43 @@ OUTPUT_BATCH_CALLS = {
 def test_output_batches_are_built_in_arrowio(call):
     users = {_rel(p) for p in _package_files() if call in open(p).read()}
     assert users <= OUTPUT_BATCH_CALLS[call], users - OUTPUT_BATCH_CALLS[call]
+
+
+def _referenced_names(tree: ast.Module) -> set[str]:
+    """Every ``Name`` in the module, an ``Attribute`` chain's root
+    included, plus those inside string annotations."""
+    trees = [tree]
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.arg, ast.AnnAssign)):
+            note = node.annotation
+        elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            note = node.returns
+        else:
+            continue
+        if isinstance(note, ast.Constant) and isinstance(note.value, str):
+            trees.append(ast.parse(note.value, mode="eval"))
+    return {n.id for t in trees for n in ast.walk(t) if isinstance(n, ast.Name)}
+
+
+def test_package_modules_use_every_name_they_import():
+    """An import whose bound name is never referenced is dead; an import
+    kept for its side effect says so with ``# noqa: F401``.  Package
+    ``__init__`` modules re-export, so they are not checked."""
+    dead = set()
+    for path in _package_files():
+        if os.path.basename(path) == "__init__.py":
+            continue
+        src = open(path).read()
+        lines = src.splitlines()
+        tree = ast.parse(src)
+        used = _referenced_names(tree)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                bound = [a.asname or a.name.split(".")[0] for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+                bound = [a.asname or a.name for a in node.names]
+            else:
+                continue
+            if "# noqa: F401" not in lines[node.lineno - 1]:
+                dead |= {f"{_rel(path)}:{name}" for name in bound if name not in used}
+    assert dead == set()

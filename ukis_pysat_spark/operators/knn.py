@@ -37,7 +37,7 @@ from pyspark.sql import Column, DataFrame, Window
 import pyspark.sql.functions as F
 
 from ukis_pysat_spark.operators import geometry
-from ukis_pysat_spark.operators.spatial_join import DEFAULT_RES, cell_key, point_ixy
+from ukis_pysat_spark.operators.spatial_join import cell_key, point_ixy
 
 EARTH_RADIUS_KM = geometry.EARTH_RADIUS_KM
 # scene_centroids' column names, for the generic point-table entry points

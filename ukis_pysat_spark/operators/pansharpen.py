@@ -22,8 +22,6 @@ pattern as change detection; embarrassingly parallel per scene pair.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame

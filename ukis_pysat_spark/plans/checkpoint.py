@@ -2,9 +2,9 @@
 
 The north rule requires every stage to write per-partition lineage +
 row-count metrics and for runs to resume from the last committed
-checkpoint.  With an Iceberg catalog this is snapshot commits + an
-anti-join on a metrics table; no Iceberg runtime jar ships in this
-environment, so the same semantics are built on Parquet:
+checkpoint.  With an Iceberg catalog this is snapshot commits + a
+metrics table; no Iceberg runtime jar ships in this environment, so the
+same semantics are built on Parquet:
 
 - a stage writes each *batch* of work to
   ``{base}/{stage}/batch={batch_id}/`` with Spark's committer — the
@@ -15,10 +15,10 @@ environment, so the same semantics are built on Parquet:
   ``{base}/_metrics/{stage}/batch={batch_id}`` as one Parquet file,
   renamed over its predecessor, so a REPLAYED batch replaces its own
   lineage rows and restarts can never double-count;
-- resume = anti-join the input's key column against the union of
-  committed batches' keys (``processed_keys``), so work is never
-  repeated and retries are idempotent (keys are data-derived, never
-  partition-index-derived).
+- resume = drop the input keys that lie in a committed batch's bucket,
+  a column predicate on the key's hash built from the committed batch
+  ids alone, so work is never repeated and retries are idempotent
+  (keys are data-derived, never partition-index-derived).
 
 Lineage comes from the Parquet footers, not from a re-read.  Iceberg
 keeps per-file record counts and column lower/upper bounds in its
@@ -58,19 +58,21 @@ stages).  Each batch still
 scans the whole input and filters its bucket after the scan, ~0.2
 CPU-s per batch more than a key-only scan.
 
-A committed ``b%04d`` batch of the current ``(key_col, n_batches)``
-is final, so when every committed batch came from that batching no
-pending bucket's key can be committed and the anti-join cannot remove
-anything.  The batching is recorded in ``{base}/{stage}/_batching.json``
-while the stage has no committed batch; the anti-join is skipped only
-when that record matches and every committed id is a ``b%04d`` below
-``n_batches``.  A changed batching drops the record, so a stage that
-mixes batchings, has no record, or holds foreign ids (e.g. streaming's
-``s%08d``) always takes the anti-join.  On that path a taken ``b%04d``
-id may hold another batching's bucket (a crash at 4 batches then a
-resume at 2 finds ``b0001`` holding only ``mod 4`` bucket 1), so the
-bucket's remaining keys are committed under ``b%04dn%04d`` (bucket,
-n_batches), an id final for that batching.
+A batch id names everything its bucket depends on:
+``b{bucket:04d}n{n_batches:04d}k{md5(key_col)[:8]}``.  A key is
+*covered* when some committed id (b, n) has ``pmod(xxhash64(key), n) ==
+b``.  ``resume_filter`` keeps the uncovered input rows, and
+``run_stage_in_batches`` skips the committed ids of its own batching
+and cuts every pending bucket minus the keys covered by other
+batchings' ids (a crash at 4 batches then a resume at 2 writes mod-2
+bucket 1 less the committed mod-4 bucket 1), so the committed keys are
+always exactly the union of the committed buckets.  The rule holds
+under one precondition: the input's key set is the one the committed
+batches were cut from, and a committed batch is removed only together
+with every batch committed after it.  A stage holding an id the rule
+cannot read (a bare ``b%04d``, streaming's ``s%08d``, an id of another
+key column) fails closed: both raise ``ValueError`` naming it before
+anything is written.
 
 On a cluster with an Iceberg catalog, pass ``catalog=`` to switch the
 SAME semantics onto snapshot commits: each batch lands as one
@@ -79,19 +81,18 @@ SAME semantics onto snapshot commits: each batch lands as one
 Iceberg snapshot), metrics ride a second table partitioned by
 ``(stage, batch_id)``, and the committed set is simply the table
 contents (snapshot isolation: readers never see an in-flight batch).
-The catalog path is unchanged by the footer lineage and the batching
-record: it aggregates the committed rows and always resumes through the
-anti-join.  Its batches run on the same ``ceil(P / n_batches)`` tasks.
-No Iceberg runtime jar ships in this environment, so the catalog path
-is exercised only where one is configured (the test skips cleanly); the
-Parquet ``_SUCCESS`` protocol stays the default.
+The catalog path is unchanged by the footer lineage: it aggregates the
+committed rows for its metrics.  It resumes by the same rule, on the
+same ``ceil(P / n_batches)`` tasks; only the lineage repair is
+Parquet-only.  No Iceberg runtime jar ships in this environment, so the
+catalog path is exercised only where one is configured (the test skips
+cleanly); the Parquet ``_SUCCESS`` protocol stays the default.
 """
 
 from __future__ import annotations
 
 import glob
 import hashlib
-import json
 import os
 import re
 import time
@@ -129,7 +130,6 @@ METRICS_ARROW = pa.schema(
 # and integers
 FOOTER_KEY_TYPES = (T.StringType(), T.ByteType(), T.ShortType(), T.IntegerType(), T.LongType())
 LINEAGE_FILE = "part-00000.parquet"
-BATCHING_RECORD = "_batching.json"
 
 
 def _footer_lineage(path: str, key_col: str) -> dict[int, list]:
@@ -318,32 +318,6 @@ class CheckpointedRun:
             if not (os.path.isdir(d) and any(not f.startswith(".") for f in os.listdir(d))):
                 self._write_lineage(stage, key_col, b)
 
-    def _batching_unchanged(
-        self, stage: str, key_col: str, n_batches: int, committed: set[str]
-    ) -> bool:
-        """True iff every committed Parquet batch of ``stage`` is a bucket
-        of ``pmod(xxhash64(key_col), n_batches)``, so no pending bucket's
-        key is committed.  A stage with no committed batch records this
-        batching; a different one drops the record for good."""
-        rec_path = os.path.join(self.base, stage, BATCHING_RECORD)
-        mine = {"key_col": key_col, "n_batches": n_batches}
-        if not committed:
-            os.makedirs(os.path.dirname(rec_path), exist_ok=True)
-            tmp = f"{rec_path}.{uuid.uuid4().hex}.tmp"
-            with open(tmp, "w") as fh:
-                json.dump(mine, fh)
-            os.replace(tmp, rec_path)
-            return True
-        try:
-            with open(rec_path) as fh:
-                rec = json.load(fh)
-        except FileNotFoundError:
-            return False
-        if rec != mine:
-            os.remove(rec_path)  # the stage now mixes batchings
-            return False
-        return all(re.fullmatch(r"b\d{4}", b) and int(b[1:]) < n_batches for b in committed)
-
     def committed(self, stage: str) -> DataFrame | None:
         """All committed rows of a stage (uncommitted dirs ignored; in
         catalog mode snapshot isolation makes every table row
@@ -358,16 +332,13 @@ class CheckpointedRun:
             return None
         return self.spark.read.parquet(*paths)
 
-    def processed_keys(self, stage: str, key_col: str) -> DataFrame | None:
-        df = self.committed(stage)
-        return None if df is None else df.select(key_col).distinct()
+    def _committed_ids(self, stage: str) -> set[str]:
+        return {p.rsplit("batch=", 1)[-1] for p in self._committed_batches(stage)}
 
     def resume_filter(self, inputs: DataFrame, stage: str, key_col: str) -> DataFrame:
-        """Drop input rows whose key already lies in a committed batch."""
-        done = self.processed_keys(stage, key_col)
-        if done is None:
-            return inputs
-        return inputs.join(done, key_col, "left_anti")
+        """Drop input rows whose key lies in a committed batch's bucket."""
+        covered = _covered(self._committed_ids(stage), key_col)
+        return inputs if covered is None else inputs.filter(~covered)
 
     def metrics(self, stage: str | None = None) -> DataFrame | None:
         cols = [f.split()[0] for f in METRICS_SCHEMA.split(", ")]
@@ -414,6 +385,32 @@ def _planned_tasks(plan) -> int:
     return sum(counts) if name == "Union" else max(counts)
 
 
+def _batch_id(bucket: int, n_batches: int, key_col: str) -> str:
+    return f"b{bucket:04d}n{n_batches:04d}k{hashlib.md5(key_col.encode()).hexdigest()[:8]}"
+
+
+def _covered(ids: set[str], key_col: str, n_batches: int = 0):
+    """Column predicate: the key lies in the bucket of one of the
+    committed ``ids`` not cut by ``n_batches`` buckets (None when no
+    such id).  Raises on an id that does not name a bucket of
+    ``key_col``: its keys cannot be told without reading it."""
+    buckets: dict[int, list[int]] = {}
+    for i in sorted(ids):
+        m = re.fullmatch(r"b(\d{4})n(\d{4})k\w{8}", i)
+        if m is None or int(m[1]) >= int(m[2]) or i != _batch_id(int(m[1]), int(m[2]), key_col):
+            raise ValueError(
+                f"committed batch {i!r} does not name a bucket of key {key_col!r}; "
+                "resume cannot tell which keys it holds"
+            )
+        if int(m[2]) != n_batches:
+            buckets.setdefault(int(m[2]), []).append(int(m[1]))
+    covered = None
+    for n, bs in sorted(buckets.items()):
+        term = F.pmod(F.xxhash64(key_col), F.lit(n)).isin(bs)
+        covered = term if covered is None else covered | term
+    return covered
+
+
 def run_stage_in_batches(
     ckpt: CheckpointedRun,
     inputs: DataFrame,
@@ -426,35 +423,27 @@ def run_stage_in_batches(
     """Drive a stage as N resumable batches (deterministic bucketing by
     key hash, never by partition index), each on ``ceil(P / n_batches)``
     of the input's P tasks. `fail_after` injects a crash after that many
-    batch commits — used by the resume tests.  In Parquet mode a resume
-    first rebuilds any committed batch's missing lineage, and skips the
-    anti-join when the batching is unchanged."""
-    committed = {p.rsplit("batch=", 1)[-1] for p in ckpt._committed_batches(stage)}
-    anti_join = True
+    batch commits — used by the resume tests.  A resume skips the
+    committed buckets of this batching and drops from the rest the keys
+    that other batchings' committed buckets cover; in Parquet mode it
+    first rebuilds any committed batch's missing lineage."""
+    if not 1 <= n_batches <= 9999:
+        raise ValueError(f"n_batches={n_batches} is outside 1..9999")
+    committed = ckpt._committed_ids(stage)
+    covered = _covered(committed, key_col, n_batches)
     if ckpt.catalog is None:
         ckpt._repair_lineage(stage, key_col, committed)
-        anti_join = not ckpt._batching_unchanged(stage, key_col, n_batches, committed)
-    # P comes from `inputs`: the anti-join does not change it, and
-    # executing its plan to count `todo`'s partitions would run 2 jobs
     tasks = -(-_planned_tasks(inputs._jdf.queryExecution().executedPlan()) // n_batches)
-    todo = ckpt.resume_filter(inputs, stage, key_col) if anti_join else inputs
+    todo = inputs if covered is None else inputs.filter(~covered)
     bucket = F.pmod(F.xxhash64(key_col), F.lit(n_batches)).cast("int")
     work = todo.withColumn("_bucket", bucket)
     done = 0
     for b in range(n_batches):
-        batch_id = f"b{b:04d}"
-        # a committed batch id is never overwritten: that would delete
-        # files the resume anti-join plan still reads lazily.  Without
-        # the anti-join it is FINAL (buckets are deterministic key hashes
-        # of this batching).  With it, a plain id may hold another
-        # batching's bucket, so this bucket's remaining keys go under an
-        # id naming the batching, which is final for that batching.
+        # a committed id of this batching is final: its bucket's keys
+        # are deterministic hashes, so it is never overwritten
+        batch_id = _batch_id(b, n_batches, key_col)
         if batch_id in committed:
-            if not anti_join:
-                continue
-            batch_id += f"n{n_batches:04d}"
-            if batch_id in committed:
-                continue
+            continue
         batch = work.filter(F.col("_bucket") == b).drop("_bucket").coalesce(tasks)
         # write directly — no emptiness pre-count: the transform runs
         # ONCE per batch (an empty committed batch is harmless: it adds
